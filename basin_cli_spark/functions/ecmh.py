@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from basin_cli_spark.functions.signing import P
+from basin_cli_spark.operators.layout import spread
 
 _B = 7  # secp256k1: y^2 = x^3 + 7
 _SQRT_EXP = (P + 1) // 4  # p ≡ 3 (mod 4): sqrt(a) = a^((p+1)/4)
@@ -241,20 +242,6 @@ class MultisetHash:
         return isinstance(other, MultisetHash) and self._point == other._point
 
 
-def _spread_rows(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Spread the per-row EC work across the session's cores (guide §2.5
-    input skew): the fixture tables are single-row-group parquet, so a
-    bare mapInPandas fold runs at the SCAN's parallelism — one task.  The
-    digest is partitioning-independent (commutative point addition,
-    pinned by tests/test_ecmh.py), so a deterministic hash repartition
-    is free of correctness risk; xxhash64 of the data itself is stable
-    under task retry (guide §2.5's rand() warning).  On a well-split
-    warehouse table the exchange is the only cost — ~16 bytes + text per
-    row, trivially amortized by the ~130 us/row point mapping."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par, F.xxhash64(*cols))
-
-
 def ecmh_digest(df: DataFrame, col: str) -> str:
     """Distributed multiset digest of a column.
 
@@ -262,7 +249,9 @@ def ecmh_digest(df: DataFrame, col: str) -> str:
     (mapInPandas -> one row per partition).  Reduce side: the driver adds
     the <=numPartitions partial points.  Because addition commutes, the
     result is independent of partitioning — the property the reference's
-    Union relies on (ecmh.go:41-48).
+    Union relies on (ecmh.go:41-48) — so the input is spread without a
+    key: a multiset's values repeat, and hashing them would put every
+    copy of a hot value in one task.
     """
     import pandas as pd
 
@@ -279,7 +268,7 @@ def ecmh_digest(df: DataFrame, col: str) -> str:
             yield pd.DataFrame({"x": [hex(x)], "y": [hex(y)]})
 
     partials = (
-        _spread_rows(df.select(col), [col])
+        spread(df.select(col))
         .mapInPandas(_partial, schema="x string, y string")
         .collect()
     )
@@ -337,7 +326,7 @@ def ecmh_digest_by_group(df: DataFrame, key_col: str, col: str) -> DataFrame:
         )
 
     rows = df.select(F.col(key_col).cast("string").alias(key_col), col)
-    partials = _spread_rows(rows, [key_col, col]).mapInPandas(
+    partials = spread(rows).mapInPandas(
         _partials, schema=f"{key_col} string, x string, y string"
     )
     return partials.groupBy(key_col).applyInPandas(

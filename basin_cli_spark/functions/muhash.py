@@ -31,6 +31,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from basin_cli_spark.operators.layout import spread
+
 # RFC 3526 MODP group 15 prime (3072-bit) — public constant.
 MODULUS = int(
     "FFFFFFFFFFFFFFFFC90FDAA22168C234C4C6628B80DC1CD129024E088A67CC74"
@@ -160,10 +162,8 @@ def muhash_accumulate(df: DataFrame, col: str) -> MulMultisetHash:
         if n:
             yield pd.DataFrame({"num": [f"{int(acc):x}"]})
 
-    from basin_cli_spark.functions.ecmh import _spread_rows
-
     partials = (
-        _spread_rows(df.select(col), [col])
+        spread(df.select(col))
         .mapInPandas(_partial, schema="num string")
         .collect()
     )
@@ -219,10 +219,8 @@ def muhash_digest_by_group(df: DataFrame, key_col: str, col: str) -> DataFrame:
             {key_col: [pdf[key_col].iloc[0]], "digest": [acc.digest()]}
         )
 
-    from basin_cli_spark.functions.ecmh import _spread_rows
-
     rows = df.select(F.col(key_col).cast("string").alias(key_col), col)
-    partials = _spread_rows(rows, [key_col, col]).mapInPandas(
+    partials = spread(rows).mapInPandas(
         _partials, schema=f"{key_col} string, num string"
     )
     return partials.groupBy(key_col).applyInPandas(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
+from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.session import persist_once
 
 
@@ -147,13 +148,11 @@ def shingle_rows(
 
     * tokens are projected to a real column first so the shingle lambda
       reads an attribute instead of re-running split/filter per element;
-    * the input is repartitioned to the session default parallelism before
-      the explode, so a low-split source (one small parquet file here; a
-      coalesced scan at 100 TB) still fans the CPU-heavy shingle+hash work
+    * the input is spread before the explode, so a low-split source (one
+      small parquet file) still fans the CPU-heavy shingle+hash work
       across all cores.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    toks = df.repartition(par).select(
+    toks = spread(df, id_col).select(
         F.col(id_col), tokens(text_col).alias("__toks")
     )
     return toks.select(
@@ -333,10 +332,9 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFr
     assert bits % 4 == 0
     src_df = df
     if not df.isStreaming:
-        # fan the token explode across cores; streaming plans forbid an
-        # explicit repartition (micro-batch parallelism comes from the
-        # source) and don't need one
-        src_df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        # fan the token explode across cores (a stream keeps its
+        # source's micro-batch layout)
+        src_df = spread(df, id_col)
     tok = src_df.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("tok")
     )

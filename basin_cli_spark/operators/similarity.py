@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.session import persist_once
 
 
@@ -181,8 +182,7 @@ def cosine_topk(
     q = df.where(F.col(id_col) == query_vec_id).select(
         F.col(vec_col).alias("_q_emb")
     )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    cand = df.where(F.col(id_col) != query_vec_id).repartition(par)
+    cand = spread(df.where(F.col(id_col) != query_vec_id), id_col)
     score = F.round(cosine(F.col(vec_col), F.col("_q_emb")), round_to)
     return (
         cand.crossJoin(F.broadcast(q))
@@ -737,12 +737,11 @@ def cosine_topk_ivf(
     # the cosine splits into per-side norm folds + the bit-identical Arrow
     # dot (the mine_hard_negatives doctrine), never the interpreted HOF
     # fold per pair.
-    par = df.sparkSession.sparkContext.defaultParallelism
     cents_n = cents.select(
         "cent_id", "cvec", norm_sq(F.col("cvec")).alias("_c_n2")
     )
     scored = (
-        df.repartition(par)
+        spread(df, id_col)
         .select(id_col, vec_col, norm_sq(F.col(vec_col)).alias("_v_n2"))
         .crossJoin(F.broadcast(cents_n))
         .select(

@@ -9,6 +9,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from basin_cli_spark.operators.dedup import tokens
+from basin_cli_spark.operators.layout import spread
 
 # Tiny per-language stopword sets for the n-gram/stopword-hit heuristic.
 STOPWORDS = {
@@ -200,7 +201,7 @@ def hash_embedding(
     assert dim <= 256 and dim & (dim - 1) == 0, "dim must be a power of 2 <= 256"
     src = df
     if not df.isStreaming:
-        src = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        src = spread(df, id_col)
     tok = src.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("_tok")
     )

@@ -14,9 +14,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import dec, dec_sum
-from basin_cli_spark.sources import load_table, spread_cpu
+from basin_cli_spark.sources import load_table
+
+_LI_KEY = ("l_orderkey", "l_linenumber")
 
 
 @register(
@@ -36,9 +39,8 @@ GROUP BY l_returnflag
 )
 def q_agg_stats(spark, sf_dir):
     # count_distinct forces a two-phase agg whose first (l_returnflag,
-    # l_orderkey) dedup is map-side CPU; spread the under-split scan
-    # (see sources/tables.py spread_cpu — no-op on well-split layouts).
-    li = spread_cpu(load_table(spark, sf_dir, "lineitem"), sf_dir, "lineitem")
+    # l_orderkey) dedup is map-side CPU
+    li = spread(load_table(spark, sf_dir, "lineitem"), _LI_KEY)
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("l_orderkey").alias("n_orders"),
@@ -100,8 +102,8 @@ GROUP BY ROLLUP(l_returnflag, l_linestatus)
 )
 def q_grouping_rollup(spark, sf_dir):
     # rollup expand multiplies partial-agg rows 3x — same map-side CPU
-    # shape as q_grouping_sets; spread the under-split scan.
-    li = spread_cpu(load_table(spark, sf_dir, "lineitem"), sf_dir, "lineitem")
+    # shape as q_grouping_sets
+    li = spread(load_table(spark, sf_dir, "lineitem"), _LI_KEY)
     gid = (F.grouping("l_returnflag") * 2 + F.grouping("l_linestatus")).cast("int")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         gid.alias("gid"),
@@ -307,9 +309,8 @@ def q_grouping_sets(spark, sf_dir):
     §2.B aggregations) — subtotal rows computed in one shuffle, not one
     pass per set."""
     # GROUPING SETS expand triples the partial-agg rows, so the map side is
-    # CPU-bound; spread the under-split scan (measured 0.99 s -> 0.60 s at
-    # sf0.1/local[32]; no-op on well-split layouts — see sources/tables.py).
-    li = spread_cpu(load_table(spark, sf_dir, "lineitem"), sf_dir, "lineitem")
+    # CPU-bound (spread: 0.99 s -> 0.60 s at sf0.1 on 32 cores)
+    li = spread(load_table(spark, sf_dir, "lineitem"), _LI_KEY)
     li.createOrReplaceTempView("gs_lineitem")
     return spark.sql(
         """
@@ -409,11 +410,11 @@ def q_corr_covar(spark, sf_dir):
     final double formula is order-independent and bit-identical across
     engines; the built-in CORR/COVAR accumulate in floats and are not.
     One hash-agg pass, map-side partials, same shuffle as any groupBy."""
-    # five wide-decimal product sums per row are the map cost; spread the
-    # under-split scan.  Partitioning-safe by this query's own design:
+    # five wide-decimal product sums per row are the map cost.
+    # Partitioning-safe by this query's own design:
     # the moment sums are exact decimals (order-independent), doubles
     # only appear in the final per-group formula.
-    li = spread_cpu(load_table(spark, sf_dir, "lineitem"), sf_dir, "lineitem")
+    li = spread(load_table(spark, sf_dir, "lineitem"), _LI_KEY)
     qty, price = dec("l_quantity"), dec("l_extendedprice")
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -481,7 +482,7 @@ def q_approx_percentile(spark, sf_dir):
     # wobble alone is <= ~1.3e-4.  For the booleans to flip, the
     # fixture's rank->value density near p50/p95 would have to be ~500x
     # steeper than anywhere in the measured price distribution.
-    li = spread_cpu(load_table(spark, sf_dir, "lineitem"), sf_dir, "lineitem")
+    li = spread(load_table(spark, sf_dir, "lineitem"), _LI_KEY)
     price = F.col("l_extendedprice").cast("double")
     g = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from basin_cli_spark.operators import curation as C
 from basin_cli_spark.operators import dedup as D
+from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import vec_str
 from basin_cli_spark.session import persist_once
@@ -20,7 +21,7 @@ from basin_cli_spark.queries.llm_ops import (
     _MINHASH_MINS,
     _shingle_cte,
 )
-from basin_cli_spark.sources import load_table, spread_cpu
+from basin_cli_spark.sources import load_table
 
 # -- text normalization -------------------------------------------------------
 
@@ -89,11 +90,9 @@ def q_corpus_boilerplate_scrub(spark, sf_dir):
     surface.  At fixture scale ~9% of segments are removed, so the
     rewrite path is genuinely exercised."""
     # the interpreted segmentation HOFs are evaluated in BOTH branches
-    # of the scrub lineage; spreading the under-split scan fans both out
-    # (one reusable exchange) — measured 5.4 s -> 1.5 s at sf0.1.
-    d = spread_cpu(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-    )
+    # of the scrub lineage; one reusable spread exchange fans both out
+    # (5.4 s -> 1.5 s at sf0.1)
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     return C.boilerplate_scrub(
         d, "text", "doc_id", seg_words=3, min_docs=3
     ).orderBy("doc_id")
@@ -514,11 +513,8 @@ def q_corpus_gopher_rules(spark, sf_dir):
     the way the stub-threshold quality score does.  Uses the same
     whitespace tokenization as the dedup family (operators/dedup.tokens
     / _SQL_TOKENS) so rule counts and shingle counts agree."""
-    # five interpreted HOF folds per row — spread the under-split scan
-    # (spread_cpu no-ops on well-split layouts; 0.61 s -> 0.44 s at sf0.1)
-    d = spread_cpu(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-    )
+    # five interpreted HOF folds per row (spread: 0.61 s -> 0.44 s at sf0.1)
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     m = _gopher_signals(d)
     mwl = F.col("sum_len").cast("double") / F.col("n_words")
     return m.select(
@@ -860,9 +856,8 @@ def q_vocab_topk(spark, sf_dir):
     the top-k is TakeOrderedAndProject (per-partition heaps, only 50 rows
     move to the driver)."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     tok = (
-        d.repartition(par)
+        spread(d, "doc_id")
         .select("doc_id", D.tokens("text").alias("_toks"))
         .select("doc_id", F.explode("_toks").alias("token"))
     )
@@ -918,9 +913,8 @@ def q_tfidf_topterms(spark, sf_dir):
     tokenized+exploded once, where computing df from the raw token
     relation would run the explode a second time for the same number."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     tok = (
-        d.repartition(par)
+        spread(d, "doc_id")
         .select("doc_id", D.tokens("text").alias("_toks"))
         .select("doc_id", F.explode("_toks").alias("term"))
     )
@@ -995,8 +989,7 @@ def _bigram_logprob_scores(spark, sf_dir):
     corpus's own MLE bigram model — used by q_text_bigram_logprob (the
     raw signal) and q_corpus_lm_prune (the CCNet-style filter)."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toks = d.repartition(par).select(
+    toks = spread(d, "doc_id").select(
         "doc_id", D.tokens("text").alias("_toks")
     )
     bg = toks.select(
@@ -1310,9 +1303,8 @@ def _dsir_weight_table(d):
     bucket's evidence is the smoothing prior, not zero.  (Batch scoring
     inner-joins on seen buckets, so densifying changes nothing there;
     the batch oracle keeps its sparse model CTE for the same reason.)"""
-    par = d.sparkSession.sparkContext.defaultParallelism
     is_target = F.col("doc_id") % 20 == 0
-    toks = d.repartition(par).select(
+    toks = spread(d, "doc_id").select(
         "doc_id",
         is_target.alias("is_target"),
         F.explode(D.tokens("text")).alias("tok"),
@@ -1365,8 +1357,7 @@ def _dsir_scores(d):
     importance sum — callers round/rank/limit."""
     is_target = F.col("doc_id") % 20 == 0
     lw = _dsir_weight_table(d)
-    par = d.sparkSession.sparkContext.defaultParallelism
-    bucketed = d.repartition(par).select(
+    bucketed = spread(d, "doc_id").select(
         "doc_id",
         is_target.alias("is_target"),
         F.explode(D.tokens("text")).alias("tok"),
@@ -1450,11 +1441,8 @@ def q_llm_prep_pipeline_v4(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     # spread only the HOF-heavy gate pass; the gated narrow re-read below
     # stays on the raw scan (its semi-join probe is not CPU-bound) —
-    # measured 2.0 s -> 1.4 s at sf0.1 (spread_cpu no-ops when the scan
-    # layout splits well)
-    sig = _gopher_signals(
-        spread_cpu(d, sf_dir, "documents"), extra_cols=("lang",)
-    )
+    # measured 2.0 s -> 1.4 s at sf0.1
+    sig = _gopher_signals(spread(d, "doc_id"), extra_cols=("lang",))
     gated_ids = persist_once(
         sig.where(_gopher_passes()).select("doc_id", "lang")
     )
@@ -1812,9 +1800,8 @@ def q_embedding_center_normalize(spark, sf_dir):
     centroid; the 1-row centroid array is then broadcast and the pass is
     narrow.  Norm folds run dimension-sequential on both engines."""
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
     v = F.transform("embedding", lambda x: x.cast("double"))
-    base = e.repartition(par).select("vec_id", v.alias("v"))
+    base = spread(e, "vec_id").select("vec_id", v.alias("v"))
     cent = (
         base.select(F.posexplode("v").alias("pos", "val"))
         .groupBy("pos")
@@ -1903,9 +1890,8 @@ def q_similarity_pq_adc(spark, sf_dir):
     table are broadcast; codes are a (vec_id, m) hash-agg; nothing wide
     ever carries raw vectors."""
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
     v = F.transform("embedding", lambda x: x.cast("double"))
-    base = e.repartition(par).select("vec_id", v.alias("v"))
+    base = spread(e, "vec_id").select("vec_id", v.alias("v"))
     sub = base.select(
         "vec_id",
         F.posexplode(
@@ -2010,8 +1996,7 @@ def q_vocab_oov_rate(spark, sf_dir):
     literal stops paying and the token-keyed anti-join (this query's
     first form) is the right shape again."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toks = d.repartition(par).select(
+    toks = spread(d, "doc_id").select(
         "doc_id", D.tokens("text").alias("_toks")
     )
     tok = toks.select(F.explode("_toks").alias("token"))
@@ -2124,8 +2109,7 @@ def q_corpus_datasheet(spark, sf_dir):
     (order-free), means divide as doubles identically in both engines.
     One token pass, one hash-agg keyed on lang."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    base = d.repartition(par).select(
+    base = spread(d, "doc_id").select(
         "doc_id", "lang", "source", "n_chars",
         F.size(D.tokens("text")).alias("_n_toks"),
         (
@@ -2231,16 +2215,14 @@ def q_corpus_dup_ngram_stats(spark, sf_dir):
     and its grams never leave their partition.  (The first cut exploded
     (doc_id, n, gram) rows through two hash-aggs — correct, but 3.8x
     slower at bench scale and two avoidable shuffles at 100 TB.)  The
-    one Exchange in the plan is the documented local-parallelism
-    round-robin on the raw docs (shingle_rows's pattern); a 100 TB scan
-    has natural parallelism and drops it.  CollapseProject leaves the
-    non-cheap token projection un-inlined (verified: one split() in the
-    optimized plan), so the document tokenizes once, not once per gram
-    size.  Same tokenizer as the dedup family, so these signals compose
-    with shingle counts."""
+    one Exchange in the plan is the spread of the raw docs
+    (operators/layout.spread), which a well-split scan skips.
+    CollapseProject leaves the non-cheap token projection un-inlined
+    (verified: one split() in the optimized plan), so the document
+    tokenizes once, not once per gram size.  Same tokenizer as the dedup
+    family, so these signals compose with shingle counts."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toks = d.repartition(par).select(
+    toks = spread(d, "doc_id").select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars"),
         D.tokens("text").alias("__toks"),
@@ -2326,8 +2308,7 @@ def q_corpus_domain_kl(spark, sf_dir):
     (broadcast scalar, registered in the plan-guard allowlist).  Output
     is one row per source."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    tok = d.repartition(par).select(
+    tok = spread(d, "doc_id").select(
         "source", F.explode(D.tokens("text")).alias("token")
     )
     cst = persist_once(
@@ -2428,8 +2409,7 @@ def q_corpus_zipf_slope(spark, sf_dir):
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    tok = d.repartition(par).select(
+    tok = spread(d, "doc_id").select(
         "source", F.explode(D.tokens("text")).alias("token")
     )
     cst = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("c"))

@@ -15,12 +15,13 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from basin_cli_spark.operators import dedup as D
+from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.operators import similarity as S
 from basin_cli_spark.operators import text as TX
 from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import sql_vec_str, vec_str
 from basin_cli_spark.session import persist_once
-from basin_cli_spark.sources import load_table, spread_cpu
+from basin_cli_spark.sources import load_table
 
 # Shared SQL fragments mirroring operators/dedup.py
 _SQL_TOKENS = "LIST_FILTER(STRING_SPLIT(LOWER({c}), ' '), t -> LENGTH(t) > 0)"
@@ -587,12 +588,9 @@ FROM toks
 
 @register("q_text_quality_stats", _QUALITY_ORACLE)
 def q_text_quality_stats(spark, sf_dir):
-    # per-row HOF-fold CPU dominates; spread the under-split scan
-    # (sources/tables.py spread_cpu — no-op on well-split layouts;
-    # measured 0.40 s -> 0.30 s at sf0.1/local[32])
-    d = spread_cpu(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-    )
+    # per-row HOF-fold CPU dominates (spread: 0.40 s -> 0.30 s at sf0.1
+    # on 32 cores)
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     return TX.quality_stats(d, "text", "doc_id")
 
 
@@ -632,9 +630,7 @@ def q_text_quality_score(spark, sf_dir):
     (operators/text.py QUALITY_WEIGHTS); the engine part — per-row
     feature assembly and vectorized scoring fused into the scan, no
     shuffle — is what carries to 100 TB unchanged."""
-    d = spread_cpu(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-    )
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     return TX.quality_score(d, "text", "doc_id")
 
 
@@ -673,11 +669,9 @@ def q_text_language_id(spark, sf_dir):
     # joining the prediction table back to documents: the join re-scanned
     # the corpus and broadcast-built the corpus-sized prediction side —
     # measured 2.44 s -> 1.21 s noop at sf0.1 (plan 2 scans + BHJ ->
-    # 1 scan); the five stopword-hit HOF folds are then the map cost, so
-    # spread the under-split scan (1.21 s -> 0.60 s interleaved A/B)
-    d = spread_cpu(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-    )
+    # 1 scan); the five stopword-hit HOF folds are then the map cost
+    # (spread: 1.21 s -> 0.60 s interleaved A/B)
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     pred = TX.language_id(d, "text", "doc_id", extra_cols=("lang",))
     return (
         pred.groupBy("lang", "pred_lang")
@@ -725,11 +719,9 @@ FROM cleaned
 
 @register("q_text_fingerprint", _FP_ORACLE)
 def q_text_fingerprint(spark, sf_dir):
-    # the per-char rolling-hash fold is pure interpreted map CPU; spread
-    # the under-split scan (0.96 s -> 0.35 s noop min, interleaved A/B;
-    # spread_cpu no-ops on well-split layouts).  The lang filter still
-    # pushes below the repartition to the scan.
-    d = spread_cpu(load_table(spark, sf_dir, "documents"), sf_dir, "documents")
+    # the per-char rolling-hash fold is pure interpreted map CPU
+    # (spread: 0.96 s -> 0.35 s noop min, interleaved A/B)
+    d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     return TX.fingerprint(d.where(F.col("lang") == "en"), "text", "doc_id")
 
 
@@ -840,17 +832,13 @@ def _embedding_dedup_pairs(spark, sf_dir):
     # read it, and without the cache Spark runs the Arrow signature
     # kernel twice.  ~24 bytes/row x bands — safe at any corpus size
     # (same rationale as operators/dedup.minhash_lsh_pairs).
-    # r15 (guide §2.5, the q_dedup_semantic_ivf finding): spread the
-    # cache — the band self-join is a BROADCAST join (r14 plan), so its
+    # Spread the cache: the band self-join is a BROADCAST join, so its
     # probe side inherits this cached relation's layout, which on a
     # single-row-group embeddings file is ONE partition; the per-row
     # bucket-pair expansion then runs on one core at any session size
     # (the downstream dropDuplicates exchange only spreads the verify,
-    # not the expansion).  Deterministic hash keys; rows unchanged.
-    par = spark.sparkContext.defaultParallelism
-    expl = persist_once(
-        expl.repartition(par, F.xxhash64(F.col("vec_id"), F.col("band")))
-    )
+    # not the expansion).
+    expl = persist_once(spread(expl, ("vec_id", "band")))
     a, b = expl.alias("a"), expl.alias("b")
     pairs = (
         a.join(
@@ -1304,8 +1292,7 @@ def q_dedup_repeated_spans(spark, sf_dir):
     repeated-span set scales with the corpus, so the join carries no
     broadcast hint — AQE decides."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toks = d.repartition(par).select(
+    toks = spread(d, "doc_id").select(
         "doc_id", D.tokens("text").alias("_toks")
     )
     sp = toks.select(
@@ -1411,7 +1398,7 @@ def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
     # cache build, and both sides scan one in-memory relation.  Same
     # rows by construction (the cap is deterministic), oracle-identical.
     #
-    # r15, the big one (guide §2.5): the cache also REPARTITIONS first.
+    # The cache is also SPREAD first.
     # Without it the cached relation inherits the embeddings SCAN's
     # layout — ONE partition on a single-row-group file — and because
     # the pair self-join and both verify joins are broadcast joins, the
@@ -1429,14 +1416,11 @@ def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
     # nondeterministic instead would break its callers that JOIN on the
     # live cent_id expression (nondeterministic join keys are an
     # AnalysisException — the dot_arrow caller contract).
-    par = spark.sparkContext.defaultParallelism
     raw_assigned = persist_once(
         KM.assign_ids(e, cents, metric="cos").select("vec_id", "cent_id")
     )
     assigned = persist_once(
-        drop_hot_cells(raw_assigned, max_cell).repartition(
-            par, F.xxhash64(F.col("vec_id"))
-        )
+        spread(drop_hot_cells(raw_assigned, max_cell), "vec_id")
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     pairs = a.join(
@@ -1749,8 +1733,7 @@ def q_text_entropy(spark, sf_dir):
     )
     from basin_cli_spark.operators.dedup import run_lnrun_fold
 
-    par = spark.sparkContext.defaultParallelism
-    chars = d.repartition(par).select(
+    chars = spread(d, "doc_id").select(
         "doc_id",
         # empty-pattern split = one element per CODEPOINT (Java 8+ split
         # never cuts a surrogate pair on a zero-width match boundary,
@@ -1804,7 +1787,6 @@ def q_text_repetition(spark, sf_dir):
     )
 
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     # docs-with-shingles filter keyed on size(__toks), NOT size(__g):
     # a filter on __g would re-derive the whole shingle transform below
     # the projection.  PushDownPredicate still rewrites this filter to
@@ -1815,7 +1797,7 @@ def q_text_repetition(spark, sf_dir):
     # lambda (O(tokens^2) — measured 5x on this query).  __toks stays
     # multiply-referenced (shingles + the __n carry) for that reason.
     toks = (
-        d.repartition(par)
+        spread(d, "doc_id")
         .select("doc_id", tokens("text").alias("__toks"))
         .where(F.size("__toks") >= 3)
     )
@@ -1856,8 +1838,7 @@ def q_embedding_label_centroids(spark, sf_dir):
     float (order-sensitive in the last bits), so both engines round to
     6 decimals."""
     e = load_table(spark, sf_dir, "embeddings")
-    par = e.sparkSession.sparkContext.defaultParallelism
-    expl = e.repartition(par).select(
+    expl = spread(e, "vec_id").select(
         "label", F.posexplode("embedding").alias("pos", "v")
     )
     return (
@@ -1908,7 +1889,6 @@ def q_similarity_knn_label(spark, sf_dir):
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    par = e.sparkSession.sparkContext.defaultParallelism
     probes = e.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("p_id"),
         F.col("embedding").alias("p_emb"),
@@ -1918,7 +1898,7 @@ def q_similarity_knn_label(spark, sf_dir):
     # bit-identical Arrow dot kernel, never the interpreted HOF fold per
     # pair (the mine_hard_negatives doctrine — see its docstring)
     scored = (
-        e.repartition(par)
+        spread(e, "vec_id")
         .select(
             "vec_id", "label", "embedding",
             S.norm_sq(F.col("embedding")).alias("_n2"),
@@ -2008,8 +1988,7 @@ def _proto_scores_df(e, repartition=True):
     extra full-corpus shuffle is measured cost on a persisted frame)."""
     src = e
     if repartition:
-        par = e.sparkSession.sparkContext.defaultParallelism
-        src = e.repartition(par)
+        src = spread(e, "vec_id")
     cent = (
         src
         .select("label", F.posexplode("embedding").alias("pos", "v"))
@@ -2182,9 +2161,8 @@ def q_similarity_hard_negatives(spark, sf_dir):
     operators/similarity.mine_hard_negatives (shared with the property
     test and the scale smoke); see its docstring for the scale plan."""
     e = load_table(spark, sf_dir, "embeddings")
-    par = e.sparkSession.sparkContext.defaultParallelism
     out = S.mine_hard_negatives(
-        e.repartition(par), F.col("vec_id") < 20, k=3
+        spread(e, "vec_id"), F.col("vec_id") < 20, k=3
     )
     return out.withColumn(
         "neg_rank", F.col("neg_rank").cast("long")
@@ -2706,9 +2684,8 @@ def q_embedding_quantize(spark, sf_dir):
     zip-fold), zero Python; per-row work only, no shuffle.  The error
     fold is sequential so both engines add in the same order."""
     e = load_table(spark, sf_dir, "embeddings")
-    par = e.sparkSession.sparkContext.defaultParallelism
     v = F.transform("embedding", lambda x: x.cast("double"))
-    base = e.repartition(par).select("vec_id", v.alias("v"))
+    base = spread(e, "vec_id").select("vec_id", v.alias("v"))
     mm = base.select(
         "vec_id",
         "v",
@@ -3077,8 +3054,7 @@ def q_embedding_anisotropy(spark, sf_dir):
     from basin_cli_spark.operators.similarity import norm_sq
 
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
-    s1 = e.repartition(par).select(
+    s1 = spread(e, "vec_id").select(
         "label", "embedding", F.sqrt(norm_sq(F.col("embedding"))).alias("_n")
     ).where(F.col("_n") > 0)
     ex = s1.select(

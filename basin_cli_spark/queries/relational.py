@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import (
     dec,
@@ -22,7 +23,7 @@ from basin_cli_spark.queries._helpers import (
     sql_dec_avg,
     sql_dec_sum,
 )
-from basin_cli_spark.sources import load_table, spread_cpu
+from basin_cli_spark.sources import load_table
 
 # --- flagship: TPC-H Q1-style pricing summary -------------------------------
 # filter -> hash agg (partial+final, map-side combine free) -> sort.
@@ -52,12 +53,11 @@ ORDER BY l_returnflag, l_linestatus
 
 @register("q1_pricing_summary", _Q1_ORACLE)
 def q1_pricing_summary(spark, sf_dir):
-    # Wide-scan decimal aggregation: the partial agg is the map-side cost,
-    # so an under-split scan (single-row-group file) serializes it on one
-    # core.  spread_cpu fans it out when (and only when) the file layout
-    # under-splits — measured 1.26 s -> 0.98 s at sf0.1/local[32]; no-op
-    # on a well-split warehouse table.  (guide §2.5 input skew)
-    li = spread_cpu(load_table(spark, sf_dir, "lineitem"), sf_dir, "lineitem")
+    # Wide-scan decimal aggregation: the partial agg is the map-side cost
+    # (spread: 1.26 s -> 0.98 s at sf0.1 on 32 cores)
+    li = spread(
+        load_table(spark, sf_dir, "lineitem"), ("l_orderkey", "l_linenumber")
+    )
     price, disc = dec("l_extendedprice"), dec("l_discount")
     disc_price = price * one_minus("l_discount")  # (13,4), long-backed
     charge = disc_price * one_plus("l_tax")  # (18,6), still long-backed

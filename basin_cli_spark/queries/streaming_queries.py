@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import dec, dec_sum, sql_dec, sql_dec_sum
 from basin_cli_spark.sources import load_table
@@ -249,20 +250,15 @@ def q_stream_near_dedup(spark, sf_dir):
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
-    # r15 (guide §2.5 input skew): a single-file stream source arrives as
-    # ONE input partition per micro-batch (the scan splits by
-    # maxPartitionBytes, and this fixture is far below it), so the whole
-    # per-token SimHash fold — by far the batch's map cost — ran on one
-    # core of 32.  A stateless streaming repartition (hash on doc_id:
-    # deterministic under micro-batch re-run, guide §2.5's rand()
-    # warning) fans it across the session's cores BEFORE the fold;
-    # measured 11.0 s -> 2.6 s per drain at sf0.1, identical buckets.
+    # A single-file stream source arrives as ONE input partition per
+    # micro-batch, so the per-token SimHash fold — by far the batch's
+    # map cost — would run on one core; spreading first measured
+    # 11.0 s -> 2.6 s per drain at sf0.1 on 32 cores, identical buckets.
     # (A packed-nibble simhash_expr rewrite was ALSO measured — one md5
     # per token instead of 16 — and REVERTED: tie under the spread,
     # 1.5x SLOWER single-core; the fold's per-token array-accumulator
     # allocation costs more than the extra md5 calls.)
-    par = spark.sparkContext.defaultParallelism
-    docs = docs.repartition(par, F.xxhash64(F.col("doc_id")))
+    docs = spread(docs, "doc_id")
     # synthetic event time (fixtures carry none): one second per doc id.
     # simhash_expr is a row-wise fold, so the bucket agg is the plan's
     # ONLY stateful operator (a per-doc vote aggregation upstream would
@@ -317,11 +313,8 @@ def q_stream_quality_gate(spark, sf_dir):
         .parquet(sf_dir)
     )
     # single-file stream source -> one input partition; spread the
-    # per-row probe expressions across the cores (same rationale and
-    # measurement discipline as q_stream_near_dedup's repartition)
-    docs = docs.repartition(
-        spark.sparkContext.defaultParallelism, F.xxhash64(F.col("doc_id"))
-    )
+    # per-row probe expressions across the cores
+    docs = spread(docs, "doc_id")
     scored = quality_score(docs, "text", "doc_id")
     agg = scored.groupBy("gate").agg(
         F.count(F.lit(1)).alias("n"),
@@ -608,11 +601,8 @@ def q_stream_dsir_score(spark, sf_dir):
         .parquet(sf_dir)
     )
     # single-file stream source -> one input partition; spread the
-    # tokenize + weight-fold map work across the cores (same rationale
-    # and measurement discipline as q_stream_near_dedup's repartition)
-    docs = docs.repartition(
-        spark.sparkContext.defaultParallelism, F.xxhash64(F.col("doc_id"))
-    )
+    # tokenize + weight-fold map work across the cores
+    docs = spread(docs, "doc_id")
     toked = docs.where(F.col("doc_id") % 20 != 0).select(
         "doc_id", D.tokens("text").alias("_toks")
     ).where(F.size("_toks") > 0)

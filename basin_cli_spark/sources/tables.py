@@ -64,78 +64,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
-
-# -- adaptive CPU spread for under-split scans (r14 optimization) -------------
-#
-# Parquet scan tasks cannot split below a ROW GROUP: a table written as one
-# row group per file yields at most one non-empty scan task per file no
-# matter how small spark.sql.files.maxPartitionBytes goes, so every
-# map-side operator above the scan (filters, projections, partial
-# aggregation, text folds) runs at the file count's parallelism — one core
-# for the single-file fixture tables here (optimization guide §2.5 "input
-# skew: one huge unsplittable file", §6 input split size).  Measured at
-# sf0.1/local[32]: q1's scan+partial-agg runs 0.89 s single-core vs 0.59 s
-# with the map side spread over the cluster.
-#
-# spread_cpu() repartitions a freshly-scanned table by the hash of its
-# unique key ONLY when the file layout actually under-splits the scan
-# (row groups * SPREAD_FACTOR <= defaultParallelism).  On a well-laid-out
-# warehouse table (100 TB in 128 MB row groups) the check reads one footer
-# and leaves the plan untouched, so this is layout-adaptive, not a
-# local[32] tuning.  Hash keys, not round-robin: repartition(n) pays a
-# local sort of the input (sortBeforeRepartition, SPARK-23207) on the one
-# core the scan runs on — measured 1.12 s vs 0.65 s for q1 at sf0.1 —
-# while hashing a unique key is deterministic under retries (guide §2.5)
-# and spreads evenly.  Catalyst pushes query filters and column pruning
-# BELOW the repartition to the scan (verified: PushedFilters/ReadSchema
-# unchanged), so selective queries shuffle only surviving rows.
-
-_ROW_GROUPS_CACHE: dict[str, int] = {}
-
-# unique key per spreadable table (the hash argument; guide §2.5 wants a
-# deterministic high-cardinality key, never rand())
-SPREAD_KEYS = {
-    "lineitem": ("l_orderkey", "l_linenumber"),
-    "orders": ("o_orderkey",),
-    "customer": ("c_custkey",),
-    "part": ("p_partkey",),
-    "events": ("event_id",),
-    "documents": ("doc_id",),
-    "embeddings": ("vec_id",),
-}
-
-# spread only when row groups fall this far short of the session cores
-SPREAD_FACTOR = int(os.environ.get("SPARK_GRAFT_SPREAD_FACTOR", "2"))
-
-
-def scan_row_groups(sf_dir: str, name: str) -> int:
-    """Total parquet row groups of a fixture table — the hard ceiling on
-    its scan parallelism.  One driver-side footer read, memoized per
-    path; unknown layouts (directories of files, remote stores) are
-    assumed well-split so spread_cpu never taxes them."""
-    key = os.path.join(sf_dir, f"{name}.parquet")
-    if key not in _ROW_GROUPS_CACHE:
-        try:
-            import pyarrow.parquet as pq
-
-            _ROW_GROUPS_CACHE[key] = max(
-                1, pq.ParquetFile(key).metadata.num_row_groups
-            )
-        except Exception:
-            _ROW_GROUPS_CACHE[key] = 1 << 30
-    return _ROW_GROUPS_CACHE[key]
-
-
-def spread_cpu(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
-    """Spread an under-split scan's downstream map work across the
-    cluster (no-op when the file layout already splits well — see the
-    block comment above)."""
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if scan_row_groups(sf_dir, name) * SPREAD_FACTOR > par:
-        return df
-    keys = SPREAD_KEYS.get(name)
-    if not keys:
-        return df
-    return df.repartition(par, F.xxhash64(*keys))

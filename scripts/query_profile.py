@@ -1,4 +1,4 @@
-"""Round-14 optimization measurement harness (guide §1).
+"""Per-query measurement harness for the headline queries.
 
 For each headline query at $SPARK_GRAFT_SF_DIR (default sf0.1):
 * build time — the Python call fn(spark, sf_dir) alone, which captures any
@@ -7,10 +7,13 @@ For each headline query at $SPARK_GRAFT_SF_DIR (default sf0.1):
 * collect time — min/median of 3, the bench.py methodology;
 * noop time — min/median of 3 with the noop sink (guide §1.4), isolating
   the computation from row pickling into the Python driver;
-* the formatted physical plan, written to plans/r14/<query>_<tag>.txt,
+* the formatted physical plan, written to <plans_dir>/<query>_<tag>.txt,
   plus a one-line plan-shape summary (Exchange / python-eval / join nodes).
 
-Usage: python scripts/profile_r14.py [before|after] [query,query,...]
+Results go to <plans_dir>/profile_<tag>.json.
+
+Usage:
+    python scripts/query_profile.py <plans_dir> [before|after] [query,...]
 """
 
 from __future__ import annotations
@@ -26,10 +29,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from basin_cli_spark.queries import load_all  # noqa: E402
 from basin_cli_spark.session import get_spark  # noqa: E402
 from bench import HEADLINE  # noqa: E402
-
-PLANS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
-)
 
 
 def plan_shape(plan: str) -> str:
@@ -50,23 +49,26 @@ def plan_shape(plan: str) -> str:
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2].split(",") if len(sys.argv) > 2 else list(HEADLINE)
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    plans_dir = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3].split(",") if len(sys.argv) > 3 else list(HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("PROFILE_REPS", "3"))
-    os.makedirs(PLANS_DIR, exist_ok=True)
+    os.makedirs(plans_dir, exist_ok=True)
 
     registry = load_all()
-    spark = get_spark(app_name="profile_r14")
+    spark = get_spark(app_name="query_profile")
     warm_dirs = [
         d
         for d in ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
         if os.path.isdir(d) and d != sf_dir
     ]
 
-    path = os.path.join(PLANS_DIR, f"profile_{tag}.json")
+    path = os.path.join(plans_dir, f"profile_{tag}.json")
     out = {}
-    if len(sys.argv) > 2 and os.path.exists(path):
+    if len(sys.argv) > 3 and os.path.exists(path):
         # subset re-run: merge into the standing capture instead of
         # clobbering the other queries' numbers
         with open(path) as f:
@@ -87,7 +89,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(os.path.join(PLANS_DIR, f"{name}_{tag}.txt"), "w") as f:
+        with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
 
         collects, noops = [], []

@@ -1,5 +1,5 @@
-"""Round-14 registry-wide coverage audit (guide §1: measure everything,
-not just the headline).
+"""Registry-wide coverage audit (measure everything, not just the
+headline).
 
 For EVERY registry entry (203) at $SPARK_GRAFT_SF_DIR (default sf0.1):
 * noop-sink wall time, min of 2 reps after one warm run at sf0.01
@@ -11,10 +11,10 @@ For EVERY registry entry (203) at $SPARK_GRAFT_SF_DIR (default sf0.1):
   pins for the seven plans that historically carried it;
 * a one-line plan shape (Exchange / join / python-eval node counts).
 
-Writes plans/r14/registry_timing.json and prints the entries ranked by
+Writes <plans_dir>/registry_timing.json and prints the entries ranked by
 noop_min so the heaviest non-headline entries are visible.
 
-Usage: python scripts/registry_audit_r14.py [entry,entry,...]
+Usage: python scripts/registry_audit.py <plans_dir> [entry,entry,...]
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from basin_cli_spark.queries import load_all  # noqa: E402
 from basin_cli_spark.session import get_spark  # noqa: E402
-from scripts.profile_r14 import PLANS_DIR, plan_shape  # noqa: E402
+from scripts.query_profile import plan_shape  # noqa: E402
 
 
 def dup_python_sigs(plan: str) -> list[str]:
@@ -46,16 +46,19 @@ def dup_python_sigs(plan: str) -> list[str]:
 
 
 def main() -> None:
-    names = sys.argv[1].split(",") if len(sys.argv) > 1 else None
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    plans_dir = sys.argv[1]
+    names = sys.argv[2].split(",") if len(sys.argv) > 2 else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     warm_dir = "/root/testdata/sf0.01"
     reps = int(os.environ.get("PROFILE_REPS", "2"))
-    os.makedirs(PLANS_DIR, exist_ok=True)
+    os.makedirs(plans_dir, exist_ok=True)
 
     registry = load_all()
-    spark = get_spark(app_name="registry_audit_r14")
+    spark = get_spark(app_name="registry_audit")
 
-    path = os.path.join(PLANS_DIR, "registry_timing.json")
+    path = os.path.join(plans_dir, "registry_timing.json")
     out: dict[str, dict] = {}
     if names and os.path.exists(path):
         # subset re-run: merge into the standing sweep instead of

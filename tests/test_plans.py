@@ -94,11 +94,11 @@ def test_similarity_no_shuffle_before_topk(spark, sf_dir, registry):
     body = plan.split("== Physical Plan ==")[1]
     tree = body.split("(1) Scan")[0]
     # allowed exchanges: broadcast of the 1-row query side and the explicit
-    # round-robin fan-out of the scoring loop; never a join/agg shuffle
+    # spread of the scoring loop; never a join/agg shuffle
     non_broadcast = tree.count("Exchange") - tree.count("BroadcastExchange")
     assert non_broadcast <= 1
     if non_broadcast:
-        assert "RoundRobinPartitioning" in plan  # ours, not a join shuffle
+        assert "REPARTITION_BY_NUM" in plan  # ours, not a join shuffle
     assert "SortMergeJoin" not in tree and "ShuffledHashJoin" not in tree
 
 
