@@ -95,38 +95,20 @@ def cmd_stream(args) -> int:
 
 def cmd_write(args) -> int:
     """Direct file publish (reference `vaults write`, commands.go:250-343)."""
-    from basin_cli_spark.functions.hashing import keccak256_file
-    from basin_cli_spark.functions.signing import sign_file
     from basin_cli_spark.operators.events import parse_vault_name
 
-    parse_vault_name(args.vault)
-    os.makedirs(args.out_dir, exist_ok=True)
-    cid = "0x" + keccak256_file(args.file).hex()
-    sig = sign_file(args.file, args.private_key).hex()
-    row = {
-        "batch_id": -1,
-        "table": args.vault.split(".", 1)[1],
-        "path": os.path.abspath(args.file),
-        "cid": cid,
-        "signature": sig,
-        "timestamp": _epoch(args.timestamp),
-        "is_archived": False,
-    }
-    with open(os.path.join(args.out_dir, "manifest.jsonl"), "a") as f:
-        f.write(json.dumps(row) + "\n")
-    print(json.dumps({"cid": cid, "signature": sig}))
+    _, relation = parse_vault_name(args.vault)
+    sink = _sink(args.out_dir, vault=args.vault, private_key_hex=args.private_key)
+    row = sink.publish_file(relation, args.file, _epoch(args.timestamp))
+    print(json.dumps({"cid": row["cid"], "signature": row["signature"]}))
     return 0
 
 
-def _events_df(spark, out_dir: str):
-    path = os.path.join(out_dir, "manifest.jsonl")
-    if not os.path.exists(path):  # vault created but nothing published yet
-        return spark.createDataFrame(
-            [],
-            "batch_id long, table string, path string, cid string, "
-            "signature string, timestamp long, is_archived boolean",
-        )
-    return spark.read.json(path).where("table IS NOT NULL")
+def _sink(out_dir: str, **kwargs):
+    """The vault at ``out_dir``, which owns its manifest format."""
+    from basin_cli_spark.streaming.window_sink import WindowedVaultSink
+
+    return WindowedVaultSink(out_dir, {}, **kwargs)
 
 
 def cmd_events(args) -> int:
@@ -134,7 +116,7 @@ def cmd_events(args) -> int:
 
     _, relation = parse_vault_name(args.vault)
     spark = _spark("vaults-events")
-    ev = _events_df(spark, args.out_dir).where(f"table = '{relation}'")
+    ev = _sink(args.out_dir).events(spark).where(f"table = '{relation}'")
     from pyspark.sql import functions as F
 
     # manifest timestamps are unix seconds (sink + write verb)
@@ -191,7 +173,7 @@ def cmd_retrieve(args) -> int:
 
         extra.append(gateway_resolver(http_transport(), args.gateway_url))
     df = retrieve(
-        spark, _events_df(spark, args.out_dir), args.cid, resolvers=extra
+        spark, _sink(args.out_dir).events(spark), args.cid, resolvers=extra
     )
     if args.output:
         df.coalesce(1).write.mode("overwrite").parquet(args.output)
@@ -210,7 +192,7 @@ def cmd_vaults(args) -> int:
     from basin_cli_spark.operators.events import list_vaults, registered_vaults
 
     spark = _spark("vaults-list")
-    from_events = list_vaults(_events_df(spark, args.out_dir), "table")
+    from_events = list_vaults(_sink(args.out_dir).events(spark), "table")
     reg = registered_vaults(spark, args.out_dir).select(
         F.split("vault", "[.]")[1].alias("table"), "cache"
     )

@@ -46,10 +46,9 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from basin_cli_spark.functions.multiset import fold
 from basin_cli_spark.functions.signing import P
-from basin_cli_spark.operators.layout import spread
 
 _B = 7  # secp256k1: y^2 = x^3 + 7
 _SQRT_EXP = (P + 1) // 4  # p ≡ 3 (mod 4): sqrt(a) = a^((p+1)/4)
@@ -241,94 +240,32 @@ class MultisetHash:
     def __eq__(self, other) -> bool:
         return isinstance(other, MultisetHash) and self._point == other._point
 
+    def to_hex(self) -> str:
+        """Affine point as 'x,y' hex ('' for the identity): the partial
+        functions/multiset.fold ships between tasks."""
+        pt = self._point
+        return "" if pt is None else f"{pt[0]:x},{pt[1]:x}"
+
+    @classmethod
+    def from_hex(cls, s: str) -> "MultisetHash":
+        if not s:
+            return cls()
+        x, y = s.split(",")
+        return cls((int(x, 16), int(y, 16)))
+
 
 def ecmh_digest(df: DataFrame, col: str) -> str:
-    """Distributed multiset digest of a column.
-
-    Map side: each partition folds its rows into one accumulator point
-    (mapInPandas -> one row per partition).  Reduce side: the driver adds
-    the <=numPartitions partial points.  Because addition commutes, the
-    result is independent of partitioning — the property the reference's
-    Union relies on (ecmh.go:41-48) — so the input is spread without a
-    key: a multiset's values repeat, and hashing them would put every
-    copy of a hot value in one task.
-    """
-    import pandas as pd
-
-    def _partial(batches):
-        acc = MultisetHash()
-        n = 0
-        for pdf in batches:
-            for v in pdf[col]:
-                if v is not None:
-                    acc.insert(str(v).encode())
-                    n += 1
-        if n:
-            x, y = acc._point
-            yield pd.DataFrame({"x": [hex(x)], "y": [hex(y)]})
-
-    partials = (
-        spread(df.select(col))
-        .mapInPandas(_partial, schema="x string, y string")
-        .collect()
-    )
-    total = MultisetHash()
-    for row in partials:
-        total.union(MultisetHash((int(row.x, 16), int(row.y, 16))))
-    return total.digest()
+    """Distributed multiset digest of a column: each partition folds its
+    rows into one accumulator point, the driver adds the partial points
+    (functions/multiset.fold)."""
+    return fold(df, col, MultisetHash).digest()
 
 
 def ecmh_digest_by_group(df: DataFrame, key_col: str, col: str) -> DataFrame:
     """Per-group multiset digests: (key, digest) — e.g. one content digest
     per vault/window, so two datasets can be diffed per key by point
-    subtraction (the reference's Difference, ecmh.go:45-48).
-
-    Two-level fold (guide §2.3 "aggregate before you shuffle", §2.5):
-    the r14-shape applyInPandas-on-the-group-key ran the ~170 us/row
-    point mapping in |groups| tasks — 5 language tasks for the fixture,
-    the biggest owning 41% of all rows, i.e. the EC work was serialized
-    onto a handful of cores with the rest idle.  Now ONE mapInPandas
-    pass folds per-(partition, group) partial POINTS at full scan
-    parallelism, and only the tiny (<= partitions x groups) partial
-    relation shuffles to the per-group point-sum + digest.  Point
-    addition is commutative/associative, so the digest is identical
-    under any regrouping (partition-independence is a pinned property,
-    tests/test_ecmh.py)."""
-    import pandas as pd
-
-    def _partials(batches):
-        accs: dict = {}
-        for pdf in batches:
-            for k, v in zip(pdf[key_col], pdf[col]):
-                # track the group even when every value is NULL, so an
-                # all-NULL group still surfaces with digest 'empty'
-                # (exactly what the one-level group fold produced)
-                acc = accs.setdefault(k, MultisetHash())
-                if v is not None:
-                    acc.insert(str(v).encode())
-        if accs:
-            pts = {k: acc._point for k, acc in accs.items()}
-            yield pd.DataFrame(
-                {
-                    key_col: list(pts),
-                    "x": [hex(p[0]) if p else None for p in pts.values()],
-                    "y": [hex(p[1]) if p else None for p in pts.values()],
-                }
-            )
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = MultisetHash()
-        for x, y in zip(pdf["x"], pdf["y"]):
-            if x is not None:  # identity partial (all-NULL slice)
-                acc.union(MultisetHash((int(x, 16), int(y, 16))))
-        return pd.DataFrame(
-            {key_col: [pdf[key_col].iloc[0]], "digest": [acc.digest()]}
-        )
-
-    rows = df.select(F.col(key_col).cast("string").alias(key_col), col)
-    partials = spread(rows).mapInPandas(
-        _partials, schema=f"{key_col} string, x string, y string"
-    )
-    return partials.groupBy(key_col).applyInPandas(
-        _merge, schema=f"{key_col} string, digest string"
-    )
+    subtraction (the reference's Difference, ecmh.go:45-48).  Partial
+    points fold per (partition, group) at full scan parallelism, so a
+    dominant group's EC work is not serialized onto one task
+    (functions/multiset.fold)."""
+    return fold(df, col, MultisetHash, key_col)

@@ -26,12 +26,9 @@ hash-to-group map is SHAKE-256 with 384-byte output reduced mod p
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from basin_cli_spark.operators.layout import spread
+from basin_cli_spark.functions.multiset import fold
 
 # RFC 3526 MODP group 15 prime (3072-bit) — public constant.
 MODULUS = int(
@@ -141,36 +138,24 @@ class MulMultisetHash:
             and self._value() == other._value()
         )
 
+    def to_hex(self) -> str:
+        """The group element in hex: the partial functions/multiset.fold
+        ships between tasks."""
+        return f"{int(self._value()):x}"
+
+    @classmethod
+    def from_hex(cls, s: str) -> "MulMultisetHash":
+        return cls(num=int(s, 16))
+
 
 def muhash_accumulate(df: DataFrame, col: str) -> MulMultisetHash:
     """Distributed MuHash fold of a column into an accumulator: one
-    partial product per partition (mapInPandas), driver multiplies the
-    <= numPartitions partials.  Returning the accumulator (not just the
+    partial product per partition, multiplied on the driver
+    (functions/multiset.fold).  Returning the accumulator (not just the
     hex digest) lets callers compose digests algebraically — union two
     corpora, or difference an erasure batch out of a stored digest
     (q_corpus_delete_digest)."""
-    import pandas as pd
-
-    def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = _g(1)
-        n = 0
-        for pdf in batches:
-            for v in pdf[col]:
-                if v is not None:
-                    acc = (acc * hash_to_group(str(v).encode())) % _MOD
-                    n += 1
-        if n:
-            yield pd.DataFrame({"num": [f"{int(acc):x}"]})
-
-    partials = (
-        spread(df.select(col))
-        .mapInPandas(_partial, schema="num string")
-        .collect()
-    )
-    total = MulMultisetHash()
-    for row in partials:
-        total.union(MulMultisetHash(num=int(row.num, 16)))
-    return total
+    return fold(df, col, MulMultisetHash)
 
 
 def muhash_digest(df: DataFrame, col: str) -> str:
@@ -182,47 +167,8 @@ def muhash_digest(df: DataFrame, col: str) -> str:
 
 
 def muhash_digest_by_group(df: DataFrame, key_col: str, col: str) -> DataFrame:
-    """Per-group MuHash digests: (key, digest).
-
-    Two-level fold, same restructure as ecmh_digest_by_group (guide §2.3
-    / §2.5): the old one-shuffle applyInPandas ran the per-row SHAKE-256
-    + 3072-bit mulmod in |groups| tasks, serializing the bignum work onto
-    a handful of cores.  Now one mapInPandas pass folds per-(partition,
-    group) partial PRODUCTS at full parallelism and only the tiny
-    (<= partitions x groups) partial relation shuffles to the per-group
-    product + digest.  Multiplication commutes, so the digest is
-    identical under any regrouping (tests/test_muhash.py pins
-    partition-independence); an all-NULL group's partial is the identity
-    (1), so it still surfaces with digest 'empty'."""
-    import pandas as pd
-
-    def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accs: dict = {}
-        for pdf in batches:
-            for k, v in zip(pdf[key_col], pdf[col]):
-                acc = accs.setdefault(k, _g(1))
-                if v is not None:
-                    accs[k] = (acc * hash_to_group(str(v).encode())) % _MOD
-        if accs:
-            yield pd.DataFrame(
-                {
-                    key_col: list(accs),
-                    "num": [f"{int(a):x}" for a in accs.values()],
-                }
-            )
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = MulMultisetHash()
-        for num in pdf["num"]:
-            acc.union(MulMultisetHash(num=int(num, 16)))
-        return pd.DataFrame(
-            {key_col: [pdf[key_col].iloc[0]], "digest": [acc.digest()]}
-        )
-
-    rows = df.select(F.col(key_col).cast("string").alias(key_col), col)
-    partials = spread(rows).mapInPandas(
-        _partials, schema=f"{key_col} string, num string"
-    )
-    return partials.groupBy(key_col).applyInPandas(
-        _merge, schema=f"{key_col} string, digest string"
-    )
+    """Per-group MuHash digests: (key, digest).  Partial products fold per
+    (partition, group) at full parallelism, so the per-row SHAKE-256 +
+    3072-bit mulmod is not serialized onto one task per group
+    (functions/multiset.fold)."""
+    return fold(df, col, MulMultisetHash, key_col)

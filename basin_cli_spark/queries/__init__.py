@@ -83,113 +83,17 @@ def register(name: str, oracle: str | None = None):
 
 
 # The driver's correctness gate samples the FIRST 50 registry entries, so
-# iteration order is part of the contract.  Round-8 rotation — the
-# attestation-completion head: rounds 1-7 attested 161 distinct entries;
-# this head carries (a) the 42 entries that have never had a driver
-# CORRECTNESS row (everything never-attested, per the r7 TODO), (b) the 5
-# entries red in CORRECTNESS_r07, all fixed this round (canonicalization/
-# dtype contract violations, not wrong values — see oracle.py's hardened
-# compare()), and (c) 3 re-attestation picks: q_ecmh_digest_by_group
-# (its only driver rows predate its oracle, so it has never been
-# hash-attested), q_datetime_funcs (oracle day_start/month_start now CAST
-# AS TIMESTAMP for the dtype-class gate), and q_window_nth_value (judge-
-# flagged NULL-masked int-vs-double risk; arrow-level audit says int==int,
-# this row proves it under the driver).  After a green r8, cumulative
-# driver attestation is 203/203.
-#
-# Round-9 rotation — the stale-first freshness head: CORRECTNESS r1-r8
-# attestation is 203/203 cumulative with zero red latest rows, so r9
-# rotates the 43 entries whose latest driver row predates round 5 (they
-# predate the hardened driver-strict canonicalizer and four rounds of code
-# churn: outer-join family, 17 TPC-H shapes, rollup/cube/pivot/unpivot,
-# corr/covar/median, simhash/ngram-jaccard dedup, events at/latest_n,
-# CDC replays) plus 7 round-5 picks whose underlying code changed since
-# their last green row — q_dedup_exact (binary unhex(md5) key rework,
-# commit ab673d5), keep_one/minhash (shared dedup kernels), the three
-# similarity probes (operators/similarity.py churn), decontaminate (Bloom
-# prefilter touched in r6).  After a green r9, no registry entry's latest
-# attestation predates round 5.
-#
-# Round-10 rotation — the final freshness rotation (r9 verdict item #2):
-# after r9, the latest-attestation distribution is {r9: 50, r8: 50,
-# r7: 43, r6: 50, r5: 10}.  That head carried the 10 r5-latest entries
-# plus the 40 oldest r6-latest entries; CORRECTNESS_r10 attested all 50
-# green, so after r10 nothing predates round 6 and every entry has been
-# re-attested under the driver-strict canonicalizer (r8+).
-#
-# Round-11 rotation — freshness completion, leg 1 of 2 (r10 verdict item
-# #1): latest-attestation distribution after r10 is {r10: 50, r9: 50,
-# r8: 50, r7: 43, r6: 10}.  This head carries the 10 entries whose latest
-# driver row is still r6 plus the 40 OLDEST of the 43 r7-latest entries.
-# All 43 were first attested in r7, so the age sort (first-ever
-# attestation round, registry position — same key as r9/r10, computed
-# from CORRECTNESS_r01..r10.json against the r10 registry order) reduces
-# to registry position; the 3 entries left for r12 are the positional
-# tail: q_stream_session_window, q_stream_dedup_within_watermark,
-# q_stream_ivf_assign.  After a green r11, no entry's latest attestation
-# predates round 7.
-#
-# Round-12 rotation — freshness completion, leg 2 of 2 (r11 verdict item
-# #1): latest-attestation distribution after r11 is {r11: 50, r10: 50,
-# r9: 50, r8: 50, r7: 3}.  This head carries the 3 entries whose latest
-# driver row is still r7 (leg 1's positional tail) plus the 47 OLDEST of
-# the 50 r8-latest entries, under the same age key as r9/r10/r11
-# (first-ever attestation round, then registry position, computed from
-# CORRECTNESS_r01..r11.json against the r11 registry order):
-# q_ecmh_digest_by_group (first r1), the seven first-r7 entries, then
-# the first-r8 entries in position order.  The 3 r8 leftovers for a
-# hypothetical r13 leg are the positional tail: q_window_sliding,
-# q_window_percent_rank, q_stream_dsir_score.  After a green r12, no
-# entry's latest attestation predates round 8 — every entry's latest
-# green row postdates the driver-strict canonicalizer, the width-cast
-# surface, and the sql_dec2dbl oracle-cast route.
-#
-# Round-13 rotation — freshness completion, leg 3 (final; r12 verdict
-# item #1): latest-attestation distribution after r12 is {r12: 50,
-# r11: 50, r10: 50, r9: 50, r8: 3}.  This head carries the 3 entries
-# whose latest driver row is still r8 (leg 2's positional tail:
-# q_window_sliding, q_window_percent_rank, q_stream_dsir_score) plus the
-# 47 OLDEST of the 50 r9-latest entries under the same age key as
-# r9-r12 (first-ever attestation round, then registry position, computed
-# from CORRECTNESS_r01..r12.json against the r12 registry order): the
-# 35 first-r1 entries, the 11 first-r2 entries, then
-# q_minhash_jaccard_estimate (first r4).  The 3 r9 leftovers are the
-# positional tail: q_similarity_ann_multiprobe, q_dedup_keep_one,
-# q_decontaminate — all three first attested r4-r5 and re-attested r9,
-# i.e. already post-canonicalizer, so no further leg is required on
-# freshness grounds.  After a green r13, no entry's latest attestation
-# predates round 9.
-#
-# Round-14 rotation — STEADY-STATE POLICY (r13 verdict item #2): the
-# freshness program is complete (post-r13 distribution {r13: 50, r12: 50,
-# r11: 50, r10: 50, r9: 3}; nothing predates the r8 driver-strict
-# canonicalizer).  From r14 on, every head is simply the 50 entries with
-# the OLDEST latest-attestation under the standing age key — (latest
-# driver-green round, first-ever attestation round, registry position),
-# computed from all CORRECTNESS_r*.json against the previous round's
-# registry order — so attestations never re-age past ~4 rounds and no
-# bespoke leg design is needed.  For r14 that was the 3 r9-latest
-# positional leftovers plus the 47 oldest r10-latest entries.
-#
-# Round-15 rotation — steady-state leg 2: post-r14 distribution is
-# {r14: 50, r13: 50, r12: 50, r11: 50, r10: 3}.  This head is the 3
-# r10-latest positional leftovers (q_similarity_pq_adc_trained,
-# q_embedding_prototype_prune, q_similarity_hard_negatives) plus the 47
-# oldest r11-latest entries under the standing age key — recomputed this
-# round from CORRECTNESS_r01..r14.json against the r14 registry order.
-# The 3 r11 leftovers for r16 are the positional tail:
-# q_session_window, q_window_range_frame, q_window_ignore_nulls.
+# iteration order is part of the contract.  Standing rotation: each head is
+# the 50 entries with the oldest latest green driver attestation, keyed by
+# (latest green round, first attested round, registry position) over all
+# CORRECTNESS_r*.json; the rotation history is in git and CHANGES.md.
 REPRESENTATIVE_HEAD = [
-    # -- the 3 r10-latest entries (r14 leg's positional tail) --
     "q_similarity_pq_adc_trained", "q_embedding_prototype_prune",
     "q_similarity_hard_negatives",
-    # -- the 47 oldest r11-latest entries --
-    # first attested r6, in r14 registry-position order:
     "q_sample_per_source_cap", "q_corpus_boilerplate_scrub",
     "q_corpus_mad_prune", "q_corpus_gopher_rules", "q_llm_prep_pipeline_v3",
     "q_split_leakage", "q_corpus_rebalance", "q_corpus_shard_pack",
     "q_stream_quality_gate", "q_stream_cdc_apply",
-    # first attested r7:
     "q_approx_percentile", "q_muhash_digest_by_group",
     "q_dedup_source_overlap", "q_text_quality_score", "q_text_fingerprint",
     "q_multimodal_decode", "q_multimodal_frames",

@@ -1965,32 +1965,17 @@ ORDER BY vec_id
 
 
 def _proto_scores(spark, sf_dir):
-    """Loader wrapper around _proto_scores_df for the fixture table.
-    The fixture parquet reads as few partitions, so the centroid lineage
-    is repartitioned for parallelism here; callers with an
-    already-partitioned frame pass repartition=False."""
-    return _proto_scores_df(load_table(spark, sf_dir, "embeddings"))
-
-
-def _proto_scores_df(e, repartition=True):
-    """Shared builder: (vec_id, label, proto_sim) — cosine of every
-    vector against its label's centroid.  The per-(label, dim) centroid
+    """(vec_id, label, proto_sim) — cosine of every fixture vector
+    against its label's centroid.  The per-(label, dim) centroid
     aggregation is a plain hash-agg with map-side partials (posexplode
     keys the shuffle, never a vector collect); the assembled centroid
     table is n_labels rows — constant-size by the label vocabulary — so
     the corpus joins it broadcast without shuffling.  Centroid
     components round to 6 before the distance (the
-    q_embedding_label_centroids convention).  Takes the embeddings
-    DataFrame directly so non-fixture frames (the scale smoke's
-    skew-labeled corpus) run the same lineage.  repartition=False skips
-    the centroid-lineage repartition when the input frame is already
-    well-partitioned (it exists for few-partition fixture reads; an
-    extra full-corpus shuffle is measured cost on a persisted frame)."""
-    src = e
-    if repartition:
-        src = spread(e, "vec_id")
+    q_embedding_label_centroids convention)."""
+    e = load_table(spark, sf_dir, "embeddings")
     cent = (
-        src
+        spread(e, "vec_id")
         .select("label", F.posexplode("embedding").alias("pos", "v"))
         .groupBy("label", "pos")
         .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("c"))

@@ -33,6 +33,13 @@ from basin_cli_spark.functions.signing import sign_file
 from basin_cli_spark.sources.cdc import materialize_table
 
 
+MANIFEST_SCHEMA = (
+    "batch_id long, table string, path string, cid string, "
+    "signature string, timestamp long, is_archived boolean, "
+    "ecmh_digest string, digest_algo string"
+)
+
+
 class WindowedVaultSink:
     """foreachBatch target: per table, export the batch's inserts to a
     parquet window file, sign it, and append a manifest event row."""
@@ -43,8 +50,7 @@ class WindowedVaultSink:
         schemas: dict[str, list[tuple[str, str]]],
         vault: str = "ns.relation",
         private_key_hex: str | None = None,
-        window_digest: bool = False,
-        digest_algo: str = "ecmh",
+        digest: str | None = None,
     ) -> None:
         self.out_dir = out_dir
         self.schemas = schemas
@@ -54,15 +60,13 @@ class WindowedVaultSink:
         # reference ships ecmh as a library with no wired consumer;
         # stamping each window makes it useful: two windows diff by group
         # subtraction, a vault's total content digest is the combination
-        # of its window digests, independent of window boundaries).  Off
-        # by default.  digest_algo picks the group: "ecmh"
-        # (functions/ecmh.py, reference parity, ~4.1K rows/s/core) or
-        # "muhash" (functions/muhash.py, the scale path at ~30K
-        # rows/s/core — see SCALE.md "Multiset-digest throughput").
-        if digest_algo not in ("ecmh", "muhash"):
-            raise ValueError(f"unknown digest_algo: {digest_algo!r}")
-        self.window_digest = window_digest
-        self.digest_algo = digest_algo
+        # of its window digests, independent of window boundaries).
+        # None (off), "ecmh" (functions/ecmh.py, reference parity, ~4.1K
+        # rows/s/core) or "muhash" (functions/muhash.py, the scale path at
+        # ~30K rows/s/core — see SCALE.md "Multiset-digest throughput").
+        if digest not in (None, "ecmh", "muhash"):
+            raise ValueError(f"unknown digest: {digest!r}")
+        self.digest = digest
         self.manifest_path = os.path.join(out_dir, "manifest.jsonl")
         os.makedirs(out_dir, exist_ok=True)
 
@@ -107,14 +111,30 @@ class WindowedVaultSink:
                   "is_archived": False}]
             )
 
-    def _event_row(self, table: str, path: str, batch_id: int) -> dict:
-        # content id: keccak over the parquet part files (sorted for
-        # determinism); signature over the same bytes when a key is set.
-        parts = sorted(
-            os.path.join(path, p)
-            for p in os.listdir(path)
-            if p.endswith(".parquet")
-        )
+    def publish_file(self, table: str, file: str, timestamp: int) -> dict:
+        """Publish one existing parquet file as an event of ``table``
+        (the reference's direct `vaults write`), outside any batch."""
+        file = os.path.abspath(file)
+        row = {**self._event_row(table, file, -1, [file]), "timestamp": timestamp}
+        self._append_manifest([row])
+        return row
+
+    def _event_row(
+        self,
+        table: str,
+        path: str,
+        batch_id: int,
+        parts: list[str] | None = None,
+    ) -> dict:
+        # content id: keccak over the part files (by default the parquet
+        # parts under path, sorted for determinism); signature over the
+        # same bytes when a key is set.
+        if parts is None:
+            parts = sorted(
+                os.path.join(path, p)
+                for p in os.listdir(path)
+                if p.endswith(".parquet")
+            )
         # Single-part exports hash the file directly (byte-parity with the
         # reference's whole-file keccak cid, signing.go:34-56); multi-part
         # exports hash the concatenation of per-part digests so every part
@@ -127,10 +147,10 @@ class WindowedVaultSink:
         )
         cid = "0x" + cid_bytes.hex()
         digest = None
-        if self.window_digest:
+        if self.digest is not None:
             from basin_cli_spark.session import get_spark
 
-            if self.digest_algo == "muhash":
+            if self.digest == "muhash":
                 from basin_cli_spark.functions.muhash import (
                     muhash_digest as _digest_fn,
                 )
@@ -163,7 +183,7 @@ class WindowedVaultSink:
         }
         if digest is not None:
             row["ecmh_digest"] = digest
-            row["digest_algo"] = self.digest_algo
+            row["digest_algo"] = self.digest
         return row
 
     def events(self, spark) -> DataFrame:
@@ -177,13 +197,11 @@ class WindowedVaultSink:
         The schema is explicit: schema inference re-reads every manifest
         file before the real scan (2x I/O on what grows to millions of
         lines), and an all-marker manifest would otherwise infer
-        all-null types and break downstream filters."""
-        schema = (
-            "batch_id long, table string, path string, cid string, "
-            "signature string, timestamp long, is_archived boolean, "
-            "ecmh_digest string, digest_algo string"
-        )
-        return spark.read.json(self.manifest_path, schema=schema).where(
+        all-null types and break downstream filters.  Before the first
+        publish there is no manifest, and the table is empty."""
+        if not os.path.exists(self.manifest_path):
+            return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return spark.read.json(self.manifest_path, schema=MANIFEST_SCHEMA).where(
             "table IS NOT NULL"
         )
 

@@ -40,62 +40,20 @@ HEADLINE = [
     "q_dedup_minhash",
     "q_dedup_simhash",
     "q_dedup_embedding",
-    "q_dedup_embedding_keep_one",  # added r4
+    "q_dedup_embedding_keep_one",
     "q_similarity_bruteforce",
-    "q_similarity_ann_multiprobe",  # added r4
+    "q_similarity_ann_multiprobe",
     "q_similarity_ann_ivf",
     "q_grouping_sets",
     "q_events_before_after",
     "q_window_tumbling",
-    "q_timeseries_gapfill",  # added r4
-    "q_text_quality_stats",
-    "q_dedup_semantic_ivf",  # added r5
-    "q_corpus_lm_prune",  # added r5
-    "q_muhash_digest",  # added r5
-    "q_dedup_incremental",  # added r5
-    "q_decontaminate_bloom",  # added r5
-    "q_sample_per_source_cap",  # added r6 (skew-escape partial top-k)
-    "q_corpus_mad_prune",  # added r6
-    "q_cdc_scd2_history",  # added r6
-    "q_similarity_pq_adc_trained",  # added r6
-    "q_corpus_gopher_rules",  # added r6 (rule-stack JVM throughput)
-    "q_llm_prep_pipeline_v3",  # added r6 (composed gate+prune+cap)
-    "q_corpus_boilerplate_scrub",  # added r6 (corpus-level segment rewrite)
-    "q_embedding_prototype_prune_2pass",  # added r7 (skew-safe sketch prune)
-    "q_corpus_lm_prune_2pass",  # added r7 (skew-safe LM prune)
-    "q_corpus_mad_prune_2pass",  # added r7 (two-round sketch MAD)
-    "q_corpus_dsir_select",  # added r7 (importance-resampling selection)
-    "q_llm_prep_pipeline_v4",  # added r7 (gate -> DSIR -> per-lang quota)
-    "q_corpus_dup_ngram_stats",  # added r7 (Gopher repetition coverage)
-    "q_corpus_domain_kl",  # added r7 (per-source KL domain-shift audit)
-    "q_corpus_zipf_slope",  # added r7 (rank-frequency corpus health)
-    "q_embedding_anisotropy",  # added r7 (closed-form all-pairs cosine)
-    # r14 (optimization round): the registry-wide sweep's biggest finds —
-    # all optimized this round, all previously OUTSIDE the headline set,
-    # added so the driver's own bench tracks them from now on
-    "q_text_hash_embedding",  # added r14 (interpreted-fold norm fix)
-    "q_approx_count_distinct",  # added r14 (per-key HLL buffer fix)
-    "q_approx_percentile",  # added r14 (spread map-side percentile)
-    "q_corr_covar",  # added r14 (spread decimal-moment partials)
-    "q_text_language_id",  # added r14 (de-joined confusion table)
-    "q_text_fingerprint",  # added r14 (spread per-char hash fold)
-]
-
-# queries added to the headline per round — summed out of the
-# total_pre_r{N}_subset keys so round-over-round totals stay comparable
-_R4_ADDED = {
-    "q_dedup_embedding_keep_one",
-    "q_similarity_ann_multiprobe",
     "q_timeseries_gapfill",
-}
-_R5_ADDED = {
+    "q_text_quality_stats",
     "q_dedup_semantic_ivf",
     "q_corpus_lm_prune",
     "q_muhash_digest",
     "q_dedup_incremental",
     "q_decontaminate_bloom",
-}
-_R6_ADDED = {
     "q_sample_per_source_cap",
     "q_corpus_mad_prune",
     "q_cdc_scd2_history",
@@ -103,18 +61,24 @@ _R6_ADDED = {
     "q_corpus_gopher_rules",
     "q_llm_prep_pipeline_v3",
     "q_corpus_boilerplate_scrub",
-}
-_R7_ADDED = {
-    "q_corpus_domain_kl",
-    "q_corpus_zipf_slope",
-    "q_embedding_anisotropy",
-    "q_corpus_dup_ngram_stats",
     "q_embedding_prototype_prune_2pass",
     "q_corpus_lm_prune_2pass",
     "q_corpus_mad_prune_2pass",
     "q_corpus_dsir_select",
     "q_llm_prep_pipeline_v4",
-}
+    "q_corpus_dup_ngram_stats",
+    "q_corpus_domain_kl",
+    "q_corpus_zipf_slope",
+    "q_embedding_anisotropy",
+    "q_text_hash_embedding",
+    "q_approx_count_distinct",
+    "q_approx_percentile",
+    "q_corr_covar",
+    "q_text_language_id",
+    "q_text_fingerprint",
+]
+
+# the entries the compact line's total_pre_r14_subset key leaves out
 _R14_ADDED = {
     "q_text_hash_embedding",
     "q_approx_count_distinct",
@@ -129,17 +93,12 @@ def compact_summary(times: dict, sf: str, load_gate: dict) -> str:
     """The final stdout line: a compact single-line JSON summary.
 
     The driver keeps only the last ~2 KB of stdout, so this line
-    (printed last) is what its artifact parses.  r15 change
-    (additions-only, per the r14 verdict's top item): the per-query
-    `queries` dict and the cross-round `total_pre_r14_subset` key now
-    ride in this line too — both rounds r13/r14 the driver could parse
-    only the headline total (PERF `n_common: 0`, null geomean) because
-    per-query times lived solely in the full payload line, which the
-    2 KB tail crops.  With 50 queries at 3-decimal precision and tight
+    (printed last) is what its artifact parses, per-query times
+    included.  With 50 queries at 3-decimal precision and tight
     separators the line is ~1.7 KB; the size bound (<1900 bytes at
     full headline scale, leaving tail slack) is pinned by
     tests/test_bench_tooling.py.  The full per-query record (median,
-    spread, env) is still the line above it and bench_out.json."""
+    spread, env) is the line above it and bench_out.json."""
     return json.dumps(
         {
             "metric": "headline_queries_total",
@@ -150,8 +109,8 @@ def compact_summary(times: dict, sf: str, load_gate: dict) -> str:
             # per-query seconds — what the driver's PERF per-query
             # comparison reads; names must stay stable across rounds
             "queries": {k: round(v, 3) for k, v in times.items()},
-            # the 44-query set every r7-r13 artifact totals over — THE
-            # cross-round total-comparison key after the r14 additions
+            # the total over the headline minus _R14_ADDED, comparable
+            # with captures taken before those entries joined
             "total_pre_r14_subset": round(
                 sum(v for k, v in times.items() if k not in _R14_ADDED), 3
             ),
@@ -160,8 +119,7 @@ def compact_summary(times: dict, sf: str, load_gate: dict) -> str:
             # 1-min loadavg at the END of the run: a driver capture that
             # ran under an external load spike reads slower than the
             # load-gated builder pool, and this field makes that delta
-            # self-explaining in the artifact (r11: 35.97s driver vs
-            # 29.76s builder, end load 10.48).
+            # self-explaining in the artifact.
             "load_avg_end": round(os.getloadavg()[0], 2),
             "full_payload": "bench_out.json",
         },
@@ -169,29 +127,20 @@ def compact_summary(times: dict, sf: str, load_gate: dict) -> str:
     )
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def load_gate() -> dict:
+    """Wait, before any Spark session exists, until the 1-min load average
+    is below $SPARK_GRAFT_BENCH_LOAD_MAX (default 2.0) on two consecutive
+    polls, for at most $SPARK_GRAFT_BENCH_LOAD_WAIT_S (default 300) s, and
+    report what was seen.
 
-    # Load gate: the r6 AND r7 committed artifacts both shipped load-marked
-    # (1-min load 8-10 on 32 cpus at write time), making cross-round totals
-    # incomparable without judge reruns.  Poll BEFORE the Spark session
-    # exists (the bench's own 32-thread JVM dominates loadavg once running,
-    # so gating at write time would measure ourselves) and start the timed
-    # pass only once the 1-min load is below the target — or the wait
-    # budget runs out, in which case the artifact documents that.
-    # wait budget bounded at 300s: a 1-min loadavg decays from ~10 to <2
-    # within ~3 min of true idle, so a longer wait only helps under
-    # sustained external load (where it wouldn't converge anyway) and
-    # risks the round driver's own bench timeout.
-    # "clean" requires TWO consecutive below-target polls: a single final
-    # sample can catch a momentary dip at the exact end of the wait budget
-    # and stamp a capture clean while the first timed queries still run
-    # against the decaying load tail.
+    Polling precedes the session because a running JVM's own threads
+    dominate the load average.  Two consecutive polls are required so a
+    momentary dip at the end of the wait does not stamp a capture clean
+    while the load tail still decays.  The first two polls are ~3 s apart,
+    so an idle machine is clean without a full 15 s tick, and a zero wait
+    budget gates on the ambient reading alone."""
     load_target = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_MAX", "2.0"))
     wait_budget = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT_S", "300"))
-    # Seed with TWO polls a few seconds apart so an idle machine is clean
-    # after ~3s instead of paying a mandatory 15s sleep, and so a short
-    # wait budget (< one 15s loop tick) can still ever report clean.
     samples = [os.getloadavg()[0]]
     waited = 0.0
 
@@ -203,9 +152,6 @@ def main() -> None:
         )
 
     if wait_budget <= 0:
-        # Explicit no-wait mode (SPARK_GRAFT_BENCH_LOAD_WAIT_S=0): don't
-        # sleep at all; gate on the ambient reading alone (loadavg only
-        # ticks every ~5s, so a second spaced poll needs a sleep).
         samples.append(samples[0])
     elif samples[0] < load_target:
         seed_sleep = min(3.0, max(wait_budget, 0.1))
@@ -216,7 +162,7 @@ def main() -> None:
         time.sleep(15)
         waited += 15
         samples.append(os.getloadavg()[0])
-    load_gate = {
+    return {
         "target": load_target,
         "waited_s": waited,
         "load_at_start": round(samples[-1], 2),
@@ -224,6 +170,11 @@ def main() -> None:
         "load_max_seen": round(max(samples), 2),
         "clean": _two_below(),
     }
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    load_gate_result = load_gate()
 
     registry = load_all()
     spark = get_spark(app_name="basin_cli_spark_bench")
@@ -276,9 +227,8 @@ def main() -> None:
         spreads[name] = round(max(runs) - min(runs), 3)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Environment marker: round-over-round totals have shifted uniformly
-    # across untouched queries before (r4->r5 ~40%), which is sandbox load,
-    # not plan changes.  Recording the 1/5/15-min load average and core
+    # Environment marker: totals have shifted uniformly across untouched
+    # queries under sandbox load, not plan changes.  Recording the 1/5/15-min load average and core
     # count alongside the numbers lets a cross-round comparison carry that
     # caveat explicitly instead of guessing.
     env = {
@@ -287,7 +237,7 @@ def main() -> None:
         # the cross-round comparability signal.
         "load_avg": [round(v, 2) for v in os.getloadavg()],
         "cpus": os.cpu_count(),
-        "load_gate": load_gate,
+        "load_gate": load_gate_result,
     }
     payload = json.dumps(
             {
@@ -298,42 +248,6 @@ def main() -> None:
                 "median": medians,
                 "spread": spreads,
                 "env": env,
-                "total_pre_r4_subset": round(
-                    sum(
-                        v
-                        for k, v in times.items()
-                        if k not in _R4_ADDED | _R5_ADDED | _R6_ADDED
-                        | _R7_ADDED | _R14_ADDED
-                    ),
-                    3,
-                ),
-                "total_pre_r5_subset": round(
-                    sum(
-                        v
-                        for k, v in times.items()
-                        if k not in _R5_ADDED | _R6_ADDED | _R7_ADDED
-                        | _R14_ADDED
-                    ),
-                    3,
-                ),
-                "total_pre_r6_subset": round(
-                    sum(
-                        v
-                        for k, v in times.items()
-                        if k not in _R6_ADDED | _R7_ADDED | _R14_ADDED
-                    ),
-                    3,
-                ),
-                "total_pre_r7_subset": round(
-                    sum(
-                        v
-                        for k, v in times.items()
-                        if k not in _R7_ADDED | _R14_ADDED
-                    ),
-                    3,
-                ),
-                # the 44-query set every round r7-r13 totals over — THE
-                # cross-round comparison key now that r14 adds entries
                 "total_pre_r14_subset": round(
                     sum(v for k, v in times.items() if k not in _R14_ADDED), 3
                 ),
@@ -342,10 +256,8 @@ def main() -> None:
     )
     # Stdout format (two lines): the FULL payload line first, then a
     # compact summary line.  The driver keeps only the last ~2 KB of
-    # stdout and parses what it finds there; the full payload line grew
-    # past that budget around r6, so BENCH_r06..r10 all carry
-    # 'parsed: null' (the captured tail is a cropped, unparseable
-    # fragment of the one big line).  The compact line is a few hundred
+    # stdout and parses what it finds there; the full payload line is
+    # past that budget, so its cropped tail would not parse.  The compact line is a few hundred
     # bytes — small enough to always survive the tail capture whole — so
     # the driver's artifact parses again, while bench_out.json (written
     # next to this script) remains the truncation-proof full record and
@@ -353,7 +265,7 @@ def main() -> None:
     # that captures stdout unclipped.  tests/test_bench_tooling.py pins
     # this format.
     print(payload)
-    print(compact_summary(times, sf, load_gate))
+    print(compact_summary(times, sf, load_gate_result))
     out_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_out.json"
     )

@@ -17,12 +17,11 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import statistics
 import sys
 
-# bench.py lives at the repo root (one level up); its _R{N}_ADDED sets
-# are the source of truth for the total_pre_r{N}_subset memberships.
+# bench.py lives at the repo root (one level up); its _R14_ADDED set is
+# the source of truth for the total_pre_r14_subset membership.
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
@@ -88,27 +87,15 @@ def main(out_path: str, *cap_paths: str) -> int:
 
 
 def _excluded_for(key: str) -> set[str]:
-    """Queries EXCLUDED from a ``total_pre_r{N}_subset`` total.
-
-    A capture records only the subset totals, not their membership, so
-    membership is recovered from bench.py's own round-added sets: the
-    pre-r{N} subset excludes the union of ``bench._R{M}_ADDED`` for all
-    M >= N.  Derived generically from whatever _R*_ADDED sets bench
-    defines, so a future round's subset key works (or an unrecognized
-    key fails loudly) without editing a hard-coded map here."""
-    m = re.fullmatch(r"total_pre_r(\d+)_subset", key)
-    if m is None:
+    """Queries EXCLUDED from a subset total.  A capture records only the
+    total, so the membership comes from bench.py; ``total_pre_r14_subset``
+    is the one subset key bench writes."""
+    if key != "total_pre_r14_subset":
         raise KeyError(
             f"unrecognized subset-total key {key!r}: expected "
-            "total_pre_r<N>_subset matching a bench._R<N>_ADDED set"
+            "total_pre_r14_subset"
         )
-    n = int(m.group(1))
-    excluded: set[str] = set()
-    for name in dir(bench):
-        mm = re.fullmatch(r"_R(\d+)_ADDED", name)
-        if mm and int(mm.group(1)) >= n:
-            excluded |= getattr(bench, name)
-    return excluded
+    return set(bench._R14_ADDED)
 
 
 if __name__ == "__main__":

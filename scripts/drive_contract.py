@@ -144,7 +144,8 @@ SF1_SUBSET_LEG4 = (
 
 # Fifth-decade ORACLE spot (r13 verdict item #4): the corpus entries whose
 # DuckDB replay is seconds-scale at the 500k-doc / 200k-vector sf10c
-# fixture (scripts/scale_sf10_smoke.py generates it).  The r12
+# fixture (scripts/gen_sf1.py and scripts/gen_sf1_corpus.py with 100
+# copies generate it; scripts/gen_codebooks.py trains its codebook).  The r12
 # signature-equi-join oracle restatement made these replays feasible one
 # decade past sf1, so the differential (hash-attested) evidence extends to
 # the fifth decade for the dedup archetypes — not just Spark-only wall.
@@ -156,9 +157,11 @@ SF10_SPOT = (
 )
 
 # The four relational cost archetypes (wide-scan hash-agg, pushdown-filter
-# scan-agg, per-group window limit, one-shuffle as-of union/window) — the
-# same set scale_sf100_spot.py times Spark-only.  Their DuckDB replays stay
-# feasible through the SIXTH decade (q1 49s / topk 100s / asof 21s at 600M
+# scan-agg, per-group window limit, one-shuffle as-of union/window), timed
+# Spark-only by `python scripts/measure.py OUT.json
+# q1_pricing_summary,q6_forecast_revenue,q_topk_per_group,q_join_asof
+# .scratch/sf10 .scratch/sf100`.  Their DuckDB replays stay feasible
+# through the SIXTH decade (q1 49s / topk 100s / asof 21s at 600M
 # lineitem), so the differential evidence can follow the Spark-only wall:
 #   python scripts/drive_contract.py .scratch/sf10  rel_archetypes
 #   python scripts/drive_contract.py .scratch/sf100 rel_archetypes

@@ -32,8 +32,15 @@ SCALES = [
     "/root/testdata/sf0.1",
 ]
 
-IVF_PARAMS = {"k": 16, "iters": 4, "metric": "cos"}
 PQ_PARAMS = {"m": 8, "sub_dim": 8, "k": 16, "iters": 2}
+# q_dedup_semantic_ivf drops IVF cells wider than max_cell=4096 rows, so a
+# corpus above 16 x 4096 vectors trains k ~ sqrt(n) cells instead of 16.
+MAX_CELL = 4096
+
+
+def ivf_params(n: int) -> dict:
+    k = 16 if n <= 16 * MAX_CELL else round(n ** 0.5)
+    return {"k": k, "iters": 4, "metric": "cos"}
 
 
 def main(*extra_dirs: str) -> None:
@@ -70,11 +77,12 @@ def main(*extra_dirs: str) -> None:
         key = e.agg(
             F.sum(F.col("vec_id") * F.col("label")).cast("long")
         ).collect()[0][0]
-        print(f"{sf_dir}: corpus key {key}")
-        ivf = KM.train_kmeans(e, **IVF_PARAMS)
+        ivf_p = ivf_params(e.count())
+        print(f"{sf_dir}: corpus key {key}, IVF k={ivf_p['k']}")
+        ivf = KM.train_kmeans(e, **ivf_p)
         pq = KM.train_pq_codebooks(e, **PQ_PARAMS)
         out[str(key)] = {
-            "ivf_params": IVF_PARAMS,
+            "ivf_params": ivf_p,
             "pq_params": PQ_PARAMS,
             "ivf": ivf.tolist(),
             "pq": pq.tolist(),

@@ -6,9 +6,8 @@ Replication scheme (copy c in 0..copies-1, whole-database copies so every
 FK relationship survives exactly):
 
 * every int64 surrogate key k (custkey/suppkey/partkey/orderkey/event_id/
-  user_id) remaps to ``k*copies + c`` — the same re-keying
-  scripts/scale_smoke.py uses, applied consistently across fact AND
-  dimension sides so joins stay referentially intact;
+  user_id) remaps to ``k*copies + c``, applied consistently across fact
+  AND dimension sides so joins stay referentially intact;
 * region/nation keep their constant TPC-H size (int32 nationkey/regionkey
   FKs are NOT remapped);
 * one money column per scaled table gains a deterministic ``+c * 0.01``

@@ -3,10 +3,10 @@ dedup / similarity / curation families can be oracle-attested at a
 fourth decade too (leg 3 of CONTRACT_r11_sf1_subset).
 
 Exact replication is degenerate for bucketed shapes (SCALE.md), so
-documents/embeddings replicate with the SAME seeded per-copy noise the
-throughput smokes use (scale_smoke.perturbed_docs: token mutation p=0.4
-per copy; scale_smoke.perturbed_emb: per-element uniform noise in
-[-0.12, 0.12], ~29 degrees per copy) — near-dup density, not exact-dup.
+documents/embeddings replicate with seeded per-copy noise
+(perturbed_docs: token mutation p=0.4 per copy; perturbed_emb:
+per-element uniform noise in [-0.12, 0.12], ~29 degrees per copy) —
+near-dup density, not exact-dup.
 Cross-engine determinism is NOT needed from the generator: the corpus is
 materialized once as plain parquet files and both engines read the same
 bytes; only the oracle SQL must replay, which is why the two
@@ -32,9 +32,6 @@ import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
-)
 
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
@@ -42,7 +39,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from basin_cli_spark.session import get_spark  # noqa: E402
 from basin_cli_spark.sources import load_table  # noqa: E402
-from scale_smoke import perturbed_docs, perturbed_emb  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -62,6 +58,75 @@ EMB_SCHEMA = pa.schema(
         ("label", pa.int32()),
     ]
 )
+
+
+def perturbed_docs(docs, copies: int, frac: float = 0.4):
+    """Replicate the document corpus with per-copy TOKEN noise so copies
+    are near-duplicates, not exact ones: each token of copy c mutates
+    (deterministic xxhash64 draw on (doc_id, copy, token, position))
+    with probability ``frac`` by gaining a copy-specific suffix.  A
+    3-word segment then survives identical across two copies with
+    p = (1-frac)^6 (~4.7% at frac=0.4), so hot-segment buckets and LSH
+    shingle buckets keep realistic widths instead of the copies^2
+    blowup exact replication forces.  Copy 0 keeps the original text.
+    All-JVM expressions: one split, one transform, one array_join."""
+    d = docs.withColumn(
+        "_copy", F.explode(F.array(*[F.lit(i) for i in range(copies)]))
+    )
+    w = F.filter(F.split(F.col("text"), " "), lambda t: F.length(t) > 0)
+    mut = F.transform(
+        w,
+        lambda t, i: F.when(
+            (F.col("_copy") > 0)
+            & (
+                F.pmod(
+                    F.xxhash64(F.col("doc_id"), F.col("_copy"), t, i), 1000
+                )
+                < int(frac * 1000)
+            ),
+            F.concat(t, F.lit("~c"), F.col("_copy").cast("string")),
+        ).otherwise(t),
+    )
+    return d.select(
+        (F.col("doc_id") * copies + F.col("_copy")).alias("doc_id"),
+        F.array_join(mut, " ").alias("text"),
+        "lang",
+        "source",
+    )
+
+
+def perturbed_emb(emb, copies: int, eps: float = 0.12):
+    """Replicate the embedding corpus with per-copy VECTOR noise: copy c
+    of vector v adds deterministic uniform noise in [-eps, eps] per
+    element (xxhash64 draw on (vec_id, copy, dim)).  At eps=0.12 on the
+    unit-norm 64-dim fixture the copy-to-base angle measures ~29 degrees
+    (mean cosine 0.877), so sign-LSH band signatures spread across
+    buckets the way a real near-dup crawl's do, instead of 100 copies
+    landing in one bucket and inflating candidate pairs as copies^2.
+    Copy 0 keeps the original vector.  All-JVM: one transform over the
+    array column."""
+    e = emb.withColumn(
+        "_copy", F.explode(F.array(*[F.lit(i) for i in range(copies)]))
+    )
+    pert = F.transform(
+        F.col("embedding"),
+        lambda x, i: x.cast("double")
+        + F.when(F.col("_copy") == 0, F.lit(0.0)).otherwise(
+            (
+                F.pmod(
+                    F.xxhash64(F.col("vec_id"), F.col("_copy"), i), 10000
+                ).cast("double")
+                / 10000.0
+                - 0.5
+            )
+            * (2.0 * eps)
+        ),
+    )
+    return e.select(
+        (F.col("vec_id") * copies + F.col("_copy")).alias("vec_id"),
+        pert.alias("embedding"),
+        "label",
+    )
 
 
 def generate(out_dir: str, sf1_dir: str, base_dir: str, copies: int) -> None:

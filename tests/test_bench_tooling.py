@@ -90,36 +90,32 @@ def test_refuses_single_capture(tmp_path):
 
 
 def test_subset_totals_recomputed_from_bench_sets(tmp_path):
-    # one query from bench's r7-added set, one pre-r4 query: the
-    # total_pre_r7_subset must count only the pre-r4 one.
-    r7_q = sorted(bench._R7_ADDED)[0]
+    # one query from bench's r14-added set, one older query: the
+    # total_pre_r14_subset must count only the older one.
+    r14_q = sorted(bench._R14_ADDED)[0]
     caps = [
-        _capture({"q_old": 1.0, r7_q: 3.0}),
-        _capture({"q_old": 2.0, r7_q: 2.0}),
+        _capture({"q_old": 1.0, r14_q: 3.0}),
+        _capture({"q_old": 2.0, r14_q: 2.0}),
     ]
     for c in caps:
-        c["total_pre_r7_subset"] = c["queries"]["q_old"]
+        c["total_pre_r14_subset"] = c["queries"]["q_old"]
     paths = [_write(tmp_path, f"c{i}.json", c) for i, c in enumerate(caps)]
     out = str(tmp_path / "out.json")
     assert assemble_bench.main(out, *paths) == 0
     got = json.load(open(out))
-    assert got["total_pre_r7_subset"] == 1.0  # min of q_old only
+    assert got["total_pre_r14_subset"] == 1.0  # min of q_old only
 
 
 def test_excluded_for_unknown_key_fails_loudly():
     import pytest
 
-    with pytest.raises(KeyError, match="total_pre_r<N>_subset"):
+    with pytest.raises(KeyError, match="total_pre_r14_subset"):
         assemble_bench._excluded_for("total_pre_weird")
-    # a future round's key derives generically instead of KeyError-ing:
-    # pre-r99 excludes nothing bench knows about (nothing added >= r99)
-    assert assemble_bench._excluded_for("total_pre_r99_subset") == set()
-    # pre-r4 excludes every round-added set bench defines
-    r_all = set()
-    for name in dir(bench):
-        if name.startswith("_R") and name.endswith("_ADDED"):
-            r_all |= getattr(bench, name)
-    assert assemble_bench._excluded_for("total_pre_r4_subset") == r_all
+    with pytest.raises(KeyError):
+        assemble_bench._excluded_for("total_pre_r7_subset")
+    assert assemble_bench._excluded_for("total_pre_r14_subset") == set(
+        bench._R14_ADDED
+    )
 
 
 # -- bench.py stdout format pin (r11): the driver keeps only the last

@@ -75,7 +75,7 @@ def test_window_digest_stamps_manifest_and_composes(spark, tmp_path):
 
     sink = WindowedVaultSink(
         str(tmp_path), {"t": [("id", "integer"), ("name", "text")]},
-        window_digest=True,
+        digest="ecmh",
     )
     def wal_batch(rows):
         recs = [

@@ -98,7 +98,7 @@ def test_throughput_floor():
 
 
 def test_window_digest_muhash_algo(spark, tmp_path):
-    """digest_algo='muhash' stamps MuHash window digests, and the union
+    """digest='muhash' stamps MuHash window digests, and the union
     of the window digests equals the digest of the combined rows —
     the same boundary-independence contract the ECMH sink test pins."""
     import json as _json
@@ -110,7 +110,7 @@ def test_window_digest_muhash_algo(spark, tmp_path):
 
     sink = WindowedVaultSink(
         str(tmp_path), {"t": [("id", "integer"), ("name", "text")]},
-        window_digest=True, digest_algo="muhash",
+        digest="muhash",
     )
 
     def wal_batch(rows):
@@ -159,7 +159,7 @@ def test_window_sink_rejects_unknown_algo(tmp_path):
     from basin_cli_spark.streaming.window_sink import WindowedVaultSink
 
     with pytest.raises(ValueError):
-        WindowedVaultSink(str(tmp_path), {}, digest_algo="sha3")
+        WindowedVaultSink(str(tmp_path), {}, digest="sha3")
 
 
 def test_native_backend_status_and_digest_stability():

@@ -137,6 +137,19 @@ def test_events_metadata_surface(spark, dirs):
     assert len(rows) == 1 and rows[0].cid.startswith("0x")
 
 
+def test_events_before_first_publish_is_empty(spark, dirs):
+    """A new vault has no manifest yet: events() is an empty table with
+    the manifest schema, not a missing-path error."""
+    _, out_dir, _ = dirs
+    sink = WindowedVaultSink(out_dir, SCHEMAS)
+    ev = sink.events(spark)
+    assert ev.collect() == []
+    assert ev.columns == [
+        "batch_id", "table", "path", "cid", "signature", "timestamp",
+        "is_archived", "ecmh_digest", "digest_algo",
+    ]
+
+
 def test_stateful_progress_across_restarts(spark, tmp_path):
     """applyInPandasWithState keeps per-key state across micro-batches AND
     restarts (the reference's confirmed_flush_lsn durability,
