@@ -21,7 +21,9 @@ Throughput engineering (the digest must survive a 100 TB scan):
   the pure-Python keccak kept for Ethereum signing parity — the hash
   inside the point mapping is this construction's own choice (the
   reference's ristretto255 mapping likewise uses its own hash), and
-  pure-Python Keccak at ~420 us/hash was 90% of the per-row cost;
+  pure-Python Keccak was 90% of the per-row cost (even the unrolled sponge
+  takes ~210 us per short input, vs ~0.5 us for sha256, on a 4-vCPU
+  Xeon VM);
 * the accumulator works in Jacobian coordinates — no modular inversion
   per addition (a pow(a, -1, p) is ~15 us, ~10x the cost of the few
   Jacobian multiplications); ONE inversion happens at digest() time;

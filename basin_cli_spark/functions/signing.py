@@ -102,14 +102,18 @@ def sign_bytes(content: bytes, private_key_hex: str) -> bytes:
     return sign_digest(keccak256(content), private_key_hex)
 
 
-def sign_file(path: str, private_key_hex: str) -> bytes:
-    """Streaming keccak256 (4 KB chunks) then sign — reference
-    signing.go:59-108 semantics, including the empty-file error."""
+def sign_file(path: str, private_key_hex: str, digest: bytes | None = None) -> bytes:
+    """Streaming keccak256 then sign — reference signing.go:59-108
+    semantics, including the empty-file error.  A caller that already
+    holds the file's keccak256 passes it as ``digest``, and the file is
+    not read again."""
     import os
 
     if os.path.getsize(path) == 0:
         raise ValueError(f"cannot sign empty file: {path}")
-    return sign_digest(keccak256_file(path), private_key_hex)
+    if digest is None:
+        digest = keccak256_file(path)
+    return sign_digest(digest, private_key_hex)
 
 
 def derive_address(private_key_hex: str) -> str:

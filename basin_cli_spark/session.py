@@ -25,6 +25,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half the machine's physical RAM,
+    capped at 16 GB.  A fixed 16 GB heap on a smaller machine lets the
+    driver JVM grow past the RAM it shares with the Python workers.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it in ``get_spark``."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):  # no sysconf: keep the cap
+            return "16384m"
+    return f"{min(16 << 10, phys_bytes // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "basin_cli_spark",
     master: str | None = None,
@@ -74,7 +87,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # The default 100-entry codegen class cache thrashes when a session

@@ -6,7 +6,7 @@ reference                                   this engine
 per-window embedded DuckDB file             micro-batch DataFrame
 ticker fires every windowInterval           trigger(processingTime=...)
 export: COPY t TO '<t>-<ns>.db.parquet'     batch.write.parquet(<t>-<batch>)
-empty-table guard (count(1) LIMIT 1)        df.isEmpty()
+empty-table guard (count(1) LIMIT 1)        row count in the written footers
 sign (keccak256 + secp256k1)                functions/signing.sign_file
 upload + EventInfo row                      manifest JSONL row (cid-style
                                             content hash, ts, signature)
@@ -23,8 +23,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -96,20 +98,26 @@ class WindowedVaultSink:
         rows: list[dict] = []
         for table, columns in self.schemas.items():
             tdf = materialize_table(records, table, columns)
-            if tdf.isEmpty():  # reference's empty-export guard (db.go:155-166)
-                continue
             epoch_ns = time.time_ns()
             path = os.path.join(self.out_dir, f"{table}-{epoch_ns}.parquet")
             tdf.write.mode("overwrite").parquet(path)
-            rows.append(self._event_row(table, path, batch_id))
-        self._append_manifest(rows)  # empty list still marks nothing; see below
+            parts = sorted(
+                os.path.join(path, p)
+                for p in os.listdir(path)
+                if p.endswith(".parquet")
+            )
+            # reference's empty-export guard (db.go:155-166), read from the
+            # footers just written rather than by a Spark job of its own
+            if not sum(pq.read_metadata(p).num_rows for p in parts):
+                shutil.rmtree(path)
+                continue
+            rows.append(self._event_row(table, path, batch_id, parts))
         if not rows:
             # record the empty batch so recovery does not replay it forever
-            self._append_manifest(
-                [{"batch_id": batch_id, "table": None, "path": None,
-                  "cid": None, "signature": None, "timestamp": int(time.time()),
-                  "is_archived": False}]
-            )
+            rows = [{"batch_id": batch_id, "table": None, "path": None,
+                     "cid": None, "signature": None, "timestamp": int(time.time()),
+                     "is_archived": False}]
+        self._append_manifest(rows)
 
     def publish_file(self, table: str, file: str, timestamp: int) -> dict:
         """Publish one existing parquet file as an event of ``table``
@@ -119,22 +127,10 @@ class WindowedVaultSink:
         self._append_manifest([row])
         return row
 
-    def _event_row(
-        self,
-        table: str,
-        path: str,
-        batch_id: int,
-        parts: list[str] | None = None,
-    ) -> dict:
-        # content id: keccak over the part files (by default the parquet
-        # parts under path, sorted for determinism); signature over the
-        # same bytes when a key is set.
-        if parts is None:
-            parts = sorted(
-                os.path.join(path, p)
-                for p in os.listdir(path)
-                if p.endswith(".parquet")
-            )
+    def _event_row(self, table: str, path: str, batch_id: int, parts: list[str]) -> dict:
+        # content id: keccak over the part files (the parquet parts under
+        # path, sorted for determinism); signature over the same digests
+        # when a key is set, so each part is read and hashed once.
         # Single-part exports hash the file directly (byte-parity with the
         # reference's whole-file keccak cid, signing.go:34-56); multi-part
         # exports hash the concatenation of per-part digests so every part
@@ -168,7 +164,10 @@ class WindowedVaultSink:
             )
             digest = _digest_fn(canon, "_j")
         signature = (
-            b"".join(sign_file(p, self.private_key_hex) for p in parts).hex()
+            b"".join(
+                sign_file(p, self.private_key_hex, digest=d)
+                for p, d in zip(parts, part_digests)
+            ).hex()
             if self.private_key_hex
             else None
         )

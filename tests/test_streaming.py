@@ -150,6 +150,98 @@ def test_events_before_first_publish_is_empty(spark, dirs):
     ]
 
 
+TWO_TABLES = {"t": [("id", "integer"), ("name", "text")],
+              "u": [("id", "integer"), ("name", "text")]}
+
+
+def _tx(lsn, *records):
+    """A wal2json transaction of (action, table, id, name) records."""
+    return {"commit_lsn": lsn, "records": [
+        {"action": action, "xid": lsn, "lsn": f"0/{lsn:X}", "nextlsn": "",
+         "timestamp": "2023-08-22 14:44:02.043586-03", "schema": "public",
+         "table": table,
+         "columns": [{"name": "id", "type": "integer", "value": rid},
+                     {"name": "name", "type": "text", "value": name}],
+         "pk": [{"name": "id", "type": "integer"}]}
+        for action, table, rid, name in records
+    ]}
+
+
+def _publish(spark, sink, wal_dir, batch_id, tx):
+    from basin_cli_spark.sources.cdc import read_wal_batch
+
+    name = f"tx{batch_id}.jsonl"
+    _write_tx(wal_dir, name, tx)
+    sink.process_batch(read_wal_batch(spark, os.path.join(wal_dir, name)), batch_id=batch_id)
+
+
+def test_empty_table_guard(spark, dirs):
+    """A table whose window holds only U/D records publishes nothing: no
+    parquet directory and no manifest row.  A window with no insert at
+    all writes only the empty-batch marker."""
+    wal_dir, out_dir, _ = dirs
+    sink = WindowedVaultSink(out_dir, TWO_TABLES, private_key_hex=PRIV)
+
+    _publish(spark, sink, wal_dir, 0, _tx(10, ("I", "t", 1, "a"), ("U", "u", 2, "b")))
+    assert [(m["batch_id"], m["table"]) for m in _manifest(sink)] == [(0, "t")]
+    assert not [d for d in os.listdir(out_dir) if d.startswith("u-")]
+
+    _publish(spark, sink, wal_dir, 1, _tx(11, ("U", "t", 1, "c"), ("D", "u", 2, "b")))
+    marker = _manifest(sink)[1:]
+    assert [(m["batch_id"], m["table"], m["path"], m["cid"]) for m in marker] == [
+        (1, None, None, None)
+    ]
+    published = {os.path.basename(m["path"]) for m in _manifest(sink) if m["path"]}
+    assert {d for d in os.listdir(out_dir) if d != "manifest.jsonl"} == published
+
+
+def test_window_parts_hashed_once(spark, dirs, monkeypatch):
+    """Publishing a window sends each part file through keccak exactly
+    once (the cid digest is the one signed), and every 65-byte signature
+    chunk verifies against its part's keccak256 under SECP256K1 with the
+    ``cryptography`` package, independently of the engine's signer."""
+    from cryptography.hazmat.primitives import hashes
+    from cryptography.hazmat.primitives.asymmetric import ec, utils
+
+    import basin_cli_spark.functions.signing as signing
+    import basin_cli_spark.streaming.window_sink as window_sink
+    from basin_cli_spark.functions.hashing import keccak256, keccak256_file
+
+    hashed = []
+
+    def counted(path, *args, **kwargs):
+        hashed.append(os.path.getsize(path))
+        return keccak256_file(path, *args, **kwargs)
+
+    monkeypatch.setattr(window_sink, "keccak256_file", counted)
+    monkeypatch.setattr(signing, "keccak256_file", counted)
+    wal_dir, out_dir, _ = dirs
+    sink = WindowedVaultSink(out_dir, TWO_TABLES, private_key_hex=PRIV)
+    _publish(spark, sink, wal_dir, 0, _tx(
+        10, ("I", "t", 1, "a"), ("I", "t", 2, "b"), ("I", "u", 3, "c")))
+
+    published = _manifest(sink)
+    assert sorted(m["table"] for m in published) == ["t", "u"]
+    parts = {
+        m["cid"]: sorted(os.path.join(m["path"], p) for p in os.listdir(m["path"])
+                         if p.endswith(".parquet"))
+        for m in published
+    }
+    assert sum(hashed) == sum(os.path.getsize(p) for ps in parts.values() for p in ps)
+
+    pub = ec.derive_private_key(int(PRIV, 16), ec.SECP256K1()).public_key()
+    for m in published:
+        sig = bytes.fromhex(m["signature"])
+        assert len(sig) == 65 * len(parts[m["cid"]])
+        for i, part in enumerate(parts[m["cid"]]):
+            with open(part, "rb") as f:
+                digest = keccak256(f.read())
+            chunk = sig[65 * i: 65 * (i + 1)]
+            der = utils.encode_dss_signature(int.from_bytes(chunk[:32], "big"),
+                                             int.from_bytes(chunk[32:64], "big"))
+            pub.verify(der, digest, ec.ECDSA(utils.Prehashed(hashes.SHA256())))
+
+
 def test_stateful_progress_across_restarts(spark, tmp_path):
     """applyInPandasWithState keeps per-key state across micro-batches AND
     restarts (the reference's confirmed_flush_lsn durability,
