@@ -24,6 +24,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def driver_memory(phys_bytes: int | None = None) -> str:
     """Default ``spark.driver.memory``: half the machine's physical RAM,
@@ -97,9 +100,14 @@ def get_spark(
         # whole workload resident.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    # Python workers import this package by name (pickled functions refer
+    # to it), so they get the directory holding it whatever their cwd.
+    conf = dict(extra_conf or {})
+    conf[_WORKER_PATH] = os.pathsep.join(
+        p for p in (conf.get(_WORKER_PATH), _PACKAGE_PARENT) if p
+    )
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

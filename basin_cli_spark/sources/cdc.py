@@ -23,6 +23,8 @@ The same parse runs in batch (oracle-checkable) and under readStream
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -153,6 +155,40 @@ def _typed(raw: Column, pg_type: str) -> Column:
     return raw.cast(spark_type)
 
 
+def _projection(
+    records: DataFrame, columns: list[tuple[str, str]], keep_metadata: bool = False
+) -> tuple[Column, list[Column]]:
+    """The `_kv` map expression over a record's columns and the typed
+    output columns read from it, built once per schema.  Building the
+    typed columns is dozens of py4j calls per interval or array column,
+    and a streaming sink would pay it on every micro-batch."""
+    return _build_projection(
+        records.sparkSession.sparkContext._gateway,
+        tuple(map(tuple, columns)),
+        keep_metadata,
+    )
+
+
+@functools.lru_cache(maxsize=256)
+def _build_projection(
+    gateway, columns: tuple[tuple[str, str], ...], keep_metadata: bool
+) -> tuple[Column, list[Column]]:
+    # `gateway` is only a key: Column objects belong to the JVM that
+    # built them, so a restarted context never reuses stale ones
+    kv = F.map_from_entries(
+        F.transform("_columns", lambda c: F.struct(c["name"], c["value"]))
+    )
+    cols = [
+        _typed(F.element_at("_kv", name), pg_type).alias(name)
+        for name, pg_type in columns
+    ]
+    if keep_metadata:
+        cols += [
+            F.col(c) for c in ("_commit_lsn", "_tx_pos", "_xid", "_lsn", "_commit_ts")
+        ]
+    return kv, cols
+
+
 def materialize_table(
     records: DataFrame,
     table: str,
@@ -166,21 +202,12 @@ def materialize_table(
     cmd/vaults/commands.go:851-921).  Only inserts materialize (append-only
     vaults, reference README.md:146).
     """
-    kv = F.map_from_entries(
-        F.transform("_columns", lambda c: F.struct(c["name"], c["value"]))
+    kv, cols = _projection(records, columns, keep_metadata)
+    return (
+        records.where((F.col("_table") == table) & (F.col("_action") == "I"))
+        .withColumn("_kv", kv)
+        .select(*cols)
     )
-    out = records.where(
-        (F.col("_table") == table) & (F.col("_action") == "I")
-    ).withColumn("_kv", kv)
-    cols = []
-    for name, pg_type in columns:
-        cols.append(_typed(F.element_at("_kv", name), pg_type).alias(name))
-    meta = (
-        [F.col(c) for c in ("_commit_lsn", "_tx_pos", "_xid", "_lsn", "_commit_ts")]
-        if keep_metadata
-        else []
-    )
-    return out.select(*cols, *meta)
 
 
 def read_wal_batch(spark, path: str) -> DataFrame:
@@ -218,9 +245,7 @@ def apply_changes(
     from pyspark.sql import Window
 
     recs = records.where(F.col("_table") == table)
-    kv = F.map_from_entries(
-        F.transform("_columns", lambda c: F.struct(c["name"], c["value"]))
-    )
+    kv, out = _projection(records, columns)
     ident_kv = F.map_from_entries(
         F.transform("_identity", lambda c: F.struct(c["name"], c["value"]))
     )
@@ -235,10 +260,6 @@ def apply_changes(
         .where(F.col("_action") != "D")
         .withColumn("_kv", kv)
     )
-    out = [
-        _typed(F.element_at("_kv", name), pg_type).alias(name)
-        for name, pg_type in columns
-    ]
     return latest.select(*out)
 
 
@@ -257,9 +278,7 @@ def scd2_history(
     from pyspark.sql import Window
 
     recs = records.where(F.col("_table") == table)
-    kv = F.map_from_entries(
-        F.transform("_columns", lambda c: F.struct(c["name"], c["value"]))
-    )
+    kv, out = _projection(records, columns)
     ident_kv = F.map_from_entries(
         F.transform("_identity", lambda c: F.struct(c["name"], c["value"]))
     )
@@ -271,10 +290,6 @@ def scd2_history(
         .withColumn("_kv", kv)
     )
     versions = evts.where(F.col("_action") != "D")
-    out = [
-        _typed(F.element_at("_kv", name), pg_type).alias(name)
-        for name, pg_type in columns
-    ]
     return versions.select(
         *out,
         F.col("_commit_lsn").alias("valid_from_lsn"),

@@ -5,7 +5,8 @@ reference                                   this engine
 ---------                                   -----------
 per-window embedded DuckDB file             micro-batch DataFrame
 ticker fires every windowInterval           trigger(processingTime=...)
-export: COPY t TO '<t>-<ns>.db.parquet'     batch.write.parquet(<t>-<batch>)
+export: COPY t TO '<t>-<ns>.db.parquet'     batch.write.parquet(<t>-<ns>), one
+                                            thread per table, run concurrently
 empty-table guard (count(1) LIMIT 1)        row count in the written footers
 sign (keccak256 + secp256k1)                functions/signing.sign_file
 upload + EventInfo row                      manifest JSONL row (cid-style
@@ -22,11 +23,14 @@ because the manifest is keyed on it.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,6 +38,7 @@ from basin_cli_spark.functions.hashing import keccak256, keccak256_file
 from basin_cli_spark.functions.signing import sign_file
 from basin_cli_spark.sources.cdc import materialize_table
 
+_LOG = logging.getLogger(__name__)
 
 MANIFEST_SCHEMA = (
     "batch_id long, table string, path string, cid string, "
@@ -70,54 +75,106 @@ class WindowedVaultSink:
             raise ValueError(f"unknown digest: {digest!r}")
         self.digest = digest
         self.manifest_path = os.path.join(out_dir, "manifest.jsonl")
+        self._published: set[int] | None = None
+        self._torn_at: int | None = None  # byte offset of a torn last line
         os.makedirs(out_dir, exist_ok=True)
 
     # -- manifest ------------------------------------------------------------
 
     def _published_batches(self) -> set[int]:
-        done = set()
+        """Batch ids in the manifest, read from disk once per sink; the
+        sink is the manifest's one writer, so `_append_manifest` keeps the
+        set current.  A torn last line (a crash mid-append) is skipped and
+        cut off before the next append; a torn line anywhere else raises."""
+        if self._published is not None:
+            return self._published
+        done: set[int] = set()
         if os.path.exists(self.manifest_path):
-            with open(self.manifest_path) as f:
-                for line in f:
+            with open(self.manifest_path, "rb") as f:
+                lines = f.readlines()
+            offset = 0
+            for i, line in enumerate(lines):
+                try:
                     done.add(json.loads(line)["batch_id"])
+                except (ValueError, KeyError):
+                    if i < len(lines) - 1:
+                        raise
+                    _LOG.warning("%s: skipping a torn last line at byte %d",
+                                 self.manifest_path, offset)
+                    self._torn_at = offset
+                offset += len(line)
+        self._published = done
         return done
 
     def _append_manifest(self, rows: list[dict]) -> None:
+        published = self._published_batches()
         with open(self.manifest_path, "a") as f:
+            if self._torn_at is not None:
+                f.truncate(self._torn_at)
+                self._torn_at = None
             for row in rows:
                 f.write(json.dumps(row) + "\n")
+        published.update(row["batch_id"] for row in rows)
 
     # -- the sink ------------------------------------------------------------
 
     def process_batch(self, records: DataFrame, batch_id: int) -> None:
         """Export/sign/publish one micro-batch of parsed WAL records.
         Idempotent on batch_id (at-least-once upstream => exactly-once
-        manifest)."""
+        manifest).
+
+        Tables export concurrently, one thread each, so one table's
+        parquet write overlaps another's.  The threads inherit the
+        stream's job group and local properties.  Manifest rows keep
+        schema order, and if any table raises, the batch raises before
+        a manifest row is written."""
         if batch_id in self._published_batches():
             return
-        rows: list[dict] = []
-        for table, columns in self.schemas.items():
-            tdf = materialize_table(records, table, columns)
-            epoch_ns = time.time_ns()
-            path = os.path.join(self.out_dir, f"{table}-{epoch_ns}.parquet")
-            tdf.write.mode("overwrite").parquet(path)
-            parts = sorted(
-                os.path.join(path, p)
-                for p in os.listdir(path)
-                if p.endswith(".parquet")
-            )
-            # reference's empty-export guard (db.go:155-166), read from the
-            # footers just written rather than by a Spark job of its own
-            if not sum(pq.read_metadata(p).num_rows for p in parts):
-                shutil.rmtree(path)
-                continue
-            rows.append(self._event_row(table, path, batch_id, parts))
+        tables = list(self.schemas.items())
+        if len(tables) == 1:
+            rows = [self._export(records, *tables[0], batch_id)]
+        else:
+            with ThreadPoolExecutor(len(tables)) as pool:
+                # each thread gets its own copy of the stream's local
+                # properties: a write sets its SQL execution id in them
+                futures = [
+                    pool.submit(
+                        inheritable_thread_target(records.sparkSession)(self._export),
+                        records, table, columns, batch_id,
+                    )
+                    for table, columns in tables
+                ]
+            errors = [f.exception() for f in futures if f.exception()]
+            for error in errors[1:]:
+                _LOG.error("batch %d: another table failed too", batch_id, exc_info=error)
+            if errors:
+                raise errors[0]
+            rows = [f.result() for f in futures]
+        rows = [row for row in rows if row is not None]
         if not rows:
             # record the empty batch so recovery does not replay it forever
             rows = [{"batch_id": batch_id, "table": None, "path": None,
                      "cid": None, "signature": None, "timestamp": int(time.time()),
                      "is_archived": False}]
         self._append_manifest(rows)
+
+    def _export(
+        self, records: DataFrame, table: str, columns: list[tuple[str, str]], batch_id: int
+    ) -> dict | None:
+        """Write one table's inserts as a parquet window and return its
+        event row, or None when the window holds no insert for it."""
+        tdf = materialize_table(records, table, columns)
+        path = os.path.join(self.out_dir, f"{table}-{time.time_ns()}.parquet")
+        tdf.write.mode("overwrite").parquet(path)
+        parts = sorted(
+            os.path.join(path, p) for p in os.listdir(path) if p.endswith(".parquet")
+        )
+        # reference's empty-export guard (db.go:155-166), read from the
+        # footers just written rather than by a Spark job of its own
+        if not sum(pq.read_metadata(p).num_rows for p in parts):
+            shutil.rmtree(path)
+            return None
+        return self._event_row(table, path, batch_id, parts)
 
     def publish_file(self, table: str, file: str, timestamp: int) -> dict:
         """Publish one existing parquet file as an event of ``table``

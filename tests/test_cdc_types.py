@@ -112,3 +112,29 @@ def test_schema_evolution_mid_stream(spark):
     )
     rows = {r.id: r.tag for r in got_new.collect()}
     assert rows == {1: None, 2: "fresh"}
+
+
+def test_projection_built_once_per_schema(spark):
+    """materialize_table builds its typed projection once per column list
+    and keep_metadata; later calls, on any records frame, reuse it."""
+    from basin_cli_spark.sources import cdc
+    from basin_cli_spark.sources.cdc import parse_wal_records
+
+    schema = [("memo_id", "integer"), ("memo_iv", "interval[]")]
+
+    def records(i):
+        rec = {"action": "I", "schema": "public", "table": "m", "columns": [
+            {"name": "memo_id", "type": "integer", "value": i},
+            {"name": "memo_iv", "type": "interval[]", "value": '{"1 day"}'}]}
+        line = json.dumps({"commit_lsn": i, "records": [rec]})
+        return parse_wal_records(spark.createDataFrame([(line,)], "value string"))
+
+    misses = cdc._build_projection.cache_info().misses
+    got = [materialize_table(records(i), "m", schema).collect() for i in (1, 2, 3)]
+    assert cdc._build_projection.cache_info().misses == misses + 1
+    assert [r.memo_id for rows in got for r in rows] == [1, 2, 3]
+    assert got[2][0].memo_iv[0]["days"] == 1
+
+    meta = materialize_table(records(4), "m", schema, keep_metadata=True)
+    assert cdc._build_projection.cache_info().misses == misses + 2
+    assert meta.columns[-1] == "_commit_ts"

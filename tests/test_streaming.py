@@ -242,6 +242,153 @@ def test_window_parts_hashed_once(spark, dirs, monkeypatch):
             pub.verify(der, digest, ec.ECDSA(utils.Prehashed(hashes.SHA256())))
 
 
+def _cid(path):
+    """The manifest cid recomputed from a window's part files."""
+    from basin_cli_spark.functions.hashing import keccak256, keccak256_file
+
+    digests = [keccak256_file(os.path.join(path, p))
+               for p in sorted(os.listdir(path)) if p.endswith(".parquet")]
+    return "0x" + (digests[0] if len(digests) == 1 else keccak256(b"".join(digests))).hex()
+
+
+def _two_table_tx(i):
+    return _tx(10 + i, ("I", "t", 2 * i, "a"), ("I", "u", 2 * i + 1, "b"))
+
+
+def test_manifest_read_once_per_sink(spark, dirs, monkeypatch):
+    """A sink reads the manifest from disk once and then serves its
+    published set from memory, however many batches it publishes."""
+    import builtins
+
+    import basin_cli_spark.streaming.window_sink as window_sink
+
+    wal_dir, out_dir, _ = dirs
+    _publish(spark, WindowedVaultSink(out_dir, TWO_TABLES), wal_dir, 0, _two_table_tx(0))
+    reads = []
+
+    def counting_open(path, mode="r", *args, **kwargs):
+        if path == os.path.join(out_dir, "manifest.jsonl") and "r" in mode:
+            reads.append(mode)
+        return builtins.open(path, mode, *args, **kwargs)
+
+    monkeypatch.setattr(window_sink, "open", counting_open, raising=False)
+    sink = WindowedVaultSink(out_dir, TWO_TABLES)
+    for b in (1, 2, 3, 1):  # the repeated id is a no-op
+        _publish(spark, sink, wal_dir, b, _two_table_tx(b))
+    assert len(reads) <= 1
+    assert [(m["batch_id"], m["table"]) for m in _manifest(sink)] == [
+        (b, t) for b in range(4) for t in ("t", "u")
+    ]
+
+
+def test_torn_last_line_skipped_on_restart(spark, dirs, caplog):
+    """A crash mid-append leaves half a JSON line at the end of the
+    manifest.  A restarted sink skips it with one warning, publishes the
+    torn batch again, and leaves a manifest whose every line parses."""
+    import logging
+
+    wal_dir, out_dir, _ = dirs
+    sink = WindowedVaultSink(out_dir, TWO_TABLES, private_key_hex=PRIV)
+    _publish(spark, sink, wal_dir, 0, _two_table_tx(0))
+    line = json.dumps(_manifest(sink)[0] | {"batch_id": 1})
+    with open(sink.manifest_path, "a") as f:
+        f.write(line[: len(line) // 2])
+
+    restarted = WindowedVaultSink(out_dir, TWO_TABLES, private_key_hex=PRIV)
+    with caplog.at_level(logging.WARNING, logger="basin_cli_spark.streaming.window_sink"):
+        _publish(spark, restarted, wal_dir, 1, _two_table_tx(1))
+        _publish(spark, restarted, wal_dir, 2, _two_table_tx(2))
+    assert sum("torn" in r.getMessage() for r in caplog.records) == 1
+    published = _manifest(restarted)
+    assert [(m["batch_id"], m["table"]) for m in published] == [
+        (b, t) for b in range(3) for t in ("t", "u")
+    ]
+    assert all(m["cid"] == _cid(m["path"]) for m in published)
+
+
+def test_torn_middle_line_raises(dirs):
+    """Only the last line can be torn by a crash; damage anywhere else
+    is not skipped."""
+    _, out_dir, _ = dirs
+    os.makedirs(out_dir)
+    with open(os.path.join(out_dir, "manifest.jsonl"), "w") as f:
+        f.write('{"batch_id": 0}\n{"batch_id": \n{"batch_id": 2}\n')
+    with pytest.raises(ValueError):
+        WindowedVaultSink(out_dir, TWO_TABLES)._published_batches()
+
+
+def test_window_jobs_carry_stream_job_group(spark, dirs):
+    """The per-table exports run on threads of their own, yet every job
+    they submit carries the streaming query's runId as its job group,
+    and a two-table window still runs exactly 2 jobs."""
+    import math
+    import time
+
+    wal_dir, out_dir, ckpt = dirs
+    sink = WindowedVaultSink(out_dir, TWO_TABLES, private_key_hex=PRIV)
+    spans = []
+    process = sink.process_batch
+
+    def timed(df, batch_id):
+        start = time.time()
+        process(df, batch_id)
+        spans.append((math.floor(start * 1000), math.ceil(time.time() * 1000)))
+
+    sink.process_batch = timed
+    sc = spark.sparkContext._jsc.sc()
+    for i in range(2):
+        _write_tx(wal_dir, f"tx{i}.jsonl", _two_table_tx(i))
+        q = run_stream(spark, wal_dir, sink, ckpt)
+        assert q.awaitTermination(120), "stream did not terminate within 120s"
+        sc.listenerBus().waitUntilEmpty()
+        start, end = spans[-1]
+        jobs = sc.statusStore().jobsList(None)
+        groups = []
+        for k in range(jobs.size()):
+            job = jobs.apply(k)
+            sub = job.submissionTime()
+            if sub.isDefined() and start <= sub.get().getTime() <= end:
+                group = job.jobGroup()
+                groups.append(group.get() if group.isDefined() else None)
+        assert groups == [str(q.runId)] * 2
+    assert [(m["batch_id"], m["table"]) for m in _manifest(sink)] == [
+        (0, "t"), (0, "u"), (1, "t"), (1, "u")]
+
+
+def test_failed_table_write_replays_once(spark, dirs, monkeypatch):
+    """One table's write fails on its first attempt: the batch fails
+    and writes no manifest row.  Restarted from the same checkpoint,
+    every window is published exactly once, in schema order, with cids
+    that recompute from the part files."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    wal_dir, out_dir, ckpt = dirs
+    write, failed = DataFrameWriter.parquet, []
+
+    def flaky(self, path, *args, **kwargs):
+        if os.path.basename(path).startswith("u-") and not failed:
+            failed.append(path)
+            raise OSError("injected write failure")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", flaky)
+    _write_tx(wal_dir, "tx0.jsonl", _two_table_tx(0))
+    with pytest.raises(StreamingQueryException, match="injected write failure"):
+        _drain(spark, wal_dir, WindowedVaultSink(out_dir, TWO_TABLES, private_key_hex=PRIV), ckpt)
+    assert failed and not os.path.exists(os.path.join(out_dir, "manifest.jsonl"))
+
+    sink = WindowedVaultSink(out_dir, TWO_TABLES, private_key_hex=PRIV)
+    _drain(spark, wal_dir, sink, ckpt)
+    _write_tx(wal_dir, "tx1.jsonl", _two_table_tx(1))
+    _drain(spark, wal_dir, sink, ckpt)
+    published = _manifest(sink)
+    assert [(m["batch_id"], m["table"]) for m in published] == [
+        (0, "t"), (0, "u"), (1, "t"), (1, "u")]
+    assert all(m["cid"] == _cid(m["path"]) for m in published)
+    assert sorted(_window_rows(spark, published[1]["path"])) == [(1, "b")]
+
+
 def test_stateful_progress_across_restarts(spark, tmp_path):
     """applyInPandasWithState keeps per-key state across micro-batches AND
     restarts (the reference's confirmed_flush_lsn durability,
