@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import re
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -84,25 +85,36 @@ class WindowedVaultSink:
     def _published_batches(self) -> set[int]:
         """Batch ids in the manifest, read from disk once per sink; the
         sink is the manifest's one writer, so `_append_manifest` keeps the
-        set current.  A torn last line (a crash mid-append) is skipped and
-        cut off before the next append; a torn line anywhere else raises."""
+        set current.
+
+        A crash mid-append can leave the last line without its newline,
+        torn or whole.  That line is cut before the next append, and its
+        batch published again, only when its batch id is readable and on
+        no complete line.  One batch's rows leave in one append, so a
+        sibling row on a complete line means the batch is half published,
+        and this raises.  Direct publishes (id -1) are one row each.  A bad
+        line anywhere else raises too."""
         if self._published is not None:
             return self._published
         done: set[int] = set()
         if os.path.exists(self.manifest_path):
             with open(self.manifest_path, "rb") as f:
                 lines = f.readlines()
-            offset = 0
-            for i, line in enumerate(lines):
-                try:
-                    done.add(json.loads(line)["batch_id"])
-                except (ValueError, KeyError):
-                    if i < len(lines) - 1:
-                        raise
-                    _LOG.warning("%s: skipping a torn last line at byte %d",
-                                 self.manifest_path, offset)
-                    self._torn_at = offset
-                offset += len(line)
+            torn = lines.pop() if lines and not lines[-1].endswith(b"\n") else None
+            for line in lines:
+                done.add(json.loads(line)["batch_id"])
+            if torn is not None:
+                # json.dumps writes the row's batch id first, and the
+                # delimiter after it shows the number is whole
+                m = re.match(rb'\{"batch_id": (-?\d+)[,}]', torn)
+                if m is None or int(m[1]) in done - {-1}:
+                    raise ValueError(
+                        f"{self.manifest_path}: unterminated last line of a "
+                        f"batch that may be half published: {torn[:40]!r}"
+                    )
+                _LOG.warning("%s: cutting the torn last line of batch %s",
+                             self.manifest_path, int(m[1]))
+                self._torn_at = sum(map(len, lines))
         self._published = done
         return done
 
@@ -130,27 +142,18 @@ class WindowedVaultSink:
         a manifest row is written."""
         if batch_id in self._published_batches():
             return
-        tables = list(self.schemas.items())
-        if len(tables) == 1:
-            rows = [self._export(records, *tables[0], batch_id)]
-        else:
-            with ThreadPoolExecutor(len(tables)) as pool:
-                # each thread gets its own copy of the stream's local
-                # properties: a write sets its SQL execution id in them
-                futures = [
-                    pool.submit(
-                        inheritable_thread_target(records.sparkSession)(self._export),
-                        records, table, columns, batch_id,
-                    )
-                    for table, columns in tables
-                ]
-            errors = [f.exception() for f in futures if f.exception()]
-            for error in errors[1:]:
-                _LOG.error("batch %d: another table failed too", batch_id, exc_info=error)
-            if errors:
-                raise errors[0]
-            rows = [f.result() for f in futures]
-        rows = [row for row in rows if row is not None]
+        # `vaults stream` without --schemas gives a sink with no tables
+        with ThreadPoolExecutor(len(self.schemas) or 1) as pool:
+            # one wrap per table: each wrap clones the stream's local
+            # properties, and a write sets its SQL execution id in them
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(records.sparkSession)(self._export),
+                    records, table, columns, batch_id,
+                )
+                for table, columns in self.schemas.items()
+            ]
+        rows = [row for f in futures if (row := f.result()) is not None]
         if not rows:
             # record the empty batch so recovery does not replay it forever
             rows = [{"batch_id": batch_id, "table": None, "path": None,

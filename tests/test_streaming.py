@@ -195,6 +195,15 @@ def test_empty_table_guard(spark, dirs):
     assert {d for d in os.listdir(out_dir) if d != "manifest.jsonl"} == published
 
 
+def test_sink_without_schemas_marks_batches_empty(spark, dirs):
+    """`vaults stream` without --schemas gives a sink with no tables:
+    each batch still gets its empty-batch marker."""
+    wal_dir, out_dir, _ = dirs
+    sink = WindowedVaultSink(out_dir, {})
+    _publish(spark, sink, wal_dir, 0, _tx(10, ("I", "t", 1, "a")))
+    assert [(m["batch_id"], m["table"]) for m in _manifest(sink)] == [(0, None)]
+
+
 def test_window_parts_hashed_once(spark, dirs, monkeypatch):
     """Publishing a window sends each part file through keccak exactly
     once (the cid digest is the one signed), and every 65-byte signature
@@ -281,10 +290,12 @@ def test_manifest_read_once_per_sink(spark, dirs, monkeypatch):
     ]
 
 
-def test_torn_last_line_skipped_on_restart(spark, dirs, caplog):
-    """A crash mid-append leaves half a JSON line at the end of the
-    manifest.  A restarted sink skips it with one warning, publishes the
-    torn batch again, and leaves a manifest whose every line parses."""
+@pytest.mark.parametrize("keep", [0.5, 1.0], ids=["half", "no_newline"])
+def test_torn_last_line_skipped_on_restart(spark, dirs, caplog, keep):
+    """A crash mid-append leaves the first row of a batch at the end of
+    the manifest without its newline, torn or whole.  A restarted sink
+    cuts it with one warning, publishes both tables of that batch again,
+    and leaves a manifest whose every line parses."""
     import logging
 
     wal_dir, out_dir, _ = dirs
@@ -292,7 +303,7 @@ def test_torn_last_line_skipped_on_restart(spark, dirs, caplog):
     _publish(spark, sink, wal_dir, 0, _two_table_tx(0))
     line = json.dumps(_manifest(sink)[0] | {"batch_id": 1})
     with open(sink.manifest_path, "a") as f:
-        f.write(line[: len(line) // 2])
+        f.write(line[: int(len(line) * keep)])
 
     restarted = WindowedVaultSink(out_dir, TWO_TABLES, private_key_hex=PRIV)
     with caplog.at_level(logging.WARNING, logger="basin_cli_spark.streaming.window_sink"):
@@ -315,6 +326,55 @@ def test_torn_middle_line_raises(dirs):
         f.write('{"batch_id": 0}\n{"batch_id": \n{"batch_id": 2}\n')
     with pytest.raises(ValueError):
         WindowedVaultSink(out_dir, TWO_TABLES)._published_batches()
+
+
+@pytest.mark.parametrize("tail, published", [
+    ('{"batch_id": 1, "table": "t"', {-1, 0}),
+    ('{"batch_id": 1}', {-1, 0}),
+    ('{"batch_id": -1, "ta', {-1, 0}),
+    ('{"batch_id": 0, "table": "u"', None),  # its sibling row is whole
+    ('{"batch_id": 1', None),  # the id may be cut short
+    ('{"batch_', None),
+])
+def test_unterminated_last_line(dirs, tail, published):
+    """An unterminated last line is cut only when its batch id reads
+    whole and no complete line holds that batch; otherwise the batch may
+    be half published and the reader raises."""
+    _, out_dir, _ = dirs
+    os.makedirs(out_dir)
+    path = os.path.join(out_dir, "manifest.jsonl")
+    head = '{"batch_id": -1, "table": "t"}\n{"batch_id": 0, "table": "t"}\n'
+    with open(path, "w") as f:
+        f.write(head + tail)
+    sink = WindowedVaultSink(out_dir, TWO_TABLES)
+    if published is None:
+        with pytest.raises(ValueError, match="half published"):
+            sink._published_batches()
+        with open(path) as f:
+            assert f.read() == head + tail
+    else:
+        assert sink._published_batches() == published
+        sink._append_manifest([{"batch_id": 1, "table": "t"}])
+        with open(path) as f:
+            assert f.read() == head + '{"batch_id": 1, "table": "t"}\n'
+
+
+def test_torn_second_row_of_batch_raises_on_restart(spark, dirs):
+    """A crash that leaves one table's row whole and its sibling's torn
+    must not pass for a published window: replaying that batch raises on
+    every restart, and the manifest stays as the crash left it."""
+    wal_dir, out_dir, _ = dirs
+    _publish(spark, WindowedVaultSink(out_dir, TWO_TABLES), wal_dir, 0, _two_table_tx(0))
+    path = os.path.join(out_dir, "manifest.jsonl")
+    with open(path) as f:
+        t_row, u_row = f.readlines()
+    with open(path, "w") as f:
+        f.write(t_row + u_row[: len(u_row) // 2])
+    for _ in range(2):
+        with pytest.raises(ValueError, match="half published"):
+            _publish(spark, WindowedVaultSink(out_dir, TWO_TABLES), wal_dir, 0, _two_table_tx(0))
+    with open(path) as f:
+        assert f.read() == t_row + u_row[: len(u_row) // 2]
 
 
 def test_window_jobs_carry_stream_job_group(spark, dirs):
