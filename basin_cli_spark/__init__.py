@@ -16,7 +16,6 @@ Layout:
     operators/    relational query surface, dedup, similarity, text analysis
     functions/    keccak256, secp256k1 signing, ECMH multiset hash, timestamps
     streaming/    windowed signed-upload sink, CDC stream wrapper
-    plans/        explain/plan-audit helpers
 """
 
 __version__ = "0.1.0"

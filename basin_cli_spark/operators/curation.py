@@ -326,7 +326,7 @@ def boilerplate_scrub(
     does persist.  The hot list is corpus-dependent (NOT constant-size),
     so no broadcast hint: AQE sizes that join at runtime.
 
-    Measured dead end (round 8, don't retry): rewriting clean_text from
+    Measured dead end (don't retry): rewriting clean_text from
     the ORIGINAL doc row — shuffling only hot (id, seg_idx) pairs and
     replaying the segmentation as a narrow expression — is 1.8-2.2x
     SLOWER at sf0.1 than this shape.  CollapseProject copies the

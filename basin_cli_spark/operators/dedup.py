@@ -557,3 +557,21 @@ def connected_components(
             break
     sym.unpersist()
     return labels
+
+
+def keep_one(
+    df: DataFrame, pairs: DataFrame, id_col: str, a: str, b: str
+) -> DataFrame:
+    """``df`` minus every near-duplicate except one per cluster: the
+    connected components of the ``(a, b)`` dup graph keep their min-id
+    representative, and rows that are in no pair pass through untouched.
+
+    The final pass is a left-anti join of one ``df`` scan against the
+    drop-list.  No broadcast hint: web-crawl dup rates (30-50%) make the
+    drop-list corpus-scale, so AQE broadcasts it while it fits and falls
+    back to a shuffle instead of OOMing the driver."""
+    cc = connected_components(pairs, a, b)
+    drop = cc.where(F.col("id") != F.col("lab")).select(
+        F.col("id").alias(id_col)
+    )
+    return df.join(drop, id_col, "left_anti")

@@ -95,10 +95,10 @@ def dot_arrow(a: Column, b: Column) -> Column:
 
     # Non-deterministic mark (optimization guide §4.4): every pair-verify
     # caller filters on a score computed FROM this UDF, and Catalyst's
-    # filter pushdown otherwise duplicates the evaluation — the r14 plan
-    # dumps showed two ArrowEvalPython nodes per verify stage in
-    # q_dedup_embedding and q_dedup_semantic_ivf, i.e. the expensive dot
-    # ran twice per candidate pair.  No caller relies on pushing a filter
+    # filter pushdown otherwise duplicates the evaluation — two
+    # ArrowEvalPython nodes per verify stage in q_dedup_embedding and
+    # q_dedup_semantic_ivf, i.e. the expensive dot ran twice per
+    # candidate pair.  No caller relies on pushing a filter
     # through the dot projection (id filters are applied before it), and
     # the value is genuinely deterministic, so results are unchanged —
     # only the double evaluation disappears (2 ArrowEvalPython -> 1,
@@ -165,31 +165,113 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), F.sqrt(norm_sq(a) * norm_sq(b)))
 
 
+# Every cosine score is rounded to this many decimals before it is ranked
+# or thresholded, the rounding each DuckDB oracle replays: raw doubles
+# are already bit-equal, but ranking the rounded value makes ties
+# explicit and keyed on id, so rank order is engine-independent.
+SCORE_DIGITS = 6
+
+
+def _normed_cosine(a: Column, b: Column, a_n2: Column, b_n2: Column) -> Column:
+    """Cosine over squared norms folded once per VECTOR: one Arrow dot
+    per pair (dot_arrow, bit-identical to the fold) instead of the three
+    interpreted HOF folds cosine() runs per pair.  try_divide as in
+    cosine(): a zero-norm side scores NULL."""
+    return F.try_divide(dot_arrow(a, b), F.sqrt(a_n2 * b_n2))
+
+
+def cosine_pair_scores(
+    pairs: DataFrame,
+    vectors: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact cosine verify of an ids-only pair relation
+    ``(vec_a, vec_b)``: ``(vec_a, vec_b, score)``.
+
+    Norms fold once per vector before the pair joins (2N folds, not 2 per
+    pair), the per-pair dot is the Arrow kernel, and the vectors join in
+    only here, so candidate generation and its dedup shuffle stay 16-byte
+    id rows.  No broadcast hint: the vector table is corpus-sized, and AQE
+    broadcasts it only while it fits.  Filter on ``score`` after this
+    call, never inside it (the dot_arrow caller contract)."""
+    normed = vectors.select(
+        id_col, vec_col, norm_sq(F.col(vec_col)).alias("_n2")
+    )
+
+    def side(s: str) -> DataFrame:
+        return normed.select(
+            F.col(id_col).alias(f"vec_{s}"),
+            F.col(vec_col).alias(f"_emb_{s}"),
+            F.col("_n2").alias(f"_n2_{s}"),
+        )
+
+    score = _normed_cosine(
+        F.col("_emb_a"), F.col("_emb_b"), F.col("_n2_a"), F.col("_n2_b")
+    )
+    return (
+        pairs.join(side("a"), "vec_a")
+        .join(side("b"), "vec_b")
+        .select("vec_a", "vec_b", F.round(score, SCORE_DIGITS).alias("score"))
+    )
+
+
+def cosine_probe_scores(
+    corpus: DataFrame,
+    probes: DataFrame,
+    cols: list[str],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Every corpus row scored against every probe: ``cols`` plus
+    ``score``, self-pairs (``id_col == p_id``) excluded.
+
+    ``probes`` carries ``p_id`` and ``p_emb`` (plus any columns ``cols``
+    names) and is broadcast: the probe set is bounded by its predicate,
+    so the corpus is scanned once and never shuffled.  Norms fold once
+    per vector on each side before the cross join, and the per-pair dot
+    is the Arrow kernel; measured on the 10x smoke (20 probes x 20k
+    vectors) that split took hard-negative mining from 7.8 s to ~2 s."""
+    probes = probes.select("*", norm_sq(F.col("p_emb")).alias("_p_n2"))
+    score = _normed_cosine(
+        F.col(vec_col), F.col("p_emb"), F.col("_n2"), F.col("_p_n2")
+    )
+    return (
+        corpus.select("*", norm_sq(F.col(vec_col)).alias("_n2"))
+        .crossJoin(F.broadcast(probes))
+        .where(F.col(id_col) != F.col("p_id"))
+        .select(*cols, F.round(score, SCORE_DIGITS).alias("score"))
+    )
+
+
+def rerank_topk(
+    cand: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """The exact re-rank every top-k search ends with: candidates that
+    carry the query vector as ``_q_emb`` are scored by cosine, ordered by
+    score desc then id, and cut at k.  Spark plans it as
+    TakeOrderedAndProject: per-partition heaps, only k rows move."""
+    score = F.round(cosine(F.col(vec_col), F.col("_q_emb")), SCORE_DIGITS)
+    return (
+        cand.select(F.col(id_col), score.alias("score"))
+        .orderBy(F.col("score").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     query_vec_id: int,
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
-    """Brute-force cosine top-k against one stored vector.
-
-    The score is rounded before ordering so rank order is identical across
-    engines (raw doubles are already bit-equal here, but ordering on the
-    rounded value makes ties explicit and keyed on id).
-    """
+    """Brute-force cosine top-k against one stored vector."""
     q = df.where(F.col(id_col) == query_vec_id).select(
         F.col(vec_col).alias("_q_emb")
     )
     cand = spread(df.where(F.col(id_col) != query_vec_id), id_col)
-    score = F.round(cosine(F.col(vec_col), F.col("_q_emb")), round_to)
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return rerank_topk(cand.crossJoin(F.broadcast(q)), k, id_col, vec_col)
 
 
 def random_planes(
@@ -332,9 +414,9 @@ def sign_lsh_bands(
     # Non-deterministic mark (guide §4.4, same rationale as dot_arrow):
     # every caller explodes the band array, and the Generate's implicit
     # `size(bands) > 0` precondition otherwise gets pushed below the UDF
-    # projection, duplicating the kernel — the r14 plan dumps showed two
-    # ArrowEvalPython nodes per side in the LSH probes and in the banded
-    # pair builders' cache-build plans.  No caller pushes a real filter
+    # projection, duplicating the kernel — two ArrowEvalPython nodes per
+    # side in the LSH probes and in the banded pair builders'
+    # cache-build plans.  No caller pushes a real filter
     # through this projection (id filters are applied before it), and the
     # signature is a pure function of the vector, so results are
     # unchanged — each side now runs the kernel exactly once.
@@ -440,7 +522,6 @@ def mine_hard_negatives(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    round_to: int = 6,
     require_all_anchors: bool = False,
 ) -> DataFrame:
     """Hard-negative triplet mining (Schroff et al. 2015 FaceNet, public):
@@ -471,15 +552,8 @@ def mine_hard_negatives(
     per-anchor top-k windows; positives and negatives rank in separate
     windows over the same scored scan, and the final join is
     anchor-sized.  Scores round before ranking so ranks are total and
-    engine-independent.
-
-    Scoring runs |anchors| x |corpus| pairs, so it uses the same split
-    the embedding-dedup verify stage uses: norms are HOF-folded once per
-    VECTOR (each side, before the cross join), and the per-pair dot is
-    the Arrow kernel (dot_arrow — bit-identical replay of the fold, see
-    its docstring), not the interpreted F.aggregate fold per pair.
-    Measured on the 10x smoke (20 anchors x 20k vectors): 7.8 s -> ~2 s,
-    same hashes.
+    engine-independent; the |anchors| x |corpus| scoring is
+    cosine_probe_scores.
 
     NULL-embedding rows are dropped on BOTH sides before the cross join
     (same guard as kcenter_select): a crawl-edge row with no vector can
@@ -491,12 +565,11 @@ def mine_hard_negatives(
         F.col(id_col).alias("p_id"),
         F.col(vec_col).alias("p_emb"),
         F.col(label_col).alias("p_label"),
-        norm_sq(F.col(vec_col)).alias("_p_n2"),
     )
     # persist_once: the positive and negative rank branches both read the
     # scored relation, and without the cache each branch re-runs the full
     # |anchors| x |corpus| Arrow-dot scoring pass (two identical
-    # ArrowEvalPython subtrees in the r14 plan dump).  The cached rows
+    # ArrowEvalPython subtrees).  The cached rows
     # are slim — ids, labels, one double; no vectors — but the cache is
     # O(|anchors| x |corpus|) ROWS (~40 B each): fine for the
     # tens-of-anchors probe sets this miner documents (~N-scale, the
@@ -505,27 +578,13 @@ def mine_hard_negatives(
     # anchors over a billion-vector corpus should expect a multi-TB
     # spill footprint and prefer recompute (drop the persist) — the
     # anchor broadcast itself caps |anchors| well before that.
-    from basin_cli_spark.session import persist_once
-
     scored = persist_once(
-        df.select(
-            id_col, label_col, vec_col,
-            norm_sq(F.col(vec_col)).alias("_n2"),
-        )
-        .crossJoin(F.broadcast(probes))
-        .where(F.col(id_col) != F.col("p_id"))
-        .select(
-            "p_id",
-            "p_label",
+        cosine_probe_scores(
+            df.select(id_col, label_col, vec_col),
+            probes,
+            ["p_id", "p_label", id_col, label_col],
             id_col,
-            label_col,
-            F.round(
-                F.try_divide(
-                    dot_arrow(F.col(vec_col), F.col("p_emb")),
-                    F.sqrt(F.col("_n2") * F.col("_p_n2")),
-                ),
-                round_to,
-            ).alias("score"),
+            vec_col,
         )
     )
     w = Window.partitionBy("p_id").orderBy(F.desc("score"), F.col(id_col))
@@ -568,9 +627,70 @@ def mine_hard_negatives(
         "neg_id",
         "neg_score",
         "neg_rank",
-        F.round(F.col("pos_score") - F.col("neg_score"), round_to).alias(
+        F.round(F.col("pos_score") - F.col("neg_score"), SCORE_DIGITS).alias(
             "margin"
         ),
+    )
+
+
+def _band_rows(
+    df: DataFrame, vec_col: str, cols: list, band_bits: int, sig: str = "_sig"
+) -> DataFrame:
+    """``cols`` plus one (``_band``, ``sig``) row per sign-LSH band of
+    ``vec_col``.
+
+    Filter ``df`` by id BEFORE calling this: filtering a column computed
+    by a UDF makes Catalyst push the filter below the projection and
+    DUPLICATE the UDF (guide §4.4 — four _bands_udf ArrowEvalPython
+    nodes in an LSH probe, two per side); filtering first leaves nothing
+    to push, so the kernel runs once per side."""
+    return df.withColumn(
+        "_bands", sign_lsh_bands(F.col(vec_col), band_bits=band_bits)
+    ).select(*cols, F.posexplode("_bands").alias("_band", sig))
+
+
+def sign_lsh_pairs(
+    df: DataFrame,
+    band_bits: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Ids-only candidate pairs ``(vec_a, vec_b)``, ``vec_a < vec_b``,
+    of vectors sharing at least one sign-LSH band: the self-join is keyed
+    on (band, signature), so only vectors in the same bucket ever meet —
+    |bucket|^2 per bucket, never corpus^2 (size ``band_bits`` with
+    band_bits_for).  A pair colliding in several bands is emitted once,
+    so cosine_pair_scores verifies it once."""
+    expl = df.select(
+        id_col,
+        F.posexplode(
+            sign_lsh_bands(F.col(vec_col), band_bits=band_bits)
+        ).alias("band", "sig"),
+    )
+    # Persist the slim (id, band, sig) table: both self-join sides read
+    # it, and without the cache Spark runs the Arrow signature kernel
+    # twice.  ~24 bytes/row x bands — safe at any corpus size (same
+    # rationale as dedup.minhash_lsh_pairs).  Spread it first: AQE
+    # broadcasts the band self-join at fixture scale, so its probe side
+    # inherits this relation's layout, which on a single-row-group file
+    # is ONE partition, and the bucket-pair expansion would run on one
+    # core.  The dropDuplicates exchange below does not spread the
+    # verify either: AQE sizes it by its bytes (16 per pair) and at
+    # sf0.1 coalesces it to one task (ROADMAP direction 1).
+    expl = persist_once(spread(expl, (id_col, "band")))
+    a, b = expl.alias("a"), expl.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.sig") == F.col("b.sig"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("vec_a"),
+            F.col(f"b.{id_col}").alias("vec_b"),
+        )
+        .dropDuplicates(["vec_a", "vec_b"])
     )
 
 
@@ -580,39 +700,44 @@ def cosine_topk_lsh(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bands: int = 4,
     band_bits: int = 4,
-    round_to: int = 6,
 ) -> DataFrame:
     """ANN via banded sign-LSH probe: candidates are vectors sharing at
     least one band with the query; exact cosine re-ranks the candidates.
     The probe is a broadcast equi-join on (band index, band signature) —
     at 100 TB the exploded band table is the shuffle/partition key, so
-    the probe touches |candidates|, never the corpus.
+    the probe touches |candidates|, never the corpus."""
+    q = _band_rows(
+        df.where(F.col(id_col) == query_vec_id),
+        vec_col,
+        [F.col(vec_col).alias("_q_emb")],
+        band_bits,
+    )
+    return _probe_rerank(df, q, query_vec_id, k, id_col, vec_col, band_bits)
 
-    The id filters run BEFORE the band projection on each side: filtering
-    a column computed by a UDF makes Catalyst push the filter below the
-    projection and DUPLICATE the UDF (guide §4.4 — the r14 plan dump
-    showed four _bands_udf ArrowEvalPython nodes here, two per side);
-    filtering first leaves nothing to push, one kernel pass per side."""
-    q = df.where(F.col(id_col) == query_vec_id).withColumn(
-        "_bands", sign_lsh_bands(F.col(vec_col), bands, band_bits)
-    ).select(
-        F.col(vec_col).alias("_q_emb"),
-        F.posexplode("_bands").alias("_band", "_sig"),
+
+def _probe_rerank(
+    df: DataFrame,
+    q: DataFrame,
+    query_vec_id: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    band_bits: int,
+) -> DataFrame:
+    """Join the corpus's band rows to the query's probe set ``q``
+    (``_q_emb``, ``_band``, ``_sig``) and re-rank the distinct hits."""
+    cand = _band_rows(
+        df.where(F.col(id_col) != query_vec_id),
+        vec_col,
+        [id_col, vec_col],
+        band_bits,
     )
-    cand = df.where(F.col(id_col) != query_vec_id).withColumn(
-        "_bands", sign_lsh_bands(F.col(vec_col), bands, band_bits)
-    ).select(
-        id_col, vec_col, F.posexplode("_bands").alias("_band", "_sig")
-    )
-    score = F.round(cosine(F.col(vec_col), F.col("_q_emb")), round_to)
-    return (
-        cand.join(F.broadcast(q), ["_band", "_sig"])
-        .dropDuplicates([id_col])
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(k)
+    return rerank_topk(
+        cand.join(F.broadcast(q), ["_band", "_sig"]).dropDuplicates([id_col]),
+        k,
+        id_col,
+        vec_col,
     )
 
 
@@ -622,9 +747,7 @@ def cosine_topk_lsh_multiprobe(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bands: int = 4,
     band_bits: int = 4,
-    round_to: int = 6,
 ) -> DataFrame:
     """Multi-probe banded sign-LSH: besides the query's own band
     signatures, probe every signature at Hamming distance 1 (one flipped
@@ -633,19 +756,14 @@ def cosine_topk_lsh_multiprobe(
     near-misses — recall comparable to doubling bands, at probe cost
     bands*(1+band_bits) instead of double the index size.  The probe set
     explodes QUERY-side only; the corpus index stays one row per (vector,
-    band), so at 100 TB this is still an index probe, not a scan.
-
-    As in cosine_topk_lsh, the id filters run BEFORE the band projection
-    so the filter-pushdown UDF duplication (guide §4.4) cannot occur —
-    one signature kernel pass per side instead of two."""
+    band), so at 100 TB this is still an index probe, not a scan."""
     q = (
-        df.where(F.col(id_col) == query_vec_id)
-        .withColumn(
-            "_bands", sign_lsh_bands(F.col(vec_col), bands, band_bits)
-        )
-        .select(
-            F.col(vec_col).alias("_q_emb"),
-            F.posexplode("_bands").alias("_band", "_sig0"),
+        _band_rows(
+            df.where(F.col(id_col) == query_vec_id),
+            vec_col,
+            [F.col(vec_col).alias("_q_emb")],
+            band_bits,
+            "_sig0",
         )
         .select(
             "_q_emb",
@@ -662,19 +780,7 @@ def cosine_topk_lsh_multiprobe(
         )
         .dropDuplicates(["_band", "_sig"])
     )
-    cand = df.where(F.col(id_col) != query_vec_id).withColumn(
-        "_bands", sign_lsh_bands(F.col(vec_col), bands, band_bits)
-    ).select(
-        id_col, vec_col, F.posexplode("_bands").alias("_band", "_sig")
-    )
-    score = F.round(cosine(F.col(vec_col), F.col("_q_emb")), round_to)
-    return (
-        cand.join(F.broadcast(q), ["_band", "_sig"])
-        .dropDuplicates([id_col])
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _probe_rerank(df, q, query_vec_id, k, id_col, vec_col, band_bits)
 
 
 def cosine_topk_ivf(
@@ -686,7 +792,6 @@ def cosine_topk_ivf(
     vec_col: str = "embedding",
     stride: int = 25,
     max_cents: int = 256,
-    round_to: int = 6,
 ) -> DataFrame:
     """ANN via IVF probe: the query ranks the codebook, visits only its
     nprobe nearest inverted lists, and scores exactly inside them.  At
@@ -734,9 +839,7 @@ def cosine_topk_ivf(
     # embedding (the naive plan's sort-merge self-join is the thing that
     # doesn't survive a 100 TB corpus).  Exact re-scoring then touches only
     # the nprobe probed lists.  Assignment is corpus x codebook pairs, so
-    # the cosine splits into per-side norm folds + the bit-identical Arrow
-    # dot (the mine_hard_negatives doctrine), never the interpreted HOF
-    # fold per pair.
+    # it scores with the pre-normed cosine of cosine_probe_scores.
     cents_n = cents.select(
         "cent_id", "cvec", norm_sq(F.col("cvec")).alias("_c_n2")
     )
@@ -748,9 +851,9 @@ def cosine_topk_ivf(
             F.col(id_col),
             F.col(vec_col),
             F.struct(
-                F.try_divide(
-                    dot_arrow(F.col(vec_col), F.col("cvec")),
-                    F.sqrt(F.col("_v_n2") * F.col("_c_n2")),
+                _normed_cosine(
+                    F.col(vec_col), F.col("cvec"),
+                    F.col("_v_n2"), F.col("_c_n2"),
                 ).alias("sim"),
                 F.col("cent_id").alias("cent_id"),
             ).alias("sc"),
@@ -763,13 +866,7 @@ def cosine_topk_ivf(
     cand = assign.join(F.broadcast(probe), "cent_id", "left_semi").where(
         F.col(id_col) != query_vec_id
     )
-    score = F.round(cosine(F.col(vec_col), F.col("_q_emb")), round_to)
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return rerank_topk(cand.crossJoin(F.broadcast(q)), k, id_col, vec_col)
 
 
 def kcenter_select(
@@ -777,7 +874,6 @@ def kcenter_select(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> list[tuple[int, int, float | None]]:
     """Greedy k-center (farthest-point) coreset selection under cosine
     similarity: seed with the smallest id, then repeatedly add the vector
@@ -788,7 +884,7 @@ def kcenter_select(
     objective.
 
     Returns ``[(step, id, far_cos)]`` — ``far_cos`` is the selected
-    point's max-cosine-to-prior-picks rounded to ``round_to`` (None for
+    point's max-cosine-to-prior-picks rounded to ``SCORE_DIGITS`` (None for
     the seed).  Monotone non-decreasing in ``step`` by construction.
 
     Determinism: cosines are sequential-fold doubles (identical fold
@@ -835,7 +931,7 @@ def kcenter_select(
     out: list[tuple[int, int, float | None]] = [(0, seed[0], None)]
     for step in range(1, k):
         pick_rows = (
-            _kcenter_step(src, chosen, id_col, vec_col, round_to)
+            _kcenter_step(src, chosen, id_col, vec_col)
             .orderBy(F.col("_mc").asc(), F.col(id_col).asc())
             .limit(1)
             .collect()
@@ -853,7 +949,6 @@ def _kcenter_step(
     chosen: list[tuple[int, list[float]]],
     id_col: str,
     vec_col: str,
-    round_to: int,
 ) -> DataFrame:
     """One FPS pass: candidates (chosen ids anti-joined away) scored with
     max cosine to the chosen set.
@@ -887,6 +982,6 @@ def _kcenter_step(
         .select(
             F.col(id_col),
             F.col(vec_col),
-            F.round(max_cos, round_to).alias("_mc"),
+            F.round(max_cos, SCORE_DIGITS).alias("_mc"),
         )
     )

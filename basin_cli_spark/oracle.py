@@ -4,7 +4,7 @@ Mirrors the driver's correctness gate (SURVEY.md §5 item 3): run the Spark
 query and the DuckDB oracle SQL over the same parquet fixtures, normalize
 both results to canonical value tuples, compare order-insensitively.
 
-Driver-strictness contract (hardened round 8 after five red driver rows):
+Driver-strictness contract (hardened after five red driver rows):
 * Canonicalization is COLUMN-wise, never row-wise — the old row-major
   ``df.iloc[i][c]`` silently upcast ints to float inside a mixed-dtype row
   Series, which made the suite blind to BIGINT-vs-DOUBLE column divergence
@@ -15,13 +15,13 @@ Driver-strictness contract (hardened round 8 after five red driver rows):
   level, not the pandas level, so it cannot be masked by symmetric
   NULL-driven upcasts.
 * Class-level (not width-level) equivalence is provably sufficient for
-  the driver: through round 9, `scripts/audit_dtypes.py` tracked 37
-  registry columns whose widths diverged inside a matching class (Spark
-  int32 vs DuckDB int64 — year()/length()/rank() return INT in Spark,
-  BIGINT in DuckDB) while the entries carrying them held hash-GREEN
-  driver CORRECTNESS rows, the empirical proof the driver's value hash
-  does not distinguish integer widths.  Round 10 retired the gap
-  anyway: every registry output now CASTs to the oracle's width at the
+  the driver: `scripts/audit_dtypes.py` once tracked 37 registry
+  columns whose widths diverged inside a matching class (Spark int32 vs
+  DuckDB int64 — year()/length()/rank() return INT in Spark, BIGINT in
+  DuckDB) while the entries carrying them held hash-GREEN driver
+  CORRECTNESS rows, the empirical proof the driver's value hash does
+  not distinguish integer widths.  The gap is retired anyway: every
+  registry output CASTs to the oracle's width at the
   registry surface (Spark .cast("long") on int-class functions; CAST(..
   AS BIGINT) on the three VALUES-literal oracles), so audit_dtypes
   reports ZERO width divergences and a future width-sensitive
@@ -29,7 +29,7 @@ Driver-strictness contract (hardened round 8 after five red driver rows):
 * Raw container (array/map/struct) output columns are REJECTED on either
   side — the registry rule (queries/__init__.py docstring) is that array
   outputs are sorted/joined to strings; a raw list crashes the driver's
-  canonicalizer (``TypeError: unhashable type: 'list'``, CORRECTNESS_r07).
+  canonicalizer (``TypeError: unhashable type: 'list'``).
 """
 
 from __future__ import annotations

@@ -474,7 +474,7 @@ def q_approx_percentile(spark, sf_dir):
     # safe because the exact percentile is a function of the value
     # multiset (order-free counts map) and GK merge-order wobble is
     # bounded by the 1e-4 rank accuracy — two orders inside the 5%
-    # tolerance the booleans state.  Measured margin (r15, this fixture
+    # tolerance the booleans state.  Measured margin (this fixture
     # family): worst |approx-exact|/exact across all groups, both
     # percentiles, sf0.001/0.01/0.1 x {4, 8, 32} cores (different
     # defaultParallelism => different spread layout and GK merge order)

@@ -19,6 +19,7 @@ from basin_cli_spark.session import persist_once
 from basin_cli_spark.queries.llm_ops import (
     _MINHASH_BANDS,
     _MINHASH_MINS,
+    _minhash_walk_ctes,
     _shingle_cte,
 )
 from basin_cli_spark.sources import load_table
@@ -554,7 +555,7 @@ SELECT doc_id, source, n_chars FROM (
 
 @register("q_llm_prep_pipeline_v3", _PIPELINE_V3_ORACLE)
 def q_llm_prep_pipeline_v3(spark, sf_dir):
-    """The round-6 curation recipe composed end to end and hash-verified
+    """A curation recipe composed end to end and hash-verified
     as one query: Gopher rule gate -> per-source MAD outlier prune
     (floored threshold) -> per-source cap (k=30, content-hash order).
     Each stage is the registered operator a user runs standalone
@@ -785,26 +786,7 @@ mh AS (
   SELECT doc_id, {_MINHASH_MINS}
   FROM sh GROUP BY doc_id
 ),
-bands AS (
-  {_MINHASH_BANDS}
-),
-pairs AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS u, doc_b AS v FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-nodes AS (SELECT DISTINCT u AS id FROM edges),
--- w.lab < e.v: the min-label walk prune (see llm_ops._EMB_KEEP_ONE_ORACLE)
-walk(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.v, w.lab FROM walk w JOIN edges e ON e.u = w.id AND w.lab < e.v
-),
+{_minhash_walk_ctes("llm_ops._EMB_KEEP_ONE_ORACLE")},
 cc AS (SELECT id, MIN(lab) AS cluster_id FROM walk GROUP BY id)
 SELECT c.id AS dropped_id, c.cluster_id AS kept_id, d.source
 FROM cc c JOIN documents d ON d.doc_id = c.id
@@ -1417,7 +1399,7 @@ SELECT doc_id, lang, n_tokens, iw FROM (
     ),
 )
 def q_llm_prep_pipeline_v4(spark, sf_dir):
-    """The round-7 selection recipe composed end to end: Gopher rule
+    """A selection recipe composed end to end: Gopher rule
     gate -> DSIR importance scoring against the eval-slice target ->
     top-30 most-target-like documents PER LANGUAGE.  The per-language
     quota is the guard DSIR's global top-k lacks — a target skewed

@@ -86,6 +86,34 @@ _MINHASH_BANDS = "\n  UNION ALL ".join(
     for b in range(4)
 )
 
+
+
+def _minhash_walk_ctes(see: str = "_EMB_KEEP_ONE_ORACLE") -> str:
+    """CTEs after a `mh` (doc_id, mh_0..mh_7) CTE: its banded MinHash
+    pairs, their symmetric edge list and the min-label reachability
+    `walk` — the closure every MinHash keep-one oracle replays."""
+    return f"""bands AS (
+  {_MINHASH_BANDS}
+),
+pairs AS MATERIALIZED (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a
+  JOIN bands b ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
+),
+edges AS MATERIALIZED (
+  SELECT doc_a AS u, doc_b AS v FROM pairs
+  UNION ALL
+  SELECT doc_b, doc_a FROM pairs
+),
+nodes AS (SELECT DISTINCT u AS id FROM edges),
+-- w.lab < e.v: the min-label walk prune (see {see})
+walk(id, lab) AS (
+  SELECT id, id FROM nodes
+  UNION
+  SELECT e.v, w.lab FROM walk w JOIN edges e ON e.u = w.id AND w.lab < e.v
+)"""
+
+
 _MINHASH_ORACLE = f"""
 WITH {_shingle_cte()},
 mh AS (
@@ -778,42 +806,34 @@ def q_dedup_embedding(spark, sf_dir):
     upper tail of the actual cosine distribution).
 
     Physical shape, chosen for the 100 TB case:
-    - band signatures come from SEEDED sparse random-projection planes
-      (operators/similarity.py:random_planes, SHA-256-derived so they are
-      stable across library versions) — each bit mixes 8 random ±1
-      dimensions, so buckets do not correlate with any single raw
-      feature's scale.  They are computed by a vectorized Arrow
-      pandas_udf: the unrolled-expression alternative exceeds janino's
-      generated-method limit and silently de-optimizes to interpreted
-      eval (the round-3 2.3× regression);
+    - candidates are similarity.sign_lsh_pairs: SEEDED sparse
+      random-projection planes (SHA-256-derived, stable across library
+      versions), signatures from a vectorized Arrow pandas_udf (the
+      unrolled-expression alternative exceeds janino's generated-method
+      limit and silently falls back to interpreted eval), and an
+      ids-only self-join on the exploded (band, sig) key, deduped before
+      the verify;
     - band_bits is sized to the corpus via band_bits_for(count): expected
       bucket width n/2^bits stays ~constant as n grows, so per-bucket
       pair generation never goes quadratic in the corpus.  The DuckDB
       oracle replays the same rule through a COUNT(*)-keyed CASE
       (_sig_band_sql inside _BANDED_PAIRS_CTES: 4 bits at the n=500
       fixture SFs, 5 at sf0.1's n=2000), so the differential holds at
-      every fixture scale.  The
-      count() is one columnar scan of a single long column — at
-      100 TB you would read it from table stats instead;
-    - candidate generation joins *ids only* on the exploded (band, sig)
-      key — |bucket|^2 per band bucket, never corpus^2, and the shuffled
-      pair rows are 16 bytes, not 2 embeddings wide;
+      every fixture scale.  The count() is one columnar scan of a single
+      long column — at 100 TB you would read it from table stats;
+    - the verify is similarity.cosine_pair_scores: norms folded once per
+      vector, one Arrow dot per pair;
     - NO broadcast hints anywhere: a hint would override AQE's size logic
       and OOM the driver on a corpus-sized table.  All three joins are
       plain equi-joins; AQE broadcasts them at bench scale because they
       are tiny, and falls back to shuffle hash joins at 100 TB
       (tests/test_plans.py::test_dedup_embedding_shuffle_shape asserts
       the no-broadcast shape: equi-join keys, no cartesian);
-    - pairs are deduped (a pair can collide in several bands) while still
-      ids-only, so the expensive exact verification runs once per pair;
     - duplicate-HEAVY corpora additionally need the hot-bucket guard
       (operators/similarity.drop_hot_buckets, capped-width buckets before
       the self-join — tests/test_similarity.py pins the quadratic-blowup
       case); the fixture's buckets are narrow so the exact oracle query
-      runs unguarded;
-    - per-vector norms are folded once per *vector* before the pair join
-      (2N folds), leaving a single dot-product fold per pair — vs 3 folds
-      per pair when cosine() recomputes both norms inline."""
+      runs unguarded."""
     return _embedding_dedup_pairs(spark, sf_dir)
 
 
@@ -821,82 +841,20 @@ def _embedding_dedup_pairs(spark, sf_dir):
     """Shared pair builder for q_dedup_embedding (pairs as the result)
     and q_dedup_embedding_keep_one (pairs as the dup graph's edges)."""
     e = load_table(spark, sf_dir, "embeddings")
-    band_bits = S.band_bits_for(_corpus_count(e, sf_dir))
-    expl = e.select(
-        "vec_id",
-        F.posexplode(
-            S.sign_lsh_bands(F.col("embedding"), 4, band_bits)
-        ).alias("band", "sig"),
-    )
-    # Persist the slim (vec_id, band, sig) table: both self-join sides
-    # read it, and without the cache Spark runs the Arrow signature
-    # kernel twice.  ~24 bytes/row x bands — safe at any corpus size
-    # (same rationale as operators/dedup.minhash_lsh_pairs).
-    # Spread the cache: the band self-join is a BROADCAST join, so its
-    # probe side inherits this cached relation's layout, which on a
-    # single-row-group embeddings file is ONE partition; the per-row
-    # bucket-pair expansion then runs on one core at any session size
-    # (the downstream dropDuplicates exchange only spreads the verify,
-    # not the expansion).
-    expl = persist_once(spread(expl, ("vec_id", "band")))
-    a, b = expl.alias("a"), expl.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    normed = e.select(
-        "vec_id", "embedding", S.norm_sq(F.col("embedding")).alias("_n2")
-    )
-    scored = (
-        pairs.join(
-            normed.select(
-                F.col("vec_id").alias("vec_a"),
-                F.col("embedding").alias("_emb_a"),
-                F.col("_n2").alias("_n2_a"),
-            ),
-            "vec_a",
-        )
-        .join(
-            normed.select(
-                F.col("vec_id").alias("vec_b"),
-                F.col("embedding").alias("_emb_b"),
-                F.col("_n2").alias("_n2_b"),
-            ),
-            "vec_b",
-        )
-    )
-    score = F.round(
-        F.try_divide(
-            S.dot_arrow(F.col("_emb_a"), F.col("_emb_b")),
-            F.sqrt(F.col("_n2_a") * F.col("_n2_b")),
-        ),
-        6,
-    )
-    return scored.select("vec_a", "vec_b", score.alias("score")).where(
-        F.col("score") >= 0.40
-    )
+    pairs = S.sign_lsh_pairs(e, S.band_bits_for(_corpus_count(e, sf_dir)))
+    return S.cosine_pair_scores(pairs, e).where(F.col("score") >= 0.40)
 
 
 # MATERIALIZED hints matter here beyond the shared pair CTEs: `edges` is
 # re-scanned once per fixpoint iteration of `walk` — inlined, DuckDB
-# re-evaluated the whole candidate join per reference/iteration, which is
-# what made the 10x-corpus replay exceed 40 min in r11.  Materialized,
-# the pair work runs exactly once and the closure walks a cached edge
-# list.  Results are identical either way; this is purely evaluation
-# strategy.  Round 14 extended the same pairs/edges hints to every other
-# walk oracle (_CLUSTER_ORACLE, _KEEP_ONE_ORACLE, _PIPELINE_V2_ORACLE,
-# corpus_ops._PROVENANCE_ORACLE) after the 500k-doc sf10c replay of the
-# un-hinted v2 form re-evaluated its full shingle->decontaminate->minhash
-# chain per iteration and exhausted the box (>95 GB + >50 GB spill).
+# re-evaluates the whole candidate join per reference/iteration, which
+# took the 10x-corpus replay past 40 min.  Materialized, the pair work
+# runs exactly once and the closure walks a cached edge list.  Results
+# are identical either way; this is purely evaluation strategy.  Every
+# other walk oracle (_minhash_walk_ctes) carries the same pairs/edges
+# hints: un-hinted, the 500k-doc sf10c replay of the v2 form
+# re-evaluated its full shingle->decontaminate->minhash chain per
+# iteration and exhausted the box (>95 GB + >50 GB spill).
 _EMB_KEEP_ONE_ORACLE = f"""
 WITH RECURSIVE {_BANDED_PAIRS_CTES},
 pairs AS MATERIALIZED (
@@ -933,15 +891,9 @@ def q_dedup_embedding_keep_one(spark, sf_dir):
     ships: verified cosine>=0.40 LSH pairs (q_dedup_embedding's exact
     shape) -> connected components (transitive closure: A~B, B~C collapse
     even when A,C never share a band) -> keep the min-id representative
-    per cluster, pass every unclustered vector through untouched.
-
-    Scale shape mirrors q_dedup_keep_one: the final pass is a left-anti
-    join of one corpus scan against the drop-list (cluster members minus
-    representatives).  No broadcast hint: web-scale corpora can drop
-    30-50% of documents, making the drop-list corpus-scale — AQE
-    broadcasts it while it fits and falls back to shuffle when it
-    doesn't.  The
-    DuckDB oracle replays the closure as a recursive CTE over the shared
+    per cluster, pass every unclustered vector through untouched
+    (dedup.keep_one, as in q_dedup_keep_one).  The DuckDB oracle
+    replays the closure as a recursive CTE over the shared
     MATERIALIZED signature-join pair CTEs (_BANDED_PAIRS_CTES) with a
     min-label walk prune — attested hash-identical in 114.9 s at 20k
     noised vectors, vs >40 min for the original inline-predicate form
@@ -950,12 +902,8 @@ def q_dedup_embedding_keep_one(spark, sf_dir):
     (operators/dedup.connected_components) a 10^9-edge graph actually
     needs."""
     pairs = _embedding_dedup_pairs(spark, sf_dir).select("vec_a", "vec_b")
-    cc = D.connected_components(pairs, "vec_a", "vec_b")
-    drop = cc.where(F.col("id") != F.col("lab")).select(
-        F.col("id").alias("vec_id")
-    )
     e = load_table(spark, sf_dir, "embeddings")
-    return e.join(drop, "vec_id", "left_anti").select(
+    return D.keep_one(e, pairs, "vec_id", "vec_a", "vec_b").select(
         "vec_id", "label"
     )
 
@@ -1198,8 +1146,10 @@ def _list_lit(vals) -> str:
     return "[" + ", ".join(repr(float(v)) for v in vals) + "]"
 
 
-def _ivf_trained_oracle() -> str:
-    """Replay assignment + probe + re-rank from the frozen centroids."""
+def _frozen_assign_ctes() -> str:
+    """cents_all/ck/assign CTEs: the frozen IVF codebook selected by the
+    corpus fingerprint (_embeddings_corpus_key) and each vector's
+    argmax-cosine cell, ties to the smaller cent_id."""
     art = _codebook_artifact()
     rows = ", ".join(
         f"({key}, {ci}, {_list_lit(cv)})"
@@ -1207,10 +1157,7 @@ def _ivf_trained_oracle() -> str:
         for ci, cv in enumerate(entry["ivf"])
     )
     cos_ec = _cosine_sql("e.embedding", "c.cvec")
-    cos_cq = _cosine_sql("cvec", "q_emb")
-    cos_eq = _cosine_sql("e.embedding", "q_emb")
-    return f"""
-WITH cents_all(key, cent_id, cvec) AS (VALUES {rows}),
+    return f"""cents_all(key, cent_id, cvec) AS (VALUES {rows}),
 ck AS (
   SELECT cent_id, cvec FROM cents_all
   WHERE key = (SELECT CAST(SUM(vec_id * label) AS BIGINT) FROM embeddings)
@@ -1224,7 +1171,15 @@ assign AS (
            ) AS rn
     FROM embeddings e CROSS JOIN ck c
   ) WHERE rn = 1
-),
+)"""
+
+
+def _ivf_trained_oracle() -> str:
+    """Replay assignment + probe + re-rank from the frozen centroids."""
+    cos_cq = _cosine_sql("cvec", "q_emb")
+    cos_eq = _cosine_sql("e.embedding", "q_emb")
+    return f"""
+WITH {_frozen_assign_ctes()},
 q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
 probe AS (
   SELECT cent_id FROM ck, q
@@ -1326,30 +1281,9 @@ def q_dedup_repeated_spans(spark, sf_dir):
 def _semantic_ivf_oracle() -> str:
     """Replay frozen-centroid assignment, then exact-cosine verify within
     each cluster (SemDeDup's candidate structure)."""
-    art = _codebook_artifact()
-    rows = ", ".join(
-        f"({key}, {ci}, {_list_lit(cv)})"
-        for key, entry in sorted(art.items())
-        for ci, cv in enumerate(entry["ivf"])
-    )
-    cos_ec = _cosine_sql("e.embedding", "c.cvec")
     cos_ab = _cosine_sql("ea.embedding", "eb.embedding")
     return f"""
-WITH cents_all(key, cent_id, cvec) AS (VALUES {rows}),
-ck AS (
-  SELECT cent_id, cvec FROM cents_all
-  WHERE key = (SELECT CAST(SUM(vec_id * label) AS BIGINT) FROM embeddings)
-),
-assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT e.vec_id, c.cent_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.cent_id ASC
-           ) AS rn
-    FROM embeddings e CROSS JOIN ck c
-  ) WHERE rn = 1
-)
+WITH {_frozen_assign_ctes()}
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        ROUND({cos_ab}, 6) AS score
 FROM assign a
@@ -1390,13 +1324,12 @@ def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
     cents = _frozen_ivf_codebook(e)
     # slim (vec_id, cent_id) assignment feeds both self-join sides;
     # persisted so the Arrow assignment kernel runs once (same rationale
-    # as _embedding_dedup_pairs' signature table) — 16 bytes/row.
-    # r15: the persist moved to AFTER the hot-cell cap — with the cache
-    # below the cap, each self-join side re-ran the keep-list count agg
-    # and its semi-join (two extra Exchanges + a broadcast build in the
-    # r14 plan dump); caching the FILTERED relation runs the cap once at
-    # cache build, and both sides scan one in-memory relation.  Same
-    # rows by construction (the cap is deterministic), oracle-identical.
+    # as sign_lsh_pairs' signature table) — 16 bytes/row.  The persist
+    # sits AFTER the hot-cell cap: cached below it, each self-join side
+    # re-ran the keep-list count agg and its semi-join (two extra
+    # Exchanges + a broadcast build); caching the FILTERED relation runs
+    # the cap once at cache build, and both sides scan one in-memory
+    # relation.  Same rows by construction (the cap is deterministic).
     #
     # The cache is also SPREAD first.
     # Without it the cached relation inherits the embeddings SCAN's
@@ -1430,35 +1363,8 @@ def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
     ).select(
         F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
     )
-    # verify exactly like _embedding_dedup_pairs: ids-only pairs, norms
-    # folded per VECTOR (not per pair), Arrow dot kernel per pair
-    normed = e.select(
-        "vec_id", "embedding", S.norm_sq(F.col("embedding")).alias("_n2")
-    )
-    scored = pairs.join(
-        normed.select(
-            F.col("vec_id").alias("vec_a"),
-            F.col("embedding").alias("_emb_a"),
-            F.col("_n2").alias("_n2_a"),
-        ),
-        "vec_a",
-    ).join(
-        normed.select(
-            F.col("vec_id").alias("vec_b"),
-            F.col("embedding").alias("_emb_b"),
-            F.col("_n2").alias("_n2_b"),
-        ),
-        "vec_b",
-    )
-    score = F.round(
-        F.try_divide(
-            S.dot_arrow(F.col("_emb_a"), F.col("_emb_b")),
-            F.sqrt(F.col("_n2_a") * F.col("_n2_b")),
-        ),
-        6,
-    )
     return (
-        scored.select("vec_a", "vec_b", score.alias("score"))
+        S.cosine_pair_scores(pairs, e)
         .where(F.col("score") >= 0.40)
         .orderBy("vec_a", "vec_b")
     )
@@ -1554,13 +1460,7 @@ def q_similarity_ann_ivf_trained(spark, sf_dir):
         F.col("cent_id").isin(probe) & (F.col("vec_id") != 0)
     )
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("_q_emb"))
-    score = F.round(S.cosine(F.col("embedding"), F.col("_q_emb")), 6)
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select("vec_id", score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col("vec_id"))
-        .limit(10)
-    )
+    return S.rerank_topk(cand.crossJoin(F.broadcast(q)), 10)
 
 
 @register("q_similarity_pq_adc_trained", _pq_trained_oracle())
@@ -1664,7 +1564,7 @@ def q_llm_prep_pipeline(spark, sf_dir):
     from basin_cli_spark.operators.dedup import tokens as _tokens
     from basin_cli_spark.operators.text import language_pred
 
-    # NOT spread: an interleaved r14 A/B (5 reps, noop) measured the
+    # NOT spread: an interleaved A/B (5 reps, noop) measured the
     # spread a net loss here (1.16 s -> 1.59 s min at sf0.1) — this
     # pipeline's tokenize+gate map side is light enough that the added
     # exchange dominates, unlike the HOF-fold stacks in the quality/
@@ -1890,33 +1790,12 @@ def q_similarity_knn_label(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     probes = e.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("p_id"),
-        F.col("embedding").alias("p_emb"),
-        S.norm_sq(F.col("embedding")).alias("_p_n2"),
+        F.col("vec_id").alias("p_id"), F.col("embedding").alias("p_emb")
     )
-    # probes x corpus pair scoring: per-vector norm folds + the
-    # bit-identical Arrow dot kernel, never the interpreted HOF fold per
-    # pair (the mine_hard_negatives doctrine — see its docstring)
-    scored = (
-        spread(e, "vec_id")
-        .select(
-            "vec_id", "label", "embedding",
-            S.norm_sq(F.col("embedding")).alias("_n2"),
-        )
-        .crossJoin(F.broadcast(probes))
-        .where(F.col("vec_id") != F.col("p_id"))
-        .select(
-            "p_id",
-            "label",
-            "vec_id",
-            F.round(
-                F.try_divide(
-                    S.dot_arrow(F.col("embedding"), F.col("p_emb")),
-                    F.sqrt(F.col("_n2") * F.col("_p_n2")),
-                ),
-                6,
-            ).alias("score"),
-        )
+    scored = S.cosine_probe_scores(
+        spread(e, "vec_id").select("vec_id", "label", "embedding"),
+        probes,
+        ["p_id", "label", "vec_id"],
     )
     w_rank = Window.partitionBy("p_id").orderBy(
         F.desc("score"), F.col("vec_id")
@@ -2191,26 +2070,7 @@ mh AS (
   SELECT doc_id, {_MINHASH_MINS}
   FROM sh GROUP BY doc_id
 ),
-bands AS (
-  {_MINHASH_BANDS}
-),
-pairs AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS u, doc_b AS v FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-nodes AS (SELECT DISTINCT u AS id FROM edges),
--- w.lab < e.v: the min-label walk prune (see _EMB_KEEP_ONE_ORACLE)
-walk(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.v, w.lab FROM walk w JOIN edges e ON e.u = w.id AND w.lab < e.v
-)
+{_minhash_walk_ctes()}
 SELECT id AS doc_id, MIN(lab) AS cluster_id FROM walk GROUP BY id
 """
 
@@ -2284,7 +2144,8 @@ LIMIT 100
 # ^ the + 0.0 canonicalizes the zero sign: k <= 0 always, and at a large
 # corpus the top keys round to zero, where DuckDB's ROUND returns -0.0 but
 # Spark's returns 0.0 — numerically equal, repr()-hash distinct (surfaced
-# by the 10x-corpus decade run, CONTRACT_r11_sf1_subset.txt); IEEE x + 0.0
+# by the 10x-corpus decade run, `git show
+# d1de39b:CONTRACT_r11_sf1_subset.txt`); IEEE x + 0.0
 # maps -0.0 to +0.0 and is the identity elsewhere, so no smaller-fixture
 # attested value moves.  Same term on the Spark side below.
 
@@ -2366,30 +2227,9 @@ def q_sample_per_source_cap(spark, sf_dir):
 
 def _cluster_cap_oracle() -> str:
     """Replay frozen-centroid assignment, then the per-cell content-hash
-    cap (the same VALUES replay as _semantic_ivf_oracle's assign CTE)."""
-    art = _codebook_artifact()
-    rows = ", ".join(
-        f"({key}, {ci}, {_list_lit(cv)})"
-        for key, entry in sorted(art.items())
-        for ci, cv in enumerate(entry["ivf"])
-    )
-    cos_ec = _cosine_sql("e.embedding", "c.cvec")
+    cap."""
     return f"""
-WITH cents_all(key, cent_id, cvec) AS (VALUES {rows}),
-ck AS (
-  SELECT cent_id, cvec FROM cents_all
-  WHERE key = (SELECT CAST(SUM(vec_id * label) AS BIGINT) FROM embeddings)
-),
-assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT e.vec_id, c.cent_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.cent_id ASC
-           ) AS rn
-    FROM embeddings e CROSS JOIN ck c
-  ) WHERE rn = 1
-)
+WITH {_frozen_assign_ctes()}
 SELECT vec_id, CAST(cent_id AS BIGINT) AS cent_id
 FROM (
   SELECT vec_id, cent_id,
@@ -2585,26 +2425,7 @@ mh AS (
   SELECT doc_id, {_MINHASH_MINS}
   FROM sh GROUP BY doc_id
 ),
-bands AS (
-  {_MINHASH_BANDS}
-),
-pairs AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS u, doc_b AS v FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-nodes AS (SELECT DISTINCT u AS id FROM edges),
--- w.lab < e.v: the min-label walk prune (see _EMB_KEEP_ONE_ORACLE)
-walk(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.v, w.lab FROM walk w JOIN edges e ON e.u = w.id AND w.lab < e.v
-),
+{_minhash_walk_ctes()},
 cc AS (SELECT id, MIN(lab) AS cluster_id FROM walk GROUP BY id)
 SELECT d.doc_id, d.source, d.n_chars
 FROM documents d
@@ -2616,20 +2437,11 @@ WHERE d.doc_id NOT IN (SELECT id FROM cc WHERE id <> cluster_id)
 def q_dedup_keep_one(spark, sf_dir):
     """The end-to-end near-dedup a pipeline actually ships: LSH pairs ->
     connected components -> keep ONE representative (the min-id) per
-    duplicate cluster, pass every unclustered doc through untouched.
-    The final pass is a left-anti join of the full document scan
-    against the drop-list (cluster members that are not the
-    representative).  No broadcast hint: dup-heavy corpora (30-50% drop
-    rates are normal for web crawl) make the drop-list corpus-scale, so
-    the hint is left to AQE — it broadcasts while the list fits and
-    degrades to shuffle instead of OOMing the driver."""
+    duplicate cluster, pass every unclustered doc through untouched
+    (dedup.keep_one: one left-anti join against the drop-list)."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(d, "text", "doc_id", n_hashes=8, band_size=2)
-    cc = D.connected_components(pairs, "doc_a", "doc_b")
-    drop = cc.where(F.col("id") != F.col("lab")).select(
-        F.col("id").alias("doc_id")
-    )
-    return d.join(drop, "doc_id", "left_anti").select(
+    return D.keep_one(d, pairs, "doc_id", "doc_a", "doc_b").select(
         "doc_id", "source", "n_chars"
     )
 
@@ -2826,26 +2638,7 @@ mh AS (
   FROM sh WHERE doc_id IN (SELECT doc_id FROM clean)
   GROUP BY doc_id
 ),
-bands AS (
-  {_MINHASH_BANDS}
-),
-pairs AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
-),
-edges AS MATERIALIZED (
-  SELECT doc_a AS u, doc_b AS v FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-nodes AS (SELECT DISTINCT u AS id FROM edges),
--- w.lab < e.v: the min-label walk prune (see _EMB_KEEP_ONE_ORACLE)
-walk(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.v, w.lab FROM walk w JOIN edges e ON e.u = w.id AND w.lab < e.v
-),
+{_minhash_walk_ctes()},
 cc AS (SELECT id, MIN(lab) AS cluster_id FROM walk GROUP BY id)
 SELECT d.doc_id, d.source, d.n_chars, LEN(t.tokens) AS n_tokens
 FROM documents d
@@ -2879,11 +2672,7 @@ def q_llm_prep_pipeline_v2(spark, sf_dir):
     drop_leaky = contam.where(F.col("contamination") > 0.5).select("doc_id")
     clean = gated.join(drop_leaky, "doc_id", "left_anti")
     pairs = D.minhash_lsh_pairs(clean, "text", "doc_id", n_hashes=8, band_size=2)
-    cc = D.connected_components(pairs, "doc_a", "doc_b")
-    drop_dup = cc.where(F.col("id") != F.col("lab")).select(
-        F.col("id").alias("doc_id")
-    )
-    return clean.join(drop_dup, "doc_id", "left_anti").select(
+    return D.keep_one(clean, pairs, "doc_id", "doc_a", "doc_b").select(
         "doc_id",
         "source",
         "n_chars",

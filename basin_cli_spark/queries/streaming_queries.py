@@ -63,14 +63,15 @@ def _drain(df: DataFrame, mode: str) -> DataFrame:
     watermark finalization, and none is registered); update-mode
     applyInPandasWithState sees no input groups in a no-data batch.
     End-of-drain state eviction is moot — the query terminates.  What the
-    batch DID cost (r15 profile, plans/r15/stream_probe_before.json) is a
+    batch DID cost (profile: `git show
+    d1de39b:plans/r15/stream_probe_before.json`) is a
     full round of micro-batch machinery: ~1 s of queryPlanning plus a
     commit of every state-store instance (partitions x stores), i.e.
     roughly half the wall of every watermarked drain (guide §1.3/§5 —
     don't pay for work whose output is discarded).  A production
     continuous trigger keeps the default: there the no-data batch is what
     finalizes windows between arrivals.  Results are oracle-identical by
-    construction and re-attested at 3 SFs this round."""
+    construction and attested at 3 SFs."""
     spark = df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
     conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -392,35 +393,10 @@ def q_stream_dedup_within_watermark(spark, sf_dir):
 def _ivf_assign_stream_oracle() -> str:
     """Batch replay of the streaming cell assignment: same frozen
     centroid literals, same argmax-cosine, grouped to per-cell stats."""
-    from basin_cli_spark.queries.llm_ops import (
-        _codebook_artifact,
-        _cosine_sql,
-        _list_lit,
-    )
+    from basin_cli_spark.queries.llm_ops import _frozen_assign_ctes
 
-    art = _codebook_artifact()
-    rows = ", ".join(
-        f"({key}, {ci}, {_list_lit(cv)})"
-        for key, entry in sorted(art.items())
-        for ci, cv in enumerate(entry["ivf"])
-    )
-    cos_ec = _cosine_sql("e.embedding", "c.cvec")
     return f"""
-WITH cents_all(key, cent_id, cvec) AS (VALUES {rows}),
-ck AS (
-  SELECT cent_id, cvec FROM cents_all
-  WHERE key = (SELECT CAST(SUM(vec_id * label) AS BIGINT) FROM embeddings)
-),
-assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT e.vec_id, c.cent_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.cent_id ASC
-           ) AS rn
-    FROM embeddings e CROSS JOIN ck c
-  ) WHERE rn = 1
-)
+WITH {_frozen_assign_ctes()}
 SELECT CAST(cent_id AS BIGINT) AS cent_id, COUNT(*) AS n_vectors,
        MIN(vec_id) AS min_vec_id
 FROM assign GROUP BY cent_id ORDER BY cent_id

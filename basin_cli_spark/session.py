@@ -74,7 +74,7 @@ def get_spark(
         # AQE coalesces a high-cardinality final agg's shuffle into
         # partitions whose hash maps spill — exact dedup at 100x (60M rows,
         # 46M distinct 16-byte keys, ~1.6 GB of shuffle) measured 1,273
-        # K rows/s in SCALE.md r8 vs ~10,000 K rows/s with the 16 MB
+        # K rows/s (SCALE.md) vs ~10,000 K rows/s with the 16 MB
         # target (.scratch/dedup_tune.py grid).  A HIGHER
         # coalescePartitions.initialPartitionNum was measured and
         # REJECTED: it fixes the same spill but taxes every multi-shuffle

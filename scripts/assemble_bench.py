@@ -1,4 +1,4 @@
-"""Assemble BENCH_r{N}_builder.json from several bench_out.json captures.
+"""Assemble one bench file from several bench_out.json captures.
 
 Usage:
     python scripts/assemble_bench.py OUT.json cap1.json cap2.json ...

@@ -21,7 +21,8 @@ from basin_cli_spark.session import get_spark  # noqa: E402
 # as the fourth attested scale decade; the corpus/embedding shapes have
 # their own perturbed-replica 10x/100x evidence in SCALE.md instead.
 # The same preset also replays at the FIFTH decade (.scratch/sf10, 60M
-# lineitem): CONTRACT_r14_sf10_leg1.txt, 31/31 OK in 328s total.
+# lineitem): 31/31 OK in 328s total
+# (`git show d1de39b:CONTRACT_r14_sf10_leg1.txt`).
 SF1_SUBSET = (
     # TPC-H-shaped analytics (all 22)
     "q1_pricing_summary", "q2_min_cost_supplier", "q3_shipping_priority",
@@ -44,8 +45,8 @@ SF1_SUBSET = (
 # remaining shuffle- or sort-shaped entry (row-wise scalar/string/corpus
 # shapes excluded: their plans are map-only and don't change with row
 # count; the corpus families carry perturbed-replica evidence instead).
-# Also replayed at the fifth decade: CONTRACT_r14_sf10_leg2.txt, 41/41 OK
-# in 849s total (the two slow rows are DuckDB's exact sides of the
+# Also replayed at the fifth decade (`git show
+# d1de39b:CONTRACT_r14_sf10_leg2.txt`): 41/41 OK in 849s total (the two slow rows are DuckDB's exact sides of the
 # tolerance checks at 60M rows: q_approx_count_distinct 423s exact
 # COUNT(DISTINCT), q_approx_percentile 134s exact PERCENTILE_CONT).
 SF1_SUBSET_LEG2 = (
@@ -117,8 +118,8 @@ SF1_SUBSET_LEG3 = (
 # binary columns per-row.  Computed as registry order minus legs 1-3
 # (51 entries; tests/test_registry_contract.py pins the partition).
 # Also replayed at the fifth decade (.scratch/sf10, whose documents table
-# is the unscaled golden-key copy): CONTRACT_r14_sf10_leg4.txt, 51/51 OK
-# in 668s — the one slow row is q_json_roundtrip (493s: a 60M-row
+# is the unscaled golden-key copy; `git show
+# d1de39b:CONTRACT_r14_sf10_leg4.txt`): 51/51 OK in 668s — the one slow row is q_json_roundtrip (493s: a 60M-row
 # orders JSON round-trip is I/O-bound by design).
 SF1_SUBSET_LEG4 = (
     "q_stream_dsir_score", "q_cdc_replay_t", "q_cdc_replay_m",

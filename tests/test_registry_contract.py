@@ -1,5 +1,5 @@
-"""Registry output-schema contract — the permanent pin for the round-7
-driver-red failure class (CORRECTNESS_r07: 5 red rows, none a wrong value,
+"""Registry output-schema contract — the permanent pin for a
+driver-red failure class (CORRECTNESS_r07.json: 5 red rows, none a wrong value,
 all canonicalization/dtype contract violations the value-diff suite was
 structurally blind to).
 

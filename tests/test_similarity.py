@@ -557,10 +557,10 @@ def test_kcenter_step_plan_size_constant(spark):
     vec2 = [(i, [float(i), 1.0]) for i in range(2)]
     vec20 = [(i, [float(i), 1.0]) for i in range(20)]
     plan2 = _kcenter_step(
-        src, vec2, "vec_id", "embedding", 6
+        src, vec2, "vec_id", "embedding"
     )._jdf.queryExecution().optimizedPlan().toString()
     plan20 = _kcenter_step(
-        src, vec20, "vec_id", "embedding", 6
+        src, vec20, "vec_id", "embedding"
     )._jdf.queryExecution().optimizedPlan().toString()
     for plan in (plan2, plan20):
         assert "isin" not in plan.lower()
@@ -597,3 +597,50 @@ def test_anisotropy_exact_on_constructed_cones(spark, tmp_path):
     assert got[1].mean_pairwise_cos == -1.0
     assert got[2].mean_pairwise_cos == 0.0
     assert got[3].mean_pairwise_cos is None and got[3].n_vecs == 1
+
+
+def _zero_norm_corpus(spark):
+    return spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [1.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+
+
+def test_pair_scorer_zero_norm_is_null(spark):
+    """A zero-norm vector has no cosine: its pairs score NULL (sorting
+    last) instead of raising DIVIDE_BY_ZERO and killing the job."""
+    e = _zero_norm_corpus(spark)
+    pairs = spark.createDataFrame([(0, 1), (1, 2)], "vec_a long, vec_b long")
+    got = {
+        (r.vec_a, r.vec_b): r.score
+        for r in S.cosine_pair_scores(pairs, e).collect()
+    }
+    assert got == {(0, 1): None, (1, 2): 0.707107}
+
+
+def test_probe_scorer_zero_norm_is_null(spark):
+    e = _zero_norm_corpus(spark)
+    probes = e.where(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("p_id"), F.col("embedding").alias("p_emb")
+    )
+    got = {
+        (r.p_id, r.vec_id): r.score
+        for r in S.cosine_probe_scores(e, probes, ["p_id", "vec_id"]).collect()
+    }
+    # self-pairs excluded; the zero vector scores NULL on either side
+    assert got == {(0, 1): None, (0, 2): None, (1, 0): None, (1, 2): 0.707107}
+
+
+def test_keep_one_keeps_every_row_without_edges(spark):
+    from basin_cli_spark.operators.dedup import keep_one
+
+    docs = spark.createDataFrame(
+        [(i, f"t{i}") for i in range(1, 5)], "doc_id long, text string"
+    )
+    no_edges = spark.createDataFrame([], "doc_a long, doc_b long")
+    kept = keep_one(docs, no_edges, "doc_id", "doc_a", "doc_b")
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 4]
+    # and with a 2-3-4 chain only its min-id representative survives
+    chain = spark.createDataFrame([(2, 3), (3, 4)], "doc_a long, doc_b long")
+    kept = keep_one(docs, chain, "doc_id", "doc_a", "doc_b")
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 2]

@@ -12,6 +12,7 @@ Contract under test:
 * results are identical either way (the repartition is pure placement);
 * query filters still reach the parquet scan below the spread exchange;
 * no engine code calls ``repartition`` outside spread() (lint).
+* no engine code calls ``dot_arrow`` outside operators/ (lint).
 """
 
 from __future__ import annotations
@@ -193,18 +194,17 @@ _REPARTITION_ALLOWED: dict[tuple[str, str], str] = {
 }
 
 
-def _repartition_calls():
-    """(relpath, enclosing function, line) of every ``.repartition(``
-    call in the engine sources."""
+def _engine_calls(name: str):
+    """(relpath, enclosing function, line) of every call to ``name`` —
+    ``x.name(`` or a bare ``name(`` — in the engine sources."""
     found = []
 
     def visit(node, rel, func):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             func = node.name
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "repartition"
+        if isinstance(node, ast.Call) and name in (
+            getattr(node.func, "attr", None),
+            getattr(node.func, "id", None),
         ):
             found.append((rel, func, node.lineno))
         for child in ast.iter_child_nodes(node):
@@ -220,7 +220,7 @@ def _repartition_calls():
 def test_no_repartition_outside_spread():
     for key, reason in _REPARTITION_ALLOWED.items():
         assert isinstance(reason, str) and reason.strip(), key
-    calls = _repartition_calls()
+    calls = _engine_calls("repartition")
     stray = [c for c in calls if (c[0], c[1]) not in _REPARTITION_ALLOWED]
     assert not stray, (
         "repartition outside spread() — call operators.layout.spread, or "
@@ -229,3 +229,18 @@ def test_no_repartition_outside_spread():
     used = {(rel, func) for rel, func, _ in calls}
     stale = set(_REPARTITION_ALLOWED) - used
     assert not stale, f"allowlist entries with no call: {stale}"
+
+
+def test_dot_arrow_only_under_operators():
+    """Pair scoring has one owner: a query module that calls dot_arrow
+    directly is a private verify that the scorers in
+    operators/similarity.py (cosine_pair_scores, cosine_probe_scores)
+    already provide."""
+    stray = [
+        c for c in _engine_calls("dot_arrow")
+        if not c[0].startswith("operators/")
+    ]
+    assert not stray, (
+        "dot_arrow outside operators/ — score through "
+        f"similarity.cosine_pair_scores / cosine_probe_scores: {stray}"
+    )
