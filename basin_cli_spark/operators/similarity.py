@@ -180,14 +180,10 @@ def _normed_cosine(a: Column, b: Column, a_n2: Column, b_n2: Column) -> Column:
     return F.try_divide(dot_arrow(a, b), F.sqrt(a_n2 * b_n2))
 
 
-def cosine_pair_scores(
-    pairs: DataFrame,
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_pair_scores(pairs: DataFrame, vectors: DataFrame) -> DataFrame:
     """Exact cosine verify of an ids-only pair relation
-    ``(vec_a, vec_b)``: ``(vec_a, vec_b, score)``.
+    ``(vec_a, vec_b)`` against ``vectors`` ``(vec_id, embedding)``:
+    ``(vec_a, vec_b, score)``.
 
     Norms fold once per vector before the pair joins (2N folds, not 2 per
     pair), the per-pair dot is the Arrow kernel, and the vectors join in
@@ -196,13 +192,13 @@ def cosine_pair_scores(
     broadcasts it only while it fits.  Filter on ``score`` after this
     call, never inside it (the dot_arrow caller contract)."""
     normed = vectors.select(
-        id_col, vec_col, norm_sq(F.col(vec_col)).alias("_n2")
+        "vec_id", "embedding", norm_sq(F.col("embedding")).alias("_n2")
     )
 
     def side(s: str) -> DataFrame:
         return normed.select(
-            F.col(id_col).alias(f"vec_{s}"),
-            F.col(vec_col).alias(f"_emb_{s}"),
+            F.col("vec_id").alias(f"vec_{s}"),
+            F.col("embedding").alias(f"_emb_{s}"),
             F.col("_n2").alias(f"_n2_{s}"),
         )
 
@@ -649,22 +645,20 @@ def _band_rows(
     ).select(*cols, F.posexplode("_bands").alias("_band", sig))
 
 
-def sign_lsh_pairs(
-    df: DataFrame,
-    band_bits: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def sign_lsh_pairs(df: DataFrame, band_bits: int) -> DataFrame:
     """Ids-only candidate pairs ``(vec_a, vec_b)``, ``vec_a < vec_b``,
-    of vectors sharing at least one sign-LSH band: the self-join is keyed
-    on (band, signature), so only vectors in the same bucket ever meet —
-    |bucket|^2 per bucket, never corpus^2 (size ``band_bits`` with
-    band_bits_for).  A pair colliding in several bands is emitted once,
-    so cosine_pair_scores verifies it once."""
+    of ``(vec_id, embedding)`` rows sharing at least one sign-LSH band:
+    the self-join is keyed on (band, signature), so only vectors in the
+    same bucket ever meet — |bucket|^2 per bucket, never corpus^2 (size
+    ``band_bits`` with band_bits_for).  A pair colliding in several bands
+    is emitted once, so cosine_pair_scores verifies it once."""
+    # Not _band_rows: exploding a named band column there lets Catalyst
+    # infer a Filter (size > 0, not null) on it, one more plan node than
+    # exploding the kernel's output directly.
     expl = df.select(
-        id_col,
+        "vec_id",
         F.posexplode(
-            sign_lsh_bands(F.col(vec_col), band_bits=band_bits)
+            sign_lsh_bands(F.col("embedding"), band_bits=band_bits)
         ).alias("band", "sig"),
     )
     # Persist the slim (id, band, sig) table: both self-join sides read
@@ -677,18 +671,17 @@ def sign_lsh_pairs(
     # core.  The dropDuplicates exchange below does not spread the
     # verify either: AQE sizes it by its bytes (16 per pair) and at
     # sf0.1 coalesces it to one task (ROADMAP direction 1).
-    expl = persist_once(spread(expl, (id_col, "band")))
+    expl = persist_once(spread(expl, ("vec_id", "band")))
     a, b = expl.alias("a"), expl.alias("b")
     return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
+            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
         )
         .dropDuplicates(["vec_a", "vec_b"])
     )
