@@ -18,12 +18,12 @@ API and its algebraic-property tests (reference pkg/ecmh/ecmh_test.go:14-84)
 Throughput engineering (the digest must survive a 100 TB scan):
 
 * hash-to-point draws x-candidates from C-implemented hashlib.sha256, not
-  the pure-Python keccak kept for Ethereum signing parity — the hash
-  inside the point mapping is this construction's own choice (the
-  reference's ristretto255 mapping likewise uses its own hash), and
-  pure-Python Keccak was 90% of the per-row cost (even the unrolled sponge
-  takes ~210 us per short input, vs ~0.5 us for sha256, on a 4-vCPU
-  Xeon VM);
+  the keccak kept for Ethereum signing parity — the hash inside the point
+  mapping is this construction's own choice (the reference's ristretto255
+  mapping likewise uses its own hash), and pure-Python Keccak was 90% of
+  the per-row cost (the unrolled sponge takes ~210 us per short input;
+  even the native kernel of functions/hashing.py takes ~16 us, most of it
+  Python call overhead, vs ~0.5 us for sha256, on a 4-vCPU Xeon VM);
 * the accumulator works in Jacobian coordinates — no modular inversion
   per addition (a pow(a, -1, p) is ~15 us, ~10x the cost of the few
   Jacobian multiplications); ONE inversion happens at digest() time;

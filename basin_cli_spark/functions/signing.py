@@ -2,11 +2,15 @@
 upload signer (reference pkg/signing/signing.go:34-124): keccak256 the
 content, produce a 65-byte recoverable ECDSA signature r||s||v.
 
-Pure Python over the published secp256k1 parameters with RFC 6979
-deterministic nonces and low-s normalization — byte-identical to the
-reference's signatures (golden parity test in tests/test_crypto.py uses
-the fixed key/content/signature triple from the reference's
-signing_test.go:12-41).
+RFC 6979 deterministic nonces, the signature equation, low-s
+normalization and the recovery id are Python over the published
+secp256k1 parameters.  The one scalar multiplication, k·G for the nonce
+point (and priv·G in ``derive_address``), is OpenSSL's, through
+``cryptography``: about 0.9 ms where a Python double-and-add took about
+10 ms on a 4-vCPU Xeon VM.  Signatures are byte-identical to the
+reference's (golden parity test in tests/test_crypto.py uses the fixed
+key/content/signature triple from the reference's signing_test.go:12-41;
+the same file keeps the Python point arithmetic as the oracle).
 
 This is a driver-side post-write step, not a Spark operator (signing
 happens once per exported file, reference internal/app/uploader.go:36-75).
@@ -22,41 +26,21 @@ from basin_cli_spark.functions.hashing import keccak256, keccak256_file
 # secp256k1 domain parameters (public).
 P = 0xFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFEFFFFFC2F
 N = 0xFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFFEBAAEDCE6AF48A03BBFD25E8CD0364141
-GX = 0x79BE667EF9DCBBAC55A06295CE870B07029BFCDB2DCE28D959F2815B16F81798
-GY = 0x483ADA7726A3C4655DA4FBFC0E1108A8FD17B448A68554199C47D08FFB10D4B8
 
 
-def _inv(a: int, m: int) -> int:
-    return pow(a, -1, m)
+def _private_key(private_key_hex: str) -> int:
+    priv = int(private_key_hex, 16)
+    if not 1 <= priv < N:
+        raise ValueError("private key out of range: must be in [1, n-1] of secp256k1")
+    return priv
 
 
-def _point_add(p1, p2):
-    if p1 is None:
-        return p2
-    if p2 is None:
-        return p1
-    x1, y1 = p1
-    x2, y2 = p2
-    if x1 == x2 and (y1 + y2) % P == 0:
-        return None
-    if p1 == p2:
-        lam = (3 * x1 * x1) * _inv(2 * y1, P) % P
-    else:
-        lam = (y2 - y1) * _inv(x2 - x1, P) % P
-    x3 = (lam * lam - x1 - x2) % P
-    y3 = (lam * (x1 - x3) - y1) % P
-    return (x3, y3)
+def _mul_g(k: int) -> tuple[int, int]:
+    """The affine point k·G, for 1 <= k < N."""
+    from cryptography.hazmat.primitives.asymmetric import ec
 
-
-def _point_mul(k: int, point=(GX, GY)):
-    result = None
-    addend = point
-    while k:
-        if k & 1:
-            result = _point_add(result, addend)
-        addend = _point_add(addend, addend)
-        k >>= 1
-    return result
+    pub = ec.derive_private_key(k, ec.SECP256K1()).public_key().public_numbers()
+    return pub.x, pub.y
 
 
 def _rfc6979_nonce(digest: bytes, priv: int) -> int:
@@ -83,12 +67,12 @@ def _rfc6979_nonce(digest: bytes, priv: int) -> int:
 def sign_digest(digest: bytes, private_key_hex: str) -> bytes:
     """ECDSA over secp256k1; returns 65 bytes r||s||v with v in {0,1}
     (the recovery id, low-s normalized)."""
-    priv = int(private_key_hex, 16)
+    priv = _private_key(private_key_hex)
     z = int.from_bytes(digest, "big")
     k = _rfc6979_nonce(digest, priv)
-    x, y = _point_mul(k)
+    x, y = _mul_g(k)
     r = x % N
-    s = _inv(k, N) * (z + r * priv) % N
+    s = pow(k, -1, N) * (z + r * priv) % N
     # Standard recovery-id encoding: bit 0 = y parity, bit 1 set when the
     # nonce point's x overflowed N (recid 2/3, probability ~2^-128).
     recid = (y & 1) | (2 if x >= N else 0)
@@ -119,7 +103,6 @@ def sign_file(path: str, private_key_hex: str, digest: bytes | None = None) -> b
 def derive_address(private_key_hex: str) -> str:
     """Ethereum-style address from the public key (reference
     `vaults account address`, cmd/vaults/commands.go:692-772)."""
-    priv = int(private_key_hex, 16)
-    x, y = _point_mul(priv)
+    x, y = _mul_g(_private_key(private_key_hex))
     pub = x.to_bytes(32, "big") + y.to_bytes(32, "big")
     return "0x" + keccak256(pub)[-20:].hex()

@@ -20,6 +20,7 @@ Determinism rules (so order-insensitive value-hashes match the oracle):
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -34,6 +35,7 @@ class QuerySpec:
 
 
 QUERIES: dict[str, QuerySpec] = {}
+_LOG = logging.getLogger(__name__)
 
 # Runtime SQL confs every query depends on, applied defensively because the
 # driver may hand us a session built by a different factory:
@@ -53,8 +55,14 @@ def ensure_session_confs(spark: SparkSession) -> None:
     for k, v in REQUIRED_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # a locked conf is better than a failed query
+        except Exception as e:
+            # a locked conf is better than a failed query, but the query
+            # then runs on the session's own value: say so
+            _LOG.warning(
+                "ensure_session_confs: cannot set %s=%s, keeping the session's value (%s: %s)",
+                k, v, type(e).__name__, e,
+                extra={"fallback": "session_conf_kept", "conf": k, "reason": repr(e)},
+            )
 
 
 def register(name: str, oracle: str | None = None):

@@ -16,6 +16,7 @@ the same integer division the batch loader uses.
 from __future__ import annotations
 
 import os
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,13 +48,16 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
+_DRAIN_CONF_LOCK = threading.Lock()
+
+
 def _drain(df: DataFrame, mode: str) -> DataFrame:
     """Run the streaming plan to completion into a memory sink and return
     the sink table (one AvailableNow drain — the test/recovery trigger;
     production would use a processing-time or continuous trigger).
 
     The drain disables the watermark-finalize no-data micro-batch
-    (`spark.sql.streaming.noDataMicroBatches.enabled`, restored after):
+    (`spark.sql.streaming.noDataMicroBatches.enabled`):
     for a bounded AvailableNow drain that batch can only advance the
     watermark and evict state — it cannot change the sink.  Complete-mode
     aggregations re-emit the identical final state they emitted in the
@@ -71,23 +75,29 @@ def _drain(df: DataFrame, mode: str) -> DataFrame:
     don't pay for work whose output is discarded).  A production
     continuous trigger keeps the default: there the no-data batch is what
     finalizes windows between arrivals.  Results are oracle-identical by
-    construction and attested at 3 SFs."""
+    construction and attested at 3 SFs.
+
+    A query reads that conf once, when ``start()`` builds it, so the
+    session value is restored right after ``start()``, not after the
+    drain; a module lock around set/start/restore keeps concurrent drains
+    from restoring each other's override."""
     spark = df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
     conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(conf_key, "true")
-    spark.conf.set(conf_key, "false")
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, old)
+    with _DRAIN_CONF_LOCK:
+        old = spark.conf.get(conf_key, "true")
+        spark.conf.set(conf_key, "false")
+        try:
+            q = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            spark.conf.set(conf_key, old)
+    q.awaitTermination()
     return spark.table(name)
 
 

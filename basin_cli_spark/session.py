@@ -20,9 +20,12 @@ and a plan shape that survives a 1000-executor / 100 TB deployment:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
 
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -124,7 +127,8 @@ def persist_once(df, level=None):
     but harmless.  Probing the cache first keeps re-runs silent AND makes
     the reuse explicit: the second invocation reads the first's cache, the
     steady state the persist design intends.  Falls back to a plain
-    persist if the (classic-mode) JVM internals are unavailable."""
+    persist, with a warning, if the (classic-mode) JVM internals are
+    unavailable."""
     from pyspark import StorageLevel
 
     level = level or StorageLevel.MEMORY_AND_DISK
@@ -132,6 +136,9 @@ def persist_once(df, level=None):
         jcm = df.sparkSession._jsparkSession.sharedState().cacheManager()
         if jcm.lookupCachedData(df._jdf).isDefined():
             return df
-    except Exception:
-        pass
+    except Exception as e:
+        _LOG.warning(
+            "persist_once: cache probe failed, falling back to a plain persist (%s: %s)",
+            type(e).__name__, e, extra={"fallback": "plain_persist", "reason": repr(e)},
+        )
     return df.persist(level)

@@ -12,7 +12,9 @@ sign (keccak256 + secp256k1)                functions/signing.sign_file
 upload + EventInfo row                      manifest JSONL row (cid-style
                                             content hash, ts, signature)
 LSN ack / crash recovery (UploadAll)        checkpointLocation + batch-id
-                                            idempotence + startup sweep
+                                            idempotence; no startup sweep
+                                            yet removes the window dir of a
+                                            batch that crashed unpublished
 
 Delivery is at-least-once with idempotent re-publish, the same boundary the
 reference has (duplicate upload possible between upload and cleanup,

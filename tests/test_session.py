@@ -1,12 +1,15 @@
 """Session defaults.  Only the worker-path test starts Spark, in a
 subprocess of its own."""
 
+import logging
 import os
 import subprocess
 import sys
 import textwrap
+from types import SimpleNamespace
 
-from basin_cli_spark.session import driver_memory
+from basin_cli_spark.queries import REQUIRED_CONFS, ensure_session_confs
+from basin_cli_spark.session import driver_memory, persist_once
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -53,3 +56,31 @@ def test_workers_import_package_from_any_cwd(tmp_path):
                           capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert proc.stdout.split()[-1] == "1"
+
+
+def test_persist_once_fallback_warns(caplog):
+    """Without the JVM cache manager, persist_once persists plainly and
+    says so in one warning."""
+    persisted = []
+    df = SimpleNamespace(sparkSession=None, persist=lambda level: persisted.append(level) or df)
+    with caplog.at_level(logging.WARNING):
+        assert persist_once(df) is df
+    assert len(persisted) == 1
+    assert [r.fallback for r in caplog.records] == ["plain_persist"]
+
+
+def test_ensure_session_confs_warns_on_locked_conf(caplog):
+    """A conf the session refuses is kept, with one warning naming it;
+    the other required confs are still set."""
+    locked = "spark.sql.session.timeZone"
+    seen = {}
+
+    def set_conf(k, v):
+        if k == locked:
+            raise RuntimeError(f"cannot modify {k}")
+        seen[k] = v
+
+    with caplog.at_level(logging.WARNING):
+        ensure_session_confs(SimpleNamespace(conf=SimpleNamespace(set=set_conf)))
+    assert seen == {k: v for k, v in REQUIRED_CONFS.items() if k != locked}
+    assert [(r.fallback, r.conf) for r in caplog.records] == [("session_conf_kept", locked)]

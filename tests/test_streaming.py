@@ -674,3 +674,67 @@ def test_drain_restores_no_data_batch_conf(spark):
         assert spark.conf.get(key) == preset
         out.count()  # sink table is readable
     spark.conf.set(key, "true")
+
+
+def _rate_stream(spark):
+    from pyspark.sql import functions as F
+
+    return spark.readStream.format("rate").option("rowsPerSecond", "1").load().select(F.col("value"))
+
+
+def test_concurrent_drains_restore_no_data_batch_conf(spark, monkeypatch):
+    """Two drains from two threads leave the session conf at its original
+    value, when the second starts while the first is still draining and
+    ends after it: each drain restores the conf right after its own
+    start(), not after its drain."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from basin_cli_spark.queries.streaming_queries import _drain
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, "true")
+    first_draining, second_draining, first_done = (threading.Event() for _ in range(3))
+    role = threading.local()
+    real_await = StreamingQuery.awaitTermination
+
+    def await_termination(self, timeout=None):
+        out = real_await(self, timeout)
+        if role.name == "first":
+            first_draining.set()
+            assert second_draining.wait(120)
+        else:
+            second_draining.set()
+            assert first_done.wait(120)
+        return out
+
+    def drain(name):
+        role.name = name
+        out = _drain(_rate_stream(spark), "append")
+        if name == "first":
+            first_done.set()
+        return out
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", await_termination)
+    with ThreadPoolExecutor(2) as pool:
+        first = pool.submit(drain, "first")
+        assert first_draining.wait(120)
+        second = pool.submit(drain, "second")
+        outs = [first.result(), second.result()]
+    assert spark.conf.get(key) == "true"
+    for out in outs:
+        out.count()
+
+
+def test_drain_restores_conf_when_start_raises(spark):
+    from pyspark.errors import AnalysisException
+
+    from basin_cli_spark.queries.streaming_queries import _drain
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, "true")
+    with pytest.raises(AnalysisException):
+        _drain(_rate_stream(spark), "complete")  # complete mode needs an aggregation
+    assert spark.conf.get(key) == "true"
