@@ -218,11 +218,6 @@ class MultisetHash:
         self._jac = _jac_add(self._jac, _jac_neg(_to_jac(_hash_to_point(item))))
         return self
 
-    def remove_all(self, items) -> "MultisetHash":
-        for it in items:
-            self.remove(it)
-        return self
-
     def union(self, other: "MultisetHash") -> "MultisetHash":
         self._jac = _jac_add(self._jac, other._jac)
         return self

@@ -35,6 +35,9 @@ from basin_cli_spark.operators.dedup import shingle_rows
 # (\x0B is whitespace only in Java).
 _PUNCT_RE_SPARK = r"\p{Punct}"
 _WS_RE = "[ \t\n\r\f]+"
+# chunk_documents: 200-char chunks starting every 150 chars (50 overlap).
+_CHUNK_SIZE = 200
+_CHUNK_STRIDE = 150
 
 
 def normalize_text(c: Column | str) -> Column:
@@ -45,17 +48,17 @@ def normalize_text(c: Column | str) -> Column:
     return F.trim(F.regexp_replace(no_punct, _WS_RE, " "))
 
 
-def split_bucket(id_col: Column | str, buckets: int = 16) -> Column:
-    """Deterministic bucket in [0, 16) from the first md5 nibble of the id's
-    decimal string — reproducible in any engine, stable under appends."""
-    col = F.col(id_col) if isinstance(id_col, str) else id_col
-    nibble = F.substring(F.md5(col.cast("string")), 1, 1)
+def split_bucket() -> Column:
+    """Deterministic bucket in [0, 16) from the first md5 nibble of the
+    ``doc_id``'s decimal string — reproducible in any engine, stable under
+    appends."""
+    nibble = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     return (F.instr(F.lit("0123456789abcdef"), nibble) - 1).cast("int")
 
 
-def split_assign(id_col: Column | str) -> Column:
+def split_assign() -> Column:
     """train/val/test = 13/1/2 of the 16 md5-nibble buckets (~81/6/13%)."""
-    b = split_bucket(id_col)
+    b = split_bucket()
     return (
         F.when(b < 13, F.lit("train"))
         .when(b == 13, F.lit("val"))
@@ -63,29 +66,19 @@ def split_assign(id_col: Column | str) -> Column:
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
-    """Per train-document count of distinct word-k-gram shingles shared
+def decontaminate(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
+    """Per train-document count of distinct word-3-gram shingles shared
     with the eval set — the n-gram-overlap decontamination check run
     before training so benchmark answers don't leak into the corpus.
 
     The eval shingle set is deduped then broadcast; the train corpus
     streams through the broadcast inner join and aggregates per doc with
     map-side partials.  The corpus itself is never shuffled."""
-    train_sh = shingle_rows(docs, text_col, id_col, k)
-    eval_sh = (
-        shingle_rows(eval_docs, text_col, id_col, k)
-        .select("shingle")
-        .distinct()
-    )
+    train_sh = shingle_rows(docs)
+    eval_sh = shingle_rows(eval_docs).select("shingle").distinct()
     return (
         train_sh.join(F.broadcast(eval_sh), "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct("shingle").alias("n_shared_shingles"))
     )
 
@@ -115,12 +108,7 @@ def _bloom_set_bits(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray,
 
 
 def bloom_decontaminate(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    fpp: float = 0.01,
+    docs: DataFrame, eval_docs: DataFrame, fpp: float = 0.01
 ) -> DataFrame:
     """decontaminate() with a Bloom prefilter — the 100 TB scale path.
 
@@ -154,7 +142,7 @@ def bloom_decontaminate(
     from basin_cli_spark.session import persist_once
 
     eval_sh = persist_once(
-        shingle_rows(eval_docs, text_col, id_col, k)
+        shingle_rows(eval_docs)
         .select("shingle")
         .distinct()
         .withColumn("h1", h1c)
@@ -183,10 +171,10 @@ def bloom_decontaminate(
             ok &= ((byte >> bit) & np.uint8(1)) == 1
         return pd.Series(ok)
 
-    train_sh = shingle_rows(docs, text_col, id_col, k)
+    train_sh = shingle_rows(docs)
     survivors = train_sh.withColumn("_h1", h1c).withColumn(
         "_h2", h2c
-    ).where(maybe_in_bloom("_h1", "_h2")).select(id_col, "shingle")
+    ).where(maybe_in_bloom("_h1", "_h2")).select("doc_id", "shingle")
     # exact verify against the SAME persisted snapshot the bloom's hashes
     # were collected from (the toPandas above materialized the cache, so
     # the exact join reads cached partitions, not a re-read of the eval
@@ -194,40 +182,34 @@ def bloom_decontaminate(
     # cache scope (drive_contract/bench) reclaims it.
     return (
         survivors.join(F.broadcast(eval_sh.select("shingle")), "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct("shingle").alias("n_shared_shingles"))
     )
 
 
-def contamination_score(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def contamination_score(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """GRADED contamination: the fraction of each train document's
     distinct shingles that appear anywhere in the eval set — the number a
     pipeline thresholds (e.g. drop > 0.8, flag > 0.2) instead of
     decontaminate()'s raw hit count.  Same broadcast shape: the corpus
     streams once, left-joins the broadcast eval shingle set, and the
     score is shared/total per doc (0.0 when nothing overlaps)."""
-    train_sh = shingle_rows(docs, text_col, id_col, k).distinct()
+    train_sh = shingle_rows(docs).distinct()
     eval_sh = (
-        shingle_rows(eval_docs, text_col, id_col, k)
+        shingle_rows(eval_docs)
         .select("shingle")
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
     return (
         train_sh.join(F.broadcast(eval_sh), "shingle", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.count("_hit").alias("n_shared"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             "n_shared",
             F.round(
@@ -237,13 +219,8 @@ def contamination_score(
     )
 
 
-def segment_rows(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seg_words: int = 3,
-) -> DataFrame:
-    """(id, seg_idx, seg) rows: the document cut into consecutive
+def segment_rows(docs: DataFrame, seg_words: int = 3) -> DataFrame:
+    """(doc_id, seg_idx, seg) rows: the ``text`` cut into consecutive
     ``seg_words``-word segments (the last may be shorter).
 
     Fixed-width word windows are the segmentation fallback production
@@ -258,7 +235,7 @@ def segment_rows(
     preserve the document instead of silently dropping it; callers that
     want segments only should filter ``seg IS NOT NULL``."""
     w = F.filter(
-        F.split(F.col(text_col), " "), lambda t: F.length(t) > F.lit(0)
+        F.split(F.col("text"), " "), lambda t: F.length(t) > F.lit(0)
     )
     n_seg = F.ceil(F.size(w) / F.lit(float(seg_words)))
     segs = F.when(
@@ -275,16 +252,12 @@ def segment_rows(
         ),
     ).otherwise(F.array().cast("array<struct<seg_idx:long,seg:string>>"))
     return docs.select(
-        F.col(id_col), F.explode_outer(segs).alias("_s")
-    ).select(id_col, "_s.seg_idx", "_s.seg")
+        F.col("doc_id"), F.explode_outer(segs).alias("_s")
+    ).select("doc_id", "_s.seg_idx", "_s.seg")
 
 
 def boilerplate_scrub(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seg_words: int = 3,
-    min_docs: int = 3,
+    docs: DataFrame, seg_words: int = 3, min_docs: int = 3
 ) -> DataFrame:
     """Corpus-level boilerplate removal (CCNet §4.1 / RefinedWeb line-wise
     dedup, public): drop every segment that occurs in >= ``min_docs``
@@ -349,13 +322,13 @@ def boilerplate_scrub(
     template-free the same probe is the right first move (it composes
     with the Bloom doctrine above); here the thread is closed
     permanently with the probe script as the committed evidence."""
-    segs = segment_rows(docs, text_col, id_col, seg_words).withColumn(
+    segs = segment_rows(docs, seg_words).withColumn(
         "_segh", F.xxhash64("seg")
     )
     hot = (
         segs.where(F.col("seg").isNotNull())
         .groupBy("_segh", "seg")
-        .agg(F.count_distinct(id_col).alias("_nd"))
+        .agg(F.count_distinct("doc_id").alias("_nd"))
         .where(F.col("_nd") >= min_docs)
         .groupBy("_segh")
         .agg(F.collect_list("seg").alias("_hotsegs"))
@@ -364,7 +337,7 @@ def boilerplate_scrub(
     is_hot = F.col("_hotsegs").isNotNull() & F.array_contains(
         "_hotsegs", F.col("seg")
     )
-    return j.groupBy(id_col).agg(
+    return j.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -384,34 +357,27 @@ def boilerplate_scrub(
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    len_col: str = "n_chars",
-    size: int = 200,
-    stride: int = 150,
-) -> DataFrame:
-    """Overlapping fixed-size character chunks (context-window prep).
-    Chunk i covers [1 + i*stride, 1 + i*stride + size); every chunk start
-    lies inside the document.  Row-multiplying but narrow — no shuffle,
-    and chunk count is derived from the stored length column so both
-    engines index identically."""
+def chunk_documents(docs: DataFrame) -> DataFrame:
+    """Overlapping fixed-size character chunks of ``text`` (context-window
+    prep).  Chunk i covers [1 + i*_CHUNK_STRIDE, 1 + i*_CHUNK_STRIDE +
+    _CHUNK_SIZE); every chunk start lies inside the document.
+    Row-multiplying but narrow — no shuffle, and chunk count is derived
+    from the stored ``n_chars`` column so both engines index identically."""
     # greatest(...,0): Spark's sequence(0, -1) would count *down*; an empty
     # document still yields exactly one (empty) chunk.
     n_chunks = F.greatest(
-        F.floor((F.col(len_col) - 1) / stride).cast("int"), F.lit(0)
+        F.floor((F.col("n_chars") - 1) / _CHUNK_STRIDE).cast("int"), F.lit(0)
     )
     chunked = docs.select(
-        F.col(id_col),
-        F.col(text_col),
+        F.col("doc_id"),
+        F.col("text"),
         F.posexplode(F.sequence(F.lit(0), n_chunks)).alias("chunk_id", "_i"),
     )
     return chunked.select(
-        id_col,
+        "doc_id",
         "chunk_id",
         F.substring(
-            F.col(text_col), F.col("chunk_id") * stride + 1, size
+            F.col("text"), F.col("chunk_id") * _CHUNK_STRIDE + 1, _CHUNK_SIZE
         ).alias("chunk_text"),
     )
 

@@ -27,6 +27,15 @@ from pyspark.storagelevel import StorageLevel
 from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.session import persist_once
 
+# MinHash: 8 seeded hashes in 4 bands of 2 (collision prob ~ J^2 per band).
+_N_HASHES = 8
+_BAND_SIZE = 2
+_SIMHASH_BITS = 16
+# connected_components collects an edge list up to this size to the driver
+# and runs union-find there; larger graphs take the distributed loop.
+_DRIVER_THRESHOLD = 5_000_000
+_MAX_ITER = 50
+
 
 def tokens(col: Column | str) -> Column:
     """Whitespace tokens of lowercased text, empties dropped."""
@@ -141,10 +150,9 @@ def run_lnrun_fold(elems: Column) -> Column:
     return F.aggregate(F.array_sort(elems), init, merge, finish)
 
 
-def shingle_rows(
-    df: DataFrame, text_col: str, id_col: str, k: int = 3
-) -> DataFrame:
-    """(id, shingle) exploded rows, scale-shaped:
+def shingle_rows(df: DataFrame) -> DataFrame:
+    """(doc_id, shingle) rows of word 3-gram shingles of ``text``,
+    scale-shaped:
 
     * tokens are projected to a real column first so the shingle lambda
       reads an attribute instead of re-running split/filter per element;
@@ -152,16 +160,17 @@ def shingle_rows(
       small parquet file) still fans the CPU-heavy shingle+hash work
       across all cores.
     """
-    toks = spread(df, id_col).select(
-        F.col(id_col), tokens(text_col).alias("__toks")
+    toks = spread(df, "doc_id").select(
+        F.col("doc_id"), tokens("text").alias("__toks")
     )
     return toks.select(
-        F.col(id_col), F.explode(shingles(F.col("__toks"), k)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles(F.col("__toks"))).alias("shingle")
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Exact dedup by content hash: keep the smallest id per hash.
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact dedup by the hash of ``text``: keep the smallest ``doc_id``
+    per hash.
     One shuffle on the hash; at scale the hash-groupBy partial-aggregates
     map-side so only (hash, min_id, count) rows move.
 
@@ -172,9 +181,9 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     dedup row is shuffle-bound).  The hex form is re-derived for the
     output only (lower() — Spark's hex() is uppercase, md5() lowercase)."""
     return (
-        df.groupBy(F.unhex(F.md5(F.col(text_col))).alias("_h"))
+        df.groupBy(F.unhex(F.md5(F.col("text"))).alias("_h"))
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
         .select(
@@ -185,64 +194,42 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, n_hashes: int = 8
-) -> DataFrame:
-    """(id, mh_0..mh_{n-1}): per-seed minimum of md5('<seed>:<shingle>').
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """(doc_id, mh_0..mh_7): per-seed minimum of md5('<seed>:<shingle>').
 
-    Explodes shingles once and takes n_hashes mins in a single hash-agg —
+    Explodes shingles once and takes the 8 mins in a single hash-agg —
     no per-seed pass over the data.
     """
-    sh = shingle_rows(df, text_col, id_col)
+    sh = shingle_rows(df)
     mins = [
         F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"mh_{j}")
-        for j in range(n_hashes)
+        for j in range(_N_HASHES)
     ]
-    return sh.groupBy(id_col).agg(*mins)
+    return sh.groupBy("doc_id").agg(*mins)
 
 
-def minhash_bands(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_hashes: int = 8,
-    band_size: int = 2,
-) -> DataFrame:
-    """(id, band_id, sig) LSH band rows: the minhash signature split into
-    n_hashes/band_size concatenated bands.  A band's signature depends
+def minhash_bands(df: DataFrame) -> DataFrame:
+    """(doc_id, band_id, sig) LSH band rows: the minhash signature split
+    into 4 bands of 2 concatenated hashes.  A band's signature depends
     only on the document's own shingles, so bands computed over any
     superset/subset of a corpus agree row-for-row — the property the
     incremental (new-vs-corpus) dedup relies on."""
-    # guard here, not in callers: a non-divisible band_size would silently
-    # truncate the signature (trailing minhashes never banded).  A real
-    # raise, not an assert — this must survive python -O.
-    if n_hashes % band_size != 0:
-        raise ValueError(
-            f"n_hashes={n_hashes} not divisible by band_size={band_size}"
-        )
-    sig = minhash_signatures(df, text_col, id_col, n_hashes)
+    sig = minhash_signatures(df)
     band_structs = [
         F.struct(
             F.lit(b).alias("band_id"),
             F.concat(
-                *[F.col(f"mh_{b * band_size + r}") for r in range(band_size)]
+                *[F.col(f"mh_{b * _BAND_SIZE + r}") for r in range(_BAND_SIZE)]
             ).alias("sig"),
         )
-        for b in range(n_hashes // band_size)
+        for b in range(_N_HASHES // _BAND_SIZE)
     ]
     return sig.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("band")
-    ).select(id_col, "band.band_id", "band.sig")
+        F.col("doc_id"), F.explode(F.array(*band_structs)).alias("band")
+    ).select("doc_id", "band.band_id", "band.sig")
 
 
-def incremental_dedup(
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 8,
-    band_size: int = 2,
-) -> DataFrame:
+def incremental_dedup(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     """Dedup a fresh batch AGAINST an existing corpus — the asymmetric
     shape an ingest pipeline actually runs at 100 TB, instead of
     re-running the full corpus self-join per crawl.
@@ -257,27 +244,27 @@ def incremental_dedup(
     streamed; the new-batch side is crawl-sized, so AQE broadcasts it and
     the corpus is never shuffled.  No hint is forced — a backfill-sized
     'new' batch must be allowed to fall back to a shuffle join."""
-    new_ids = new_docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("_h"))
-    corpus_h = corpus.select(F.md5(F.col(text_col)).alias("_h")).distinct()
+    new_ids = new_docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("_h"))
+    corpus_h = corpus.select(F.md5(F.col("text")).alias("_h")).distinct()
     exact = (
         new_ids.join(corpus_h, "_h", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .withColumn("_exact", F.lit(True))
     )
-    new_bands = minhash_bands(new_docs, text_col, id_col, n_hashes, band_size)
-    corpus_bands = minhash_bands(corpus, text_col, id_col, n_hashes, band_size)
+    new_bands = minhash_bands(new_docs)
+    corpus_bands = minhash_bands(corpus)
     near = (
         new_bands.join(corpus_bands, ["band_id", "sig"], "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("_near", F.lit(True))
     )
     return (
-        new_docs.select(id_col)
-        .join(exact, id_col, "left")
-        .join(near, id_col, "left")
+        new_docs.select("doc_id")
+        .join(exact, "doc_id", "left")
+        .join(near, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.when(F.col("_exact"), F.lit("exact"))
             .when(F.col("_near"), F.lit("near"))
             .otherwise(F.lit("keep"))
@@ -286,21 +273,15 @@ def incremental_dedup(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_hashes: int = 8,
-    band_size: int = 2,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via banded minhash-LSH.
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
+    """Candidate near-duplicate pairs ``(doc_a, doc_b)`` via banded
+    minhash-LSH.
 
-    bands = n_hashes / band_size; two docs become a candidate pair iff all
-    minhashes of at least one band agree (collision prob ~ J^band_size per
-    band).  The self-join is keyed on (band_id, signature) so only docs in
-    the same bucket ever meet — the scale path for dedup at 100 TB.
+    Two docs become a candidate pair iff all minhashes of at least one
+    band agree (collision prob ~ J^2 per band).  The self-join is keyed
+    on (band_id, signature) so only docs in the same bucket ever meet — the scale path for dedup at 100 TB.
     """
-    bands = minhash_bands(df, text_col, id_col, n_hashes, band_size)
+    bands = minhash_bands(df)
     # Persist: both sides of the self-join read `bands`; without it Spark
     # recomputes the whole shingle->signature pipeline twice.  Signatures
     # are ~bands rows per doc — tiny relative to the corpus, safe to cache
@@ -313,30 +294,28 @@ def minhash_lsh_pairs(
             b,
             (F.col("a.band_id") == F.col("b.band_id"))
             & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
 
 
-def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
-    """SimHash fingerprint: per token take `bits` bits of md5, sum +1/-1
-    votes per bit position over the doc, sign -> fingerprint bit.
+def simhash(df: DataFrame) -> DataFrame:
+    """16-bit SimHash fingerprint per ``doc_id``: per token of ``text``
+    take 16 bits of md5, sum +1/-1 votes per bit position over the doc,
+    sign -> fingerprint bit.
 
     Pure integer expressions (nibble lookup via strpos on the hex alphabet)
     so the same formula runs on the DuckDB oracle.
     """
-    assert bits % 4 == 0
     src_df = df
     if not df.isStreaming:
         # fan the token explode across cores (a stream keeps its
         # source's micro-batch layout)
-        src_df = spread(df, id_col)
+        src_df = spread(df, "doc_id")
     tok = src_df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("tok")
+        F.col("doc_id"), F.explode(tokens("text")).alias("tok")
     )
     # Project the md5 nibble VALUES once per token before the aggregate:
     # the 16 vote sums otherwise each re-derive their nibble from the
@@ -345,35 +324,35 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFr
     # -> 0.54 s at sf0.1; bit votes are identical integers either way).
     h = F.md5(F.col("tok"))
     nibs = tok.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[
             (
                 F.instr(F.lit("0123456789abcdef"), F.substring(h, j + 1, 1))
                 - 1
             ).alias(f"_n{j}")
-            for j in range(bits // 4)
+            for j in range(_SIMHASH_BITS // 4)
         ],
     )
     vote_sums = []
-    for i in range(bits):
+    for i in range(_SIMHASH_BITS):
         v = F.col(f"_n{i // 4}")
         bit = F.shiftright(v, i % 4).bitwiseAND(F.lit(1))
         vote_sums.append(F.sum(bit * 2 - 1).alias(f"s_{i}"))
-    votes = nibs.groupBy(id_col).agg(*vote_sums)
+    votes = nibs.groupBy("doc_id").agg(*vote_sums)
     fp = None
-    for i in range(bits):
+    for i in range(_SIMHASH_BITS):
         term = F.when(F.col(f"s_{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
         fp = term if fp is None else fp + term
-    return votes.select(F.col(id_col), fp.cast("bigint").alias("simhash"))
+    return votes.select(F.col("doc_id"), fp.cast("bigint").alias("simhash"))
 
 
-def simhash_expr(text_col: Column | str, bits: int = 16) -> Column:
-    """Row-wise SimHash: the same per-token ±1 bit votes as simhash(),
+def simhash_expr() -> Column:
+    """Row-wise SimHash of ``text``: the same per-token ±1 bit votes as simhash(),
     folded over the token ARRAY in one expression instead of a groupBy —
     integer sums commute, so the fingerprint is identical.  This is the
     form a STREAMING pipeline needs (no per-doc aggregation state; the
     only stateful operator left is whatever consumes the fingerprint)."""
-    toks = tokens(text_col)
+    toks = tokens("text")
 
     def _vote_folder(i: int):
         # closure factory, NOT a default-arg lambda: pyspark maps every
@@ -389,7 +368,7 @@ def simhash_expr(text_col: Column | str, bits: int = 16) -> Column:
         return fold
 
     fp = None
-    for i in range(bits):
+    for i in range(_SIMHASH_BITS):
         s = F.aggregate(toks, F.lit(0).cast("long"), _vote_folder(i))
         term = F.when(s > 0, F.lit(1 << i)).otherwise(F.lit(0))
         fp = term if fp is None else fp + term
@@ -399,34 +378,26 @@ def simhash_expr(text_col: Column | str, bits: int = 16) -> Column:
     return F.when(F.size(toks) > 0, fp.cast("bigint"))
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.5,
-    k: int = 3,
-) -> DataFrame:
-    """Exact Jaccard over distinct word k-gram sets, emitted for pairs over
-    the threshold.  Pairs are generated through the shared-shingle join (an
-    inverted index), never a cross join."""
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact Jaccard over distinct word 3-gram sets, emitted for pairs
+    ``(doc_a, doc_b)`` over the threshold.  Pairs are generated through
+    the shared-shingle join (an inverted index), never a cross join."""
     # distinct shingle set per doc; persisted because it feeds three plans
     # (both self-join sides + the per-doc set sizes).
-    sh = persist_once(shingle_rows(df, text_col, id_col, k).distinct())
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    sh = persist_once(shingle_rows(df).distinct())
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     jac = F.col("n_common").cast("double") / (
         F.col("sz_a") + F.col("sz_b") - F.col("n_common")
     )
@@ -469,8 +440,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 50,
-    driver_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Connected components over an undirected edge list by min-label
     propagation — the clustering step that turns near-duplicate PAIRS into
@@ -481,7 +450,7 @@ def connected_components(
 
     Scale-ADAPTIVE: the dup graph is orders of magnitude smaller than
     the corpus (edges exist only between near-duplicates), so below
-    `driver_threshold` edges the component labels are computed by a
+    `_DRIVER_THRESHOLD` edges the component labels are computed by a
     driver-side union-find on the collected edge list — milliseconds and
     zero extra Spark rounds, the strategy production dedup pipelines use.
     Past the threshold (10^7+ edges; a 10^9-doc corpus with heavy dup
@@ -510,7 +479,7 @@ def connected_components(
     # cache it so the size probe and the consuming path read it once
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     n_edges = edges.count()
-    if n_edges <= driver_threshold:
+    if n_edges <= _DRIVER_THRESHOLD:
         pairs = [
             (r[0], r[1]) for r in edges.select(src, dst).collect()
         ]
@@ -534,7 +503,7 @@ def connected_components(
         .agg(F.least(F.col("id"), F.min("nbr")).alias("lab"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(_MAX_ITER):
         # carry the previous label through the same min-agg (`old` is
         # non-null only on the current-label rows, so max() recovers it);
         # change detection then reads the checkpointed result instead of

@@ -186,33 +186,25 @@ def distortion(
     return tot / max(n, 1)
 
 
-def assign_ids(
-    df: DataFrame, cents: np.ndarray, vec_col: str = "embedding",
-    metric: str = "cos", out_col: str = "cent_id",
-) -> DataFrame:
-    """Attach the argmin/argmax centroid id — the IVF list / PQ code
-    assignment.  Vectorized pandas_udf; at 100 TB this column is the
-    partition key that makes a probe read nprobe/k of the corpus."""
+def assign_ids(df: DataFrame, cents: np.ndarray) -> DataFrame:
+    """Attach ``cent_id``, the max-cosine centroid of ``embedding`` — the
+    IVF list assignment.  Vectorized pandas_udf; at 100 TB this column is
+    the partition key that makes a probe read nprobe/k of the corpus."""
     cents_t = cents.T.copy()
-    c2 = (cents * cents).sum(axis=1)
-    cnorm = np.sqrt(c2)
-    cnorm[cnorm == 0.0] = 1.0  # cosine denominator only; c2 stays exact
+    cnorm = np.sqrt((cents * cents).sum(axis=1))
+    cnorm[cnorm == 0.0] = 1.0
 
     @F.pandas_udf("long")
     def _assign(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype="int64")
         V = np.stack(vs.to_list()).astype(np.float64)
-        scores = V @ cents_t
-        if metric == "cos":
-            vn = np.sqrt((V * V).sum(axis=1))
-            vn[vn == 0.0] = 1.0
-            a = np.argmax(scores / vn[:, None] / cnorm[None, :], axis=1)
-        else:
-            a = np.argmax(scores - 0.5 * c2[None, :], axis=1)
+        vn = np.sqrt((V * V).sum(axis=1))
+        vn[vn == 0.0] = 1.0
+        a = np.argmax((V @ cents_t) / vn[:, None] / cnorm[None, :], axis=1)
         return pd.Series(a.astype(np.int64))
 
-    return df.withColumn(out_col, _assign(F.col(vec_col)))
+    return df.withColumn("cent_id", _assign(F.col("embedding")))
 
 
 def train_pq_codebooks(

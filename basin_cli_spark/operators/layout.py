@@ -132,20 +132,15 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def write_date_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str,
-    partition_col: str = "event_date",
-) -> None:
-    """Persist hive-partitioned by day of `ts_col` — the default physical
-    layout for an append-only event log at 100 TB: a time-bounded query
-    prunes to the matching date directories at PLANNING time (the scan's
-    PartitionFilters), so a day's query reads a day's bytes, not the log.
-    tests/test_layout.py asserts the pruned scan."""
-    df.withColumn(partition_col, F.to_date(ts_col)).write.mode(
+def write_date_partitioned(df: DataFrame, path: str) -> None:
+    """Persist hive-partitioned by ``event_date``, the day of ``ts`` — the
+    default physical layout for an append-only event log at 100 TB: a
+    time-bounded query prunes to the matching date directories at PLANNING
+    time (the scan's PartitionFilters), so a day's query reads a day's
+    bytes, not the log.  tests/test_layout.py asserts the pruned scan."""
+    df.withColumn("event_date", F.to_date("ts")).write.mode(
         "overwrite"
-    ).partitionBy(partition_col).parquet(path)
+    ).partitionBy("event_date").parquet(path)
 
 
 def salted_join(

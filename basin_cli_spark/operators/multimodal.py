@@ -54,20 +54,20 @@ MEDIA_META_SCHEMA = T.StructType(
 )
 
 
-def synthesize_media(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Deterministic fake media corpus from a text fixture: content is the
-    UTF-8 bytes, media_type cycles, n_frames = 1 + id % 5.  Exists so the
+def synthesize_media(df: DataFrame) -> DataFrame:
+    """Deterministic fake media corpus from a ``(doc_id, text)`` fixture:
+    content is the UTF-8 bytes, media_type cycles, n_frames = 1 + id % 5.  Exists so the
     binary-column pipeline has reproducible input in a container without
     media files."""
     mt = F.element_at(
         F.array(F.lit("image/png"), F.lit("audio/wav"), F.lit("video/mp4")),
-        (F.col(id_col) % 3 + 1).cast("int"),
+        (F.col("doc_id") % 3 + 1).cast("int"),
     )
     return df.select(
-        F.col(id_col).alias("media_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("content"),
+        F.col("doc_id").alias("media_id"),
+        F.encode(F.col("text"), "UTF-8").alias("content"),
         mt.alias("media_type"),
-        (F.col(id_col) % 5 + 1).cast("int").alias("n_frames"),
+        (F.col("doc_id") % 5 + 1).cast("int").alias("n_frames"),
     )
 
 
@@ -218,9 +218,9 @@ _FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(df: DataFrame, every_k: int = 2) -> DataFrame:
-    """Frame sampling: one output row per kept frame (indices 0, k, 2k, …
-    below n_frames), ``frame_hash = md5(content || '#' || idx)`` standing in
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Frame sampling: one output row per kept frame (every other frame:
+    indices 0, 2, 4, … below n_frames), ``frame_hash = md5(content || '#' || idx)`` standing in
     for the decoded frame tensor.  A row-multiplying ``mapInPandas`` — the
     UDTF shape video pipelines need (1 video -> N frame rows)."""
 
@@ -230,7 +230,7 @@ def sample_frames(df: DataFrame, every_k: int = 2) -> DataFrame:
             for mid, content, n in zip(
                 pdf["media_id"], pdf["content"], pdf["n_frames"]
             ):
-                for i in range(0, int(n), every_k):
+                for i in range(0, int(n), 2):
                     ids.append(mid)
                     idxs.append(i)
                     hashes.append(
@@ -251,10 +251,10 @@ def sample_frames(df: DataFrame, every_k: int = 2) -> DataFrame:
     )
 
 
-def extract_features(df: DataFrame, dim: int = 4) -> DataFrame:
-    """Fixed-dim float feature vector per blob via a scalar ``pandas_udf``
-    (Arrow-batched).  STUB featurizer: bytes of md5(content) scaled to
-    [0, 1] — the real model inference would slot into the same kernel."""
+def extract_features(df: DataFrame) -> DataFrame:
+    """4-dim float feature vector per blob via a scalar ``pandas_udf``
+    (Arrow-batched).  STUB featurizer: the first 4 bytes of md5(content)
+    scaled to [0, 1] — the real model inference would slot into the same kernel."""
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def feats(content: pd.Series) -> pd.Series:
@@ -264,7 +264,7 @@ def extract_features(df: DataFrame, dim: int = 4) -> DataFrame:
                     hashlib.md5(bytes(b)).digest()[i : i + 1], "big"
                 )
                 / 255.0
-                for i in range(dim)
+                for i in range(4)
             ]
         )
 
@@ -279,10 +279,9 @@ _AUDIO_BLOB_SCHEMA = T.StructType(
 )
 
 
-def synthesize_audio(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Deterministic REAL WAV corpus: every document becomes a valid
+def synthesize_audio(df: DataFrame) -> DataFrame:
+    """Deterministic REAL WAV corpus: every ``(doc_id, text)`` document
+    becomes a valid
     RIFF/WAVE PCM file written by stdlib ``wave`` — channels, sample
     rate, and frame count derived from the id (pure function, no RNG),
     sample bytes from the content md5.  Exists so the audio path can
@@ -293,7 +292,7 @@ def synthesize_audio(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             blobs = []
-            for mid, txt in zip(pdf[id_col], pdf[text_col]):
+            for mid, txt in zip(pdf["doc_id"], pdf["text"]):
                 ch = 1 + int(mid) % 2
                 rate = 8000 + (int(mid) % 4) * 4000
                 nf = 100 + int(mid) % 50
@@ -308,12 +307,12 @@ def synthesize_audio(
                 blobs.append(buf.getvalue())
             yield pd.DataFrame(
                 {
-                    "media_id": pdf[id_col].astype("int64"),
+                    "media_id": pdf["doc_id"].astype("int64"),
                     "content": blobs,
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(kernel, _AUDIO_BLOB_SCHEMA)
+    return df.select("doc_id", "text").mapInPandas(kernel, _AUDIO_BLOB_SCHEMA)
 
 
 _AUDIO_META_SCHEMA = T.StructType(
@@ -403,10 +402,9 @@ def _mp4_box(btype: bytes, payload: bytes) -> bytes:
     return _s.pack(">I", len(payload) + 8) + btype + payload
 
 
-def synthesize_video(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Deterministic REAL MP4 (ISO base media) corpus: ftyp + moov/mvhd
+def synthesize_video(df: DataFrame) -> DataFrame:
+    """Deterministic REAL MP4 (ISO base media) corpus from ``(doc_id,
+    text)`` documents: ftyp + moov/mvhd
     boxes built to the public ISO/IEC 14496-12 layout — timescale 600,
     duration a pure function of the id, a brand string, and an mdat
     carrying the content md5 — so the video path round-trips genuine
@@ -416,7 +414,7 @@ def synthesize_video(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             blobs = []
-            for mid, txt in zip(pdf[id_col], pdf[text_col]):
+            for mid, txt in zip(pdf["doc_id"], pdf["text"]):
                 ticks = 150 * (1 + int(mid) % 8)
                 ftyp = _mp4_box(b"ftyp", b"isom" + _s.pack(">I", 512) + b"isomiso2")
                 mvhd_payload = (
@@ -436,12 +434,12 @@ def synthesize_video(
                 blobs.append(ftyp + moov + mdat)
             yield pd.DataFrame(
                 {
-                    "media_id": pdf[id_col].astype("int64"),
+                    "media_id": pdf["doc_id"].astype("int64"),
                     "content": blobs,
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(kernel, _AUDIO_BLOB_SCHEMA)
+    return df.select("doc_id", "text").mapInPandas(kernel, _AUDIO_BLOB_SCHEMA)
 
 
 _VIDEO_META_SCHEMA = T.StructType(

@@ -171,6 +171,17 @@ def cosine(a: Column, b: Column) -> Column:
 # explicit and keyed on id, so rank order is engine-independent.
 SCORE_DIGITS = 6
 
+# Sign-LSH planes: 4 bands over the 64-dim embeddings, each plane 8 seeded
+# +-1 entries.  The DuckDB oracles regenerate the same planes from these.
+_BANDS = 4
+_DIM = 64
+_SEED = 42
+_NNZ = 8
+_MULTIPROBE_BITS = 4
+# The demo IVF codebook: every 25th vector id, at most 256 centroids.
+_IVF_STRIDE = 25
+_IVF_MAX_CENTS = 256
+
 
 def _normed_cosine(a: Column, b: Column, a_n2: Column, b_n2: Column) -> Column:
     """Cosine over squared norms folded once per VECTOR: one Arrow dot
@@ -213,14 +224,11 @@ def cosine_pair_scores(pairs: DataFrame, vectors: DataFrame) -> DataFrame:
 
 
 def cosine_probe_scores(
-    corpus: DataFrame,
-    probes: DataFrame,
-    cols: list[str],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, probes: DataFrame, cols: list[str]
 ) -> DataFrame:
-    """Every corpus row scored against every probe: ``cols`` plus
-    ``score``, self-pairs (``id_col == p_id``) excluded.
+    """Every ``(vec_id, embedding)`` corpus row scored against every
+    probe: ``cols`` plus ``score``, self-pairs (``vec_id == p_id``)
+    excluded.
 
     ``probes`` carries ``p_id`` and ``p_emb`` (plus any columns ``cols``
     names) and is broadcast: the probe set is bounded by its predicate,
@@ -230,56 +238,46 @@ def cosine_probe_scores(
     vectors) that split took hard-negative mining from 7.8 s to ~2 s."""
     probes = probes.select("*", norm_sq(F.col("p_emb")).alias("_p_n2"))
     score = _normed_cosine(
-        F.col(vec_col), F.col("p_emb"), F.col("_n2"), F.col("_p_n2")
+        F.col("embedding"), F.col("p_emb"), F.col("_n2"), F.col("_p_n2")
     )
     return (
-        corpus.select("*", norm_sq(F.col(vec_col)).alias("_n2"))
+        corpus.select("*", norm_sq(F.col("embedding")).alias("_n2"))
         .crossJoin(F.broadcast(probes))
-        .where(F.col(id_col) != F.col("p_id"))
+        .where(F.col("vec_id") != F.col("p_id"))
         .select(*cols, F.round(score, SCORE_DIGITS).alias("score"))
     )
 
 
-def rerank_topk(
-    cand: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """The exact re-rank every top-k search ends with: candidates that
-    carry the query vector as ``_q_emb`` are scored by cosine, ordered by
-    score desc then id, and cut at k.  Spark plans it as
+def rerank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank every top-k search ends with: ``(vec_id,
+    embedding)`` candidates that carry the query vector as ``_q_emb`` are
+    scored by cosine, ordered by score desc then id, and cut at k.  Spark plans it as
     TakeOrderedAndProject: per-partition heaps, only k rows move."""
-    score = F.round(cosine(F.col(vec_col), F.col("_q_emb")), SCORE_DIGITS)
+    score = F.round(cosine(F.col("embedding"), F.col("_q_emb")), SCORE_DIGITS)
     return (
-        cand.select(F.col(id_col), score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
+        cand.select(F.col("vec_id"), score.alias("score"))
+        .orderBy(F.col("score").desc(), F.col("vec_id"))
         .limit(k)
     )
 
 
-def cosine_topk(
-    df: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(df: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k against one stored vector."""
-    q = df.where(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("_q_emb")
+    q = df.where(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("_q_emb")
     )
-    cand = spread(df.where(F.col(id_col) != query_vec_id), id_col)
-    return rerank_topk(cand.crossJoin(F.broadcast(q)), k, id_col, vec_col)
+    cand = spread(df.where(F.col("vec_id") != query_vec_id), "vec_id")
+    return rerank_topk(cand.crossJoin(F.broadcast(q)), k)
 
 
-def random_planes(
-    dim: int, n_planes: int, seed: int = 42, nnz: int = 8
-) -> list[list[tuple[int, int]]]:
-    """Seeded sparse random-projection hyperplanes.
+def random_planes(n_planes: int) -> list[list[tuple[int, int]]]:
+    """Seeded sparse random-projection hyperplanes over ``_DIM`` dims.
 
-    Each plane is `nnz` distinct dimensions with ±1 coefficients
+    Each plane is ``_NNZ`` distinct dimensions with ±1 coefficients
     (Achlioptas-style sparse projection): cheap to evaluate, mixes many
     feature dimensions so the bit does not correlate with the scale of any
     single raw feature (the flaw of axis-aligned planes), and fully
-    deterministic from (dim, n_planes, seed, nnz).
+    deterministic from (_DIM, n_planes, _SEED, _NNZ).
 
     The randomness source is counter-mode SHA-256 — NOT a numpy RNG, whose
     stream NumPy does not guarantee stable across versions.  SHA-256 is
@@ -292,27 +290,28 @@ def random_planes(
         picked: list[tuple[int, int]] = []
         seen: set[int] = set()
         ctr = 0
-        while len(picked) < min(nnz, dim):
-            block = hashlib.sha256(f"planes:{seed}:{i}:{ctr}".encode()).digest()
+        while len(picked) < _NNZ:
+            block = hashlib.sha256(f"planes:{_SEED}:{i}:{ctr}".encode()).digest()
             ctr += 1
             # 10 (dim, sign) draws per block: 3 bytes each -> modulo bias
             # < 2^-16 for any dim <= 4096, irrelevant for bucketing.
             for off in range(0, 30, 3):
-                d = int.from_bytes(block[off : off + 2], "big") % dim
+                d = int.from_bytes(block[off : off + 2], "big") % _DIM
                 if d in seen:
                     continue
                 seen.add(d)
                 picked.append((d, 1 if block[off + 2] & 1 else -1))
-                if len(picked) == min(nnz, dim):
+                if len(picked) == _NNZ:
                     break
         planes.append(picked)
     return planes
 
 
-def band_bits_for(n_rows: int, target_bucket: int = 64) -> int:
+def band_bits_for(n_rows: int) -> int:
     """Size bits-per-band to the corpus: expected band-bucket size is
     n/2^bits, and per-bucket pair generation is |bucket|^2, so bits must
-    GROW with the corpus — log2(n / target_bucket), clamped to [4, 30].
+    GROW with the corpus — log2(n / 64), clamped to [4, 30] (a 64-row
+    target bucket).
 
     At n=500 (bench fixture) this is 4 bits (16 buckets); at n=10^9 it is
     24 bits (~60-row buckets), keeping per-bucket self-join cost flat
@@ -321,7 +320,7 @@ def band_bits_for(n_rows: int, target_bucket: int = 64) -> int:
     """
     if n_rows <= 0:
         return 4
-    return max(4, min(30, int(math.ceil(math.log2(max(n_rows / target_bucket, 2.0))))))
+    return max(4, min(30, int(math.ceil(math.log2(max(n_rows / 64, 2.0))))))
 
 
 def plane_proj_sql(v: str, plane: list[tuple[int, int]]) -> str:
@@ -335,10 +334,8 @@ def plane_proj_sql(v: str, plane: list[tuple[int, int]]) -> str:
     return "(0.0 " + " ".join(parts) + ")"
 
 
-def _band_sigs_kernel(
-    planes: list[list[tuple[int, int]]], bands: int, band_bits: int
-):
-    """Numpy kernel: (n, dim) float64 matrix -> (n, bands) int64 sigs.
+def _band_sigs_kernel(planes: list[list[tuple[int, int]]], band_bits: int):
+    """Numpy kernel: (n, dim) float64 matrix -> (n, _BANDS) int64 sigs.
 
     Per plane, the projection is a 0.0-seeded left fold over the plane's
     entries — `acc = acc ± V[:, d]` — vectorized ACROSS rows but strictly
@@ -349,8 +346,8 @@ def _band_sigs_kernel(
 
     def kernel(V: np.ndarray) -> np.ndarray:
         n = V.shape[0]
-        sigs = np.zeros((n, bands), dtype=np.int64)
-        for b in range(bands):
+        sigs = np.zeros((n, _BANDS), dtype=np.int64)
+        for b in range(_BANDS):
             for j in range(band_bits):
                 acc = np.zeros(n, dtype=np.float64)
                 for d, s in planes[b * band_bits + j]:
@@ -361,14 +358,8 @@ def _band_sigs_kernel(
     return kernel
 
 
-def sign_lsh_bands(
-    vec: Column,
-    bands: int = 4,
-    band_bits: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-) -> Column:
-    """Banded sign-LSH: array of per-band signatures, band b built from
+def sign_lsh_bands(vec: Column, band_bits: int = 4) -> Column:
+    """Banded sign-LSH: array of ``_BANDS`` signatures, band b built from
     seeded random-projection planes [b*band_bits, (b+1)*band_bits).  Two
     vectors are join candidates when ANY band matches — the OR-amplified
     construction (same as MinHash banding), which keeps recall usable
@@ -376,7 +367,7 @@ def sign_lsh_bands(
     in its own bucket and return nothing.
 
     Implemented as an Arrow-batched pandas_udf, not a Catalyst expression:
-    bands*band_bits planes × nnz element_at terms unroll into an
+    bands*band_bits planes × _NNZ element_at terms unroll into an
     expression tree that exceeds janino's 64 KB generated-method limit, so
     whole-stage codegen FAILS and Spark interprets the tree per row —
     measured ~10× slower at 16 planes than the vectorized numpy fold.
@@ -385,8 +376,8 @@ def sign_lsh_bands(
     (sign_lsh_band_sql), and Arrow moves the float32 arrays zero-copy.
 
     Corpus sizing: pass band_bits=band_bits_for(n) so bucket width tracks
-    the corpus instead of staying fixed at bench scale.  seed/dim make the
-    planes deterministic for the DuckDB oracle (sign_lsh_band_sql).
+    the corpus instead of staying fixed at bench scale.  The seeded planes
+    are deterministic for the DuckDB oracle (sign_lsh_band_sql).
 
     CALLER CONTRACT: the returned expression is marked
     ``asNondeterministic()`` (despite being a pure function) to stop
@@ -397,8 +388,8 @@ def sign_lsh_bands(
     projection will NOT push below it — apply id/metadata filters BEFORE
     projecting the bands (every in-repo caller does).
     """
-    planes = random_planes(dim, bands * band_bits, seed)
-    kernel = _band_sigs_kernel(planes, bands, band_bits)
+    planes = random_planes(_BANDS * band_bits)
+    kernel = _band_sigs_kernel(planes, band_bits)
 
     @F.pandas_udf("array<bigint>")
     def _bands_udf(emb: pd.Series) -> pd.Series:
@@ -419,22 +410,10 @@ def sign_lsh_bands(
     return _bands_udf.asNondeterministic()(vec)
 
 
-def sign_lsh_signature(
-    vec: Column, bits: int = 16, dim: int = 64, seed: int = 42
-) -> Column:
-    """Single wide sign-LSH signature (bits packed little-endian) — one
-    band of `bits` planes; see sign_lsh_bands for the execution story."""
-    return F.element_at(
-        sign_lsh_bands(vec, bands=1, band_bits=bits, dim=dim, seed=seed), 1
-    )
-
-
-def sign_lsh_band_sql(
-    v: str, band: int, band_bits: int = 4, dim: int = 64, seed: int = 42, bands: int = 4
-) -> str:
+def sign_lsh_band_sql(v: str, band: int, band_bits: int = 4) -> str:
     """DuckDB SQL for one band's signature, regenerating the SAME seeded
     planes as sign_lsh_bands — single source of truth for both engines."""
-    planes = random_planes(dim, bands * band_bits, seed)
+    planes = random_planes(_BANDS * band_bits)
     terms = []
     for j in range(band_bits):
         p = planes[band * band_bits + j]
@@ -444,13 +423,9 @@ def sign_lsh_band_sql(
     return "(" + " + ".join(terms) + ")"
 
 
-def drop_hot_buckets(
-    expl: DataFrame,
-    max_bucket: int,
-    band_col: str = "band",
-    sig_col: str = "sig",
-) -> DataFrame:
-    """Remove rows belonging to LSH buckets wider than `max_bucket`.
+def drop_hot_buckets(expl: DataFrame, max_bucket: int) -> DataFrame:
+    """Remove rows belonging to LSH buckets ``(band, sig)`` wider than
+    `max_bucket`.
 
     Per-bucket pair generation is |bucket|^2: one boilerplate-heavy
     bucket of 10^6 rows is 10^12 pairs — a job-killer no matter how well
@@ -463,8 +438,9 @@ def drop_hot_buckets(
     partitions on the SAME (band, sig) key, so the window's Exchange is
     reused by both join sides — measured 0.46 s -> 0.29 s on the sf0.1
     pair-generation path, same answer (the identical reasoning as
-    drop_hot_cells).  The wide rows never reach the self-join."""
-    w = Window.partitionBy(band_col, sig_col)
+    drop_hot_cells).  The wide rows never reach the self-join.  A
+    standalone operator: sign_lsh_pairs does not apply it."""
+    w = Window.partitionBy("band", "sig")
     return (
         expl.withColumn("_bw", F.count(F.lit(1)).over(w))
         .where(F.col("_bw") <= max_bucket)
@@ -472,12 +448,9 @@ def drop_hot_buckets(
     )
 
 
-def drop_hot_cells(
-    assigned: DataFrame,
-    max_cell: int,
-    cell_col: str = "cent_id",
-) -> DataFrame:
-    """Remove rows belonging to IVF cells wider than `max_cell`.
+def drop_hot_cells(assigned: DataFrame, max_cell: int) -> DataFrame:
+    """Remove rows belonging to IVF cells (``cent_id``) wider than
+    `max_cell`.
 
     The cluster-scoped (SemDeDup-style) candidate structure self-joins
     within a cell, so pair count is |cell|^2 — the same quadratic blowup
@@ -503,28 +476,26 @@ def drop_hot_cells(
     to pair within and must not reach the quadratic path; in-repo
     assignments (kmeans.assign_ids) never produce null cells."""
     keep = (
-        assigned.groupBy(cell_col)
+        assigned.groupBy("cent_id")
         .agg(F.count(F.lit(1)).alias("_cw"))
         .where(F.col("_cw") <= max_cell)
-        .select(cell_col)
+        .select("cent_id")
     )
-    return assigned.join(F.broadcast(keep), cell_col, "left_semi")
+    return assigned.join(F.broadcast(keep), "cent_id", "left_semi")
 
 
 def mine_hard_negatives(
     df: DataFrame,
     probe_filter: Column,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     require_all_anchors: bool = False,
 ) -> DataFrame:
-    """Hard-negative triplet mining (Schroff et al. 2015 FaceNet, public):
-    for each anchor selected by ``probe_filter``, the hardest positive
-    (most-similar same-label vector, or NULL if the anchor's label has no
-    other member) and the top-``k`` hardest negatives (most-similar
-    DIFFERENT-label vectors), with the triplet margin.
+    """Hard-negative triplet mining (Schroff et al. 2015 FaceNet, public)
+    over ``(vec_id, label, embedding)`` rows: for each anchor selected by
+    ``probe_filter``, the hardest positive (most-similar same-label
+    vector, or NULL if the anchor's label has no other member) and the
+    top-``k`` hardest negatives (most-similar DIFFERENT-label vectors),
+    with the triplet margin.
 
     Anchors whose label has no second member still emit their negatives —
     a LEFT join against the positives, so a singleton-label anchor is
@@ -556,11 +527,11 @@ def mine_hard_negatives(
     be neither an anchor nor a candidate, and dropping it up front keeps
     the pair relation dense instead of carrying NULL scores through the
     rank windows."""
-    df = df.where(F.col(vec_col).isNotNull())
+    df = df.where(F.col("embedding").isNotNull())
     probes = df.where(probe_filter).select(
-        F.col(id_col).alias("p_id"),
-        F.col(vec_col).alias("p_emb"),
-        F.col(label_col).alias("p_label"),
+        F.col("vec_id").alias("p_id"),
+        F.col("embedding").alias("p_emb"),
+        F.col("label").alias("p_label"),
     )
     # persist_once: the positive and negative rank branches both read the
     # scored relation, and without the cache each branch re-runs the full
@@ -576,32 +547,30 @@ def mine_hard_negatives(
     # anchor broadcast itself caps |anchors| well before that.
     scored = persist_once(
         cosine_probe_scores(
-            df.select(id_col, label_col, vec_col),
+            df.select("vec_id", "label", "embedding"),
             probes,
-            ["p_id", "p_label", id_col, label_col],
-            id_col,
-            vec_col,
+            ["p_id", "p_label", "vec_id", "label"],
         )
     )
-    w = Window.partitionBy("p_id").orderBy(F.desc("score"), F.col(id_col))
+    w = Window.partitionBy("p_id").orderBy(F.desc("score"), F.col("vec_id"))
     pos = (
-        scored.where(F.col(label_col) == F.col("p_label"))
+        scored.where(F.col("label") == F.col("p_label"))
         .withColumn("r", F.row_number().over(w))
         .where(F.col("r") == 1)
         .select(
             "p_id",
-            F.col(id_col).alias("pos_id"),
+            F.col("vec_id").alias("pos_id"),
             F.col("score").alias("pos_score"),
         )
     )
     neg = (
-        scored.where(F.col(label_col) != F.col("p_label"))
+        scored.where(F.col("label") != F.col("p_label"))
         .withColumn("r", F.row_number().over(w))
         .where(F.col("r") <= k)
         .select(
             "p_id",
             F.col("p_label").alias("anchor_label"),
-            F.col(id_col).alias("neg_id"),
+            F.col("vec_id").alias("neg_id"),
             F.col("score").alias("neg_score"),
             F.col("r").alias("neg_rank"),
         )
@@ -630,10 +599,10 @@ def mine_hard_negatives(
 
 
 def _band_rows(
-    df: DataFrame, vec_col: str, cols: list, band_bits: int, sig: str = "_sig"
+    df: DataFrame, cols: list, band_bits: int, sig: str = "_sig"
 ) -> DataFrame:
     """``cols`` plus one (``_band``, ``sig``) row per sign-LSH band of
-    ``vec_col``.
+    ``embedding``.
 
     Filter ``df`` by id BEFORE calling this: filtering a column computed
     by a UDF makes Catalyst push the filter below the projection and
@@ -641,7 +610,7 @@ def _band_rows(
     nodes in an LSH probe, two per side); filtering first leaves nothing
     to push, so the kernel runs once per side."""
     return df.withColumn(
-        "_bands", sign_lsh_bands(F.col(vec_col), band_bits=band_bits)
+        "_bands", sign_lsh_bands(F.col("embedding"), band_bits=band_bits)
     ).select(*cols, F.posexplode("_bands").alias("_band", sig))
 
 
@@ -688,12 +657,7 @@ def sign_lsh_pairs(df: DataFrame, band_bits: int) -> DataFrame:
 
 
 def cosine_topk_lsh(
-    df: DataFrame,
-    query_vec_id: int,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    band_bits: int = 4,
+    df: DataFrame, query_vec_id: int, k: int = 5, band_bits: int = 4
 ) -> DataFrame:
     """ANN via banded sign-LSH probe: candidates are vectors sharing at
     least one band with the query; exact cosine re-ranks the candidates.
@@ -701,61 +665,45 @@ def cosine_topk_lsh(
     at 100 TB the exploded band table is the shuffle/partition key, so
     the probe touches |candidates|, never the corpus."""
     q = _band_rows(
-        df.where(F.col(id_col) == query_vec_id),
-        vec_col,
-        [F.col(vec_col).alias("_q_emb")],
+        df.where(F.col("vec_id") == query_vec_id),
+        [F.col("embedding").alias("_q_emb")],
         band_bits,
     )
-    return _probe_rerank(df, q, query_vec_id, k, id_col, vec_col, band_bits)
+    return _probe_rerank(df, q, query_vec_id, k, band_bits)
 
 
 def _probe_rerank(
-    df: DataFrame,
-    q: DataFrame,
-    query_vec_id: int,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    band_bits: int,
+    df: DataFrame, q: DataFrame, query_vec_id: int, k: int, band_bits: int
 ) -> DataFrame:
     """Join the corpus's band rows to the query's probe set ``q``
     (``_q_emb``, ``_band``, ``_sig``) and re-rank the distinct hits."""
     cand = _band_rows(
-        df.where(F.col(id_col) != query_vec_id),
-        vec_col,
-        [id_col, vec_col],
+        df.where(F.col("vec_id") != query_vec_id),
+        ["vec_id", "embedding"],
         band_bits,
     )
     return rerank_topk(
-        cand.join(F.broadcast(q), ["_band", "_sig"]).dropDuplicates([id_col]),
+        cand.join(F.broadcast(q), ["_band", "_sig"]).dropDuplicates(["vec_id"]),
         k,
-        id_col,
-        vec_col,
     )
 
 
 def cosine_topk_lsh_multiprobe(
-    df: DataFrame,
-    query_vec_id: int,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    band_bits: int = 4,
+    df: DataFrame, query_vec_id: int, k: int = 5
 ) -> DataFrame:
-    """Multi-probe banded sign-LSH: besides the query's own band
-    signatures, probe every signature at Hamming distance 1 (one flipped
-    bit per band).  A sign bit flips exactly when the projection sits
+    """Multi-probe banded sign-LSH over 4-bit bands: besides the query's
+    own band signatures, probe every signature at Hamming distance 1 (one
+    flipped bit per band).  A sign bit flips exactly when the projection sits
     near the hyperplane, so the 1-flip neighborhood recovers most
     near-misses — recall comparable to doubling bands, at probe cost
-    bands*(1+band_bits) instead of double the index size.  The probe set
+    bands*(1+4) instead of double the index size.  The probe set
     explodes QUERY-side only; the corpus index stays one row per (vector,
     band), so at 100 TB this is still an index probe, not a scan."""
     q = (
         _band_rows(
-            df.where(F.col(id_col) == query_vec_id),
-            vec_col,
-            [F.col(vec_col).alias("_q_emb")],
-            band_bits,
+            df.where(F.col("vec_id") == query_vec_id),
+            [F.col("embedding").alias("_q_emb")],
+            _MULTIPROBE_BITS,
             "_sig0",
         )
         .select(
@@ -766,52 +714,45 @@ def cosine_topk_lsh_multiprobe(
                     F.col("_sig0"),
                     *[
                         F.col("_sig0").bitwiseXOR(F.lit(1 << j)).cast("bigint")
-                        for j in range(band_bits)
+                        for j in range(_MULTIPROBE_BITS)
                     ],
                 )
             ).alias("_sig"),
         )
         .dropDuplicates(["_band", "_sig"])
     )
-    return _probe_rerank(df, q, query_vec_id, k, id_col, vec_col, band_bits)
+    return _probe_rerank(df, q, query_vec_id, k, _MULTIPROBE_BITS)
 
 
 def cosine_topk_ivf(
-    df: DataFrame,
-    query_vec_id: int,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    stride: int = 25,
-    max_cents: int = 256,
+    df: DataFrame, query_vec_id: int, k: int = 5, nprobe: int = 2
 ) -> DataFrame:
     """ANN via IVF probe: the query ranks the codebook, visits only its
     nprobe nearest inverted lists, and scores exactly inside them.  At
     100 TB the assignment's cent_id is the partition key, so a probe scans
     nprobe/|codebook| of the corpus.
 
-    The demo codebook is a deterministic stride sample CAPPED at
-    ``max_cents`` rows (``id % stride == 0 AND id < stride * max_cents``
+    The demo codebook is a deterministic stride sample CAPPED at 256
+    rows (``id % 25 == 0 AND id < 25 * 256``
     — a closed predicate both engines replay, unlike LIMIT, which is
     order-free), so the broadcast side is constant-size no matter how
     large the corpus grows.  Production routes to the trained frozen
     codebook (q_similarity_ann_ivf_trained), which is k-sized by
     construction."""
-    df = df.where(F.col(vec_col).isNotNull())
+    df = df.where(F.col("embedding").isNotNull())
     # persisted: the probe and the assignment broadcast both consume the
     # stride codebook, and the modulo predicate cannot push down, so each
     # consumer would otherwise re-read the full vector column to filter
     cents = persist_once(
         df.where(
-            (F.col(id_col) % stride == 0)
-            & (F.col(id_col) < stride * max_cents)
+            (F.col("vec_id") % _IVF_STRIDE == 0)
+            & (F.col("vec_id") < _IVF_STRIDE * _IVF_MAX_CENTS)
         ).select(
-            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec")
+            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
         )
     )
-    q = df.where(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("_q_emb")
+    q = df.where(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("_q_emb")
     )
     probe = (
         cents.crossJoin(F.broadcast(q))
@@ -837,41 +778,39 @@ def cosine_topk_ivf(
         "cent_id", "cvec", norm_sq(F.col("cvec")).alias("_c_n2")
     )
     scored = (
-        spread(df, id_col)
-        .select(id_col, vec_col, norm_sq(F.col(vec_col)).alias("_v_n2"))
+        spread(df, "vec_id")
+        .select("vec_id", "embedding", norm_sq(F.col("embedding")).alias("_v_n2"))
         .crossJoin(F.broadcast(cents_n))
         .select(
-            F.col(id_col),
-            F.col(vec_col),
+            F.col("vec_id"),
+            F.col("embedding"),
             F.struct(
                 _normed_cosine(
-                    F.col(vec_col), F.col("cvec"),
+                    F.col("embedding"), F.col("cvec"),
                     F.col("_v_n2"), F.col("_c_n2"),
                 ).alias("sim"),
                 F.col("cent_id").alias("cent_id"),
             ).alias("sc"),
         )
     )
-    assign = scored.groupBy(id_col).agg(
+    assign = scored.groupBy("vec_id").agg(
         F.max("sc")["cent_id"].alias("cent_id"),
-        F.first(vec_col).alias(vec_col),
+        F.first("embedding").alias("embedding"),
     )
     cand = assign.join(F.broadcast(probe), "cent_id", "left_semi").where(
-        F.col(id_col) != query_vec_id
+        F.col("vec_id") != query_vec_id
     )
-    return rerank_topk(cand.crossJoin(F.broadcast(q)), k, id_col, vec_col)
+    return rerank_topk(cand.crossJoin(F.broadcast(q)), k)
 
 
 def kcenter_select(
-    df: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, k: int
 ) -> list[tuple[int, int, float | None]]:
-    """Greedy k-center (farthest-point) coreset selection under cosine
-    similarity: seed with the smallest id, then repeatedly add the vector
-    whose maximum cosine to the already-chosen set is smallest (i.e. the
-    point farthest from every pick so far).  The classic diversity /
+    """Greedy k-center (farthest-point) coreset selection of
+    ``(vec_id, embedding)`` rows under cosine similarity: seed with the
+    smallest id, then repeatedly add the vector whose maximum cosine to
+    the already-chosen set is smallest (i.e. the point farthest from every
+    pick so far).  The classic diversity /
     coreset draw (Gonzalez 1985; used for training-data diversity
     selection) with the 2-approximation guarantee for the k-center
     objective.
@@ -907,11 +846,11 @@ def kcenter_select(
     in pick order — an empty table raises ValueError.
     """
     src = df.where(
-        F.col(vec_col).isNotNull() & (norm_sq(F.col(vec_col)) > 0)
+        F.col("embedding").isNotNull() & (norm_sq(F.col("embedding")) > 0)
     )
     seed_rows = (
-        src.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
+        src.select("vec_id", "embedding")
+        .orderBy(F.col("vec_id").asc())
         .limit(1)
         .collect()
     )
@@ -924,8 +863,8 @@ def kcenter_select(
     out: list[tuple[int, int, float | None]] = [(0, seed[0], None)]
     for step in range(1, k):
         pick_rows = (
-            _kcenter_step(src, chosen, id_col, vec_col)
-            .orderBy(F.col("_mc").asc(), F.col(id_col).asc())
+            _kcenter_step(src, chosen)
+            .orderBy(F.col("_mc").asc(), F.col("vec_id").asc())
             .limit(1)
             .collect()
         )
@@ -938,10 +877,7 @@ def kcenter_select(
 
 
 def _kcenter_step(
-    src: DataFrame,
-    chosen: list[tuple[int, list[float]]],
-    id_col: str,
-    vec_col: str,
+    src: DataFrame, chosen: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """One FPS pass: candidates (chosen ids anti-joined away) scored with
     max cosine to the chosen set.
@@ -968,13 +904,13 @@ def _kcenter_step(
         "array<array<double>>"
     )
     max_cos = F.array_max(
-        F.transform(vecs_lit, lambda c: cosine(F.col(vec_col), c))
+        F.transform(vecs_lit, lambda c: cosine(F.col("embedding"), c))
     )
     return (
-        src.where(~F.array_contains(ids_lit, F.col(id_col).cast("bigint")))
+        src.where(~F.array_contains(ids_lit, F.col("vec_id").cast("bigint")))
         .select(
-            F.col(id_col),
-            F.col(vec_col),
+            F.col("vec_id"),
+            F.col("embedding"),
             F.round(max_cos, SCORE_DIGITS).alias("_mc"),
         )
     )

@@ -25,9 +25,9 @@ def _hits(toks: Column, words: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(words)))
 
 
-def quality_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Per-document quality features: length, token count, punctuation
-    ratio, stopword ratio, mean token length.
+def quality_stats(df: DataFrame) -> DataFrame:
+    """Per-document (``doc_id``) quality features of ``text``: length,
+    token count, punctuation ratio, stopword ratio, mean token length.
 
     Ratios use try_divide: an empty or whitespace-only document has
     n_chars or n_tokens of 0, and under ANSI mode a plain ``/`` kills the
@@ -35,9 +35,9 @@ def quality_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     differential suite).  NULL ratios match DuckDB, whose ``x / 0`` is
     NULL — degenerate docs then gate to 'drop' in quality_score on both
     engines."""
-    toks = tokens(text_col)
-    n_chars = F.length(text_col)
-    n_punct = n_chars - F.length(F.regexp_replace(text_col, _PUNCT, ""))
+    toks = tokens("text")
+    n_chars = F.length("text")
+    n_punct = n_chars - F.length(F.regexp_replace("text", _PUNCT, ""))
     n_tokens = F.size(toks)
     n_stop = _hits(toks, STOPWORDS["en"])
     mean_tok_len = F.try_divide(
@@ -47,7 +47,7 @@ def quality_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         n_tokens,
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         # long, not int: DuckDB LENGTH()/LEN() are BIGINT, and registry
         # outputs normalize widths so audit_dtypes stays at zero
         n_chars.cast("long").alias("n_chars"),
@@ -70,14 +70,14 @@ QUALITY_WEIGHTS = {
 }
 
 
-def quality_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Per-document quality probability: sigmoid of a fixed linear probe
     over the quality_stats features, gated into keep / flag / drop
     (p >= 0.6 / >= 0.4 / below).  Narrow per-row JVM expressions — the
     same no-shuffle shape as quality_stats; at 100 TB this is a pure
     map stage fused into the scan."""
     w = QUALITY_WEIGHTS
-    feats = quality_stats(df, text_col, id_col)
+    feats = quality_stats(df)
     z = (
         F.lit(w["bias"])
         + F.lit(w["stopword_ratio"]) * F.col("stopword_ratio")
@@ -86,7 +86,7 @@ def quality_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
     return feats.select(
-        id_col,
+        "doc_id",
         F.round(p, 9).alias("quality_p"),
         F.when(p >= 0.6, F.lit("keep"))
         .when(p >= 0.4, F.lit("flag"))
@@ -108,33 +108,31 @@ def language_pred(toks: Column) -> Column:
     return pred
 
 
-def language_id(
-    df: DataFrame, text_col: str, id_col: str, extra_cols: tuple = ()
-) -> DataFrame:
-    """Stopword-hit language heuristic as a (id, *extra, pred_lang)
-    table.  extra_cols lets a caller carry grouping columns through the
+def language_id(df: DataFrame) -> DataFrame:
+    """Stopword-hit language heuristic as a (doc_id, lang, pred_lang)
+    table.  The labelled ``lang`` rides through the
     scoring projection instead of joining the prediction table back to
     the source (which re-scans it and builds a corpus-sized broadcast)."""
     return df.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        language_pred(tokens(text_col)).alias("pred_lang"),
+        F.col("doc_id"),
+        F.col("lang"),
+        language_pred(tokens("text")).alias("pred_lang"),
     )
 
 
-def token_count(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def token_count(df: DataFrame) -> DataFrame:
     """Whitespace tokens plus a BPE-ish segmentation count (alpha runs,
     digit runs, and single symbol chars each count as one piece)."""
-    ws = F.size(tokens(text_col))
-    bpe = F.regexp_count(F.lower(text_col), F.lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"))
+    ws = F.size(tokens("text"))
+    bpe = F.regexp_count(F.lower("text"), F.lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         ws.alias("ws_tokens"),
         bpe.alias("bpe_tokens"),
     )
 
 
-def fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Polynomial rolling hash (h = h*31 + code mod 1e9+7) over the ASCII
     letters/spaces of the text — an order-sensitive document fingerprint
     (the composition analogue of the reference's streaming content hash,
@@ -143,16 +141,16 @@ def fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     codepoints in every engine.  The cleaned text is materialized as a
     column so the per-char lambda doesn't re-run the regexp."""
     cleaned = df.withColumn(
-        "_clean", F.regexp_replace(F.lower(F.col(text_col)), "[^a-z ]", "")
+        "_clean", F.regexp_replace(F.lower(F.col("text")), "[^a-z ]", "")
     )
     fp = F.expr(
         "aggregate(transform(sequence(1, length(_clean)), i -> ascii(substring(_clean, i, 1))), "
         "0L, (h, c) -> (h * 31 + c) % 1000000007)"
     )
-    return cleaned.select(F.col(id_col), fp.alias("fingerprint"))
+    return cleaned.select(F.col("doc_id"), fp.alias("fingerprint"))
 
 
-def compression_ratio(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def compression_ratio(df: DataFrame) -> DataFrame:
     """Deflate compression ratio per document — the classic cheap proxy
     for repetition/boilerplate (highly repetitive text compresses far
     below ~0.4; natural prose sits ~0.5-0.7; random strings near 1.0).
@@ -177,14 +175,17 @@ def compression_ratio(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         return texts.map(one)
 
     return df.select(
-        F.col(id_col),
-        F.round(_ratio(F.col(text_col)), 6).alias("compression_ratio"),
+        F.col("doc_id"),
+        F.round(_ratio(F.col("text")), 6).alias("compression_ratio"),
     )
 
 
-def hash_embedding(
-    df: DataFrame, text_col: str, id_col: str, dim: int = 64
-) -> DataFrame:
+# Width of hash_embedding's vectors: the embedding tables' dimension, so
+# the similarity operators' sign-LSH planes apply unchanged.
+_EMBED_DIM = 64
+
+
+def hash_embedding(df: DataFrame) -> DataFrame:
     """Feature-hashed bag-of-words document embedding (the hashing trick,
     Weinberger et al. 2009 — public): each token hashes to a dimension
     (md5 nibbles 3-4 mod dim) with a sign bit (nibble 5), signed counts
@@ -198,23 +199,22 @@ def hash_embedding(
     oracle replays it value-for-value with the same nibble arithmetic
     the SimHash oracle already uses.  Scale: one token explode, one
     (doc, dim) hash-agg (<= dim rows per doc), one per-doc assembly agg."""
-    assert dim <= 256 and dim & (dim - 1) == 0, "dim must be a power of 2 <= 256"
     src = df
     if not df.isStreaming:
-        src = spread(df, id_col)
+        src = spread(df, "doc_id")
     tok = src.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("_tok")
+        F.col("doc_id"), F.explode(tokens("text")).alias("_tok")
     )
     h = F.md5(F.col("_tok"))
 
     def nib(i: int):
         return F.instr(F.lit("0123456789abcdef"), F.substring(h, i, 1)) - 1
 
-    d = (nib(3) * 16 + nib(4)) % dim
+    d = (nib(3) * 16 + nib(4)) % _EMBED_DIM
     sign = F.when(nib(5) % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
     cells = (
-        tok.select(F.col(id_col), d.alias("_dim"), sign.alias("_s"))
-        .groupBy(id_col, "_dim")
+        tok.select(F.col("doc_id"), d.alias("_dim"), sign.alias("_s"))
+        .groupBy("doc_id", "_dim")
         .agg(F.sum("_s").alias("_w"))
     )
     # The squared norm is computed HERE, in the same hash-agg that
@@ -227,14 +227,14 @@ def hash_embedding(
     # higher-order functions run interpreted, so the norm fold (itself a
     # pass over the dense array) executed once per ELEMENT: measured
     # 9.75 s -> ~1 s noop at sf0.1 for q_text_hash_embedding.
-    assembled = cells.groupBy(id_col).agg(
+    assembled = cells.groupBy("doc_id").agg(
         F.map_from_entries(
             F.collect_list(F.struct("_dim", "_w"))
         ).alias("_m"),
         F.sum(F.col("_w") * F.col("_w")).alias("_n2"),
     )
     dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
+        F.sequence(F.lit(0), F.lit(_EMBED_DIM - 1)),
         lambda i: F.coalesce(F.element_at("_m", i.cast("int")), F.lit(0)),
     )
     norm = F.sqrt(F.col("_n2").cast("double"))
@@ -247,5 +247,5 @@ def hash_embedding(
     # emit a NULL-element list in DuckDB (the oracles carry the matching
     # HAVING on the norm)
     return assembled.where(F.col("_n2") > 0).select(
-        F.col(id_col), unit.alias("embedding")
+        F.col("doc_id"), unit.alias("embedding")
     )

@@ -94,9 +94,7 @@ def q_corpus_boilerplate_scrub(spark, sf_dir):
     # of the scrub lineage; one reusable spread exchange fans both out
     # (5.4 s -> 1.5 s at sf0.1)
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    return C.boilerplate_scrub(
-        d, "text", "doc_id", seg_words=3, min_docs=3
-    ).orderBy("doc_id")
+    return C.boilerplate_scrub(d, seg_words=3, min_docs=3).orderBy("doc_id")
 
 
 # -- deterministic split assignment ------------------------------------------
@@ -132,7 +130,7 @@ def q_corpus_split(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     return (
         d.select(
-            C.split_assign("doc_id").alias("split"), "source", "n_chars"
+            C.split_assign().alias("split"), "source", "n_chars"
         )
         .groupBy("split", "source")
         .agg(
@@ -641,8 +639,8 @@ def q_split_leakage(spark, sf_dir):
     LSH bucket join (never all-pairs) with a band-key shuffle — the
     same plan family as q_dedup_minhash, plus a doc-keyed count."""
     d = load_table(spark, sf_dir, "documents")
-    bands = D.minhash_bands(d, "text", "doc_id").withColumn(
-        "is_train", C.split_bucket("doc_id") < 13
+    bands = D.minhash_bands(d).withColumn(
+        "is_train", C.split_bucket() < 13
     )
     tb = bands.where(F.col("is_train")).select("doc_id", "band_id", "sig")
     hb = bands.where(~F.col("is_train")).select(
@@ -803,7 +801,7 @@ def q_dedup_provenance(spark, sf_dir):
     broadcasts it; at web-crawl dup rates (30-50%) the map is
     corpus-scale and must be allowed to shuffle."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(d, "text", "doc_id", n_hashes=8, band_size=2)
+    pairs = D.minhash_lsh_pairs(d)
     cc = D.connected_components(pairs, "doc_a", "doc_b")
     drop_map = cc.where(F.col("id") != F.col("lab")).select(
         F.col("id").alias("dropped_id"), F.col("lab").alias("kept_id")

@@ -57,7 +57,7 @@ GROUP BY MD5(text)
 )
 def q_dedup_exact(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    return D.exact_dedup(d, "text", "doc_id")
+    return D.exact_dedup(d)
 
 
 @register(
@@ -133,7 +133,7 @@ JOIN bands b ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
 def q_dedup_minhash(spark, sf_dir):
     """Banded MinHash-LSH candidate pairs (8 hashes, 4 bands x 2 rows)."""
     d = load_table(spark, sf_dir, "documents")
-    return D.minhash_lsh_pairs(d, "text", "doc_id", n_hashes=8, band_size=2)
+    return D.minhash_lsh_pairs(d)
 
 
 _SOURCE_OVERLAP_ORACLE = f"""
@@ -175,7 +175,7 @@ def q_dedup_source_overlap(spark, sf_dir):
     projection — two slim equi-joins and a sources²-bounded rollup, the
     corpus text never moves."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(d, "text", "doc_id", n_hashes=8, band_size=2)
+    pairs = D.minhash_lsh_pairs(d)
     src = d.select("doc_id", "source")
     lab = (
         pairs.join(
@@ -266,7 +266,7 @@ SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM votes
 @register("q_dedup_simhash", _simhash_oracle())
 def q_dedup_simhash(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    return D.simhash(d, "text", "doc_id")
+    return D.simhash(d)
 
 
 _JACCARD_ORACLE = f"""
@@ -292,7 +292,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     """Exact n-gram Jaccard verification (inverted-index join, threshold
     0.5) over a doc_id prefix — the verify stage that follows LSH."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    return D.ngram_jaccard_pairs(d, "text", "doc_id", threshold=0.5)
+    return D.ngram_jaccard_pairs(d, threshold=0.5)
 
 
 _MINHASH_EST_ORACLE = f"""
@@ -341,13 +341,13 @@ def q_minhash_jaccard_estimate(spark, sf_dir):
     exact side reuses the inverted-index intersection join (never
     all-pairs); both join back to the tiny candidate-pair set."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    sig = D.minhash_signatures(d, "text", "doc_id", n_hashes=8)
-    pairs = D.minhash_lsh_pairs(d, "text", "doc_id", n_hashes=8, band_size=2)
+    sig = D.minhash_signatures(d)
+    pairs = D.minhash_lsh_pairs(d)
     est = sum(
         F.when(F.col(f"ma.mh_{j}") == F.col(f"mb.mh_{j}"), 1).otherwise(0)
         for j in range(8)
     ) / F.lit(8.0)
-    shd = D.shingle_rows(d, "text", "doc_id").distinct()
+    shd = D.shingle_rows(d).distinct()
     sizes = shd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = shd.alias("sa"), shd.alias("sb")
     inter = (
@@ -592,7 +592,7 @@ def q_text_compression_ratio(spark, sf_dir):
     scripts/gen_golden_oracles.py; the behavioral contract (repetitive
     << prose << random ordering) is pinned in tests/test_curation.py."""
     d = load_table(spark, sf_dir, "documents")
-    return TX.compression_ratio(d, "text", "doc_id")
+    return TX.compression_ratio(d)
 
 
 _STOP_EN = "['the', 'and', 'of', 'to', 'a']"
@@ -619,7 +619,7 @@ def q_text_quality_stats(spark, sf_dir):
     # per-row HOF-fold CPU dominates (spread: 0.40 s -> 0.30 s at sf0.1
     # on 32 cores)
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    return TX.quality_stats(d, "text", "doc_id")
+    return TX.quality_stats(d)
 
 
 _QSCORE_ORACLE = f"""
@@ -659,7 +659,7 @@ def q_text_quality_score(spark, sf_dir):
     feature assembly and vectorized scoring fused into the scan, no
     shuffle — is what carries to 100 TB unchanged."""
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    return TX.quality_score(d, "text", "doc_id")
+    return TX.quality_score(d)
 
 
 def _langid_oracle() -> str:
@@ -693,14 +693,14 @@ SELECT lang, pred_lang, COUNT(*) AS n FROM pred GROUP BY lang, pred_lang
 def q_text_language_id(spark, sf_dir):
     """Stopword-heuristic language ID, reported as a lang x predicted
     confusion table."""
-    # carry lang through the scoring projection (extra_cols) instead of
+    # language_id carries lang through the scoring projection instead of
     # joining the prediction table back to documents: the join re-scanned
     # the corpus and broadcast-built the corpus-sized prediction side —
     # measured 2.44 s -> 1.21 s noop at sf0.1 (plan 2 scans + BHJ ->
     # 1 scan); the five stopword-hit HOF folds are then the map cost
     # (spread: 1.21 s -> 0.60 s interleaved A/B)
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    pred = TX.language_id(d, "text", "doc_id", extra_cols=("lang",))
+    pred = TX.language_id(d)
     return (
         pred.groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -721,7 +721,7 @@ FROM toks
 @register("q_text_token_count", _TOKCOUNT_ORACLE)
 def q_text_token_count(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    out = TX.token_count(d, "text", "doc_id")
+    out = TX.token_count(d)
     # registry-surface width normalization: DuckDB LEN() is BIGINT
     return out.select(
         "doc_id",
@@ -750,7 +750,7 @@ def q_text_fingerprint(spark, sf_dir):
     # the per-char rolling-hash fold is pure interpreted map CPU
     # (spread: 0.96 s -> 0.35 s noop min, interleaved A/B)
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    return TX.fingerprint(d.where(F.col("lang") == "en"), "text", "doc_id")
+    return TX.fingerprint(d.where(F.col("lang") == "en"))
 
 
 @register(
@@ -829,11 +829,12 @@ def q_dedup_embedding(spark, sf_dir):
       are tiny, and falls back to shuffle hash joins at 100 TB
       (tests/test_plans.py::test_dedup_embedding_shuffle_shape asserts
       the no-broadcast shape: equi-join keys, no cartesian);
-    - duplicate-HEAVY corpora additionally need the hot-bucket guard
-      (operators/similarity.drop_hot_buckets, capped-width buckets before
-      the self-join — tests/test_similarity.py pins the quadratic-blowup
-      case); the fixture's buckets are narrow so the exact oracle query
-      runs unguarded."""
+    - no hot-bucket guard runs: a duplicate-HEAVY corpus can make one
+      band bucket quadratic.  operators/similarity.drop_hot_buckets caps
+      bucket width as a standalone, tested operator
+      (tests/test_similarity.py pins the quadratic-blowup case), but
+      sign_lsh_pairs does not apply it; the fixture's buckets are
+      narrow."""
     return _embedding_dedup_pairs(spark, sf_dir)
 
 
@@ -948,7 +949,7 @@ def q_multimodal_decode(spark, sf_dir):
     from basin_cli_spark.operators import multimodal as MM
 
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    return MM.decode_info(MM.synthesize_media(d, "text", "doc_id"))
+    return MM.decode_info(MM.synthesize_media(d))
 
 
 _MM_FRAMES_ORACLE = f"""
@@ -966,7 +967,7 @@ def q_multimodal_frames(spark, sf_dir):
     from basin_cli_spark.operators import multimodal as MM
 
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    return MM.sample_frames(MM.synthesize_media(d, "text", "doc_id"), every_k=2)
+    return MM.sample_frames(MM.synthesize_media(d))
 
 
 _MM_FEATS_ORACLE = f"""
@@ -987,7 +988,7 @@ def q_multimodal_features(spark, sf_dir):
     from basin_cli_spark.operators import multimodal as MM
 
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    feats = MM.extract_features(MM.synthesize_media(d, "text", "doc_id"))
+    feats = MM.extract_features(MM.synthesize_media(d))
     return feats.withColumn("features", vec_str("features"))
 
 
@@ -1016,7 +1017,7 @@ def q_multimodal_audio_meta(spark, sf_dir):
     from basin_cli_spark.operators import multimodal as MM
 
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    return MM.audio_meta(MM.synthesize_audio(d, "text", "doc_id"))
+    return MM.audio_meta(MM.synthesize_audio(d))
 
 
 _MM_VIDEO_ORACLE = """
@@ -1039,7 +1040,7 @@ def q_multimodal_video_meta(spark, sf_dir):
     from basin_cli_spark.operators import multimodal as MM
 
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    return MM.video_meta(MM.synthesize_video(d, "text", "doc_id"))
+    return MM.video_meta(MM.synthesize_video(d))
 
 
 _IVF_ORACLE = f"""
@@ -1307,8 +1308,9 @@ def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
     per-cell co-partitioned work with zero bands and zero signature
     state — the shape SemDeDup runs at web scale.  Cell width is
     hard-bounded: similarity.drop_hot_cells removes cells wider than
-    `max_cell` before the quadratic self-join (the exact doctrine the
-    LSH path applies via drop_hot_buckets) — a degenerate hot cell
+    `max_cell` before the quadratic self-join (the doctrine of
+    drop_hot_buckets, a standalone operator the LSH path does not
+    apply) — a degenerate hot cell
     (duplicate-heavy crawl, zero vectors) is template content whose
     duplicates exact-hash dedup catches at linear cost.  The fixture
     cells sit far below the default cap, so the oracle is unaffected;
@@ -1350,7 +1352,7 @@ def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
     # live cent_id expression (nondeterministic join keys are an
     # AnalysisException — the dot_arrow caller contract).
     raw_assigned = persist_once(
-        KM.assign_ids(e, cents, metric="cos").select("vec_id", "cent_id")
+        KM.assign_ids(e, cents).select("vec_id", "cent_id")
     )
     assigned = persist_once(
         spread(drop_hot_cells(raw_assigned, max_cell), "vec_id")
@@ -1455,7 +1457,7 @@ def q_similarity_ann_ivf_trained(spark, sf_dir):
     cn = cents / np.maximum(np.linalg.norm(cents, axis=1), 1e-300)[:, None]
     sims = cn @ (qv / np.linalg.norm(qv))
     probe = [int(i) for i in np.argsort(-sims)[:8]]
-    assigned = KM.assign_ids(e, cents, metric="cos")
+    assigned = KM.assign_ids(e, cents)
     cand = assigned.where(
         F.col("cent_id").isin(probe) & (F.col("vec_id") != 0)
     )
@@ -2086,7 +2088,7 @@ def q_dedup_clusters(spark, sf_dir):
     walk; Spark runs the iterative join/min-agg loop (what a 100 TB corpus
     requires — a recursive CTE over 10^9 edges is not an option)."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(d, "text", "doc_id", n_hashes=8, band_size=2)
+    pairs = D.minhash_lsh_pairs(d)
     cc = D.connected_components(pairs, "doc_a", "doc_b")
     return cc.select(
         F.col("id").alias("doc_id"), F.col("lab").alias("cluster_id")
@@ -2270,7 +2272,7 @@ def q_sample_cluster_cap(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     cents = _frozen_ivf_codebook(e)
-    assigned = KM.assign_ids(e, cents, metric="cos").select(
+    assigned = KM.assign_ids(e, cents).select(
         "vec_id", "cent_id", F.md5(F.col("vec_id").cast("string")).alias("_mk")
     )
     w = Window.partitionBy("cent_id").orderBy("_mk", "vec_id")
@@ -2440,7 +2442,7 @@ def q_dedup_keep_one(spark, sf_dir):
     duplicate cluster, pass every unclustered doc through untouched
     (dedup.keep_one: one left-anti join against the drop-list)."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(d, "text", "doc_id", n_hashes=8, band_size=2)
+    pairs = D.minhash_lsh_pairs(d)
     return D.keep_one(d, pairs, "doc_id", "doc_a", "doc_b").select(
         "doc_id", "source", "n_chars"
     )
@@ -2564,7 +2566,7 @@ def q_text_hash_embedding(spark, sf_dir):
     uses.  Surfaces through vec_str (no-raw-container rule); the operator
     keeps the real array column for the similarity family."""
     d = load_table(spark, sf_dir, "documents")
-    emb = TX.hash_embedding(d, "text", "doc_id", dim=64)
+    emb = TX.hash_embedding(d)
     return emb.withColumn("embedding", vec_str("embedding"))
 
 
@@ -2590,7 +2592,7 @@ def q_similarity_text_hash(spark, sf_dir):
     use.  Both engines fold the dot product sequentially over the same
     rounded unit values, so scores match bit-for-bit."""
     d = load_table(spark, sf_dir, "documents")
-    emb = persist_once(TX.hash_embedding(d, "text", "doc_id", dim=64))
+    emb = persist_once(TX.hash_embedding(d))
     q = emb.where(F.col("doc_id") == 0).select(
         F.col("embedding").alias("_q_emb")
     )
@@ -2671,7 +2673,7 @@ def q_llm_prep_pipeline_v2(spark, sf_dir):
     contam = C.contamination_score(gated, eval_docs)
     drop_leaky = contam.where(F.col("contamination") > 0.5).select("doc_id")
     clean = gated.join(drop_leaky, "doc_id", "left_anti")
-    pairs = D.minhash_lsh_pairs(clean, "text", "doc_id", n_hashes=8, band_size=2)
+    pairs = D.minhash_lsh_pairs(clean)
     return D.keep_one(clean, pairs, "doc_id", "doc_a", "doc_b").select(
         "doc_id",
         "source",

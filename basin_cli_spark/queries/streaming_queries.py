@@ -276,7 +276,7 @@ def q_stream_near_dedup(spark, sf_dir):
     # trip the chained-stateful-operator correctness check).
     ts = F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
     sim = docs.select(
-        "doc_id", simhash_expr("text").alias("simhash"), ts.alias("ts")
+        "doc_id", simhash_expr().alias("simhash"), ts.alias("ts")
     )
     agg = (
         sim.withWatermark("ts", "1 hour")
@@ -326,7 +326,7 @@ def q_stream_quality_gate(spark, sf_dir):
     # single-file stream source -> one input partition; spread the
     # per-row probe expressions across the cores
     docs = spread(docs, "doc_id")
-    scored = quality_score(docs, "text", "doc_id")
+    scored = quality_score(docs)
     agg = scored.groupBy("gate").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.min("quality_p"), 9).alias("min_p"),
@@ -438,7 +438,7 @@ def q_stream_ivf_assign(spark, sf_dir):
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(sf_dir)
     )
-    assigned = KM.assign_ids(stream, cents, metric="cos")
+    assigned = KM.assign_ids(stream, cents)
     stats = assigned.groupBy("cent_id").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.min("vec_id").alias("min_vec_id"),

@@ -116,7 +116,7 @@ def get_spark(
     return spark
 
 
-def persist_once(df, level=None):
+def persist_once(df):
     """``persist()`` that no-ops when an equivalent plan is already cached.
 
     Queries that persist an intermediate (LSH signatures, IVF assignments,
@@ -131,7 +131,6 @@ def persist_once(df, level=None):
     unavailable."""
     from pyspark import StorageLevel
 
-    level = level or StorageLevel.MEMORY_AND_DISK
     try:
         jcm = df.sparkSession._jsparkSession.sharedState().cacheManager()
         if jcm.lookupCachedData(df._jdf).isDefined():
@@ -141,4 +140,4 @@ def persist_once(df, level=None):
             "persist_once: cache probe failed, falling back to a plain persist (%s: %s)",
             type(e).__name__, e, extra={"fallback": "plain_persist", "reason": repr(e)},
         )
-    return df.persist(level)
+    return df.persist(StorageLevel.MEMORY_AND_DISK)

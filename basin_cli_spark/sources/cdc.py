@@ -101,10 +101,11 @@ TX_SCHEMA = T.StructType(
 _WAL_TS_FMT = "yyyy-MM-dd HH:mm:ss[.SSSSSS]X"
 
 
-def parse_wal_records(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """One wal2json tx JSON line per input row -> one output row per record,
-    with tx metadata flattened and intra-tx order kept in `_tx_pos`."""
-    tx = lines.select(F.from_json(F.col(value_col), TX_SCHEMA).alias("tx"))
+def parse_wal_records(lines: DataFrame) -> DataFrame:
+    """One wal2json tx JSON line per input row (the text source's
+    ``value``) -> one output row per record, with tx metadata flattened and
+    intra-tx order kept in `_tx_pos`."""
+    tx = lines.select(F.from_json(F.col("value"), TX_SCHEMA).alias("tx"))
     rec = tx.select(
         F.col("tx.commit_lsn").alias("_commit_lsn"),
         F.posexplode("tx.records").alias("_tx_pos", "r"),
@@ -169,15 +170,20 @@ def _projection(
     )
 
 
+def _entries_map(field: str) -> Column:
+    """``name -> value`` map over a record's ``_columns`` or ``_identity``."""
+    return F.map_from_entries(
+        F.transform(field, lambda c: F.struct(c["name"], c["value"]))
+    )
+
+
 @functools.lru_cache(maxsize=256)
 def _build_projection(
     gateway, columns: tuple[tuple[str, str], ...], keep_metadata: bool
 ) -> tuple[Column, list[Column]]:
     # `gateway` is only a key: Column objects belong to the JVM that
     # built them, so a restarted context never reuses stale ones
-    kv = F.map_from_entries(
-        F.transform("_columns", lambda c: F.struct(c["name"], c["value"]))
-    )
+    kv = _entries_map("_columns")
     cols = [
         _typed(F.element_at("_kv", name), pg_type).alias(name)
         for name, pg_type in columns
@@ -225,6 +231,21 @@ def read_wal_stream(spark, path: str, max_files_per_trigger: int | None = None) 
     return parse_wal_records(reader.load(path))
 
 
+def keyed_changes(
+    records: DataFrame, table: str, pk: str, kv: Column | None = None
+) -> DataFrame:
+    """``table``'s change records with their ``_key``: the new row's `pk`
+    (I/U), else the wal2json `identity` old key (D).  `kv` is the record's
+    ``_columns`` map when the caller already holds it (the typed projection
+    reads the same map)."""
+    if kv is None:
+        kv = _entries_map("_columns")
+    ident_kv = _entries_map("_identity")
+    return records.where(F.col("_table") == table).withColumn(
+        "_key", F.coalesce(F.element_at(kv, pk), F.element_at(ident_kv, pk))
+    )
+
+
 def apply_changes(
     records: DataFrame,
     table: str,
@@ -244,17 +265,12 @@ def apply_changes(
     """
     from pyspark.sql import Window
 
-    recs = records.where(F.col("_table") == table)
     kv, out = _projection(records, columns)
-    ident_kv = F.map_from_entries(
-        F.transform("_identity", lambda c: F.struct(c["name"], c["value"]))
-    )
-    key = F.coalesce(F.element_at(kv, pk), F.element_at(ident_kv, pk))
     w = Window.partitionBy("_key").orderBy(
         F.col("_commit_lsn").desc(), F.col("_tx_pos").desc()
     )
     latest = (
-        recs.withColumn("_key", key)
+        keyed_changes(records, table, pk, kv)
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .where(F.col("_action") != "D")
@@ -277,15 +293,10 @@ def scd2_history(
     event order."""
     from pyspark.sql import Window
 
-    recs = records.where(F.col("_table") == table)
     kv, out = _projection(records, columns)
-    ident_kv = F.map_from_entries(
-        F.transform("_identity", lambda c: F.struct(c["name"], c["value"]))
-    )
-    key = F.coalesce(F.element_at(kv, pk), F.element_at(ident_kv, pk))
     w = Window.partitionBy("_key").orderBy("_commit_lsn", "_tx_pos")
     evts = (
-        recs.withColumn("_key", key)
+        keyed_changes(records, table, pk, kv)
         .withColumn("_next_lsn", F.lead("_commit_lsn").over(w))
         .withColumn("_kv", kv)
     )

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from basin_cli_spark.sources.cdc import keyed_changes
+
 PROGRESS_SCHEMA = T.StructType(
     [
         T.StructField("table", T.StringType(), False),
@@ -89,8 +91,6 @@ def cdc_apply_stream(records: DataFrame, table: str, pk: str) -> DataFrame:
     columns_json per its schema (same pivot as materialize_table)."""
     import json as _json
 
-    from pyspark.sql import functions as F
-
     out_schema = T.StructType(
         [
             T.StructField("key", T.StringType(), False),
@@ -138,21 +138,7 @@ def cdc_apply_stream(records: DataFrame, table: str, pk: str) -> DataFrame:
             }
         )
 
-    kv = F.map_from_entries(
-        F.transform(
-            "_columns", lambda c: F.struct(c["name"], c["value"])
-        )
-    )
-    ident_kv = F.map_from_entries(
-        F.transform(
-            "_identity", lambda c: F.struct(c["name"], c["value"])
-        )
-    )
-    keyed = records.where(F.col("_table") == table).withColumn(
-        "_key",
-        F.coalesce(F.element_at(kv, pk), F.element_at(ident_kv, pk)),
-    )
-    return keyed.groupBy("_key").applyInPandasWithState(
+    return keyed_changes(records, table, pk).groupBy("_key").applyInPandasWithState(
         _merge,
         outputStructType=out_schema,
         stateStructType=state_schema,

@@ -75,7 +75,7 @@ def main() -> None:
         ]
         compression[key] = [
             (r.doc_id, r.compression_ratio)
-            for r in compression_ratio(d, "text", "doc_id").orderBy("doc_id").collect()
+            for r in compression_ratio(d).orderBy("doc_id").collect()
         ]
 
     out = os.path.join(

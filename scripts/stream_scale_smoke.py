@@ -153,7 +153,7 @@ def _drain_measured(df, mode: str, spark=None) -> dict:
 
 
 def quality_gate_plan(docs):
-    scored = quality_score(docs, "text", "doc_id")
+    scored = quality_score(docs)
     return scored.groupBy("gate").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.min("quality_p"), 9).alias("min_p"),
@@ -164,7 +164,7 @@ def quality_gate_plan(docs):
 def near_dedup_plan(docs):
     ts = F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
     sim = docs.select(
-        "doc_id", simhash_expr("text").alias("simhash"), ts.alias("ts")
+        "doc_id", simhash_expr().alias("simhash"), ts.alias("ts")
     )
     return (
         sim.withWatermark("ts", "1 hour")
@@ -184,7 +184,7 @@ def near_dedup_windowed_plan(docs):
     working set.  Same simhash kernel as the registry's
     q_stream_dedup_within_watermark; the windowed grouping key is what
     makes append-mode eviction legal."""
-    sim = docs.select("doc_id", simhash_expr("text").alias("simhash"), "ts")
+    sim = docs.select("doc_id", simhash_expr().alias("simhash"), "ts")
     return (
         sim.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "30 minutes").alias("w"), "simhash")

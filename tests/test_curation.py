@@ -57,8 +57,8 @@ def test_chunk_covers_document(spark, sf_dir):
 def test_split_deterministic_and_append_stable(spark):
     d1 = spark.range(0, 500).select(F.col("id").alias("doc_id"))
     d2 = spark.range(0, 1000).select(F.col("id").alias("doc_id"))
-    a1 = {r.doc_id: r.s for r in d1.select("doc_id", C.split_assign("doc_id").alias("s")).collect()}
-    a2 = {r.doc_id: r.s for r in d2.select("doc_id", C.split_assign("doc_id").alias("s")).collect()}
+    a1 = {r.doc_id: r.s for r in d1.select("doc_id", C.split_assign().alias("s")).collect()}
+    a2 = {r.doc_id: r.s for r in d2.select("doc_id", C.split_assign().alias("s")).collect()}
     # appending ids never migrates existing assignments
     assert all(a2[k] == v for k, v in a1.items())
     # all three splits appear, in roughly 13/1/2 proportion
@@ -159,7 +159,7 @@ def test_quality_score_monotone_in_stopword_ratio(spark):
         "zzz qqq vvv kkk xxx www yyy mmm nnn ppp",
         "the and of to a the and of to a",
     ])
-    got = {r.doc_id: r.quality_p for r in quality_score(d, "text", "doc_id").collect()}
+    got = {r.doc_id: r.quality_p for r in quality_score(d).collect()}
     assert got[1] > got[0]
 
 
@@ -218,7 +218,7 @@ def test_hash_embedding_aggregated_norm_matches_dense_vector(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r.doc_id: r.embedding
-           for r in hash_embedding(df, "text", "doc_id").collect()}
+           for r in hash_embedding(df).collect()}
     assert set(out) == {1, 2}
     for vec in out.values():
         assert len(vec) == 64
@@ -254,11 +254,11 @@ def test_compression_ratio_orders_text_quality(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: r.compression_ratio
-           for r in compression_ratio(df, "text", "doc_id").collect()}
+           for r in compression_ratio(df).collect()}
     assert got[1] < 0.2 < got[2] < got[3]
     # empty text -> null, not a crash
     empty = spark.createDataFrame([(9, "")], "doc_id long, text string")
-    assert compression_ratio(empty, "text", "doc_id").collect()[0][1] is None
+    assert compression_ratio(empty).collect()[0][1] is None
 
 
 def test_per_source_capped_window_on_skewed_source(spark):
@@ -335,9 +335,7 @@ def test_boilerplate_scrub_removes_hot_segments_in_order(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in C.boilerplate_scrub(
-            docs, "text", "doc_id", seg_words=3, min_docs=3
-        ).collect()
+        for r in C.boilerplate_scrub(docs, seg_words=3, min_docs=3).collect()
     }
     assert out[1]["clean_text"] == "alpha beta gamma"
     assert out[1]["n_segs"] == 2 and out[1]["n_removed"] == 1
@@ -373,9 +371,7 @@ def test_boilerplate_scrub_reassembly_preserves_order(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in C.boilerplate_scrub(
-            docs, "text", "doc_id", seg_words=3, min_docs=3
-        ).collect()
+        for r in C.boilerplate_scrub(docs, seg_words=3, min_docs=3).collect()
     }
     assert out[1]["clean_text"] == words
     assert out[1]["n_segs"] == 10 and out[1]["n_removed"] == 0

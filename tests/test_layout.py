@@ -102,7 +102,7 @@ def test_date_partitioned_write_prunes_scan(spark, sf_dir, tmp_path):
 
     ev = load_table(spark, sf_dir, "events")
     out = str(tmp_path / "events_by_day")
-    write_date_partitioned(ev, out, "ts")
+    write_date_partitioned(ev, out)
     back = spark.read.parquet(out)
     q = back.where(F.col("event_date") == "2024-01-03").select("event_id")
     plan = q._sc._jvm.PythonSQLUtils.explainString(

@@ -17,7 +17,7 @@ from basin_cli_spark.sources import load_table
 @pytest.fixture(scope="module")
 def media(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
-    return MM.synthesize_media(docs, "text", "doc_id")
+    return MM.synthesize_media(docs)
 
 
 def test_decode_no_stub_marks_text_undecodable(media):
@@ -116,7 +116,7 @@ def test_jpeg_fill_bytes_before_marker():
 
 
 def test_frame_sampling_row_multiplication(media):
-    out = MM.sample_frames(media, every_k=2).collect()
+    out = MM.sample_frames(media).collect()
     n_frames = {
         r["media_id"]: r["n_frames"]
         for r in media.select("media_id", "n_frames").collect()
@@ -129,7 +129,7 @@ def test_frame_sampling_row_multiplication(media):
 
 
 def test_feature_vectors_fixed_dim(media):
-    out = MM.extract_features(media, dim=4).collect()
+    out = MM.extract_features(media).collect()
     assert len(out) == media.count()
     for r in out:
         assert len(r["features"]) == 4

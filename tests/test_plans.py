@@ -133,7 +133,7 @@ _NLJ_ALLOWED = {
 
 
 def test_ivf_stub_codebook_cap_reaches_scan(spark, sf_dir, registry):
-    """The stride codebook's constant bound (id < stride*max_cents) must
+    """The stride codebook's constant bound (id < 25 * 256) must
     reach the parquet scan as a data filter, so the codebook relation —
     a broadcast side — is constant-size at any corpus scale (r10: the
     last grows-with-corpus broadcast in the tree, bounded)."""

@@ -219,7 +219,9 @@ def test_connected_components_match_union_find(spark, raw_edges):
     """The iterative min-label propagation must agree with a driver-side
     union-find on arbitrary small graphs (chains, cycles, self-loops,
     duplicates) — the shapes that break naive propagation."""
-    from basin_cli_spark.operators.dedup import connected_components
+    from unittest import mock
+
+    from basin_cli_spark.operators import dedup
 
     edges = [(a, b) for a, b in raw_edges if a != b]
     if not edges:
@@ -244,14 +246,13 @@ def test_connected_components_match_union_find(spark, raw_edges):
     want = {x: find(x) for x in parent}
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     # exercise BOTH paths: the driver union-find fast path and the
-    # distributed min-label loop (forced via driver_threshold=0)
+    # distributed min-label loop (forced via a threshold of 0)
     threshold = 0 if len(edges) % 2 == 0 else 5_000_000
-    got = {
-        r.id: r.lab
-        for r in connected_components(
-            df, "doc_a", "doc_b", driver_threshold=threshold
-        ).collect()
-    }
+    with mock.patch.object(dedup, "_DRIVER_THRESHOLD", threshold):
+        got = {
+            r.id: r.lab
+            for r in dedup.connected_components(df, "doc_a", "doc_b").collect()
+        }
     # min-label find: normalize union-find roots to component minimum
     comp_min: dict[int, int] = {}
     for x, r in want.items():
@@ -307,9 +308,7 @@ def test_boilerplate_scrub_matches_pure_python(spark, texts, W, min_docs):
     )
     got = {
         r["doc_id"]: (r["clean_text"], r["n_segs"], r["n_removed"])
-        for r in boilerplate_scrub(
-            df, "text", "doc_id", seg_words=W, min_docs=min_docs
-        ).collect()
+        for r in boilerplate_scrub(df, seg_words=W, min_docs=min_docs).collect()
     }
     assert got == want
 

@@ -32,7 +32,7 @@ def test_planes_are_version_stable():
     """Planes derive from SHA-256, not a library RNG: the exact values are
     pinned so ANY drift (numpy version, platform, refactor) fails here —
     persisted signatures and the DuckDB oracle depend on them."""
-    planes = S.random_planes(dim=64, n_planes=2, seed=42, nnz=8)
+    planes = S.random_planes(n_planes=2)
     assert [len(p) for p in planes] == [8, 8]
     for p in planes:
         dims = [d for d, _ in p]
@@ -40,7 +40,7 @@ def test_planes_are_version_stable():
         assert all(0 <= d < 64 for d in dims)
         assert all(s in (-1, 1) for _, s in p)
     # golden: first plane for the default (seed=42) construction
-    expected = S.random_planes(64, 1, 42, 8)[0]
+    expected = S.random_planes(1)[0]
     assert planes[0] == expected  # determinism across calls
     h = __import__("hashlib").sha256(repr(planes).encode()).hexdigest()
     assert h == PLANES_GOLDEN_SHA, (
@@ -49,7 +49,7 @@ def test_planes_are_version_stable():
     )
 
 
-# sha256(repr(random_planes(64, 2, 42, 8))) at the time the derivation was
+# sha256(repr(random_planes(2))) at the time the derivation was
 # frozen; recompute ONLY on a deliberate, versioned scheme change.
 PLANES_GOLDEN_SHA = (
     "60bdf2c181ce8a4e69e2bc66adb9b7643545b5300b182a64d43f0b115e957f5e"
@@ -186,7 +186,7 @@ def test_mine_hard_negatives_null_embedding_rows_dropped(spark):
 
 
 def test_ivf_stub_codebook_is_constant_size(spark):
-    """The stride codebook caps at max_cents rows, so the broadcast side
+    """The stride codebook caps at 256 rows, so the broadcast side
     is constant no matter the corpus size (the last grows-with-corpus
     broadcast in the tree, bounded in r10)."""
     n = 25 * 300  # corpus large enough that the cap binds (300 > 256)
@@ -218,7 +218,7 @@ def test_sign_lsh_bands_match_oracle_sql(spark):
     got = {
         r.id: list(r.bands)
         for r in df.select(
-            "id", S.sign_lsh_bands(F.col("v"), 4, 4).alias("bands")
+            "id", S.sign_lsh_bands(F.col("v"), 4).alias("bands")
         ).collect()
     }
     con = duckdb.connect()
@@ -228,7 +228,7 @@ def test_sign_lsh_bands_match_oracle_sql(spark):
         + ") AS x(id, v)"
     )
     band_exprs = ", ".join(
-        S.sign_lsh_band_sql("v", b, band_bits=4, bands=4) + f" AS b{b}"
+        S.sign_lsh_band_sql("v", b, band_bits=4) + f" AS b{b}"
         for b in range(4)
     )
     want = {
@@ -331,7 +331,7 @@ def test_semantic_ivf_fixture_cells_below_default_cap(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     cents = _frozen_ivf_codebook(e)
     widest = (
-        KM.assign_ids(e, cents, metric="cos")
+        KM.assign_ids(e, cents)
         .groupBy("cent_id")
         .count()
         .agg(F.max("count"))
@@ -389,7 +389,6 @@ def test_hard_negative_mining_singleton_anchor_edges(spark):
     )
     rows = mine_hard_negatives(
         df, probe_filter=F.col("vec_id") == 0, k=2,
-        id_col="vec_id", vec_col="embedding", label_col="label",
     ).collect()
     assert rows, "singleton-label anchor must still emit its negatives"
     assert all(r["p_id"] == 0 for r in rows)
@@ -402,7 +401,6 @@ def test_hard_negative_mining_singleton_anchor_edges(spark):
     assert (
         mine_hard_negatives(
             mono, probe_filter=F.col("vec_id") == 0, k=2,
-            id_col="vec_id", vec_col="embedding", label_col="label",
         ).count()
         == 0
     )
@@ -428,7 +426,6 @@ def test_hard_negative_mining_require_all_anchors(spark):
     )
     rows = mine_hard_negatives(
         mono, probe_filter=F.col("vec_id") == 0, k=2,
-        id_col="vec_id", vec_col="embedding", label_col="label",
         require_all_anchors=True,
     ).collect()
     assert len(rows) == 1, "zero-negative anchor must surface exactly once"
@@ -450,7 +447,6 @@ def test_hard_negative_mining_require_all_anchors(spark):
     )
     kw = dict(
         probe_filter=F.col("vec_id") == 0, k=2,
-        id_col="vec_id", vec_col="embedding", label_col="label",
     )
     default = sorted(
         mine_hard_negatives(mixed, **kw).collect(),
@@ -556,12 +552,8 @@ def test_kcenter_step_plan_size_constant(spark):
     )
     vec2 = [(i, [float(i), 1.0]) for i in range(2)]
     vec20 = [(i, [float(i), 1.0]) for i in range(20)]
-    plan2 = _kcenter_step(
-        src, vec2, "vec_id", "embedding"
-    )._jdf.queryExecution().optimizedPlan().toString()
-    plan20 = _kcenter_step(
-        src, vec20, "vec_id", "embedding"
-    )._jdf.queryExecution().optimizedPlan().toString()
+    plan2 = _kcenter_step(src, vec2)._jdf.queryExecution().optimizedPlan().toString()
+    plan20 = _kcenter_step(src, vec20)._jdf.queryExecution().optimizedPlan().toString()
     for plan in (plan2, plan20):
         assert "isin" not in plan.lower()
         assert plan.count("array_contains") == 1

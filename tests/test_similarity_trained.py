@@ -113,7 +113,7 @@ def test_ivf_partitioned_probe_prunes(spark, emb, tmp_path):
     import pyspark.sql.functions as F
 
     cents = KM.train_kmeans(emb, k=16, iters=2)
-    assigned = KM.assign_ids(emb, cents, metric="cos")
+    assigned = KM.assign_ids(emb, cents)
     out = str(tmp_path / "ivf_index")
     assigned.write.partitionBy("cent_id").parquet(out)
     back = spark.read.parquet(out)

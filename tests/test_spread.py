@@ -13,6 +13,8 @@ Contract under test:
 * query filters still reach the parquet scan below the spread exchange;
 * no engine code calls ``repartition`` outside spread() (lint).
 * no engine code calls ``dot_arrow`` outside operators/ (lint).
+* no public operator keeps a ``*_col`` parameter that callers outside
+  tests/ only ever set to one value (lint).
 """
 
 from __future__ import annotations
@@ -244,3 +246,117 @@ def test_dot_arrow_only_under_operators():
         "dot_arrow outside operators/ — score through "
         f"similarity.cosine_pair_scores / cosine_probe_scores: {stray}"
     )
+
+
+# -- lint: no column-name parameter with one value in use ---------------------
+
+_REPO = os.path.dirname(_ENGINE)
+
+# (module under operators/, function, parameter) -> why it stays settable
+# although no caller outside tests/ sets it.  An entry without a reason is
+# rejected.
+_COL_PARAMS_KEPT: dict[tuple[str, str, str], str] = {
+    ("events.py", "list_events", "ts_col"): (
+        "perfbench/workloads.py passes it by keyword, and the benchmark's "
+        "calls keep their signatures"
+    ),
+    ("kmeans.py", "distortion", "vec_col"): (
+        "a quality measure with no engine caller: tests score the PQ "
+        "sub-codebooks on their '_sub' slices"
+    ),
+}
+_REQUIRED = object()
+_DYNAMIC = object()
+
+
+def _col_params():
+    """(module, function, parameter) -> (positional index or None,
+    default or ``_REQUIRED``) for every ``*_col`` parameter of a public
+    function under operators/."""
+    out = {}
+    for path in sorted(glob.glob(os.path.join(_ENGINE, "operators", "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            defaults = [_REQUIRED] * (len(pos) - len(a.defaults)) + [
+                ast.literal_eval(d) for d in a.defaults
+            ]
+            named = list(zip(pos, defaults)) + [
+                (p.arg, _REQUIRED if d is None else ast.literal_eval(d))
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            ]
+            for i, (name, default) in enumerate(named):
+                if name.endswith("_col"):
+                    key = (os.path.basename(path), fn.name, name)
+                    out[key] = (i if i < len(pos) else None, default)
+    return out
+
+
+def _caller_values(params) -> dict:
+    """Parameter -> the values callers outside tests/ pass: a literal's
+    value, the default when the argument is omitted, or ``_DYNAMIC`` for
+    anything not a literal (a variable, an expression, ``*args`` or
+    ``**kwargs``)."""
+    sources = [
+        p
+        for pattern in ("basin_cli_spark/**/*.py", "scripts/*.py", "perfbench/*.py",
+                        "bench.py")
+        for p in glob.glob(os.path.join(_REPO, pattern), recursive=True)
+    ]
+    seen = {key: [] for key in params}
+    by_fn = {}
+    for key in params:
+        by_fn.setdefault(key[1], []).append(key)
+    for path in sources:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "attr", None) or getattr(node.func, "id", None)
+            for key in by_fn.get(name, ()):
+                idx, default = params[key]
+                if any(isinstance(x, ast.Starred) for x in node.args) or any(
+                    kw.arg is None for kw in node.keywords
+                ):
+                    seen[key].append(_DYNAMIC)
+                    continue
+                arg = next((kw.value for kw in node.keywords if kw.arg == key[2]), None)
+                if arg is None and idx is not None and idx < len(node.args):
+                    arg = node.args[idx]
+                if arg is None:
+                    seen[key].append(default)
+                    continue
+                try:
+                    seen[key].append(ast.literal_eval(arg))
+                except ValueError:
+                    seen[key].append(_DYNAMIC)
+    return seen
+
+
+def test_col_params_have_two_values_in_use():
+    """A column-name parameter earns its place only when callers outside
+    tests/ set it to a value other than its default (for a parameter
+    without one: to two different values).  Otherwise the operator reads
+    the column by name, as ``cosine_pair_scores`` reads ``vec_id``."""
+    for key, reason in _COL_PARAMS_KEPT.items():
+        assert isinstance(reason, str) and reason.strip(), key
+    params = _col_params()
+    unused = []
+    for key, values in _caller_values(params).items():
+        if key in _COL_PARAMS_KEPT or _DYNAMIC in values:
+            continue
+        default = params[key][1]
+        other = {repr(v) for v in values if v is not default and v != default}
+        if len(other) < (1 if default is not _REQUIRED else 2):
+            unused.append(key)
+    assert not unused, (
+        "column parameters with one value in use — read the column by "
+        f"name, or keep it with a reason in _COL_PARAMS_KEPT: {sorted(unused)}"
+    )
+    stale = set(_COL_PARAMS_KEPT) - set(params)
+    assert not stale, f"_COL_PARAMS_KEPT entries with no parameter: {stale}"

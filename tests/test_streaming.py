@@ -598,7 +598,7 @@ def test_quality_gate_state_is_o_gates_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(shard_dir)
     )
-    agg = quality_score(docs, "text", "doc_id").groupBy("gate").agg(
+    agg = quality_score(docs).groupBy("gate").agg(
         F.count(F.lit(1)).alias("n")
     )
     q = (
