@@ -25,6 +25,8 @@ distortion win.
 
 from __future__ import annotations
 
+import json
+import os
 from typing import Iterator
 
 import numpy as np
@@ -205,6 +207,104 @@ def assign_ids(df: DataFrame, cents: np.ndarray) -> DataFrame:
         return pd.Series(a.astype(np.int64))
 
     return df.withColumn("cent_id", _assign(F.col("embedding")))
+
+
+def pq_adc_distances(
+    df: DataFrame, books: np.ndarray, query_vec_id: int
+) -> DataFrame:
+    """Product-quantization ADC: ``(vec_id, dist)`` for every vector but
+    the query, ``dist`` unrounded.  ``books`` is an (m, k, sub_dim)
+    array of per-subspace codebooks.  Each vector is encoded by argmin
+    L2^2 per subspace (ties to the lower code) and costs m lookups in
+    the query's m x k distance table, summed in subspace order.  One
+    narrow Arrow pass: no shuffle and no join."""
+    m, _, sub_dim = books.shape
+    qv = np.asarray(
+        df.where(F.col("vec_id") == query_vec_id).select("embedding").head()[0],
+        dtype=np.float64,
+    )
+    # query-to-centroid table: dtab[mi][code] = ||q_sub - c||^2
+    dtab = np.stack(
+        [
+            ((books[mi] - qv[mi * sub_dim : (mi + 1) * sub_dim][None, :]) ** 2).sum(
+                axis=1
+            )
+            for mi in range(m)
+        ]
+    )
+
+    @F.pandas_udf("double")
+    def _adc(vs: pd.Series) -> pd.Series:
+        if len(vs) == 0:
+            return pd.Series([], dtype="float64")
+        V = np.stack(vs.to_list()).astype(np.float64)
+        total = np.zeros(len(V))
+        for mi in range(m):
+            sub = V[:, mi * sub_dim : (mi + 1) * sub_dim]
+            d2 = (
+                (sub * sub).sum(axis=1)[:, None]
+                - 2 * sub @ books[mi].T
+                + (books[mi] * books[mi]).sum(axis=1)[None, :]
+            )
+            total += dtab[mi][np.argmin(d2, axis=1)]
+        return pd.Series(total)
+
+    return df.where(F.col("vec_id") != query_vec_id).select(
+        "vec_id", _adc(F.col("embedding")).alias("dist")
+    )
+
+
+# Trained codebooks follow the faiss-style index lifecycle: TRAIN once per
+# corpus (scripts/gen_codebooks.py -> the Lloyd iterations above), SAVE
+# as a committed artifact, LOAD at query time — serving never retrains.
+# Freezing makes the probe path fully deterministic, so the DuckDB oracle
+# can replay assignment + probe from the same literal centroid arrays;
+# tests/test_similarity_trained.py pins that retraining reproduces the
+# artifact, keeping the training path wired to what serving loads.
+CODEBOOKS_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "fixtures", "codebooks.json",
+)
+# The artifact is keyed on this integer corpus fingerprint of the
+# embeddings table, which both engines compute identically, so one file
+# serves every fixture scale and a foreign corpus fails loudly.
+CORPUS_KEY_SQL = "CAST(SUM(vec_id * label) AS BIGINT)"
+# q_dedup_semantic_ivf drops IVF cells wider than MAX_CELL rows, so a
+# corpus above 16 x MAX_CELL vectors trains k ~ sqrt(n) cells instead of 16.
+MAX_CELL = 4096
+
+
+def corpus_key(e: DataFrame) -> int:
+    """CORPUS_KEY_SQL over the embeddings table ``e``."""
+    return e.selectExpr(CORPUS_KEY_SQL).head()[0]
+
+
+def codebook_artifact() -> dict:
+    """The frozen artifact: corpus key -> ``ivf``/``pq`` centroids and
+    the parameters they were trained with."""
+    with open(CODEBOOKS_PATH) as f:
+        return json.load(f)
+
+
+def save_codebook_artifact(art: dict) -> None:
+    """Write ``art`` (codebook_artifact's form) as the frozen artifact."""
+    with open(CODEBOOKS_PATH, "w") as f:
+        json.dump(art, f)
+
+
+_FROZEN: dict[tuple[str, int], np.ndarray] = {}
+
+
+def frozen_codebook(e: DataFrame, kind: str) -> np.ndarray:
+    """The frozen codebook of the embeddings table ``e``, in artifact
+    order: ``kind`` "ivf" is the (k, dim) IVF list codebook, "pq" the
+    (m, k, sub_dim) PQ subspace codebooks.  Loaded once per process."""
+    key = (kind, corpus_key(e))
+    if key not in _FROZEN:
+        _FROZEN[key] = np.asarray(
+            codebook_artifact()[str(key[1])][kind], dtype=np.float64
+        )
+    return _FROZEN[key]
 
 
 def train_pq_codebooks(

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from basin_cli_spark.operators.kmeans import assign_ids
 from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.session import persist_once
 
@@ -724,81 +725,48 @@ def cosine_topk_lsh_multiprobe(
     return _probe_rerank(df, q, query_vec_id, k, _MULTIPROBE_BITS)
 
 
-def cosine_topk_ivf(
-    df: DataFrame, query_vec_id: int, k: int = 5, nprobe: int = 2
-) -> DataFrame:
-    """ANN via IVF probe: the query ranks the codebook, visits only its
-    nprobe nearest inverted lists, and scores exactly inside them.  At
-    100 TB the assignment's cent_id is the partition key, so a probe scans
-    nprobe/|codebook| of the corpus.
-
-    The demo codebook is a deterministic stride sample CAPPED at 256
-    rows (``id % 25 == 0 AND id < 25 * 256``
-    — a closed predicate both engines replay, unlike LIMIT, which is
-    order-free), so the broadcast side is constant-size no matter how
-    large the corpus grows.  Production routes to the trained frozen
-    codebook (q_similarity_ann_ivf_trained), which is k-sized by
-    construction."""
-    df = df.where(F.col("embedding").isNotNull())
-    # persisted: the probe and the assignment broadcast both consume the
-    # stride codebook, and the modulo predicate cannot push down, so each
-    # consumer would otherwise re-read the full vector column to filter
-    cents = persist_once(
+def stride_codebook(df: DataFrame) -> np.ndarray:
+    """The demo IVF codebook the DuckDB oracle can replay: the non-NULL
+    embeddings of every 25th vector id, CAPPED at 256 rows by the closed
+    predicate ``vec_id < 25 * 256`` (unlike LIMIT, which is order-free),
+    which reaches the parquet scan.  Rows come in DESCENDING ``vec_id``
+    order: cosine_topk_ivf gives ties to the lower codebook index, which
+    is then the larger id, the stride oracle's ``cent_id DESC`` rule."""
+    rows = (
         df.where(
-            (F.col("vec_id") % _IVF_STRIDE == 0)
+            F.col("embedding").isNotNull()
+            & (F.col("vec_id") % _IVF_STRIDE == 0)
             & (F.col("vec_id") < _IVF_STRIDE * _IVF_MAX_CENTS)
-        ).select(
-            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
         )
+        .select("vec_id", "embedding")
+        .collect()
     )
+    rows.sort(key=lambda r: -r.vec_id)
+    return np.array([r.embedding for r in rows], dtype=np.float64)
+
+
+def cosine_topk_ivf(
+    df: DataFrame, cents: np.ndarray, query_vec_id: int, k: int, nprobe: int
+) -> DataFrame:
+    """ANN via IVF probe over the (n_cells, dim) codebook ``cents``: the
+    query ranks the codebook on the driver, every vector is assigned its
+    max-cosine cell (kmeans.assign_ids), and only the vectors in the
+    ``nprobe`` best cells are scored exactly.  Ties in both the probe and
+    the assignment go to the lower codebook index, so the caller picks
+    the tie rule by the order of ``cents``.  One narrow Arrow pass and a
+    TakeOrderedAndProject: the corpus is never shuffled, and at 100 TB
+    the assignment's cell is the partition key, so a probe scans
+    nprobe/n_cells of the corpus."""
+    df = df.where(F.col("embedding").isNotNull())
     q = df.where(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("_q_emb")
     )
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .select(
-            "cent_id",
-            F.struct(
-                cosine(F.col("cvec"), F.col("_q_emb")).alias("sim"),
-                F.col("cent_id").alias("cent_id"),
-            ).alias("sc"),
-        )
-        .orderBy(F.col("sc").desc())
-        .limit(nprobe)
-        .select("cent_id")
-    )
-    # IVF build + probe in ONE shuffle: score every vector against the
-    # broadcast codebook, keep the argmax centroid via max(struct) while
-    # carrying the vector itself with first() — no join-back to recover the
-    # embedding (the naive plan's sort-merge self-join is the thing that
-    # doesn't survive a 100 TB corpus).  Exact re-scoring then touches only
-    # the nprobe probed lists.  Assignment is corpus x codebook pairs, so
-    # it scores with the pre-normed cosine of cosine_probe_scores.
-    cents_n = cents.select(
-        "cent_id", "cvec", norm_sq(F.col("cvec")).alias("_c_n2")
-    )
-    scored = (
-        spread(df, "vec_id")
-        .select("vec_id", "embedding", norm_sq(F.col("embedding")).alias("_v_n2"))
-        .crossJoin(F.broadcast(cents_n))
-        .select(
-            F.col("vec_id"),
-            F.col("embedding"),
-            F.struct(
-                _normed_cosine(
-                    F.col("embedding"), F.col("cvec"),
-                    F.col("_v_n2"), F.col("_c_n2"),
-                ).alias("sim"),
-                F.col("cent_id").alias("cent_id"),
-            ).alias("sc"),
-        )
-    )
-    assign = scored.groupBy("vec_id").agg(
-        F.max("sc")["cent_id"].alias("cent_id"),
-        F.first("embedding").alias("embedding"),
-    )
-    cand = assign.join(F.broadcast(probe), "cent_id", "left_semi").where(
-        F.col("vec_id") != query_vec_id
+    qv = np.asarray(q.head()[0], dtype=np.float64)
+    cn = cents / np.maximum(np.linalg.norm(cents, axis=1), 1e-300)[:, None]
+    sims = cn @ (qv / np.linalg.norm(qv))
+    probe = [int(i) for i in np.argsort(-sims, kind="stable")[:nprobe]]
+    cand = assign_ids(df, cents).where(
+        F.col("cent_id").isin(probe) & (F.col("vec_id") != query_vec_id)
     )
     return rerank_topk(cand.crossJoin(F.broadcast(q)), k)
 

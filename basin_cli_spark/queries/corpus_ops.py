@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from basin_cli_spark.operators import curation as C
 from basin_cli_spark.operators import dedup as D
+from basin_cli_spark.operators import kmeans as KM
 from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import vec_str
@@ -1862,66 +1863,25 @@ LIMIT 10
 def q_similarity_pq_adc(spark, sf_dir):
     """Product-quantization ANN with asymmetric distance (ADC): 8
     subspaces x 8 dims, a 16-entry codebook per subspace (deterministic:
-    the subvectors of vec_id 0..15 — a k-means codebook would drop in
-    unchanged), codes = per-subspace argmin L2^2.  At query time only the
-    8x16 query-to-centroid table is computed; every stored vector's
-    distance is 8 table lookups — the memory layout that makes
-    billion-vector ANN fit in RAM.  The codebook and the 128-row query
-    table are broadcast; codes are a (vec_id, m) hash-agg; nothing wide
-    ever carries raw vectors."""
+    the subvectors of vec_id 0..15, code = vec_id), codes = per-subspace
+    argmin L2^2.  At query time only the 8x16 query-to-centroid table is
+    computed; every stored vector's distance is 8 table lookups — the
+    memory layout that makes billion-vector ANN fit in RAM.  The PQ-ADC
+    kernel (kmeans.pq_adc_distances) is the one
+    q_similarity_pq_adc_trained runs on its Lloyd-trained codebooks; only
+    the codebook differs.  One narrow Arrow pass over the vectors: no
+    shuffle, no join.  The oracle orders by the UNROUNDED distance, so
+    the tail rounds after the limit."""
+    import numpy as np
+
     e = load_table(spark, sf_dir, "embeddings")
-    v = F.transform("embedding", lambda x: x.cast("double"))
-    base = spread(e, "vec_id").select("vec_id", v.alias("v"))
-    sub = base.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(7)),
-                lambda m: F.slice("v", m * 8 + 1, 8),
-            )
-        ).alias("m", "s"),
+    rows = sorted(
+        e.where(F.col("vec_id") < 16).select("vec_id", "embedding").collect()
     )
-    cb = sub.where(F.col("vec_id") < 16).select(
-        F.col("m").alias("cb_m"),
-        F.col("vec_id").cast("int").alias("code"),
-        F.col("s").alias("cs"),
-    )
-    d2 = F.aggregate(
-        F.zip_with("s", "cs", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    d = sub.join(F.broadcast(cb), F.col("m") == F.col("cb_m")).select(
-        "vec_id", "m", "code", d2.alias("d2")
-    )
-    codes = (
-        d.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("d2", "code")).alias("best"))
-        .select("vec_id", "m", F.col("best.code").alias("code"))
-    )
-    qd = d.where(F.col("vec_id") == 42).select(
-        F.col("m").alias("q_m"), F.col("code").alias("q_code"),
-        F.col("d2").alias("qd2"),
-    )
-    adc = (
-        codes.join(
-            F.broadcast(qd),
-            (F.col("m") == F.col("q_m")) & (F.col("code") == F.col("q_code")),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("m", "qd2"))),
-                    lambda x: x["qd2"],
-                ),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            ).alias("dist")
-        )
-    )
+    V = np.array([r.embedding for r in rows], dtype=np.float64)
+    books = V.reshape(len(rows), 8, 8).transpose(1, 0, 2)  # (m, code, sub)
     return (
-        adc.where(F.col("vec_id") != 42)
+        KM.pq_adc_distances(e, books, 42)
         .orderBy("dist", "vec_id")
         .limit(10)
         .select("vec_id", F.round("dist", 6).alias("adc_dist"))

@@ -9,12 +9,10 @@ results match bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
-import pandas as pd
 from pyspark.sql import functions as F
 
 from basin_cli_spark.operators import dedup as D
+from basin_cli_spark.operators import kmeans as KM
 from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.operators import similarity as S
 from basin_cli_spark.operators import text as TX
@@ -1077,70 +1075,16 @@ LIMIT 5
 
 @register("q_similarity_ann_ivf", _IVF_ORACLE)
 def q_similarity_ann_ivf(spark, sf_dir):
-    """IVF-bucketed ANN: deterministic codebook, argmax-cosine assignment,
-    nprobe=2 probe, exact rescoring inside the probed lists.
-
-    This variant keeps the SQL-replayable stride codebook so the DuckDB
-    oracle can verify the whole pipeline exactly; the production codebook
-    path is q_similarity_ann_ivf_trained (Lloyd iterations — iterative,
-    hence rows-only checked, with recall/distortion pytest coverage in
-    tests/test_similarity_trained.py)."""
+    """IVF-bucketed ANN: argmax-cosine assignment, nprobe=2 probe, exact
+    rescoring inside the probed lists.  The IVF kernel
+    (similarity.cosine_topk_ivf) is the one q_similarity_ann_ivf_trained
+    runs; only the codebook differs.  This entry feeds it the
+    SQL-replayable stride codebook (similarity.stride_codebook, in
+    descending cent_id order for the oracle's ``cent_id DESC`` ties), so
+    the DuckDB oracle replays the whole pipeline from the fixture alone;
+    the trained entry feeds it the frozen Lloyd codebook."""
     e = load_table(spark, sf_dir, "embeddings")
-    return S.cosine_topk_ivf(e, query_vec_id=0, k=5, nprobe=2)
-
-
-# Trained codebooks follow the faiss-style index lifecycle: TRAIN once per
-# corpus (scripts/gen_codebooks.py -> Lloyd iterations in
-# operators/kmeans.py), SAVE as a committed artifact
-# (fixtures/codebooks.json), LOAD at query time — serving never retrains.
-# Freezing makes the probe path fully deterministic, so the DuckDB oracle
-# can replay assignment + probe from the same literal centroid arrays;
-# tests/test_similarity_trained.py pins that retraining reproduces the
-# artifact, keeping the training path wired to what serving loads.
-
-def _codebook_artifact() -> dict:
-    import json
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        "fixtures", "codebooks.json",
-    )
-    with open(path) as f:
-        return json.load(f)
-
-
-_CODEBOOK_CACHE: dict[tuple, object] = {}
-
-
-def _embeddings_corpus_key(e) -> int:
-    """Integer corpus fingerprint both engines compute identically —
-    selects the right frozen codebook for this fixture."""
-    return e.agg(
-        F.sum(F.col("vec_id") * F.col("label")).cast("long")
-    ).collect()[0][0]
-
-
-def _frozen_ivf_codebook(e):
-    import numpy as np
-
-    key = ("ivf", _embeddings_corpus_key(e))
-    if key not in _CODEBOOK_CACHE:
-        _CODEBOOK_CACHE[key] = np.asarray(
-            _codebook_artifact()[str(key[1])]["ivf"], dtype=np.float64
-        )
-    return _CODEBOOK_CACHE[key]
-
-
-def _frozen_pq_codebooks(e):
-    import numpy as np
-
-    key = ("pq", _embeddings_corpus_key(e))
-    if key not in _CODEBOOK_CACHE:
-        _CODEBOOK_CACHE[key] = np.asarray(
-            _codebook_artifact()[str(key[1])]["pq"], dtype=np.float64
-        )
-    return _CODEBOOK_CACHE[key]
+    return S.cosine_topk_ivf(e, S.stride_codebook(e), 0, 5, 2)
 
 
 def _list_lit(vals) -> str:
@@ -1149,9 +1093,9 @@ def _list_lit(vals) -> str:
 
 def _frozen_assign_ctes() -> str:
     """cents_all/ck/assign CTEs: the frozen IVF codebook selected by the
-    corpus fingerprint (_embeddings_corpus_key) and each vector's
+    corpus fingerprint (kmeans.CORPUS_KEY_SQL) and each vector's
     argmax-cosine cell, ties to the smaller cent_id."""
-    art = _codebook_artifact()
+    art = KM.codebook_artifact()
     rows = ", ".join(
         f"({key}, {ci}, {_list_lit(cv)})"
         for key, entry in sorted(art.items())
@@ -1161,7 +1105,7 @@ def _frozen_assign_ctes() -> str:
     return f"""cents_all(key, cent_id, cvec) AS (VALUES {rows}),
 ck AS (
   SELECT cent_id, cvec FROM cents_all
-  WHERE key = (SELECT CAST(SUM(vec_id * label) AS BIGINT) FROM embeddings)
+  WHERE key = (SELECT {KM.CORPUS_KEY_SQL} FROM embeddings)
 ),
 assign AS (
   SELECT vec_id, cent_id FROM (
@@ -1297,7 +1241,7 @@ ORDER BY vec_a, vec_b
 
 
 @register("q_dedup_semantic_ivf", _semantic_ivf_oracle())
-def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
+def q_dedup_semantic_ivf(spark, sf_dir):
     """SemDeDup-style cluster-scoped embedding dedup (Abbas et al. 2023,
     public): assign every vector to its frozen IVF cell, generate
     candidate pairs ONLY within a cell, verify with exact cosine at the
@@ -1308,7 +1252,7 @@ def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
     per-cell co-partitioned work with zero bands and zero signature
     state — the shape SemDeDup runs at web scale.  Cell width is
     hard-bounded: similarity.drop_hot_cells removes cells wider than
-    `max_cell` before the quadratic self-join (the doctrine of
+    kmeans.MAX_CELL rows before the quadratic self-join (the doctrine of
     drop_hot_buckets, a standalone operator the LSH path does not
     apply) — a degenerate hot cell
     (duplicate-heavy crawl, zero vectors) is template content whose
@@ -1319,11 +1263,10 @@ def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
     finds any-band collisions across the whole corpus; cluster scoping
     only compares within a cell — the standard recall/cost trade both
     families document."""
-    from basin_cli_spark.operators import kmeans as KM
     from basin_cli_spark.operators.similarity import drop_hot_cells
 
     e = load_table(spark, sf_dir, "embeddings")
-    cents = _frozen_ivf_codebook(e)
+    cents = KM.frozen_codebook(e, "ivf")
     # slim (vec_id, cent_id) assignment feeds both self-join sides;
     # persisted so the Arrow assignment kernel runs once (same rationale
     # as sign_lsh_pairs' signature table) — 16 bytes/row.  The persist
@@ -1355,7 +1298,7 @@ def q_dedup_semantic_ivf(spark, sf_dir, max_cell=4096):
         KM.assign_ids(e, cents).select("vec_id", "cent_id")
     )
     assigned = persist_once(
-        spread(drop_hot_cells(raw_assigned, max_cell), "vec_id")
+        spread(drop_hot_cells(raw_assigned, KM.MAX_CELL), "vec_id")
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     pairs = a.join(
@@ -1384,7 +1327,7 @@ def _pq_trained_oracle() -> str:
     frozen per-subspace codebooks.  The per-vector total folds the m
     subspace lookups in mi order (LIST_REDUCE over LIST(... ORDER BY mi)),
     the same sequential accumulation the Spark kernel performs."""
-    art = _codebook_artifact()
+    art = KM.codebook_artifact()
     rows = ", ".join(
         f"({key}, {mi}, {code}, {_list_lit(cv)})"
         for key, entry in sorted(art.items())
@@ -1398,7 +1341,7 @@ def _pq_trained_oracle() -> str:
 WITH books_all(key, mi, code, c) AS (VALUES {rows}),
 bk AS (
   SELECT mi, code, c FROM books_all
-  WHERE key = (SELECT CAST(SUM(vec_id * label) AS BIGINT) FROM embeddings)
+  WHERE key = (SELECT {KM.CORPUS_KEY_SQL} FROM embeddings)
 ),
 q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 42),
 dtab AS (
@@ -1432,7 +1375,11 @@ def q_similarity_ann_ivf_trained(spark, sf_dir):
     4 distributed Lloyd iterations (operators/kmeans.py — map-side
     partial sums, driver reduce; frozen per corpus by
     scripts/gen_codebooks.py, the faiss train-save-load lifecycle),
-    nprobe=8 probe, exact cosine re-rank inside the probed lists.
+    nprobe=8 probe, exact cosine re-rank inside the probed lists.  The
+    IVF kernel (similarity.cosine_topk_ivf) is the one q_similarity_ann_ivf
+    runs on its stride codebook; here it is fed the frozen codebook
+    (kmeans.frozen_codebook) in artifact order, for the oracle's
+    ``cent_id ASC`` ties.
 
     The DuckDB oracle replays assignment + probe + re-rank from the same
     frozen centroid literals, so this is hash-verified end to end; the
@@ -1444,25 +1391,8 @@ def q_similarity_ann_ivf_trained(spark, sf_dir):
     At 100 TB: training reads the corpus iters times but moves only
     O(partitions * k) rows per pass; the assignment column is the
     partition key, so a probe scans nprobe/k of the corpus."""
-    import numpy as np
-
-    from basin_cli_spark.operators import kmeans as KM
-
     e = load_table(spark, sf_dir, "embeddings")
-    cents = _frozen_ivf_codebook(e)
-    qv = np.asarray(
-        e.where(F.col("vec_id") == 0).select("embedding").head()[0],
-        dtype=np.float64,
-    )
-    cn = cents / np.maximum(np.linalg.norm(cents, axis=1), 1e-300)[:, None]
-    sims = cn @ (qv / np.linalg.norm(qv))
-    probe = [int(i) for i in np.argsort(-sims)[:8]]
-    assigned = KM.assign_ids(e, cents)
-    cand = assigned.where(
-        F.col("cent_id").isin(probe) & (F.col("vec_id") != 0)
-    )
-    q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("_q_emb"))
-    return S.rerank_topk(cand.crossJoin(F.broadcast(q)), 10)
+    return S.cosine_topk_ivf(e, KM.frozen_codebook(e, "ivf"), 0, 10, 8)
 
 
 @register("q_similarity_pq_adc_trained", _pq_trained_oracle())
@@ -1470,54 +1400,22 @@ def q_similarity_pq_adc_trained(spark, sf_dir):
     """Product quantization with Lloyd-TRAINED per-subspace codebooks:
     8 subspaces x 8 dims, 16 codes each, 2 Lloyd iterations per subspace,
     frozen per corpus by scripts/gen_codebooks.py (train-save-load).
-    Encoding and ADC scoring are vectorized pandas_udfs — each stored
+    Encoding and ADC scoring are the PQ-ADC kernel
+    (kmeans.pq_adc_distances) q_similarity_pq_adc runs on its vec_id<16
+    sample codebook; here it is fed the frozen codebooks — each stored
     vector costs 8 table lookups against the query's 8x16 distance table,
-    the layout that fits billion-vector ANN in RAM.
+    the layout that fits billion-vector ANN in RAM.  The oracle orders by
+    the ROUNDED distance, so the tail rounds before it orders.
 
     The DuckDB oracle replays encode + ADC from the same frozen codebook
     literals (hash-verified); the training quality contract stays in
     tests/test_similarity_trained.py: trained per-subspace distortion
     beats the vec_id<16 sample codebook on every subspace, and
     retraining reproduces the frozen artifact."""
-    import numpy as np
-
     e = load_table(spark, sf_dir, "embeddings")
-    books = _frozen_pq_codebooks(e)  # (m, k, sub_dim)
-    m, k, sub_dim = books.shape
-    qv = np.asarray(
-        e.where(F.col("vec_id") == 42).select("embedding").head()[0],
-        dtype=np.float64,
-    )
-    # query-to-centroid table: dtab[mi][code] = ||q_sub - c||^2
-    dtab = np.stack(
-        [
-            ((books[mi] - qv[mi * sub_dim : (mi + 1) * sub_dim][None, :]) ** 2).sum(
-                axis=1
-            )
-            for mi in range(m)
-        ]
-    )
-
-    @F.pandas_udf("double")
-    def _adc(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype="float64")
-        V = np.stack(vs.to_list()).astype(np.float64)
-        total = np.zeros(len(V))
-        for mi in range(m):
-            sub = V[:, mi * sub_dim : (mi + 1) * sub_dim]
-            # encode: argmin L2^2 against this subspace's codebook
-            d2 = (
-                (sub * sub).sum(axis=1)[:, None]
-                - 2 * sub @ books[mi].T
-                + (books[mi] * books[mi]).sum(axis=1)[None, :]
-            )
-            total += dtab[mi][np.argmin(d2, axis=1)]
-        return pd.Series(total)
-
     return (
-        e.where(F.col("vec_id") != 42)
-        .select("vec_id", F.round(_adc(F.col("embedding")), 6).alias("adc_dist"))
+        KM.pq_adc_distances(e, KM.frozen_codebook(e, "pq"), 42)
+        .select("vec_id", F.round("dist", 6).alias("adc_dist"))
         .orderBy(F.col("adc_dist"), F.col("vec_id"))
         .limit(10)
     )
@@ -2268,10 +2166,8 @@ def q_sample_cluster_cap(spark, sf_dir):
     it; the embedding column never shuffles."""
     from pyspark.sql import Window
 
-    from basin_cli_spark.operators import kmeans as KM
-
     e = load_table(spark, sf_dir, "embeddings")
-    cents = _frozen_ivf_codebook(e)
+    cents = KM.frozen_codebook(e, "ivf")
     assigned = KM.assign_ids(e, cents).select(
         "vec_id", "cent_id", F.md5(F.col("vec_id").cast("string")).alias("_mk")
     )

@@ -29,19 +29,27 @@ from basin_cli_spark.queries._helpers import dec, dec_sum, sql_dec, sql_dec_sum
 from basin_cli_spark.sources import load_table
 
 
-def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File stream over the events fixture.  The source path must be a
+def _read_fixture_stream(
+    spark: SparkSession, sf_dir: str, table: str
+) -> DataFrame:
+    """File stream over one fixture table.  The source path must be a
     directory, so sf_dir is the basePath with a glob keeping only the
-    events file.  ``ts`` is cast to TIMESTAMP (session tz is UTC, so values
-    equal the batch loader's ntz ones) because watermarks reject ntz."""
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    df = (
+    table's file; the schema is the batch file's."""
+    name = f"{table}.parquet"
+    schema = spark.read.parquet(os.path.join(sf_dir, name)).schema
+    return (
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
+        .option("pathGlobFilter", name)
         .parquet(sf_dir)
     )
-    if isinstance(schema["ts"].dataType, T.LongType):
+
+
+def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File stream over the events fixture.  ``ts`` is cast to TIMESTAMP
+    (session tz is UTC, so values equal the batch loader's ntz ones)
+    because watermarks reject ntz."""
+    df = _read_fixture_stream(spark, sf_dir, "events")
+    if isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -250,17 +258,9 @@ def q_stream_near_dedup(spark, sf_dir):
     arrival-order winners, which no oracle can restate).  State is one
     (simhash, min, count) row per bucket, expired by the watermark at
     production rates."""
-    import os as _os
-
     from basin_cli_spark.operators.dedup import simhash_expr
 
-    path = _os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
-    docs = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = _read_fixture_stream(spark, sf_dir, "documents")
     # A single-file stream source arrives as ONE input partition per
     # micro-batch, so the per-token SimHash fold — by far the batch's
     # map cost — would run on one core; spreading first measured
@@ -316,13 +316,7 @@ def q_stream_quality_gate(spark, sf_dir):
     O(gates), not O(documents)."""
     from basin_cli_spark.operators.text import quality_score
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
-    docs = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = _read_fixture_stream(spark, sf_dir, "documents")
     # single-file stream source -> one input partition; spread the
     # per-row probe expressions across the cores
     docs = spread(docs, "doc_id")
@@ -424,20 +418,10 @@ def q_stream_ivf_assign(spark, sf_dir):
     the expensive retrain stays an offline batch job
     (scripts/gen_codebooks.py).  Oracle replays the assignment in
     batch SQL from the same frozen centroid literals."""
-    import os as _os
-
     from basin_cli_spark.operators import kmeans as KM
-    from basin_cli_spark.queries.llm_ops import _frozen_ivf_codebook
 
-    path = _os.path.join(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(path).schema
-    e_batch = load_table(spark, sf_dir, "embeddings")
-    cents = _frozen_ivf_codebook(e_batch)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
+    cents = KM.frozen_codebook(load_table(spark, sf_dir, "embeddings"), "ivf")
+    stream = _read_fixture_stream(spark, sf_dir, "embeddings")
     assigned = KM.assign_ids(stream, cents)
     stats = assigned.groupBy("cent_id").agg(
         F.count(F.lit(1)).alias("n_vectors"),
@@ -486,14 +470,12 @@ def q_stream_cdc_apply(spark, sf_dir):
     winning record, and the drained output materializes the same final
     table state the batch apply_changes produces (the oracle replays
     exactly that).  Bounded state: one tuple per live key, forever."""
-    import os as _os
-
     from basin_cli_spark.sources.cdc import _typed, parse_wal_records
     from basin_cli_spark.streaming.stateful import cdc_apply_stream
 
-    fixture = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.dirname(
-            _os.path.abspath(__file__)))),
+    fixture = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__)))),
         "fixtures",
     )
     stream = (
@@ -574,18 +556,12 @@ def q_stream_dsir_score(spark, sf_dir):
         _dsir_weight_table,
     )
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
     batch_docs = load_table(spark, sf_dir, "documents")
     ws = [0.0] * 256
     for row in _dsir_weight_table(batch_docs).collect():
         ws[int(row["b"])] = float(row["w"])
     warr = F.array(*[F.lit(w) for w in ws])
-    docs = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = _read_fixture_stream(spark, sf_dir, "documents")
     # single-file stream source -> one input partition; spread the
     # tokenize + weight-fold map work across the cores
     docs = spread(docs, "doc_id")

@@ -13,7 +13,9 @@ For each query and dir, one record:
   construction: Bloom builds, codebook loads, corpus statistics);
 * ``noop_min_s`` / ``noop_median_s`` over REPS noop-sink runs after one
   warm run, the cache cleared first as bench.py does;
-* ``plan``: the formatted physical plan, ``nodes``: its node histogram,
+* ``plan``: the formatted physical plan, ``plan_norm``: the same plan
+  with its run-to-run noise removed (normalise_plan), so two trees'
+  plans can be compared as text, ``nodes``: its node histogram,
   ``dup_python_eval``: Python-eval signatures evaluated twice;
 * ``stages``: one record per Spark stage of the fastest run, read from
   the status store (the batch analogue of Structured Streaming's
@@ -28,6 +30,7 @@ recorded with its error and also makes the exit status 1.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -67,6 +70,85 @@ def plan_text(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def _split_top(s: str) -> list[str]:
+    """Split a plan list body on the commas outside brackets."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        depth += (ch in "([") - (ch in ")]")
+        if ch == "," and depth == 0:
+            out.append(s[start:i].strip())
+            start = i + 1
+    return out + [s[start:].strip()]
+
+
+def _sort_expand_groups(plan: str, m: re.Match) -> str:
+    """Put one Expand's groups in a content-derived order.
+
+    Catalyst orders the groups of a multi-``count(distinct)`` Expand by
+    expression-id hashes, so two builds of one query can list the groups,
+    their output columns and their ``gid`` literals in either order.  Each
+    group is keyed by the names of the columns it alone keeps non-null;
+    the groups, those columns (in every list of the plan) and the ``gid``
+    literals are rewritten in that key's order."""
+    projs = [_split_top(p[1:-1]) for p in _split_top(m.group(1))]
+    outs = _split_top(m.group(2))
+    g = outs.index("gid#N")
+    var = [i for i in range(len(outs)) if i != g and any(p[i] == "null" for p in projs)]
+    order = sorted(
+        range(len(projs)),
+        key=lambda j: [outs[i] for i in var if projs[j][i] != "null"],
+    )
+    slot = dict(zip(var, dict.fromkeys(
+        i for j in order for i in var if projs[j][i] != "null"
+    )))
+    gids = {projs[j][g]: str(r) for r, j in enumerate(order)}
+
+    def permute(items: list[str]) -> list[str]:
+        return [items[slot.get(i, i)] for i in range(len(items))]
+
+    body = ", ".join(
+        "[" + ", ".join(permute(projs[j])[:g] + [gids[projs[j][g]]]
+                        + permute(projs[j])[g + 1:]) + "]"
+        for j in order
+    )
+    plan = plan.replace(
+        m.group(0), f"Arguments: [{body}], [{', '.join(permute(outs))}]"
+    )
+    # the same columns in every other list of the plan, one run of
+    # adjacent positions at a time
+    for _, run in itertools.groupby(enumerate(var), lambda t: t[1] - t[0]):
+        run = [i for _, i in run]
+        if len(run) > 1:
+            plan = plan.replace(
+                ", ".join(outs[i] for i in run),
+                ", ".join(outs[slot[i]] for i in run),
+            )
+    return re.sub(
+        r"\(gid#N = (\d+)\)",
+        lambda n: f"(gid#N = {gids.get(n.group(1), n.group(1))})",
+        plan,
+    )
+
+
+def normalise_plan(plan: str) -> str:
+    """``plan`` without its run-to-run noise: expression ids, ``plan_id``,
+    RDD ids, the numbers of PySpark's lambda variables and the checkout
+    path masked, and the distinct groups of each Expand in a
+    content-derived order.  Two builds of one query on one tree give the
+    same text; plan text alone does not (the ids and lambda numbers count
+    up with whatever the process built before, and the Expand order
+    follows the ids)."""
+    plan = plan.replace(REPO, "<repo>")
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1_N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    expand = re.compile(r"^Arguments: \[(\[.*\])\], \[(.*\bgid#N\b.*)\]$", re.M)
+    for m in list(expand.finditer(plan)):
+        plan = _sort_expand_groups(plan, m)
+    return plan
 
 
 def node_hist(plan: str) -> dict[str, int]:
@@ -143,6 +225,7 @@ def measure_one(spark, name: str, fn, sf_dir: str) -> dict:
         "noop_min_s": round(best[0], 3),
         "noop_median_s": round(statistics.median(r[0] for r in runs), 3),
         "plan": plan,
+        "plan_norm": normalise_plan(plan),
         "nodes": node_hist(plan),
         "dup_python_eval": dup_python_sigs(plan),
         "stages": [

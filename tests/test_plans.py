@@ -132,18 +132,27 @@ _NLJ_ALLOWED = {
 }
 
 
-def test_ivf_stub_codebook_cap_reaches_scan(spark, sf_dir, registry):
+def test_ivf_stub_codebook_cap_reaches_scan(spark, sf_dir, monkeypatch):
     """The stride codebook's constant bound (id < 25 * 256) must
-    reach the parquet scan as a data filter, so the codebook relation —
-    a broadcast side — is constant-size at any corpus scale (r10: the
-    last grows-with-corpus broadcast in the tree, bounded)."""
-    df = registry["q_similarity_ann_ivf"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "(vec_id#" in plan
-    # the cap constant: 25 * 256
-    assert "< 6400" in plan.replace("L", ""), (
-        "codebook cap predicate missing from the physical plan"
-    )
+    reach the parquet scan of the codebook read as a pushed filter, so
+    the codebook collected to the driver is constant-size at any corpus
+    scale (r10: the last grows-with-corpus codebook in the tree,
+    bounded)."""
+    from basin_cli_spark.operators import similarity as S
+
+    e = load_table(spark, sf_dir, "embeddings")
+    plans = []
+    collect = type(e).collect
+
+    def spy(df):
+        plans.append(plan_of(df))
+        return collect(df)
+
+    monkeypatch.setattr(type(e), "collect", spy)
+    S.stride_codebook(e)
+    [plan] = plans
+    pushed = plan.split("PushedFilters:")[1].splitlines()[0]
+    assert "LessThan(vec_id,6400)" in pushed, pushed
 
 
 def test_no_accidental_cartesian_or_nlj(spark, sf_dir, registry):
@@ -289,10 +298,13 @@ def test_q5_aqe_still_broadcasts_at_bench_scale(spark, sf_dir, registry):
     assert "BroadcastHashJoin" in plan
 
 
-def test_pq_adc_broadcasts_codebook_and_query_table(spark, sf_dir, registry):
+def test_pq_adc_plans_no_shuffle_or_join(spark, sf_dir, registry):
+    """Nothing wide carries raw vectors: the codebook and the query's
+    distance table live in the PQ-ADC kernel's closure, so the plan is
+    one narrow pass — no shuffle Exchange and no join."""
     plan = plan_of(registry["q_similarity_pq_adc"].fn(spark, sf_dir))
-    assert plan.count("BroadcastExchange") >= 2  # codebook + query table
-    assert "SortMergeJoin" not in plan
+    assert "Exchange" not in plan
+    assert "Join" not in plan
 
 
 def test_vocab_topk_is_take_ordered(spark, sf_dir, registry):

@@ -56,6 +56,40 @@ def test_anti_pattern_check_flags_cartesian_product():
     ) == "CartesianProduct:1->0"
 
 
+# Two builds of q_count_distinct_multi: Catalyst listed the Expand's
+# distinct groups in either order (excerpts of the formatted plans).
+_EXPAND_A = """(2) Expand
+Arguments: [[p#5, null, null, 0], [p#5, o_custkey#1L, null, 1], [p#5, null, o_orderstatus#2, 2]], [p#5, o_custkey#20L, o_orderstatus#21, gid#19]
+
+(3) HashAggregate
+Keys [4]: [p#5, o_custkey#20L, o_orderstatus#21, gid#19]
+Functions [2]: [partial_count(o_custkey#20L) FILTER (WHERE (gid#19 = 1)), partial_count(o_orderstatus#21) FILTER (WHERE (gid#19 = 2))]
+"""
+_EXPAND_B = """(2) Expand
+Arguments: [[p#63, null, null, 0], [p#63, o_orderstatus#60, null, 1], [p#63, null, o_custkey#59L, 2]], [p#63, o_orderstatus#78, o_custkey#79L, gid#77]
+
+(3) HashAggregate
+Keys [4]: [p#63, o_orderstatus#78, o_custkey#79L, gid#77]
+Functions [2]: [partial_count(o_custkey#79L) FILTER (WHERE (gid#77 = 2)), partial_count(o_orderstatus#78) FILTER (WHERE (gid#77 = 1))]
+"""
+
+
+def test_normalised_plan_is_one_text_per_query(spark, sf_dir):
+    """Raw plan text changes from build to build: expression ids count up,
+    and about half of q_count_distinct_multi's builds list its Expand's
+    distinct groups the other way round.  The normalised plan does not."""
+    from basin_cli_spark.queries import load_all
+
+    fn = load_all()["q_count_distinct_multi"].fn
+    plans = [measure.plan_text(fn(spark, sf_dir)) for _ in range(2)]
+    assert plans[0] != plans[1]
+    assert measure.normalise_plan(plans[0]) == measure.normalise_plan(plans[1])
+    assert measure.normalise_plan(_EXPAND_A) == measure.normalise_plan(_EXPAND_B)
+    assert measure.normalise_plan(_EXPAND_A) != measure.normalise_plan(
+        _EXPAND_A.replace("= 1)", "= 3)")
+    )
+
+
 def test_measure_two_queries_two_dirs(spark, sf_dir):
     from basin_cli_spark.queries import load_all
 

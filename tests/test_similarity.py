@@ -186,21 +186,75 @@ def test_mine_hard_negatives_null_embedding_rows_dropped(spark):
 
 
 def test_ivf_stub_codebook_is_constant_size(spark):
-    """The stride codebook caps at 256 rows, so the broadcast side
-    is constant no matter the corpus size (the last grows-with-corpus
-    broadcast in the tree, bounded in r10)."""
+    """The stride codebook caps at 256 rows, so the codebook collected to
+    the driver is constant no matter the corpus size (the last
+    grows-with-corpus codebook in the tree, bounded in r10)."""
     n = 25 * 300  # corpus large enough that the cap binds (300 > 256)
     df = spark.createDataFrame(
         [(i, [float(i % 7), float(i % 11)]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    cents = df.where(
-        (F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 25 * 256)
-    )
-    assert cents.count() == 256
-    # end-to-end: the capped plan still answers
-    out = S.cosine_topk_ivf(df, query_vec_id=0, k=3)
+    cents = S.stride_codebook(df)
+    assert cents.shape == (256, 2)
+    # descending cent_id order: the first row is vec_id 25 * 255
+    assert cents[0].tolist() == [float(6375 % 7), float(6375 % 11)]
+    # end-to-end: the capped codebook still answers
+    out = S.cosine_topk_ivf(df, cents, 0, 3, 2)
     assert out.count() <= 3
+
+
+def test_ivf_ties_go_to_lower_codebook_index(spark):
+    """Two identical codebook rows: assign_ids and the probe both pick
+    the lower index, so the probed cell is the one the vectors sit in.
+    A probe that picked the higher index would find its cell empty."""
+    from basin_cli_spark.operators import kmeans as KM
+
+    cents = np.array([[1.0, 0.0], [0.0, 1.0], [0.0, 1.0]])
+    df = spark.createDataFrame(
+        [(0, [0.0, 2.0]), (1, [0.1, 1.0]), (2, [0.2, 1.0]), (3, [1.0, 0.1])],
+        "vec_id long, embedding array<double>",
+    )
+    cells = {
+        r.vec_id: r.cent_id for r in KM.assign_ids(df, cents).collect()
+    }
+    assert cells == {0: 1, 1: 1, 2: 1, 3: 0}
+    got = [r.vec_id for r in S.cosine_topk_ivf(df, cents, 0, 5, 1).collect()]
+    assert got == [1, 2]
+
+
+def test_ivf_stride_tie_matches_oracle(spark, sf_dir, tmp_path):
+    """Identical stride centroids (vec 50 := vec 25): the stride
+    codebook's descending order makes the shared kernel's lower-index
+    ties replay the oracle's ``cent_id DESC`` rule, end to end.  The
+    query (vec 0, itself a centroid) is set equal to them too, so the
+    three-way tie decides the probe as well as the assignment: a probe
+    that broke it the other way would visit empty cells."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from basin_cli_spark.oracle import compare, duckdb_connect
+    from basin_cli_spark.queries import load_all
+
+    d = tmp_path / "sf"
+    shutil.copytree(sf_dir, d, copy_function=shutil.copyfile)
+    d.chmod(0o755)
+    path = d / "embeddings.parquet"
+    t = pq.read_table(path)
+    embs = t.column("embedding").to_pylist()
+    ids = t.column("vec_id").to_pylist()
+    embs[ids.index(50)] = embs[ids.index(0)] = embs[ids.index(25)]
+    t = t.set_column(
+        t.schema.get_field_index("embedding"), "embedding",
+        pa.array(embs, type=t.schema.field("embedding").type),
+    )
+    pq.write_table(t, path)
+    spec = load_all()["q_similarity_ann_ivf"]
+    ok, msg = compare(
+        spec.fn(spark, str(d)), duckdb_connect(str(d)).execute(spec.oracle).arrow()
+    )
+    assert ok, msg
 
 
 def test_sign_lsh_bands_match_oracle_sql(spark):
@@ -317,19 +371,16 @@ def test_hot_cell_guard_caps_semantic_ivf_blowup(spark):
 
 
 def test_semantic_ivf_fixture_cells_below_default_cap(spark, sf_dir):
-    """The fixture embeddings' widest IVF cell sits far below the 4096
-    default cap, so the capped query is byte-identical to the uncapped
-    oracle — pin that precondition so a fixture change can't silently
-    turn the cap into an oracle divergence."""
-    from basin_cli_spark.queries.llm_ops import (
-        _frozen_ivf_codebook,
-        load_table,
-    )
+    """The fixture embeddings' widest IVF cell sits far below the
+    kmeans.MAX_CELL cap, so the capped query is byte-identical to the
+    uncapped oracle — pin that precondition so a fixture change can't
+    silently turn the cap into an oracle divergence."""
     from basin_cli_spark.operators import kmeans as KM
+    from basin_cli_spark.sources import load_table
     import pyspark.sql.functions as F
 
     e = load_table(spark, sf_dir, "embeddings")
-    cents = _frozen_ivf_codebook(e)
+    cents = KM.frozen_codebook(e, "ivf")
     widest = (
         KM.assign_ids(e, cents)
         .groupBy("cent_id")
@@ -337,7 +388,7 @@ def test_semantic_ivf_fixture_cells_below_default_cap(spark, sf_dir):
         .agg(F.max("count"))
         .first()[0]
     )
-    assert widest < 4096
+    assert widest < KM.MAX_CELL
 
 
 def test_hard_negative_mining_triplet_semantics(spark, sf_dir):

@@ -138,25 +138,8 @@ def test_retraining_reproduces_frozen_artifact(emb):
     Lloyd iterations — so the artifact can never silently drift from the
     code that claims to have built it.  Regenerate with
     scripts/gen_codebooks.py after intentional kernel changes."""
-    import json
-    import os
-
-    import numpy as np
-
-    from basin_cli_spark.operators import kmeans as KM
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "fixtures", "codebooks.json",
-    )
-    with open(path) as f:
-        art = json.load(f)
-    import pyspark.sql.functions as F
-
-    key = str(
-        emb.agg(F.sum(F.col("vec_id") * F.col("label")).cast("long"))
-        .collect()[0][0]
-    )
+    art = KM.codebook_artifact()
+    key = str(KM.corpus_key(emb))
     assert key in art, f"no frozen codebook for corpus key {key}"
     entry = art[key]
     ivf = KM.train_kmeans(emb, **entry["ivf_params"])
