@@ -1,7 +1,8 @@
 """Corpus-curation operators a production training-data pipeline runs
 between raw ingest and tokenization: text normalization, deterministic
-split assignment, train/eval decontamination, chunking, and dedup
-provenance.
+split assignment, train/eval decontamination, chunking, and the
+selection steps several registry entries share (the 2pass kept-count
+check, the MAD prune, the per-group cap and DSIR scoring).
 
 These extend the reference's surface per the north star
 (/root/repo/BASELINE.json); the reference itself stops at publishing
@@ -24,11 +25,13 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from basin_cli_spark.operators.dedup import shingle_rows
+from basin_cli_spark.operators.dedup import shingle_rows, tokens
+from basin_cli_spark.operators.layout import spread
+from basin_cli_spark.session import persist_once
 
 # Java \p{Punct} and RE2 [[:punct:]] are the identical POSIX ASCII set;
 # an explicit whitespace class avoids the Java-\s-vs-RE2-\s difference
@@ -139,8 +142,6 @@ def bloom_decontaminate(
     # ~160 MB at the docstring's 1e7-shingle scale) — never the shingle
     # strings, which at that scale are GBs and would otherwise be embedded
     # in the plan as a LocalRelation shipped with every job.
-    from basin_cli_spark.session import persist_once
-
     eval_sh = persist_once(
         shingle_rows(eval_docs)
         .select("shingle")
@@ -382,11 +383,180 @@ def chunk_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-# NOTE on per-source top-k skew: an Arrow partial-top-k pre-filter
-# (mapInPandas keeping k rows per source per batch before the global
-# window) was implemented here and then REMOVED: Catalyst already infers
-# the identical filter natively — a rank-limit filter over a window makes
-# InferWindowGroupLimit (SPARK-37099) plant ``WindowGroupLimit(...,
-# Partial)`` below the Exchange, bounding what each map partition ships
-# per source without leaving the JVM.  See q_sample_per_source_cap and
-# its plan test for the pinned contract.
+def sketch_kept_ok(
+    rows: DataFrame, th: DataFrame, group: str, n: str, keep: Column,
+    lo: float, hi: float | None,
+) -> DataFrame:
+    """The check of a 2pass per-group prune: ``(group, n, kept_ok)``.
+
+    The 2pass doctrine: an exact per-group prune (a percent_rank window
+    or an exact median) moves every row of a group to one task, so a
+    group holding 10^10 rows sorts on one core.  The 2pass form takes
+    its thresholds from percentile sketches instead, in ONE hash
+    aggregation that partial-aggregates map-side; the caller builds that
+    table as ``th``, one row per group with the thresholds and the group
+    size ``n``.  Here the group-sized ``th`` broadcasts back and ``rows``
+    streams through the stateless ``keep`` predicate, so no row is
+    sorted and a giant group costs the same per row as a small one.
+
+    The output is tolerance-as-boolean: Spark's GK percentile_approx and
+    DuckDB's quantile_disc may pick adjacent order statistics, so each
+    engine asserts that its own kept count lies in ``[lo * n, hi * n]``
+    (``>= lo * n`` when ``hi`` is None), and the per-group sizes ``n``
+    must match bit for bit.  The exact form of each prune pins the gate
+    itself."""
+    kept = (
+        rows.join(F.broadcast(th), group)
+        .groupBy(group)
+        .agg(
+            F.max(n).alias(n),
+            F.sum(F.when(keep, 1).otherwise(0)).alias("_kept"),
+        )
+    )
+    k, size = F.col("_kept"), F.col(n)
+    ok = k >= lo * size if hi is None else k.between(lo * size, hi * size)
+    return kept.select(group, n, ok.alias("kept_ok"))
+
+
+def mad_prune(df: DataFrame) -> DataFrame:
+    """``df``'s rows whose ``n_chars`` lies within ``GREATEST(3 * mad, 1)``
+    of its ``source``'s median, with the ``med`` and ``mad`` columns
+    added: the robust per-source outlier gate (median and MAD have a 50%
+    breakdown point, mean and stddev 0%).
+
+    The floor matters when >50% of a source share one length: MAD is 0
+    there, and a bare ``3 * mad`` gate would keep only the exactly-median
+    rows.  Two source-keyed exact-median aggs over the slim
+    ``(source, n_chars)`` projection build a sources-sized table that
+    joins back as a filter; the rest of the row never moves."""
+    slim = df.select("source", "n_chars")
+    med = slim.groupBy("source").agg(F.median("n_chars").alias("med"))
+    mad = (
+        slim.join(med, "source")
+        .groupBy("source", "med")
+        .agg(F.median(F.abs(F.col("n_chars") - F.col("med"))).alias("mad"))
+    )
+    return df.join(mad, "source").where(
+        F.abs(F.col("n_chars") - F.col("med"))
+        <= F.greatest(3.0 * F.col("mad"), F.lit(1.0))
+    )
+
+
+def cap_per_group(
+    df: DataFrame, cols: list[str], group: str, order: list, k: int
+) -> DataFrame:
+    """``cols`` of the first ``k`` rows of each ``group`` by ``order``.
+
+    The filter on ``row_number() <= k`` is the skew escape: Catalyst's
+    InferWindowGroupLimit (SPARK-37099) plants ``WindowGroupLimit(...,
+    Partial)`` below the group-keyed Exchange, so the shuffle moves at
+    most map_partitions x k rows per group, never a dominant group's
+    share.  A hand-written Arrow partial top-k was measured equivalent
+    and removed.  tests/test_plans.py pins the partial limit."""
+    w = Window.partitionBy(group).orderBy(*order)
+    return (
+        df.select(*cols, F.row_number().over(w).alias("rn"))
+        .where(F.col("rn") <= k)
+        .select(*cols)
+    )
+
+
+# -- DSIR importance resampling (Xie et al. 2023, arXiv 2302.03169) ----------
+
+
+def dsir_bucket(col: Column | str) -> Column:
+    """The DSIR bucket of a token: md5's first 4 hex digits mod 256.  The
+    one Spark form of the bucketing (the DuckDB twin is
+    corpus_ops._dsir_ctes), so the weight table and every scorer bucket
+    alike."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.conv(F.substring(F.md5(c), 1, 4), 16, 10).cast("long") % 256
+
+
+def _dsir_bucketed(d: DataFrame) -> DataFrame:
+    """``(doc_id, is_target, b)``: one row per token of ``d``'s ``text``,
+    with the target slice (``doc_id % 20 == 0``) flagged.  The exploded
+    relation is bigger than the corpus, so it is never cached: the weight
+    table and the scorer each run this pass."""
+    is_target = F.col("doc_id") % 20 == 0
+    return spread(d, "doc_id").select(
+        "doc_id",
+        is_target.alias("is_target"),
+        F.explode(tokens("text")).alias("tok"),
+    ).select("doc_id", "is_target", dsir_bucket("tok").alias("b"))
+
+
+def dsir_weight_table(d: DataFrame) -> DataFrame:
+    """The DENSE 256-row DSIR weight table ``(b, w)`` of ``d`` (doc_id,
+    text): ``w = ln((ct+1)/(tt+256)) - ln((cr+1)/(tr+256))`` over the
+    target and raw bucket counts, four LNs of exact integers.  It is the
+    method's trained artifact: broadcast for batch scoring, or collected
+    as a literal array for stateless streaming scoring.  A bucket unseen
+    in training still gets its Laplace-smoothed weight, because a
+    serving-time scorer may meet vocabulary the training corpus never
+    produced; batch scoring inner-joins on seen buckets, so densifying
+    changes nothing there."""
+    seen = _dsir_bucketed(d).groupBy("b").agg(
+        F.sum(F.when(F.col("is_target"), 1).otherwise(0))
+        .cast("long")
+        .alias("ct"),
+        F.sum(F.when(~F.col("is_target"), 1).otherwise(0))
+        .cast("long")
+        .alias("cr"),
+    )
+    # persisted: totals and the weight projection both consume the
+    # 256-row model, and each would otherwise re-run the corpus
+    # tokenize+agg lineage beneath it
+    model = persist_once(
+        d.sparkSession.range(256)
+        .select(F.col("id").alias("b"))
+        .join(seen, "b", "left")
+        .select(
+            "b",
+            F.coalesce("ct", F.lit(0)).cast("long").alias("ct"),
+            F.coalesce("cr", F.lit(0)).cast("long").alias("cr"),
+        )
+    )
+    totals = model.agg(
+        F.sum("ct").cast("long").alias("tt"),
+        F.sum("cr").cast("long").alias("tr"),
+    )
+    return model.crossJoin(F.broadcast(totals)).select(
+        "b",
+        (
+            F.log((F.col("ct") + 1).cast("double"))
+            - F.log((F.col("tt") + 256).cast("double"))
+            - F.log((F.col("cr") + 1).cast("double"))
+            + F.log((F.col("tr") + 256).cast("double"))
+        ).alias("w"),
+    )
+
+
+def dsir_scores(d: DataFrame) -> DataFrame:
+    """``(doc_id, n_tokens, s)`` for every raw (non-target) document of
+    ``d``: ``s`` folds ``n_b * w_b`` over the document's buckets sorted by
+    bucket id (the sorted-fold determinism convention), unrounded.  Two
+    corpus passes (model build, scoring) and a 256-row broadcast; no
+    shuffle is keyed on anything larger than (doc_id, bucket)."""
+    lw = dsir_weight_table(d)
+    per_doc_bucket = (
+        _dsir_bucketed(d).where(~F.col("is_target"))
+        .groupBy("doc_id", "b")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return (
+        per_doc_bucket.join(F.broadcast(lw), "b")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n").cast("long").alias("n_tokens"),
+            F.aggregate(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(F.col("b"), (F.col("n") * F.col("w")).alias("t"))
+                    )
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x["t"],
+            ).alias("s"),
+        )
+    )

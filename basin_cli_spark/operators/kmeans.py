@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 from typing import Iterator
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
@@ -55,14 +56,29 @@ def init_centroids(
     return _collect_matrix(picked, id_col, vec_col)
 
 
-def _partial_sums(vec_col: str, cents: np.ndarray, metric: str):
-    """mapInPandas kernel: per-batch argmin/argmax assignment + per-cluster
-    (count, sum) partials.  `metric` is 'l2' (PQ) or 'cos' (IVF lists)."""
-    k, dim = cents.shape
+def _scorer(cents: np.ndarray):
+    """``(cents_t, c2, cos)`` for the codebook ``cents``: its transpose,
+    its squared row norms, and ``cos(V, dots)``, the cosine of each row
+    of ``V`` to each centroid from ``dots = V @ cents_t``.  A zero-norm
+    vector or centroid divides by 1, so it scores 0 and never NaN."""
     cents_t = cents.T.copy()
     c2 = (cents * cents).sum(axis=1)
     cnorm = np.sqrt(c2)
     cnorm[cnorm == 0.0] = 1.0  # cosine denominator only; c2 stays exact
+
+    def cos(V: np.ndarray, dots: np.ndarray) -> np.ndarray:
+        vn = np.sqrt((V * V).sum(axis=1))
+        vn[vn == 0.0] = 1.0
+        return dots / vn[:, None] / cnorm[None, :]
+
+    return cents_t, c2, cos
+
+
+def _partial_sums(vec_col: str, cents: np.ndarray, metric: str):
+    """mapInPandas kernel: per-batch argmin/argmax assignment + per-cluster
+    (count, sum) partials.  `metric` is 'l2' (PQ) or 'cos' (IVF lists)."""
+    k, dim = cents.shape
+    cents_t, c2, cos = _scorer(cents)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counts = np.zeros(k, dtype=np.int64)
@@ -73,9 +89,7 @@ def _partial_sums(vec_col: str, cents: np.ndarray, metric: str):
             V = np.stack(pdf[vec_col].to_list()).astype(np.float64)
             scores = V @ cents_t
             if metric == "cos":
-                vn = np.sqrt((V * V).sum(axis=1))
-                vn[vn == 0.0] = 1.0
-                assign = np.argmax(scores / vn[:, None] / cnorm[None, :], axis=1)
+                assign = np.argmax(cos(V, scores), axis=1)
             else:
                 # argmin L2^2 == argmax (dot - ||c||^2/2)
                 assign = np.argmax(scores - 0.5 * c2[None, :], axis=1)
@@ -158,11 +172,7 @@ def distortion(
 ) -> float:
     """Mean quantization cost: 1 - cos(v, assigned) for 'cos', squared L2
     to the assigned centroid for 'l2'.  One mapInPandas pass, scalar out."""
-    k, dim = cents.shape
-    cents_t = cents.T.copy()
-    c2 = (cents * cents).sum(axis=1)
-    cnorm = np.sqrt(c2)
-    cnorm[cnorm == 0.0] = 1.0  # cosine denominator only; c2 stays exact
+    cents_t, c2, cos = _scorer(cents)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tot, n = 0.0, 0
@@ -172,10 +182,7 @@ def distortion(
             V = np.stack(pdf[vec_col].to_list()).astype(np.float64)
             scores = V @ cents_t
             if metric == "cos":
-                vn = np.sqrt((V * V).sum(axis=1))
-                vn[vn == 0.0] = 1.0
-                sim = scores / vn[:, None] / cnorm[None, :]
-                tot += (1.0 - sim.max(axis=1)).sum()
+                tot += (1.0 - cos(V, scores).max(axis=1)).sum()
             else:
                 d2 = (V * V).sum(axis=1)[:, None] - 2 * scores + c2[None, :]
                 tot += d2.min(axis=1).sum()
@@ -192,18 +199,14 @@ def assign_ids(df: DataFrame, cents: np.ndarray) -> DataFrame:
     """Attach ``cent_id``, the max-cosine centroid of ``embedding`` — the
     IVF list assignment.  Vectorized pandas_udf; at 100 TB this column is
     the partition key that makes a probe read nprobe/k of the corpus."""
-    cents_t = cents.T.copy()
-    cnorm = np.sqrt((cents * cents).sum(axis=1))
-    cnorm[cnorm == 0.0] = 1.0
+    cents_t, _, cos = _scorer(cents)
 
     @F.pandas_udf("long")
     def _assign(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype="int64")
         V = np.stack(vs.to_list()).astype(np.float64)
-        vn = np.sqrt((V * V).sum(axis=1))
-        vn[vn == 0.0] = 1.0
-        a = np.argmax((V @ cents_t) / vn[:, None] / cnorm[None, :], axis=1)
+        a = np.argmax(cos(V, V @ cents_t), axis=1)
         return pd.Series(a.astype(np.int64))
 
     return df.withColumn("cent_id", _assign(F.col("embedding")))
@@ -279,6 +282,29 @@ def corpus_key(e: DataFrame) -> int:
     return e.selectExpr(CORPUS_KEY_SQL).head()[0]
 
 
+_KEYS: dict[tuple, int] = {}
+
+
+def _cached_corpus_key(e: DataFrame) -> int:
+    """corpus_key(e), run once per plan of ``e`` and state of its input
+    files: the memo key is the plan's semanticHash() plus (path, size,
+    mtime_ns) of each input file, so a rewritten file recomputes it.  A
+    frame without local input files is not memoised."""
+    files = []
+    try:
+        for f in e.inputFiles():
+            st = os.stat(unquote(urlparse(f).path))
+            files.append((f, st.st_size, st.st_mtime_ns))
+    except OSError:
+        files = []
+    if not files:
+        return corpus_key(e)
+    memo = (e.semanticHash(), tuple(files))
+    if memo not in _KEYS:
+        _KEYS[memo] = corpus_key(e)
+    return _KEYS[memo]
+
+
 def codebook_artifact() -> dict:
     """The frozen artifact: corpus key -> ``ivf``/``pq`` centroids and
     the parameters they were trained with."""
@@ -298,8 +324,9 @@ _FROZEN: dict[tuple[str, int], np.ndarray] = {}
 def frozen_codebook(e: DataFrame, kind: str) -> np.ndarray:
     """The frozen codebook of the embeddings table ``e``, in artifact
     order: ``kind`` "ivf" is the (k, dim) IVF list codebook, "pq" the
-    (m, k, sub_dim) PQ subspace codebooks.  Loaded once per process."""
-    key = (kind, corpus_key(e))
+    (m, k, sub_dim) PQ subspace codebooks.  Loaded once per process, and
+    a warm call runs no Spark job."""
+    key = (kind, _cached_corpus_key(e))
     if key not in _FROZEN:
         _FROZEN[key] = np.asarray(
             codebook_artifact()[str(key[1])][kind], dtype=np.float64

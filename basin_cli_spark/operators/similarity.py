@@ -763,7 +763,8 @@ def cosine_topk_ivf(
     )
     qv = np.asarray(q.head()[0], dtype=np.float64)
     cn = cents / np.maximum(np.linalg.norm(cents, axis=1), 1e-300)[:, None]
-    sims = cn @ (qv / np.linalg.norm(qv))
+    # a zero query divides by 1, as assign_ids does: every cell scores 0
+    sims = cn @ (qv / (np.linalg.norm(qv) or 1.0))
     probe = [int(i) for i in np.argsort(-sims, kind="stable")[:nprobe]]
     cand = assign_ids(df, cents).where(
         F.col("cent_id").isin(probe) & (F.col("vec_id") != query_vec_id)

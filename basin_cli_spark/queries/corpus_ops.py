@@ -232,39 +232,16 @@ WHERE ABS(d.n_chars - mad.med) <= GREATEST(3.0 * mad.mad, 1.0)
 
 @register("q_corpus_mad_prune", _MAD_PRUNE_ORACLE)
 def q_corpus_mad_prune(spark, sf_dir):
-    """Robust per-source outlier pruning: keep documents within 3 MADs
-    (median absolute deviations) of their source's median length — the
-    outlier gate that, unlike the quantile prune, does not move when a
-    crawl dumps a tail of garbage into one source (median and MAD have a
-    50% breakdown point; mean/stddev have 0%).
-
-    Scale shape: two source-keyed exact-median aggs over a slim
-    (source, n_chars) projection, producing a sources-sized thresholds
-    table that joins back as a filter; the document text never moves.
-    Both engines interpolate medians over sorted values identically.
-    At 100 TB with a skewed giant source, the medians switch to
-    percentile sketches — IMPLEMENTED as q_corpus_mad_prune_2pass
-    (two sketch aggregations, broadcast thresholds, stateless filter).
-
-    Degenerate-MAD floor: when >50% of a source's docs share one length,
-    MAD is 0 and a bare 3*mad gate would keep only exactly-median-length
-    docs — silently discarding nearly the whole source.  The threshold is
-    floored at 1 char (GREATEST(3*mad, 1)), so a zero-spread source keeps
-    its near-median docs; pinned in tests/test_curation.py."""
+    """Robust per-source outlier pruning (curation.mad_prune): keep
+    documents within GREATEST(3 * MAD, 1) of their source's median length
+    — the outlier gate that, unlike the quantile prune, does not move
+    when a crawl dumps a tail of garbage into one source.  Both engines
+    interpolate medians over sorted values identically.  At 100 TB with
+    a skewed giant source, the medians switch to percentile sketches:
+    q_corpus_mad_prune_2pass.  The floor is pinned in
+    tests/test_curation.py."""
     d = load_table(spark, sf_dir, "documents")
-    slim = d.select("source", "n_chars")
-    med = slim.groupBy("source").agg(F.median("n_chars").alias("med"))
-    mad = (
-        slim.join(med, "source")
-        .groupBy("source", "med")
-        .agg(F.median(F.abs(F.col("n_chars") - F.col("med"))).alias("mad"))
-    )
-    thresh = F.greatest(3.0 * F.col("mad"), F.lit(1.0))
-    return (
-        d.join(mad, "source")
-        .where(F.abs(F.col("n_chars") - F.col("med")) <= thresh)
-        .select("doc_id", "source", "n_chars")
-    )
+    return C.mad_prune(d).select("doc_id", "source", "n_chars")
 
 
 _MAD_2PASS_ORACLE = """
@@ -290,25 +267,15 @@ GROUP BY d.source
 
 @register("q_corpus_mad_prune_2pass", _MAD_2PASS_ORACLE)
 def q_corpus_mad_prune_2pass(spark, sf_dir):
-    """The skewed-giant-source escape for the robust MAD prune — the
-    third member of the exact-per-group-rank family rebuilt on the
-    2pass doctrine.  MAD needs two dependent medians, so this is two
-    sketch rounds, each a hash aggregation with map-side partial
-    percentile sketches and a sources-sized broadcast back: (1) sketch
-    each source's median length; (2) sketch each source's median
-    absolute deviation FROM that median; (3) stream the corpus through
-    the stateless ``|n_chars - med| <= greatest(3*mad, 1)`` filter.  No
-    per-source sort anywhere — a source holding 10^10 docs costs the
-    same per-row as a uniform one, where the exact form's per-source
-    MEDIAN buffers the whole group in one task.
-
-    Oracle is tolerance-as-boolean (the 2pass convention): approx vs
-    exact medians may sit one order statistic apart, so each engine
-    asserts its own kept count is >= 50% of the source (the floored
-    exact gate keeps 72-100% per source; an unfloored degenerate gate
-    would keep only exactly-median-length docs) and per-source doc
-    counts match bit-for-bit.  Exactness of the gate itself is covered
-    by q_corpus_mad_prune."""
+    """The skewed-giant-source escape for the robust MAD prune, checked
+    by curation.sketch_kept_ok.  MAD needs two dependent medians, so
+    this is two sketch rounds, each a hash aggregation with a
+    sources-sized broadcast back: (1) each source's median length;
+    (2) each source's median absolute deviation FROM that median.  Each
+    engine asserts it keeps >= 50% of the source (the floored exact gate
+    keeps 72-100% per source; an unfloored degenerate gate would keep
+    only exactly-median-length docs).  The exact gate is
+    q_corpus_mad_prune."""
     d = load_table(spark, sf_dir, "documents")
     slim = d.select("source", "n_chars")
     med = slim.groupBy("source").agg(
@@ -326,25 +293,10 @@ def q_corpus_mad_prune_2pass(spark, sf_dir):
             F.max("n_docs").alias("n_docs"),
         )
     )
-    kept = (
-        slim.join(F.broadcast(mad), "source")
-        .groupBy("source")
-        .agg(
-            F.max("n_docs").alias("n_docs"),
-            F.sum(
-                F.when(
-                    F.abs(F.col("n_chars") - F.col("med"))
-                    <= F.greatest(3.0 * F.col("mad"), F.lit(1.0)),
-                    1,
-                ).otherwise(0)
-            ).alias("_kept"),
-        )
+    keep = F.abs(F.col("n_chars") - F.col("med")) <= F.greatest(
+        3.0 * F.col("mad"), F.lit(1.0)
     )
-    return kept.select(
-        "source",
-        "n_docs",
-        (F.col("_kept") >= 0.5 * F.col("n_docs")).alias("kept_ok"),
-    )
+    return C.sketch_kept_ok(slim, mad, "source", "n_docs", keep, 0.5, None)
 
 
 _QPRUNE_2PASS_ORACLE = """
@@ -366,21 +318,10 @@ GROUP BY d.source
 
 @register("q_corpus_quantile_prune_2pass", _QPRUNE_2PASS_ORACLE)
 def q_corpus_quantile_prune_2pass(spark, sf_dir):
-    """The skewed-giant-source escape the exact quantile prune documents —
-    implemented, not promised: per-source p10/p90 come from ONE hash
-    aggregation whose percentile sketches partial-aggregate map-side
-    (no per-source sort, no single reducer owning a giant source), the
-    sources-sized threshold table broadcasts back, and the corpus streams
-    through a stateless range filter — document text never shuffles at
-    all, where the percent_rank window must move every row of a source
-    to one task.
-
-    Oracle is tolerance-as-boolean (the q_approx_count_distinct
-    convention): Spark's GK percentile_approx and DuckDB's quantile_disc
-    may pick adjacent order statistics, so each engine asserts its own
-    kept fraction lands in [0.70, 0.92] of the source (the exact-window
-    answer keeps ~80%); the per-source doc counts must match
-    bit-for-bit.  Exactness of the quantile gate itself is covered by
+    """The skewed-giant-source escape for the exact quantile prune,
+    checked by curation.sketch_kept_ok: per-source p10/p90 sketches, and
+    a kept fraction in [0.70, 0.92] of the source (the exact window
+    keeps ~80%).  Document text never shuffles.  The exact gate is
     q_corpus_quantile_prune."""
     d = load_table(spark, sf_dir, "documents")
     slim = d.select("source", "n_chars")
@@ -389,25 +330,8 @@ def q_corpus_quantile_prune_2pass(spark, sf_dir):
         F.percentile_approx("n_chars", 0.9, 100000).alias("hi"),
         F.count(F.lit(1)).alias("n_docs"),
     )
-    kept = (
-        slim.join(F.broadcast(th), "source")
-        .groupBy("source")
-        .agg(
-            F.max("n_docs").alias("n_docs"),
-            F.sum(
-                F.when(
-                    F.col("n_chars").between(F.col("lo"), F.col("hi")), 1
-                ).otherwise(0)
-            ).alias("_kept"),
-        )
-    )
-    return kept.select(
-        "source",
-        "n_docs",
-        F.col("_kept")
-        .between(0.70 * F.col("n_docs"), 0.92 * F.col("n_docs"))
-        .alias("kept_ok"),
-    )
+    keep = F.col("n_chars").between(F.col("lo"), F.col("hi"))
+    return C.sketch_kept_ok(slim, th, "source", "n_docs", keep, 0.70, 0.92)
 
 
 # -- Gopher-rules composite quality gate --------------------------------------
@@ -555,21 +479,15 @@ SELECT doc_id, source, n_chars FROM (
 @register("q_llm_prep_pipeline_v3", _PIPELINE_V3_ORACLE)
 def q_llm_prep_pipeline_v3(spark, sf_dir):
     """A curation recipe composed end to end and hash-verified
-    as one query: Gopher rule gate -> per-source MAD outlier prune
-    (floored threshold) -> per-source cap (k=30, content-hash order).
-    Each stage is the registered operator a user runs standalone
-    (q_corpus_gopher_rules, q_corpus_mad_prune, q_sample_per_source_cap);
-    this entry pins that they COMPOSE.
+    as one query: Gopher rule gate -> curation.mad_prune ->
+    curation.cap_per_group (k=30 per source, content-hash order), the
+    stages of q_corpus_gopher_rules, q_corpus_mad_prune and
+    q_sample_per_source_cap; this entry pins that they COMPOSE.
 
-    Scale shape, stage by stage: the gate is one narrow JVM pass
-    (higher-order array folds, no shuffle) whose slim gated output
-    (doc_id, source, n_chars, md5 sort key — text reduced to its key at
-    the gate, never carried further) is PERSISTED, because three
+    The gate's slim output (doc_id, source, n_chars, md5 sort key — text
+    reduced to its key at the gate) is PERSISTED, because three
     consumers (median, MAD, the filter+cap) would otherwise each re-run
-    the tokenize+fold gate over the corpus; the MAD thresholds are two
-    source-keyed aggs over that cached projection joined back as a
-    filter; the cap window rides the native WindowGroupLimit(Partial)
-    pre-filter below its Exchange, moving only the slim columns."""
+    the tokenize+fold gate over the corpus."""
     d = load_table(spark, sf_dir, "documents")
     sig = _gopher_signals(d, extra_cols=("source", "n_chars", "text"))
     gated = persist_once(
@@ -577,25 +495,9 @@ def q_llm_prep_pipeline_v3(spark, sf_dir):
             "doc_id", "source", "n_chars", F.md5("text").alias("_mk")
         )
     )
-    slim = gated.select("source", "n_chars")
-    med = slim.groupBy("source").agg(F.median("n_chars").alias("med"))
-    madt = (
-        slim.join(med, "source")
-        .groupBy("source", "med")
-        .agg(F.median(F.abs(F.col("n_chars") - F.col("med"))).alias("mad"))
-    )
-    thresh = F.greatest(3.0 * F.col("mad"), F.lit(1.0))
-    pruned = gated.join(madt, "source").where(
-        F.abs(F.col("n_chars") - F.col("med")) <= thresh
-    )
-    w = Window.partitionBy("source").orderBy("_mk", "doc_id")
-    return (
-        pruned.select(
-            "doc_id", "source", "n_chars",
-            F.row_number().over(w).alias("rn"),
-        )
-        .where(F.col("rn") <= 30)
-        .select("doc_id", "source", "n_chars")
+    return C.cap_per_group(
+        C.mad_prune(gated), ["doc_id", "source", "n_chars"], "source",
+        ["_mk", "doc_id"], 30,
     )
 
 
@@ -1118,22 +1020,10 @@ GROUP BY s.lang
 
 @register("q_corpus_lm_prune_2pass", _LM_PRUNE_2PASS_ORACLE)
 def q_corpus_lm_prune_2pass(spark, sf_dir):
-    """The skewed-giant-language escape for CCNet-style LM pruning —
-    implemented on the q_corpus_quantile_prune_2pass doctrine: the
-    per-language bottom-decile logprob threshold comes from ONE hash
-    aggregation whose percentile sketches partial-aggregate map-side (no
-    per-language sort, no single reducer owning a 10^10-row language),
-    the languages-sized threshold table broadcasts back, and the scored
-    corpus streams through a stateless ``avg_logprob >= lo`` filter —
-    where the exact form's percent_rank window must move every row of a
-    language to one task.
-
-    Oracle is tolerance-as-boolean (the q_corpus_quantile_prune_2pass
-    convention): Spark's GK percentile_approx and DuckDB's quantile_disc
-    may pick adjacent order statistics, so each engine asserts its own
-    kept fraction lands in [0.85, 0.97] of the language (the
-    exact-window answer keeps ~90%); per-language scored-doc counts must
-    match bit-for-bit.  Exactness of the prune itself is covered by
+    """The skewed-giant-language escape for CCNet-style LM pruning,
+    checked by curation.sketch_kept_ok: a per-language bottom-decile
+    logprob sketch, and a kept fraction in [0.85, 0.97] of the language
+    (the exact window keeps ~90%).  The exact prune is
     q_corpus_lm_prune.
 
     The scored table is persisted: both passes (threshold sketch +
@@ -1151,31 +1041,17 @@ def q_corpus_lm_prune_2pass(spark, sf_dir):
         F.percentile_approx("avg_logprob", 0.1, 100000).alias("lo"),
         F.count(F.lit(1)).alias("n_docs"),
     )
-    kept = (
-        scored.join(F.broadcast(th), "lang")
-        .groupBy("lang")
-        .agg(
-            F.max("n_docs").alias("n_docs"),
-            F.sum(
-                F.when(F.col("avg_logprob") >= F.col("lo"), 1).otherwise(0)
-            ).alias("_kept"),
-        )
-    )
-    return kept.select(
-        "lang",
-        "n_docs",
-        F.col("_kept")
-        .between(0.85 * F.col("n_docs"), 0.97 * F.col("n_docs"))
-        .alias("kept_ok"),
-    )
+    keep = F.col("avg_logprob") >= F.col("lo")
+    return C.sketch_kept_ok(scored, th, "lang", "n_docs", keep, 0.85, 0.97)
 
 
 # -- DSIR importance-resampling selection -------------------------------------
 
 def _dsir_ctes(base: str) -> str:
     """The DSIR scoring lineage as a CTE chain over any documents-shaped
-    base relation (needs doc_id, text) — shared by the standalone query
-    and the composed pipeline so both replay the identical formula."""
+    base relation (needs doc_id, text): the DuckDB twin of
+    curation.dsir_weight_table and curation.dsir_scores, shared by every
+    DSIR oracle so all replay the identical formula."""
     return f"""ds_toks AS (
   SELECT doc_id, doc_id % 20 = 0 AS is_target,
          UNNEST(LIST_FILTER(STRING_SPLIT(LOWER(text), ' '),
@@ -1235,140 +1111,20 @@ def q_corpus_dsir_select(spark, sf_dir):
     distribution MATCHING to a target — a different axis from
     q_corpus_lm_prune's within-corpus fluency gate.
 
-    Tokens hash into 256 buckets (md5-nibble idiom, replayed exactly in
-    DuckDB); both bag-of-bucket models come out of ONE corpus tokenize
-    pass as a single 256-row hash-agg with map-side partials; Laplace
-    (+1) smoothing over exact integer counts keeps the per-bucket
-    log-ratio ``ln((ct+1)/(TT+B)) - ln((cr+1)/(TR+B))`` deterministic in
-    both engines (four LNs of exact integers, subtracted in the same
-    order).  The 256-row weight table broadcasts back, each raw doc
-    folds ``n_b * w_b`` over its buckets sorted by bucket id (the
-    sorted-fold determinism convention), and the global top-100 is a
-    TakeOrderedAndProject — never a full sort.  Rounds before ranking
-    (round-before-rank convention) with doc_id as the total-order tie
-    break.
-
-    Scale shape: two corpus passes (model build, scoring) and a
-    constant 256-row broadcast — the same honest shape as the bigram LM
-    (the exploded token relation is bigger than the corpus, so it is
-    never cached); no shuffle is keyed on anything larger than
-    (doc_id, bucket)."""
+    Tokens hash into 256 buckets; both bag-of-bucket models come out of
+    ONE tokenize pass as a 256-row hash-agg (curation.dsir_weight_table)
+    and each raw doc folds its bucket weights (curation.dsir_scores).
+    The global top-100 is a TakeOrderedAndProject — never a full sort —
+    and rounds before ranking, with doc_id as the total-order tie
+    break."""
     d = load_table(spark, sf_dir, "documents")
-    scored = _dsir_scores(d)
     return (
-        scored.select(
+        C.dsir_scores(d).select(
             "doc_id", "n_tokens", F.round("s", 6).alias("iw")
         )
         .orderBy(F.desc("iw"), "doc_id")
         .limit(100)
     )
-
-
-def _dsir_bucket(col):
-    """The DSIR md5-nibble bucket of a token column — the ONE Spark
-    definition of the bucketing idiom (the DuckDB twin lives inside
-    _dsir_ctes); every batch/stream scoring site must use this so the
-    trained weight table and any scorer bucket identically."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 4), 16, 10).cast("long") % 256
-
-
-def _dsir_weight_table(d):
-    """The DENSE 256-row DSIR bucket weight table lw(b, w) from a
-    documents-shaped DataFrame — the trainable artifact of the method
-    (batch-built, then broadcast for batch scoring or collected as a
-    literal array for stateless streaming scoring).  Buckets unseen in
-    training still get their Laplace-smoothed weight
-    ln((0+1)/(tt+256)) - ln((0+1)/(tr+256)) — a SERVING-time scorer may
-    meet vocabulary the training corpus never produced, and an unseen
-    bucket's evidence is the smoothing prior, not zero.  (Batch scoring
-    inner-joins on seen buckets, so densifying changes nothing there;
-    the batch oracle keeps its sparse model CTE for the same reason.)"""
-    is_target = F.col("doc_id") % 20 == 0
-    toks = spread(d, "doc_id").select(
-        "doc_id",
-        is_target.alias("is_target"),
-        F.explode(D.tokens("text")).alias("tok"),
-    )
-    bucketed = toks.select(
-        "doc_id",
-        "is_target",
-        _dsir_bucket("tok").alias("b"),
-    )
-    seen = bucketed.groupBy("b").agg(
-        F.sum(F.when(F.col("is_target"), 1).otherwise(0))
-        .cast("long")
-        .alias("ct"),
-        F.sum(F.when(~F.col("is_target"), 1).otherwise(0))
-        .cast("long")
-        .alias("cr"),
-    )
-    spark = d.sparkSession
-    # persisted: totals and the weight projection both consume the
-    # 256-row model, and each would otherwise re-run the corpus
-    # tokenize+agg lineage beneath it
-    model = persist_once(
-        spark.range(256)
-        .select(F.col("id").alias("b"))
-        .join(seen, "b", "left")
-        .select(
-            "b",
-            F.coalesce("ct", F.lit(0)).cast("long").alias("ct"),
-            F.coalesce("cr", F.lit(0)).cast("long").alias("cr"),
-        )
-    )
-    totals = model.agg(
-        F.sum("ct").cast("long").alias("tt"),
-        F.sum("cr").cast("long").alias("tr"),
-    )
-    return model.crossJoin(F.broadcast(totals)).select(
-        "b",
-        (
-            F.log((F.col("ct") + 1).cast("double"))
-            - F.log((F.col("tt") + 256).cast("double"))
-            - F.log((F.col("cr") + 1).cast("double"))
-            + F.log((F.col("tr") + 256).cast("double"))
-        ).alias("w"),
-    )
-
-
-def _dsir_scores(d):
-    """Spark half of _dsir_ctes over any documents-shaped DataFrame
-    (doc_id, text): returns (doc_id, n_tokens, s) with the raw
-    importance sum — callers round/rank/limit."""
-    is_target = F.col("doc_id") % 20 == 0
-    lw = _dsir_weight_table(d)
-    bucketed = spread(d, "doc_id").select(
-        "doc_id",
-        is_target.alias("is_target"),
-        F.explode(D.tokens("text")).alias("tok"),
-    ).select(
-        "doc_id",
-        "is_target",
-        _dsir_bucket("tok").alias("b"),
-    )
-    per_doc_bucket = (
-        bucketed.where(~F.col("is_target"))
-        .groupBy("doc_id", "b")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    scored = (
-        per_doc_bucket.join(F.broadcast(lw), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n").cast("long").alias("n_tokens"),
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("b"), (F.col("n") * F.col("w")).alias("t"))
-                    )
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["t"],
-            ).alias("s"),
-        )
-    )
-    return scored
 
 
 _PIPELINE_V4_ORACLE_TEMPLATE = """
@@ -1404,21 +1160,17 @@ def q_llm_prep_pipeline_v4(spark, sf_dir):
     quota is the guard DSIR's global top-k lacks — a target skewed
     toward one language would otherwise evict every other language from
     the selection (the concern UniMax answers for epoch budgets, applied
-    here to selection counts).  Each stage is a registered standalone
-    operator (q_corpus_gopher_rules, q_corpus_dsir_select shares
-    _dsir_scores/_dsir_ctes literally); this entry pins that they
+    here to selection counts).  The stages are those of
+    q_corpus_gopher_rules and q_corpus_dsir_select (curation.dsir_scores,
+    _dsir_ctes) and curation.cap_per_group; this entry pins that they
     compose, the v3 doctrine.
 
-    Scale shape: the gate is one narrow JVM pass whose verdict is
-    PERSISTED as a slim (doc_id, lang) table — DSIR's two tokenize
-    passes then re-read the corpus narrowly (column-pruned parquet,
-    the boilerplate-scrub doctrine: a narrow re-scan over caching
-    corpus text) and semi-join the cached ids instead of re-running
-    the HOF gate per pass; the 256-row weight table broadcasts; the
-    per-language quota is a rank<=k filter, so Catalyst plants the
-    native WindowGroupLimit(..., Partial) below the lang-keyed Exchange
-    — a dominant language ships map_partitions x k slim rows, never its
-    corpus share.  Document text never shuffles in any stage."""
+    The gate's verdict is PERSISTED as a slim (doc_id, lang) table:
+    DSIR's two tokenize passes then re-read the corpus narrowly
+    (column-pruned parquet, the boilerplate-scrub doctrine: a narrow
+    re-scan over caching corpus text) and semi-join the cached ids
+    instead of re-running the HOF gate per pass.  Document text never
+    shuffles in any stage."""
     d = load_table(spark, sf_dir, "documents")
     # spread only the HOF-heavy gate pass; the gated narrow re-read below
     # stays on the raw scan (its semi-join probe is not CPU-bound) —
@@ -1430,14 +1182,12 @@ def q_llm_prep_pipeline_v4(spark, sf_dir):
     gated = d.select("doc_id", "text").join(
         gated_ids.select("doc_id"), "doc_id", "left_semi"
     )
-    ranked = _dsir_scores(gated).join(gated_ids, "doc_id").select(
+    ranked = C.dsir_scores(gated).join(gated_ids, "doc_id").select(
         "doc_id", "lang", "n_tokens", F.round("s", 6).alias("iw")
     )
-    w = Window.partitionBy("lang").orderBy(F.desc("iw"), "doc_id")
-    return (
-        ranked.select("*", F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") <= 30)
-        .select("doc_id", "lang", "n_tokens", "iw")
+    return C.cap_per_group(
+        ranked, ["doc_id", "lang", "n_tokens", "iw"], "lang",
+        [F.desc("iw"), "doc_id"], 30,
     )
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from basin_cli_spark.operators import curation as C
 from basin_cli_spark.operators import dedup as D
 from basin_cli_spark.operators import kmeans as KM
 from basin_cli_spark.operators.layout import spread
@@ -1833,22 +1834,10 @@ GROUP BY s.label
 
 @register("q_embedding_prototype_prune_2pass", _PROTO_PRUNE_2PASS_ORACLE)
 def q_embedding_prototype_prune_2pass(spark, sf_dir):
-    """The skewed-giant-label escape for prototype pruning — implemented
-    on the q_corpus_quantile_prune_2pass doctrine: per-label p10 of
-    proto_sim comes from ONE hash aggregation whose percentile sketches
-    partial-aggregate map-side (no per-label sort, no single reducer
-    owning a dominant label), the labels-sized threshold table
-    broadcasts back, and the corpus streams through a stateless
-    ``proto_sim >= lo`` filter — where the exact form's percent_rank
-    window must move every row of a label to one task.
-
-    Oracle is tolerance-as-boolean (the q_corpus_quantile_prune_2pass
-    convention): Spark's GK percentile_approx and DuckDB's quantile_disc
-    may pick adjacent order statistics, so each engine asserts its own
-    kept fraction lands in [0.85, 0.97] of the label (the exact-window
-    answer keeps ~90%); per-label vector counts must match
-    bit-for-bit.  Exactness of the prune itself is covered by
-    q_embedding_prototype_prune.
+    """The skewed-giant-label escape for prototype pruning, checked by
+    curation.sketch_kept_ok: a per-label p10 sketch of proto_sim, and a
+    kept fraction in [0.85, 0.97] of the label (the exact window keeps
+    ~90%).  The exact prune is q_embedding_prototype_prune.
 
     The scored table is persisted: both passes consume it, its lineage
     is expensive (centroid hash-agg + per-vector cosine), and at
@@ -1859,23 +1848,8 @@ def q_embedding_prototype_prune_2pass(spark, sf_dir):
         F.percentile_approx("proto_sim", 0.1, 100000).alias("lo"),
         F.count(F.lit(1)).alias("n_vecs"),
     )
-    kept = (
-        scored.join(F.broadcast(th), "label")
-        .groupBy("label")
-        .agg(
-            F.max("n_vecs").alias("n_vecs"),
-            F.sum(
-                F.when(F.col("proto_sim") >= F.col("lo"), 1).otherwise(0)
-            ).alias("_kept"),
-        )
-    )
-    return kept.select(
-        "label",
-        "n_vecs",
-        F.col("_kept")
-        .between(0.85 * F.col("n_vecs"), 0.97 * F.col("n_vecs"))
-        .alias("kept_ok"),
-    )
+    keep = F.col("proto_sim") >= F.col("lo")
+    return C.sketch_kept_ok(scored, th, "label", "n_vecs", keep, 0.85, 0.97)
 
 
 _HARD_NEG_ORACLE = f"""
@@ -2097,31 +2071,13 @@ def q_sample_per_source_cap(spark, sf_dir):
     md5 sort key is a uniform scramble of each source's docs, so the
     kept set is an unbiased k-sample of the source, reproducible across
     runs and engines (no RNG), and stable under appends of OTHER
-    sources.
-
-    Skew escape — NATIVE and JVM-side: because the plan filters on
-    row_number() <= k, Catalyst's InferWindowGroupLimit (SPARK-37099,
-    public Spark) inserts ``WindowGroupLimit(..., row_number(), k,
-    Partial)`` BELOW the source-keyed Exchange — a per-map-partition
-    rank <= k pre-filter — so the shuffle moves at most
-    map_partitions x k rows per source, never the corpus.  A source
-    holding 30% of a 100 TB corpus contributes bounded rows to its
-    single reducer task instead of 30 TB.  A hand-rolled Arrow
-    partial-top-k kernel was measured equivalent and removed: the
-    built-in operator is the same filter without leaving the JVM.
-    Pinned by the plan test
-    test_per_source_cap_partial_limit_before_exchange."""
-    from pyspark.sql import Window
-
+    sources.  curation.cap_per_group's partial group limit is the skew
+    escape: a source holding 30% of a 100 TB corpus ships bounded rows
+    to its single reducer task instead of 30 TB."""
     d = load_table(spark, sf_dir, "documents")
     slim = d.select("doc_id", "source", F.md5("text").alias("_mk"))
-    w = Window.partitionBy("source").orderBy("_mk", "doc_id")
-    return (
-        slim.select(
-            "doc_id", "source", F.row_number().over(w).alias("rn")
-        )
-        .where(F.col("rn") <= 50)
-        .select("doc_id", "source")
+    return C.cap_per_group(
+        slim, ["doc_id", "source"], "source", ["_mk", "doc_id"], 50
     )
 
 
@@ -2151,33 +2107,19 @@ def q_sample_cluster_cap(spark, sf_dir):
     the sample the way a dominant crawl dominates a uniform draw).
 
     Composition of two already-pinned shapes: the broadcast-codebook
-    Arrow assignment (q_dedup_semantic_ivf's front half) and the
-    per-source-cap native skew escape — the rank<=k filter makes
-    Catalyst plant WindowGroupLimit(..., Partial) below the cell-keyed
-    Exchange (SPARK-37099), so a degenerate hot cell ships at most
-    map_partitions x k rows to its reducer, never the cell.  The id
-    hash (not content hash — the vector already determined the cell) is
-    a uniform scramble within the cell, reproducible across runs and
-    engines with no RNG state.
-
-    Scale shape: one Arrow assignment pass over the vectors (broadcast
-    codebook, bounded by k_cells rows), one cell-keyed exchange carrying
-    16-byte (vec_id, cent_id) rows with the partial group-limit below
-    it; the embedding column never shuffles."""
-    from pyspark.sql import Window
-
+    Arrow assignment (q_dedup_semantic_ivf's front half) and
+    curation.cap_per_group keyed on the cell, so a degenerate hot cell
+    ships at most map_partitions x k rows to its reducer.  The id hash
+    (not content hash — the vector already determined the cell) is a
+    uniform scramble within the cell, reproducible across runs and
+    engines with no RNG state.  The embedding column never shuffles."""
     e = load_table(spark, sf_dir, "embeddings")
     cents = KM.frozen_codebook(e, "ivf")
     assigned = KM.assign_ids(e, cents).select(
         "vec_id", "cent_id", F.md5(F.col("vec_id").cast("string")).alias("_mk")
     )
-    w = Window.partitionBy("cent_id").orderBy("_mk", "vec_id")
-    return (
-        assigned.select(
-            "vec_id", "cent_id", F.row_number().over(w).alias("rn")
-        )
-        .where(F.col("rn") <= 40)
-        .select("vec_id", "cent_id")
+    return C.cap_per_group(
+        assigned, ["vec_id", "cent_id"], "cent_id", ["_mk", "vec_id"], 40
     )
 
 
@@ -2558,8 +2500,6 @@ def q_llm_prep_pipeline_v2(spark, sf_dir):
     COMPOSE — the corpus is scanned once per stage, eval shingles stay
     the broadcast side, the dup graph stays ids-only, and no stage
     shuffles the full text."""
-    from basin_cli_spark.operators import curation as C
-
     d = load_table(spark, sf_dir, "documents")
     train = d.where(F.col("doc_id") % 20 != 0)
     eval_docs = d.where(F.col("doc_id") % 20 == 0)

@@ -536,7 +536,7 @@ FROM wtok GROUP BY doc_id
 def q_stream_dsir_score(spark, sf_dir):
     """STREAMING DSIR scoring — the serving shape of importance
     resampling: the 256-bucket weight table is TRAINED in batch
-    (_dsir_weight_table, the method's artifact) and collected into a
+    (curation.dsir_weight_table, the method's artifact) and collected into a
     literal array, so the stream side is a pure per-row expression —
     tokenize, bucket, left-fold the bucket weights in token order —
     with ZERO streaming state (contrast q_stream_quality_gate's O(gates)
@@ -550,15 +550,12 @@ def q_stream_dsir_score(spark, sf_dir):
     literals are bit-identical in both engines: four LNs of exact
     integer counts, and the 256-row collect is the codebook-artifact
     pattern (k-row driver reduce, not a corpus collect)."""
+    from basin_cli_spark.operators import curation as C
     from basin_cli_spark.operators import dedup as D
-    from basin_cli_spark.queries.corpus_ops import (
-        _dsir_bucket,
-        _dsir_weight_table,
-    )
 
     batch_docs = load_table(spark, sf_dir, "documents")
     ws = [0.0] * 256
-    for row in _dsir_weight_table(batch_docs).collect():
+    for row in C.dsir_weight_table(batch_docs).collect():
         ws[int(row["b"])] = float(row["w"])
     warr = F.array(*[F.lit(w) for w in ws])
     docs = _read_fixture_stream(spark, sf_dir, "documents")
@@ -569,7 +566,7 @@ def q_stream_dsir_score(spark, sf_dir):
         "doc_id", D.tokens("text").alias("_toks")
     ).where(F.size("_toks") > 0)
     bucket_w = lambda t: F.element_at(  # noqa: E731
-        warr, (_dsir_bucket(t).cast("int")) + 1
+        warr, (C.dsir_bucket(t).cast("int")) + 1
     )
     scored = toked.select(
         "doc_id",

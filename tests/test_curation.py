@@ -386,16 +386,11 @@ def test_dsir_weight_table_dense_with_smoothed_default(spark):
     ln((0+1)/(tt+256)) - ln((0+1)/(tr+256)), not 0.0."""
     import math
 
-    from basin_cli_spark.queries.corpus_ops import (
-        _dsir_bucket,
-        _dsir_weight_table,
-    )
-
     docs = spark.createDataFrame(
         [(0, "alpha beta"), (1, "alpha gamma delta"), (2, "beta beta")],
         "doc_id long, text string",
     )
-    rows = {r["b"]: r["w"] for r in _dsir_weight_table(docs).collect()}
+    rows = {r["b"]: r["w"] for r in C.dsir_weight_table(docs).collect()}
     assert len(rows) == 256
     # exact totals from the tiny corpus: doc 0 is the target slice
     tt, tr = 2, 5
@@ -403,7 +398,7 @@ def test_dsir_weight_table_dense_with_smoothed_default(spark):
         r["b"]
         for r in spark.createDataFrame(
             [("alpha",), ("beta",), ("gamma",), ("delta",)], "tok string"
-        ).select(_dsir_bucket("tok").alias("b")).collect()
+        ).select(C.dsir_bucket("tok").alias("b")).collect()
     }
     expected_default = math.log(1.0 / (tt + 256)) - math.log(
         1.0 / (tr + 256)

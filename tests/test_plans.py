@@ -413,6 +413,14 @@ def test_pipeline_v4_partial_limit_before_exchange(spark, sf_dir, registry):
     _assert_partial_group_limit_below_exchange(plan_of(df))
 
 
+def test_pipeline_v3_partial_limit_before_exchange(spark, sf_dir, registry):
+    """The composed curation pipeline's per-source cap rides the same
+    native group limit below the source-keyed Exchange, and the whole
+    pipeline stays in the JVM."""
+    df = registry["q_llm_prep_pipeline_v3"].fn(spark, sf_dir)
+    _assert_partial_group_limit_below_exchange(plan_of(df))
+
+
 def test_2pass_prunes_have_no_rank_window(spark, sf_dir, registry):
     """The skew-safe two-pass prunes must NOT plan a per-group rank
     window (the exact forms' scale ceiling): thresholds come from a

@@ -90,6 +90,18 @@ def test_normalised_plan_is_one_text_per_query(spark, sf_dir):
     )
 
 
+def test_next_head_policy_reproduces_committed_head():
+    """The committed REPRESENTATIVE_HEAD was chosen before the newest
+    round ran: over every round but the newest, scripts/next_head.py's
+    policy gives the same 50 names in the same order."""
+    import next_head
+    from basin_cli_spark.queries import REPRESENTATIVE_HEAD, load_all
+
+    rounds = next_head.history()
+    rounds.pop(max(rounds))
+    assert next_head.next_head(list(load_all()), rounds) == REPRESENTATIVE_HEAD
+
+
 def test_measure_two_queries_two_dirs(spark, sf_dir):
     from basin_cli_spark.queries import load_all
 

@@ -8,6 +8,8 @@ kernel and the declarative HOF fold.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -198,8 +200,11 @@ def test_ivf_stub_codebook_is_constant_size(spark):
     assert cents.shape == (256, 2)
     # descending cent_id order: the first row is vec_id 25 * 255
     assert cents[0].tolist() == [float(6375 % 7), float(6375 % 11)]
-    # end-to-end: the capped codebook still answers
-    out = S.cosine_topk_ivf(df, cents, 0, 3, 2)
+    # end-to-end: the capped codebook still answers, and the zero query
+    # (vec 0) probes without a NaN score
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        out = S.cosine_topk_ivf(df, cents, 0, 3, 2)
     assert out.count() <= 3
 
 

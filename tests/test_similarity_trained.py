@@ -146,3 +146,58 @@ def test_retraining_reproduces_frozen_artifact(emb):
     assert np.allclose(ivf, np.asarray(entry["ivf"]), rtol=0, atol=1e-9)
     pq = KM.train_pq_codebooks(emb, **entry["pq_params"])
     assert np.allclose(pq, np.asarray(entry["pq"]), rtol=0, atol=1e-9)
+
+
+def _count_corpus_key(monkeypatch) -> list:
+    calls = []
+    real = KM.corpus_key
+
+    def counted(e):
+        calls.append(1)
+        return real(e)
+
+    monkeypatch.setattr(KM, "corpus_key", counted)
+    return calls
+
+
+def test_warm_frozen_codebook_runs_no_corpus_key(spark, sf_dir, monkeypatch):
+    """A warm frozen-codebook build takes the corpus key from the memo: a
+    new frame over the same unchanged files runs no corpus_key job."""
+    KM.frozen_codebook(load_table(spark, sf_dir, "embeddings"), "ivf")
+    calls = _count_corpus_key(monkeypatch)
+    for kind in ("ivf", "pq"):
+        KM.frozen_codebook(load_table(spark, sf_dir, "embeddings"), kind)
+    assert calls == []
+
+
+def test_frozen_codebook_key_follows_rewritten_file(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The memo also keys on each input file's size and mtime: a file
+    rewritten in place with another corpus recomputes the key, and that
+    corpus, absent from the artifact, still raises."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "embeddings.parquet")
+    shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), path)
+    calls = _count_corpus_key(monkeypatch)
+    for _ in range(2):
+        KM.frozen_codebook(spark.read.parquet(path), "ivf")
+    assert len(calls) == 1
+
+    t = pq.read_table(path)
+    df = t.to_pandas()
+    first_keyed = ((df["vec_id"] * df["label"]) != 0).idxmax()
+    pq.write_table(
+        pa.Table.from_pandas(
+            df.drop(index=first_keyed), schema=t.schema, preserve_index=False
+        ),
+        path,
+    )
+    with pytest.raises(KeyError):
+        KM.frozen_codebook(spark.read.parquet(path), "ivf")
+    assert len(calls) == 2
