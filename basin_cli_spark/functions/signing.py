@@ -82,10 +82,6 @@ def sign_digest(digest: bytes, private_key_hex: str) -> bytes:
     return r.to_bytes(32, "big") + s.to_bytes(32, "big") + bytes([recid])
 
 
-def sign_bytes(content: bytes, private_key_hex: str) -> bytes:
-    return sign_digest(keccak256(content), private_key_hex)
-
-
 def sign_file(path: str, private_key_hex: str, digest: bytes | None = None) -> bytes:
     """Streaming keccak256 then sign — reference signing.go:59-108
     semantics, including the empty-file error.  A caller that already

@@ -1,15 +1,12 @@
 """Tri-format timestamp parsing (reference internal/app/timestamp.go:30-48):
 unix seconds | YYYY-MM-DD | RFC3339, all normalized to UTC.  Empty input is
-the zero timestamp (None here).  Exposed both as a Python helper (CLI/config
-use) and as a Catalyst expression for columns."""
+the zero timestamp (None here).  A Python helper for the CLI's
+``--timestamp``, ``--before``, ``--after`` and ``--at`` values."""
 
 from __future__ import annotations
 
 import datetime as dt
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 _UNIX_RE = re.compile(r"^\d+$")
 
@@ -26,15 +23,3 @@ def parse_timestamp(value: str) -> dt.datetime | None:
     parsed = dt.datetime.fromisoformat(value.replace("Z", "+00:00"))
     return parsed.astimezone(dt.timezone.utc)
 
-
-def parse_timestamp_col(col: Column) -> Column:
-    """Column form: coalesce over the three formats, result in UTC."""
-    unix = F.when(
-        col.rlike("^[0-9]+$"), F.timestamp_seconds(col.try_cast("long"))
-    )
-    date_only = F.when(
-        col.rlike("^[0-9]{4}-[0-9]{2}-[0-9]{2}$"),
-        F.to_timestamp(col, "yyyy-MM-dd"),
-    )
-    rfc3339 = F.to_timestamp(col, "yyyy-MM-dd'T'HH:mm:ssXXX")
-    return F.coalesce(unix, date_only, rfc3339)

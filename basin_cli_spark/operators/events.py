@@ -266,15 +266,18 @@ def create_vault(
 
 def registered_vaults(spark, out_dir: str) -> DataFrame:
     """The vault registry as a DataFrame (latest registration per vault
-    wins, so TTL updates supersede earlier rows)."""
+    wins, so TTL updates supersede earlier rows).
+
+    The schema is explicit: inference scans the file once more before
+    the real read, and types ``cache`` as string when every vault was
+    created without a TTL."""
     import os
 
+    schema = "vault string, cache long, created_at long"
     path = os.path.join(out_dir, "vaults.jsonl")
     if not os.path.exists(path):
-        return spark.createDataFrame(
-            [], "vault string, cache long, created_at long"
-        )
-    reg = spark.read.json(path)
+        return spark.createDataFrame([], schema)
+    reg = spark.read.json(path, schema=schema)
     w_latest = F.max(F.struct("created_at", "cache")).alias("_last")
     return (
         reg.groupBy("vault")

@@ -424,51 +424,26 @@ def sign_lsh_band_sql(v: str, band: int, band_bits: int = 4) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def drop_hot_buckets(expl: DataFrame, max_bucket: int) -> DataFrame:
-    """Remove rows belonging to LSH buckets ``(band, sig)`` wider than
-    `max_bucket`.
-
-    Per-bucket pair generation is |bucket|^2: one boilerplate-heavy
-    bucket of 10^6 rows is 10^12 pairs — a job-killer no matter how well
-    the rest of the corpus behaves.  Production LSH dedup drops (or
-    routes to exact-hash dedup) buckets past a width cap: such buckets
-    are near-identical template content whose duplicates exact dedup
-    already catches at linear cost.
-
-    Count window over the bucket key (not agg+join): the pair self-join
-    partitions on the SAME (band, sig) key, so the window's Exchange is
-    reused by both join sides — measured 0.46 s -> 0.29 s on the sf0.1
-    pair-generation path, same answer (the identical reasoning as
-    drop_hot_cells).  The wide rows never reach the self-join.  A
-    standalone operator: sign_lsh_pairs does not apply it."""
-    w = Window.partitionBy("band", "sig")
-    return (
-        expl.withColumn("_bw", F.count(F.lit(1)).over(w))
-        .where(F.col("_bw") <= max_bucket)
-        .drop("_bw")
-    )
-
-
 def drop_hot_cells(assigned: DataFrame, max_cell: int) -> DataFrame:
     """Remove rows belonging to IVF cells (``cent_id``) wider than
     `max_cell`.
 
     The cluster-scoped (SemDeDup-style) candidate structure self-joins
-    within a cell, so pair count is |cell|^2 — the same quadratic blowup
-    as an LSH hot bucket, with the same pathological trigger: a
-    duplicate-heavy crawl whose vectors all land in one centroid.  Same
-    doctrine as drop_hot_buckets: cells past the cap are near-identical
-    template content whose duplicates exact-hash dedup already catches
-    at linear cost, so they're dropped from the quadratic path rather
-    than re-training with larger k mid-job.
+    within a cell, so pair count is |cell|^2: one boilerplate-heavy
+    cell of 10^6 rows is 10^12 pairs, a job-killer however well the
+    rest of the corpus behaves.  The pathological trigger is a
+    duplicate-heavy crawl whose vectors all land in one centroid.  Cells
+    past the cap are near-identical template content whose duplicates
+    exact-hash dedup already catches at linear cost, so they're dropped
+    from the quadratic path rather than re-training with larger k
+    mid-job.
 
-    Unlike LSH bucket keys (an unbounded signature space, where
-    drop_hot_buckets must use a count window), the cell key space is
-    CONSTANT-SIZE by construction — at most k rows, the trained codebook
-    width — so the keep-list is aggregated (map-side partial combine
-    folds each partition to <= k rows) and broadcast: `assigned` itself
-    is never shuffled for the cap, and the downstream pair self-join
-    keeps exactly the exchange layout it had without a cap.  This is the
+    The cell key space is CONSTANT-SIZE by construction — at most k
+    rows, the trained codebook width — so the keep-list is aggregated
+    (map-side partial combine folds each partition to <= k rows) and
+    broadcast: `assigned` itself is never shuffled for the cap, and the
+    downstream pair self-join keeps exactly the exchange layout it had
+    without a cap.  This is the
     same constant-size-broadcast class as the codebook itself (the
     hinted-only broadcast sweep in tests/test_plans.py admits it).
 

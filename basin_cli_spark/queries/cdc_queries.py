@@ -187,7 +187,7 @@ def q_muhash_digest(spark, sf_dir):
 
 @register("q_muhash_digest_by_group", _MUHASH_GROUP_ORACLE)
 def q_muhash_digest_by_group(spark, sf_dir):
-    """Per-language MuHash digests — the per-vault window digest with the
+    """Per-language MuHash digests — q_ecmh_digest_by_group with the
     multiplicative group.  Known-answer oracle; partition-independence is
     proven in tests/test_muhash.py."""
     from basin_cli_spark.functions.muhash import muhash_digest_by_group

@@ -829,11 +829,8 @@ def q_dedup_embedding(spark, sf_dir):
       (tests/test_plans.py::test_dedup_embedding_shuffle_shape asserts
       the no-broadcast shape: equi-join keys, no cartesian);
     - no hot-bucket guard runs: a duplicate-HEAVY corpus can make one
-      band bucket quadratic.  operators/similarity.drop_hot_buckets caps
-      bucket width as a standalone, tested operator
-      (tests/test_similarity.py pins the quadratic-blowup case), but
-      sign_lsh_pairs does not apply it; the fixture's buckets are
-      narrow."""
+      band bucket quadratic, and sign_lsh_pairs caps no bucket width;
+      the fixture's buckets are narrow."""
     return _embedding_dedup_pairs(spark, sf_dir)
 
 
@@ -1253,10 +1250,8 @@ def q_dedup_semantic_ivf(spark, sf_dir):
     per-cell co-partitioned work with zero bands and zero signature
     state — the shape SemDeDup runs at web scale.  Cell width is
     hard-bounded: similarity.drop_hot_cells removes cells wider than
-    kmeans.MAX_CELL rows before the quadratic self-join (the doctrine of
-    drop_hot_buckets, a standalone operator the LSH path does not
-    apply) — a degenerate hot cell
-    (duplicate-heavy crawl, zero vectors) is template content whose
+    kmeans.MAX_CELL rows before the quadratic self-join — a degenerate
+    hot cell (duplicate-heavy crawl, zero vectors) is template content whose
     duplicates exact-hash dedup catches at linear cost.  The fixture
     cells sit far below the default cap, so the oracle is unaffected;
     the cap behavior is pinned on a synthetic hot cell in

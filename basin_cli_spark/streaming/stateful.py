@@ -5,76 +5,28 @@ The reference's replicator assembles WAL records per transaction in LSN
 order and tracks the confirmed flush position across restarts (reference
 pkg/pgrepl/replicator.go:159-207, pkg/pgrepl/conn.go:47-56).  The Spark
 generalization is arbitrary per-key state kept by the engine's state
-store: here, per-table CDC progress (insert count, high-water commit LSN)
-maintained with ``applyInPandasWithState`` — state survives micro-batch
-boundaries AND restarts via the checkpoint, which is exactly the
-``confirmed_flush_lsn`` durability contract.
+store: here, the last-writer-wins row per primary key
+(``cdc_apply_stream``, ``applyInPandasWithState``).  State survives
+micro-batch boundaries AND restarts via the checkpoint (the
+Structured Streaming state-store contract, SIGMOD 2018), which is
+exactly the ``confirmed_flush_lsn`` durability contract: a re-delivered
+older transaction cannot roll a key back.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from basin_cli_spark.sources.cdc import keyed_changes
 
-PROGRESS_SCHEMA = T.StructType(
-    [
-        T.StructField("table", T.StringType(), False),
-        T.StructField("n_inserts", T.LongType(), False),
-        T.StructField("max_commit_lsn", T.LongType(), True),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_inserts", T.LongType(), True),
-        T.StructField("max_commit_lsn", T.LongType(), True),
-    ]
-)
-
-
-def _update(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n, max_lsn = state.get if state.exists else (0, None)
-    for pdf in pdfs:
-        ins = pdf[pdf["_action"] == "I"]
-        n += len(ins)
-        if len(pdf):
-            batch_max = int(pdf["_commit_lsn"].max())
-            max_lsn = batch_max if max_lsn is None else max(max_lsn, batch_max)
-    state.update((n, max_lsn))
-    yield pd.DataFrame(
-        {"table": [key[0]], "n_inserts": [n], "max_commit_lsn": [max_lsn]}
-    )
-
-
-def cdc_progress(records: DataFrame) -> DataFrame:
-    """Per-table running CDC progress over a stream of parsed WAL records
-    (sources/cdc.parse_wal_records output).  Emits one updated row per
-    table per micro-batch; state is the engine's HDFS/RocksDB state store,
-    partitioned by key — no driver-side accumulation, scales with key
-    cardinality not stream length."""
-    return records.groupBy("_table").applyInPandasWithState(
-        _update,
-        outputStructType=PROGRESS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 # NOTE: Spark 4's transformWithStateInPandas (typed state handles, timers)
 # is the successor API, but its driver worker imports protobuf
-# (pyspark/sql/streaming/proto/StateMessage_pb2), which this container
-# does not ship and cannot install — applyInPandasWithState above is the
-# supported stateful path here; the TWS port is mechanical when protobuf
-# is available.
+# (pyspark/sql/streaming/proto/StateMessage_pb2), which is not among the
+# project's dependencies — applyInPandasWithState below is the supported
+# stateful path; the TWS port is mechanical once protobuf is one.
 
 
 def cdc_apply_stream(records: DataFrame, table: str, pk: str) -> DataFrame:

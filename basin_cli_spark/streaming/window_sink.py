@@ -20,6 +20,11 @@ Delivery is at-least-once with idempotent re-publish, the same boundary the
 reference has (duplicate upload possible between upload and cleanup,
 reference internal/app/db.go:303-314) — re-running a batch id is a no-op
 because the manifest is keyed on it.
+
+A manifest row carries no multiset digest of the window's rows: the
+reference ships ECMH as a library with no consumer, and the registry's
+digest entries (q_ecmh_digest, q_muhash_digest and their by-group forms)
+are where the engine runs it.
 """
 
 from __future__ import annotations
@@ -35,7 +40,6 @@ from concurrent.futures import ThreadPoolExecutor
 import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from basin_cli_spark.functions.hashing import keccak256, keccak256_file
 from basin_cli_spark.functions.signing import sign_file
@@ -45,8 +49,7 @@ _LOG = logging.getLogger(__name__)
 
 MANIFEST_SCHEMA = (
     "batch_id long, table string, path string, cid string, "
-    "signature string, timestamp long, is_archived boolean, "
-    "ecmh_digest string, digest_algo string"
+    "signature string, timestamp long, is_archived boolean"
 )
 
 
@@ -60,23 +63,11 @@ class WindowedVaultSink:
         schemas: dict[str, list[tuple[str, str]]],
         vault: str = "ns.relation",
         private_key_hex: str | None = None,
-        digest: str | None = None,
     ) -> None:
         self.out_dir = out_dir
         self.schemas = schemas
         self.vault = vault
         self.private_key_hex = private_key_hex
-        # Opt-in per-window multiset digest of the exported rows (the
-        # reference ships ecmh as a library with no wired consumer;
-        # stamping each window makes it useful: two windows diff by group
-        # subtraction, a vault's total content digest is the combination
-        # of its window digests, independent of window boundaries).
-        # None (off), "ecmh" (functions/ecmh.py, reference parity, ~4.1K
-        # rows/s/core) or "muhash" (functions/muhash.py, the scale path at
-        # ~30K rows/s/core — see SCALE.md "Multiset-digest throughput").
-        if digest not in (None, "ecmh", "muhash"):
-            raise ValueError(f"unknown digest: {digest!r}")
-        self.digest = digest
         self.manifest_path = os.path.join(out_dir, "manifest.jsonl")
         self._published: set[int] | None = None
         self._torn_at: int | None = None  # byte offset of a torn last line
@@ -204,27 +195,6 @@ class WindowedVaultSink:
             else keccak256(b"".join(part_digests))
         )
         cid = "0x" + cid_bytes.hex()
-        digest = None
-        if self.digest is not None:
-            from basin_cli_spark.session import get_spark
-
-            if self.digest == "muhash":
-                from basin_cli_spark.functions.muhash import (
-                    muhash_digest as _digest_fn,
-                )
-            else:
-                from basin_cli_spark.functions.ecmh import (
-                    ecmh_digest as _digest_fn,
-                )
-
-            spark = get_spark(app_name="vault-window-digest")
-            win = spark.read.parquet(path)
-            # digest the canonical JSON of each row — schema-aware,
-            # order-independent (the group operation commutes)
-            canon = win.select(
-                F.to_json(F.struct(*sorted(win.columns))).alias("_j")
-            )
-            digest = _digest_fn(canon, "_j")
         signature = (
             b"".join(
                 sign_file(p, self.private_key_hex, digest=d)
@@ -233,7 +203,7 @@ class WindowedVaultSink:
             if self.private_key_hex
             else None
         )
-        row = {
+        return {
             "batch_id": batch_id,
             "table": table,
             "path": path,
@@ -242,10 +212,6 @@ class WindowedVaultSink:
             "timestamp": int(time.time()),
             "is_archived": False,
         }
-        if digest is not None:
-            row["ecmh_digest"] = digest
-            row["digest_algo"] = self.digest
-        return row
 
     def events(self, spark) -> DataFrame:
         """The vault-events metadata table (reference EventInfo,

@@ -78,16 +78,6 @@ HEADLINE = [
     "q_text_fingerprint",
 ]
 
-# the entries the compact line's total_pre_r14_subset key leaves out
-_R14_ADDED = {
-    "q_text_hash_embedding",
-    "q_approx_count_distinct",
-    "q_approx_percentile",
-    "q_corr_covar",
-    "q_text_language_id",
-    "q_text_fingerprint",
-}
-
 
 def compact_summary(times: dict, sf: str, load_gate: dict) -> str:
     """The final stdout line: a compact single-line JSON summary.
@@ -109,11 +99,6 @@ def compact_summary(times: dict, sf: str, load_gate: dict) -> str:
             # per-query seconds — what the driver's PERF per-query
             # comparison reads; names must stay stable across rounds
             "queries": {k: round(v, 3) for k, v in times.items()},
-            # the total over the headline minus _R14_ADDED, comparable
-            # with captures taken before those entries joined
-            "total_pre_r14_subset": round(
-                sum(v for k, v in times.items() if k not in _R14_ADDED), 3
-            ),
             "load_gate_clean": load_gate["clean"],
             "ambient_load": load_gate["load_at_start"],
             # 1-min loadavg at the END of the run: a driver capture that
@@ -248,9 +233,6 @@ def main() -> None:
                 "median": medians,
                 "spread": spreads,
                 "env": env,
-                "total_pre_r14_subset": round(
-                    sum(v for k, v in times.items() if k not in _R14_ADDED), 3
-                ),
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             }
     )

@@ -16,16 +16,8 @@ comparable).
 from __future__ import annotations
 
 import json
-import os
 import statistics
 import sys
-
-# bench.py lives at the repo root (one level up); its _R14_ADDED set is
-# the source of truth for the total_pre_r14_subset membership.
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-import bench  # noqa: E402
 
 
 def main(out_path: str, *cap_paths: str) -> int:
@@ -70,32 +62,12 @@ def main(out_path: str, *cap_paths: str) -> int:
             for c in caps
         ],
     }
-    for k in base:
-        if k.startswith("total_pre_"):
-            # recompute each subset total from the min-of-captures times
-            # (query-set equality across captures was asserted above)
-            excluded = _excluded_for(k)
-            payload[k] = round(
-                sum(v for q, v in queries.items() if q not in excluded), 3
-            )
     with open(out_path, "w") as f:
         json.dump(payload, f)
         f.write("\n")
     print(f"{out_path}: {len(names)} queries, total {payload['value']}s "
           f"over {len(caps)} clean captures")
     return 0
-
-
-def _excluded_for(key: str) -> set[str]:
-    """Queries EXCLUDED from a subset total.  A capture records only the
-    total, so the membership comes from bench.py; ``total_pre_r14_subset``
-    is the one subset key bench writes."""
-    if key != "total_pre_r14_subset":
-        raise KeyError(
-            f"unrecognized subset-total key {key!r}: expected "
-            "total_pre_r14_subset"
-        )
-    return set(bench._R14_ADDED)
 
 
 if __name__ == "__main__":

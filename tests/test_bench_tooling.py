@@ -89,35 +89,6 @@ def test_refuses_single_capture(tmp_path):
     assert assemble_bench.main(str(tmp_path / "out.json"), p) == 1
 
 
-def test_subset_totals_recomputed_from_bench_sets(tmp_path):
-    # one query from bench's r14-added set, one older query: the
-    # total_pre_r14_subset must count only the older one.
-    r14_q = sorted(bench._R14_ADDED)[0]
-    caps = [
-        _capture({"q_old": 1.0, r14_q: 3.0}),
-        _capture({"q_old": 2.0, r14_q: 2.0}),
-    ]
-    for c in caps:
-        c["total_pre_r14_subset"] = c["queries"]["q_old"]
-    paths = [_write(tmp_path, f"c{i}.json", c) for i, c in enumerate(caps)]
-    out = str(tmp_path / "out.json")
-    assert assemble_bench.main(out, *paths) == 0
-    got = json.load(open(out))
-    assert got["total_pre_r14_subset"] == 1.0  # min of q_old only
-
-
-def test_excluded_for_unknown_key_fails_loudly():
-    import pytest
-
-    with pytest.raises(KeyError, match="total_pre_r14_subset"):
-        assemble_bench._excluded_for("total_pre_weird")
-    with pytest.raises(KeyError):
-        assemble_bench._excluded_for("total_pre_r7_subset")
-    assert assemble_bench._excluded_for("total_pre_r14_subset") == set(
-        bench._R14_ADDED
-    )
-
-
 # -- bench.py stdout format pin (r11): the driver keeps only the last
 # ~2 KB of stdout, so bench prints the full payload line FIRST and a
 # compact summary line LAST; the compact line must stay well under the
@@ -125,11 +96,9 @@ def test_excluded_for_unknown_key_fails_loudly():
 
 
 def test_compact_summary_is_small_and_parses():
-    # REAL headline names at double-digit seconds: the worst-case size
-    # the driver's ~2KB stdout tail must swallow whole.  r15 adds the
-    # per-query dict + the cross-round subset total to this line (the
-    # r14 verdict's top item: the driver's PERF parsed n_common=0 both
-    # rounds because per-query times never survived the tail crop).
+    # REAL headline names at double-digit seconds, per-query dict
+    # included: the worst-case size a ~2KB stdout tail must swallow
+    # whole.
     times = {q: 12.345 for q in bench.HEADLINE}
     gate = {"clean": True, "load_at_start": 0.42}
     line = bench.compact_summary(times, "0.1", gate)
@@ -142,9 +111,6 @@ def test_compact_summary_is_small_and_parses():
     assert got["n_queries"] == len(bench.HEADLINE)
     assert got["value"] == round(12.345 * len(bench.HEADLINE), 3)
     assert got["queries"] == times
-    assert got["total_pre_r14_subset"] == round(
-        12.345 * (len(bench.HEADLINE) - len(bench._R14_ADDED)), 3
-    )
     assert got["load_gate_clean"] is True
     assert isinstance(got["load_avg_end"], float)
     assert got["full_payload"] == "bench_out.json"

@@ -118,6 +118,29 @@ def test_create_sign_and_empty_vault_listing(tmp_path, capsys, sf_dir):
         main(["create", "not-a-vault", "--out-dir", out])
 
 
+def test_registry_without_ttls_types_cache_long(spark, tmp_path, capsys):
+    """Vaults created without --cache leave every registry row's cache
+    null; the registry still types cache as bigint (inference would say
+    string), and the listing shows both vaults with no cache."""
+    from pyspark.sql import types as T
+
+    from basin_cli_spark.operators.events import registered_vaults
+
+    out = str(tmp_path / "vault_out")
+    for vault in ("ns.b", "ns.a"):
+        assert main(["create", vault, "--out-dir", out]) == 0
+    capsys.readouterr()
+    reg = registered_vaults(spark, out)
+    assert reg.schema["cache"].dataType == T.LongType()
+    assert sorted(r.vault for r in reg.collect()) == ["ns.a", "ns.b"]
+
+    assert main(["vaults", "--out-dir", out, "--json"]) == 0
+    assert [json.loads(l) for l in capsys.readouterr().out.splitlines() if l] == [
+        {"table": "a", "n_events": 0},
+        {"table": "b", "n_events": 0},
+    ]
+
+
 def test_events_cache_expiry_from_vault_ttl(spark, tmp_path, capsys):
     """The events table carries cache_expiry = event time + the vault's
     registered TTL (reference commands.go:558-571); without a TTL the

@@ -20,7 +20,6 @@ from basin_cli_spark.functions.signing import (
     P,
     _rfc6979_nonce,
     derive_address,
-    sign_bytes,
     sign_digest,
     sign_file,
 )
@@ -323,7 +322,7 @@ def test_out_of_range_key_rejected(key):
 
 def test_golden_signature():
     """Exact signature parity with the reference's golden fixture."""
-    assert sign_bytes(b"data to be signed", PRIV).hex() == GOLDEN_SIG
+    assert sign_digest(keccak256(b"data to be signed"), PRIV).hex() == GOLDEN_SIG
 
 
 def test_sign_file(tmp_path):

@@ -62,62 +62,6 @@ def test_group_digest_matches_per_group_local(spark, sf_dir):
     assert got == {k: v.digest() for k, v in local.items()}
 
 
-def test_window_digest_stamps_manifest_and_composes(spark, tmp_path):
-    """Opt-in per-window ECMH digest: each published window's manifest row
-    carries a digest, and the union of two windows' digests equals the
-    digest of the combined rows — window boundaries don't matter."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from basin_cli_spark.functions.ecmh import MultisetHash
-    from basin_cli_spark.streaming.window_sink import WindowedVaultSink
-
-    sink = WindowedVaultSink(
-        str(tmp_path), {"t": [("id", "integer"), ("name", "text")]},
-        digest="ecmh",
-    )
-    def wal_batch(rows):
-        recs = [
-            {"action": "I", "schema": "public", "table": "t",
-             "columns": [
-                 {"name": "id", "type": "integer", "value": i},
-                 {"name": "name", "type": "text", "value": s},
-             ]}
-            for i, s in rows
-        ]
-        import json
-        lines = [json.dumps({"commit_lsn": 1, "records": recs})]
-        from basin_cli_spark.sources.cdc import parse_wal_records
-        df = spark.createDataFrame([(line,) for line in lines], "value string")
-        return parse_wal_records(df)
-
-    sink.process_batch(wal_batch([(1, "a"), (2, "b")]), 0)
-    sink.process_batch(wal_batch([(3, "c")]), 1)
-    rows = [
-        _json.loads(line)
-        for line in open(sink.manifest_path)
-        if _json.loads(line)["table"] == "t"
-    ]
-    assert len(rows) == 2 and all("ecmh_digest" in r for r in rows)
-    # recompute combined digest from the exported windows directly
-    combined = None
-    for r in rows:
-        win = spark.read.parquet(r["path"])
-        canon = win.select(F.to_json(F.struct(*sorted(win.columns))).alias("j"))
-        acc = MultisetHash()
-        for row in canon.collect():
-            acc.insert(row.j.encode())
-        assert acc.digest() == r["ecmh_digest"]
-        combined = acc if combined is None else combined.union(acc)
-    both = spark.read.parquet(rows[0]["path"]).unionByName(
-        spark.read.parquet(rows[1]["path"])
-    )
-    canon = both.select(F.to_json(F.struct(*sorted(both.columns))).alias("j"))
-    whole = MultisetHash().insert_all(r.j.encode() for r in canon.collect())
-    assert whole.digest() == combined.digest()
-
-
 def test_group_digest_all_null_group_surfaces_empty(spark):
     """r15 two-level fold edge pin: a group whose every value is NULL
     must still surface with digest 'empty' (the one-level applyInPandas

@@ -97,71 +97,6 @@ def test_throughput_floor():
     assert rate > 5_000, f"MuHash throughput regressed: {rate:.0f} rows/s"
 
 
-def test_window_digest_muhash_algo(spark, tmp_path):
-    """digest='muhash' stamps MuHash window digests, and the union
-    of the window digests equals the digest of the combined rows —
-    the same boundary-independence contract the ECMH sink test pins."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from basin_cli_spark.sources.cdc import parse_wal_records
-    from basin_cli_spark.streaming.window_sink import WindowedVaultSink
-
-    sink = WindowedVaultSink(
-        str(tmp_path), {"t": [("id", "integer"), ("name", "text")]},
-        digest="muhash",
-    )
-
-    def wal_batch(rows):
-        recs = [
-            {"action": "I", "schema": "public", "table": "t",
-             "columns": [
-                 {"name": "id", "type": "integer", "value": i},
-                 {"name": "name", "type": "text", "value": s},
-             ]}
-            for i, s in rows
-        ]
-        line = _json.dumps({"commit_lsn": 1, "records": recs})
-        df = spark.createDataFrame([(line,)], "value string")
-        return parse_wal_records(df)
-
-    sink.process_batch(wal_batch([(1, "a"), (2, "b")]), 0)
-    sink.process_batch(wal_batch([(3, "c")]), 1)
-    rows = [
-        _json.loads(line)
-        for line in open(sink.manifest_path)
-        if _json.loads(line)["table"] == "t"
-    ]
-    assert len(rows) == 2
-    assert all(r["digest_algo"] == "muhash" for r in rows)
-    combined = MulMultisetHash()
-    per_window = []
-    for r in rows:
-        win = spark.read.parquet(r["path"])
-        canon = win.select(
-            F.to_json(F.struct(*sorted(win.columns))).alias("j")
-        )
-        acc = MulMultisetHash()
-        for row in canon.collect():
-            acc.insert(row.j.encode())
-            combined.insert(row.j.encode())
-        per_window.append(acc)
-        assert r["ecmh_digest"] == acc.digest()
-    assert (
-        per_window[0].union(per_window[1]).digest() == combined.digest()
-    )
-
-
-def test_window_sink_rejects_unknown_algo(tmp_path):
-    import pytest
-
-    from basin_cli_spark.streaming.window_sink import WindowedVaultSink
-
-    with pytest.raises(ValueError):
-        WindowedVaultSink(str(tmp_path), {}, digest="sha3")
-
-
 def test_native_backend_status_and_digest_stability():
     """Backend parity: the known-answer digest must be identical no
     matter which bignum backend is active.  In a container without

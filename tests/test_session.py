@@ -1,5 +1,5 @@
-"""Session defaults.  Only the worker-path test starts Spark, in a
-subprocess of its own."""
+"""Session defaults.  The worker-path test starts Spark in a subprocess
+of its own; the AQE sizing test reads the shared test session."""
 
 import logging
 import os
@@ -84,3 +84,24 @@ def test_ensure_session_confs_warns_on_locked_conf(caplog):
         ensure_session_confs(SimpleNamespace(conf=SimpleNamespace(set=set_conf)))
     assert seen == {k: v for k, v in REQUIRED_CONFS.items() if k != locked}
     assert [(r.fallback, r.conf) for r in caplog.records] == [("session_conf_kept", locked)]
+
+
+def test_session_aqe_sizing_confs(spark):
+    """Pin the AQE sizing decision: a 16 MB advisory partition target
+    (the default 64 MB coalesces high-cardinality final-agg shuffles into
+    reducers whose hash maps spill — exact dedup at 100x measured 6x
+    slower), and NO initialPartitionNum override (256 initial was
+    measured +60% on the multi-shuffle LSH/Bloom bench trio; it's a
+    per-deployment cluster conf, not a local default — session.py)."""
+    assert (
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        in ("16m", "16777216", "16777216b")
+    )
+    assert (
+        spark.conf.get(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            None,
+        )
+        is None
+    )
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -320,39 +320,10 @@ def test_multiprobe_beats_single_probe(spark, sf_dir):
     assert len(multi & brute) >= len(single & brute)
 
 
-def test_hot_bucket_guard_caps_quadratic_blowup(spark):
-    """A duplicate-heavy corpus collapses into one giant LSH bucket;
-    drop_hot_buckets must remove it before the |bucket|^2 self-join while
-    leaving normal buckets untouched."""
-    rows = (
-        [(i, 0, 7) for i in range(500)]        # hot bucket: 500 rows
-        + [(1000 + i, 0, i + 100) for i in range(20)]  # 20 singletons
-        + [(2000, 1, 5), (2001, 1, 5)]          # one normal pair bucket
-    )
-    expl = spark.createDataFrame(rows, "vec_id long, band int, sig long")
-    kept = S.drop_hot_buckets(expl, max_bucket=64)
-    got = {(r.band, r.sig) for r in kept.select("band", "sig").distinct().collect()}
-    assert (0, 7) not in got                    # hot bucket gone
-    assert (1, 5) in got and (0, 100) in got    # others intact
-    assert kept.count() == 22
-    # downstream pair count is linear-ish, not 500^2/2
-    a, b = kept.alias("a"), kept.alias("b")
-    import pyspark.sql.functions as F
-
-    pairs = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.sig") == F.col("b.sig"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).count()
-    assert pairs == 1
-
-
 def test_hot_cell_guard_caps_semantic_ivf_blowup(spark):
-    """The IVF-cell analogue of the hot-bucket test: a duplicate-heavy
-    crawl collapses into one giant centroid cell; drop_hot_cells must
-    remove it before the within-cell |cell|^2 self-join while leaving
-    normal cells untouched."""
+    """A duplicate-heavy crawl collapses into one giant centroid cell;
+    drop_hot_cells must remove it before the within-cell |cell|^2
+    self-join while leaving normal cells untouched."""
     import pyspark.sql.functions as F
 
     rows = (

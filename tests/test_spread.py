@@ -15,6 +15,7 @@ Contract under test:
 * no engine code calls ``dot_arrow`` outside operators/ (lint).
 * no public operator keeps a ``*_col`` parameter that callers outside
   tests/ only ever set to one value (lint).
+* no public engine function or class is reached only from tests/ (lint).
 """
 
 from __future__ import annotations
@@ -296,24 +297,27 @@ def _col_params():
     return out
 
 
+def _non_test_trees():
+    """Parsed sources outside tests/: the engine, scripts/, perfbench/
+    (its self-test excluded), bench.py and the contract entry point."""
+    for pattern in ("basin_cli_spark/**/*.py", "scripts/*.py", "perfbench/*.py",
+                    "bench.py", "__spark_entry__.py"):
+        for path in glob.glob(os.path.join(_REPO, pattern), recursive=True):
+            if not os.path.basename(path).startswith("test_"):
+                with open(path) as f:
+                    yield ast.parse(f.read(), path)
+
+
 def _caller_values(params) -> dict:
     """Parameter -> the values callers outside tests/ pass: a literal's
     value, the default when the argument is omitted, or ``_DYNAMIC`` for
     anything not a literal (a variable, an expression, ``*args`` or
     ``**kwargs``)."""
-    sources = [
-        p
-        for pattern in ("basin_cli_spark/**/*.py", "scripts/*.py", "perfbench/*.py",
-                        "bench.py")
-        for p in glob.glob(os.path.join(_REPO, pattern), recursive=True)
-    ]
     seen = {key: [] for key in params}
     by_fn = {}
     for key in params:
         by_fn.setdefault(key[1], []).append(key)
-    for path in sources:
-        with open(path) as f:
-            tree = ast.parse(f.read(), path)
+    for tree in _non_test_trees():
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
@@ -360,3 +364,114 @@ def test_col_params_have_two_values_in_use():
     )
     stale = set(_COL_PARAMS_KEPT) - set(params)
     assert not stale, f"_COL_PARAMS_KEPT entries with no parameter: {stale}"
+
+
+# -- lint: no engine code that only tests reach --------------------------------
+
+# (path under basin_cli_spark/, name) -> why it stays although no source
+# outside tests/ mentions it.  An entry without a reason is rejected.
+_TEST_ONLY_KEPT: dict[tuple[str, str], str] = {
+    ("sources/pgwire.py", "PgWireReplicationClient"): (
+        "the live-Postgres socket transport; tests drive it against an "
+        "in-process fake walsender"
+    ),
+    ("sources/replication.py", "start_replication_session"): (
+        "the live-Postgres replication handshake, driven over a transport"
+    ),
+    ("sources/replication.py", "pump"): (
+        "the live-Postgres receive loop around a primed session"
+    ),
+    ("sources/provider.py", "VaultsProvider"): (
+        "the reference's provider API over a pluggable transport"
+    ),
+    ("sources/jdbc.py", "discover_table_schema"): (
+        "live-Postgres schema discovery over a connection"
+    ),
+    ("sources/jdbc.py", "postgres_snapshot"): (
+        "the JDBC snapshot scan of a live Postgres"
+    ),
+    ("sources/pgwire.py", "ScramVerifier"): (
+        "server half of SCRAM; tests round-trip the client half through it"
+    ),
+    ("sources/pgwire.py", "recv_startup"): (
+        "server half of the startup message; tests round-trip "
+        "encode_startup through it"
+    ),
+    ("sources/carv1.py", "write_car_v1"): (
+        "writer half of CARv1; tests round-trip the reader through it"
+    ),
+    ("sources/carv1.py", "cid_for_raw"): (
+        "builds the raw-codec CIDs that the CAR round-trip tests root at"
+    ),
+    ("operators/kmeans.py", "distortion"): (
+        "a codebook-quality oracle: tests score the trained codebooks by it"
+    ),
+    ("types/literals.py", "format_pg_interval"): (
+        "an oracle: tests invert parse_pg_interval through it"
+    ),
+}
+
+
+def _decorated_register(node) -> bool:
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if "register" in (getattr(f, "id", None), getattr(f, "attr", None)):
+            return True
+    return False
+
+
+def _public_engine_defs() -> set[tuple[str, str]]:
+    """(path under basin_cli_spark/, name) of every module-level public
+    function and class, ``@register`` entries and _golden.py excluded."""
+    out = set()
+    for path in glob.glob(os.path.join(_ENGINE, "**", "*.py"), recursive=True):
+        if os.path.basename(path) == "_golden.py":
+            continue
+        rel = os.path.relpath(path, _ENGINE).replace(os.sep, "/")
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in tree.body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.name.startswith("_")
+                and not _decorated_register(node)
+            ):
+                out.add((rel, node.name))
+    return out
+
+
+def _non_test_mentions() -> set[str]:
+    """Every name, attribute, import alias and string constant outside
+    tests/ — a string counts because perfbench patches functions by name."""
+    out = set()
+    for tree in _non_test_trees():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.update((node.name.rsplit(".", 1)[-1], node.asname))
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                out.add(node.value)
+    return out
+
+
+def test_no_engine_code_only_tests_reach():
+    """A public engine function or class that no source outside tests/
+    mentions is code only its tests run: delete it with its tests, or
+    keep it with a reason in _TEST_ONLY_KEPT."""
+    for key, reason in _TEST_ONLY_KEPT.items():
+        assert isinstance(reason, str) and reason.strip(), key
+    defs = _public_engine_defs()
+    mentions = _non_test_mentions()
+    unreached = {d for d in defs if d[1] not in mentions}
+    stray = sorted(unreached - set(_TEST_ONLY_KEPT))
+    assert not stray, (
+        "public engine code that only tests/ reaches — delete it, or keep "
+        f"it with a reason in _TEST_ONLY_KEPT: {stray}"
+    )
+    stale = set(_TEST_ONLY_KEPT) - unreached
+    assert not stale, (
+        f"_TEST_ONLY_KEPT entries for code that is gone or in use: {stale}"
+    )

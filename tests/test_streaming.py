@@ -146,7 +146,7 @@ def test_events_before_first_publish_is_empty(spark, dirs):
     assert ev.collect() == []
     assert ev.columns == [
         "batch_id", "table", "path", "cid", "signature", "timestamp",
-        "is_archived", "ecmh_digest", "digest_algo",
+        "is_archived",
     ]
 
 
@@ -449,31 +449,31 @@ def test_failed_table_write_replays_once(spark, dirs, monkeypatch):
     assert sorted(_window_rows(spark, published[1]["path"])) == [(1, "b")]
 
 
-def test_stateful_progress_across_restarts(spark, tmp_path):
-    """applyInPandasWithState keeps per-key state across micro-batches AND
-    restarts (the reference's confirmed_flush_lsn durability,
-    reference pkg/pgrepl/conn.go:47-56): after tx1 the table's high-water
-    LSN is tx1's; after a restart consuming tx2 it advances, and the
-    insert count accumulates (3 = 2 from tx1 + 1 from tx2; the U record
-    never counts)."""
+def test_cdc_apply_stream_state_survives_restarts(spark, tmp_path):
+    """cdc_apply_stream keeps per-key state across restarts on one
+    checkpoint (the reference's confirmed_flush_lsn durability,
+    reference pkg/pgrepl/conn.go:47-56): drain TX1, restart and drain
+    TX2's update of key 200242, then restart and drain a re-delivered
+    copy of TX1.  The key keeps TX2's commit LSN and name; with its state
+    lost, the older TX1 row would win again."""
     from basin_cli_spark.sources.cdc import read_wal_stream
-    from basin_cli_spark.streaming.stateful import cdc_progress
+    from basin_cli_spark.streaming.stateful import cdc_apply_stream
 
     wal_dir = str(tmp_path / "wal")
     ckpt = str(tmp_path / "ckpt")
 
-    def drain(name):
+    def drain():
         # foreachBatch (not memory sink): the memory sink cannot resume
         # from a checkpoint, and resumption is exactly what's under test.
-        got: dict[str, dict] = {}
+        got: dict[int, tuple] = {}
 
         def collect(df, _bid):
             for r in df.collect():
-                got[r["table"]] = r
+                got[int(r.key)] = (r.commit_lsn, dict(json.loads(r.columns_json))["name"])
 
-        prog = cdc_progress(read_wal_stream(spark, wal_dir))
         q = (
-            prog.writeStream.outputMode("update")
+            cdc_apply_stream(read_wal_stream(spark, wal_dir), "t", "id")
+            .writeStream.outputMode("update")
             .option("checkpointLocation", ckpt)
             .foreachBatch(collect)
             .trigger(availableNow=True)
@@ -483,14 +483,16 @@ def test_stateful_progress_across_restarts(spark, tmp_path):
         return got
 
     _write_tx(wal_dir, "b1.jsonl", TX1)
-    out1 = drain("stateful_b1")
-    assert out1["t"]["n_inserts"] == 2
-    assert out1["t"]["max_commit_lsn"] == TX1["commit_lsn"]
+    assert drain()[200242] == (TX1["commit_lsn"], "400")
 
     _write_tx(wal_dir, "b2.jsonl", TX2)
-    out2 = drain("stateful_b2")
-    assert out2["t"]["n_inserts"] == 3  # U record skipped
-    assert out2["t"]["max_commit_lsn"] == TX2["commit_lsn"]
+    assert drain()[200242] == (TX2["commit_lsn"], "999")
+
+    _write_tx(wal_dir, "b3.jsonl", TX1)
+    assert drain() == {
+        200232: (TX1["commit_lsn"], "100"),
+        200242: (TX2["commit_lsn"], "999"),
+    }
 
 
 def test_watermark_drops_late_data(spark, tmp_path):

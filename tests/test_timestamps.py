@@ -3,9 +3,7 @@ internal/app/timestamp_test.go:10-26)."""
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from basin_cli_spark.functions.timestamps import parse_timestamp, parse_timestamp_col
+from basin_cli_spark.functions.timestamps import parse_timestamp
 
 UTC = dt.timezone.utc
 
@@ -27,10 +25,3 @@ def test_rfc3339_normalized_to_utc():
     got = parse_timestamp("1999-01-31T07:11:25+03:00")
     assert int(got.timestamp()) == 917755885
     assert got.utcoffset() == dt.timedelta(0)
-
-
-def test_column_form(spark):
-    df = spark.createDataFrame(
-        [("917755885",), ("2000-07-13",), ("1999-01-31T07:11:25+03:00",)], ["raw"]
-    ).select(F.unix_timestamp(parse_timestamp_col(F.col("raw"))).alias("epoch"))
-    assert [r.epoch for r in df.collect()] == [917755885, 963446400, 917755885]
