@@ -23,6 +23,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from basin_cli_spark.sources.tables import read_parquet
+
 _LOG = logging.getLogger(__name__)
 
 # Reference vault-name regex (reference cmd/vaults/commands.go:32).
@@ -234,7 +236,7 @@ def retrieve(spark, events: DataFrame, cid: str, resolvers=None) -> DataFrame:
     for resolve in chain:
         path = resolve(cid)
         if path is not None:
-            return spark.read.parquet(path)
+            return read_parquet(spark, path)
     raise KeyError(
         f"cid not resolvable by any of {len(chain)} resolver(s): {cid}"
     )

@@ -15,6 +15,8 @@ the same integer division the batch loader uses.
 
 from __future__ import annotations
 
+import logging
+import math
 import os
 import threading
 import uuid
@@ -27,6 +29,13 @@ from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import dec, dec_sum, sql_dec, sql_dec_sum
 from basin_cli_spark.sources import load_table
+from basin_cli_spark.sources.tables import parquet_footer, read_parquet
+
+_LOG = logging.getLogger(__name__)
+
+
+def _fixture_file(sf_dir: str, table: str) -> str:
+    return os.path.join(sf_dir, f"{table}.parquet")
 
 
 def _read_fixture_stream(
@@ -35,11 +44,10 @@ def _read_fixture_stream(
     """File stream over one fixture table.  The source path must be a
     directory, so sf_dir is the basePath with a glob keeping only the
     table's file; the schema is the batch file's."""
-    name = f"{table}.parquet"
-    schema = spark.read.parquet(os.path.join(sf_dir, name)).schema
+    schema = read_parquet(spark, _fixture_file(sf_dir, table)).schema
     return (
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", name)
+        .option("pathGlobFilter", f"{table}.parquet")
         .parquet(sf_dir)
     )
 
@@ -57,12 +65,40 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DRAIN_CONF_LOCK = threading.Lock()
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
-def _drain(df: DataFrame, mode: str) -> DataFrame:
+def _decoded_bytes(path: str) -> int:
+    """Bytes a scan of one local file decodes: for parquet, the
+    uncompressed row-group sizes in its footer, else the file size.
+    Compressed sizes undercount: the sf1 events file is 15 MB on disk and
+    65 MB decoded, and sized by the former its dedup and join drains ran
+    35-51% slower on one partition than on four."""
+    meta = parquet_footer(path)
+    if meta is None:
+        return os.path.getsize(path)
+    return sum(meta.row_group(i).total_byte_size for i in range(meta.num_row_groups))
+
+
+def _drain_partitions(spark: SparkSession, in_bytes: int) -> int:
+    """Shuffle partitions for a drain reading ``in_bytes``: one per
+    advisory partition size, as AQE sizes a batch stage, clamped to
+    [1, spark.sql.shuffle.partitions]."""
+    jutils = spark._jvm.org.apache.spark.network.util.JavaUtils
+    advisory = jutils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cap = int(spark.conf.get(_SHUFFLE_PARTITIONS))
+    return max(1, min(cap, math.ceil(in_bytes / max(1, advisory))))
+
+
+def _drain(df: DataFrame, mode: str, *sources: str) -> DataFrame:
     """Run the streaming plan to completion into a memory sink and return
     the sink table (one AvailableNow drain — the test/recovery trigger;
     production would use a processing-time or continuous trigger).
+    ``sources`` are the local files the plan's file streams read, one
+    entry per stream.
 
     The drain disables the watermark-finalize no-data micro-batch
     (`spark.sql.streaming.noDataMicroBatches.enabled`):
@@ -85,16 +121,32 @@ def _drain(df: DataFrame, mode: str) -> DataFrame:
     finalizes windows between arrivals.  Results are oracle-identical by
     construction and attested at 3 SFs.
 
-    A query reads that conf once, when ``start()`` builds it, so the
-    session value is restored right after ``start()``, not after the
-    drain; a module lock around set/start/restore keeps concurrent drains
-    from restoring each other's override."""
+    It also sizes ``spark.sql.shuffle.partitions`` to the bytes that
+    ``sources`` decode to, the way AQE sizes a batch stage
+    (``_drain_partitions``).  AQE does not run inside a micro-batch, so
+    without this every stateful operator keeps one state-store instance
+    per session partition (the core count) whatever its input.  Each
+    instance costs a checkpoint-file write and a commit RPC per batch: 4
+    stores for 155 state rows took 358-420 ms of state commit in
+    q_stream_tumbling_agg at sf0.01 against 36-45 ms for 1 (4 vCPUs).
+    The count is fixed when the query first starts on its checkpoint (it
+    is recorded in ``offsets/0``), and a drain always starts on a fresh
+    one, so choosing it at ``start()`` from the input is safe.
+
+    A query reads both confs once, when ``start()`` builds it (its cloned
+    session keeps them), so the session values are restored right after
+    ``start()``, not after the drain; a module lock around
+    set/start/restore keeps concurrent drains from restoring each other's
+    overrides.  A batch query that another thread plans inside that
+    window sees the sized shuffle partition count."""
     spark = df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    in_bytes = sum(_decoded_bytes(p) for p in sources)
     with _DRAIN_CONF_LOCK:
-        old = spark.conf.get(conf_key, "true")
-        spark.conf.set(conf_key, "false")
+        old = {k: spark.conf.get(k) for k in (_NO_DATA_BATCHES, _SHUFFLE_PARTITIONS)}
+        parts = _drain_partitions(spark, in_bytes)
+        spark.conf.set(_NO_DATA_BATCHES, "false")
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(parts))
         try:
             q = (
                 df.writeStream.format("memory")
@@ -104,7 +156,13 @@ def _drain(df: DataFrame, mode: str) -> DataFrame:
                 .start()
             )
         finally:
-            spark.conf.set(conf_key, old)
+            for k, v in old.items():
+                spark.conf.set(k, v)
+    _LOG.info(
+        "drain %s: %d decoded input bytes -> %d shuffle partitions", name, in_bytes, parts,
+        extra={"decision": "drain_partitions", "query": name,
+               "input_bytes": in_bytes, "shuffle_partitions": parts},
+    )
     q.awaitTermination()
     return spark.table(name)
 
@@ -133,7 +191,7 @@ def q_stream_tumbling_agg(spark, sf_dir):
             dec_sum(dec("value"), "sum_value"),
         )
     )
-    out = _drain(agg, "complete")
+    out = _drain(agg, "complete", _fixture_file(sf_dir, "events"))
     return out.select(
         F.col("w.start").cast("date").cast("string").alias("window_start"),
         "event_type",
@@ -153,7 +211,10 @@ def q_stream_dedup(spark, sf_dir):
     dd = ev.withWatermark("ts", "1 hour").dropDuplicates(
         ["user_id", "event_type"]
     )
-    out = _drain(dd.select("user_id", "event_type"), "append")
+    out = _drain(
+        dd.select("user_id", "event_type"), "append",
+        _fixture_file(sf_dir, "events"),
+    )
     return out
 
 
@@ -183,7 +244,7 @@ def q_stream_static_join(spark, sf_dir):
         F.count(F.lit(1)).alias("n_events"),
         dec_sum(dec("value"), "sum_value"),
     )
-    return _drain(agg, "complete")
+    return _drain(agg, "complete", _fixture_file(sf_dir, "events"))
 
 
 @register(
@@ -231,7 +292,10 @@ def q_stream_stream_join(spark, sf_dir):
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
     )
-    out = _drain(joined.select("click_id", "purchase_id", "user_id"), "append")
+    events = _fixture_file(sf_dir, "events")
+    out = _drain(
+        joined.select("click_id", "purchase_id", "user_id"), "append", events, events
+    )
     return out
 
 
@@ -286,7 +350,7 @@ def q_stream_near_dedup(spark, sf_dir):
             F.count(F.lit(1)).alias("n_bucket"),
         )
     )
-    return _drain(agg, "complete")
+    return _drain(agg, "complete", _fixture_file(sf_dir, "documents"))
 
 
 def _stream_quality_oracle() -> str:
@@ -326,7 +390,7 @@ def q_stream_quality_gate(spark, sf_dir):
         F.round(F.min("quality_p"), 9).alias("min_p"),
         F.round(F.max("quality_p"), 9).alias("max_p"),
     )
-    return _drain(agg, "complete")
+    return _drain(agg, "complete", _fixture_file(sf_dir, "documents"))
 
 
 def _session_oracle() -> str:
@@ -352,7 +416,7 @@ def q_stream_session_window(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    out = _drain(agg, "complete")
+    out = _drain(agg, "complete", _fixture_file(sf_dir, "events"))
     return out.select(
         "user_id",
         F.col("w.start").alias("session_start"),
@@ -386,7 +450,10 @@ def q_stream_dedup_within_watermark(spark, sf_dir):
     dd = ev.withWatermark("ts", "100 days").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    out = _drain(dd.select("user_id", "event_type"), "append")
+    out = _drain(
+        dd.select("user_id", "event_type"), "append",
+        _fixture_file(sf_dir, "events"),
+    )
     return (
         out.groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("n_kept"))
@@ -427,7 +494,9 @@ def q_stream_ivf_assign(spark, sf_dir):
         F.count(F.lit(1)).alias("n_vectors"),
         F.min("vec_id").alias("min_vec_id"),
     )
-    return _drain(stats, "complete").orderBy("cent_id")
+    return _drain(
+        stats, "complete", _fixture_file(sf_dir, "embeddings")
+    ).orderBy("cent_id")
 
 
 @register(
@@ -484,7 +553,7 @@ def q_stream_cdc_apply(spark, sf_dir):
         .load(fixture)
     )
     merged = cdc_apply_stream(parse_wal_records(stream), "t", pk="id")
-    out = _drain(merged, "update")
+    out = _drain(merged, "update", os.path.join(fixture, "wal.jsonl"))
     # latest state per key (one AvailableNow batch -> one row per key),
     # tombstones dropped, columns pivoted exactly like materialize_table
     kv = F.map_from_entries(
@@ -580,4 +649,4 @@ def q_stream_dsir_score(spark, sf_dir):
             6,
         ).alias("iw"),
     )
-    return _drain(scored, "append")
+    return _drain(scored, "append", _fixture_file(sf_dir, "documents"))

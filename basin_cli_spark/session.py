@@ -8,7 +8,10 @@ and a plan shape that survives a 1000-executor / 100 TB deployment:
   play that role.
 * ``spark.sql.shuffle.partitions`` sized to the local core count; on a real
   cluster this is overridden by AQE's coalescing so the value only sets the
-  pre-AQE upper bound.
+  pre-AQE upper bound.  AQE does not run inside a streaming micro-batch, so
+  each registry stream drain sets its own count at ``start()`` from the
+  bytes its sources decode, at most this value
+  (``queries/streaming_queries._drain``).
 * UTC session timezone — the reference normalizes every user timestamp to
   UTC (reference internal/app/timestamp.go:30-48).
 * Arrow enabled — every Python-side operator in this engine is a Pandas UDF

@@ -11,6 +11,8 @@ Contract under test:
   ECMH/MuHash digests) spread evenly instead of co-locating;
 * results are identical either way (the repartition is pure placement);
 * query filters still reach the parquet scan below the spread exchange;
+* the footer row-group count is memoized per file identity, so a file
+  rewritten at the same path is read again;
 * no engine code calls ``repartition`` outside spread() (lint).
 * no engine code calls ``dot_arrow`` outside operators/ (lint).
 * no public operator keeps a ``*_col`` parameter that callers outside
@@ -31,6 +33,7 @@ from pyspark.sql import functions as F
 from basin_cli_spark.operators import layout as L
 from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.sources import load_table
+from basin_cli_spark.sources.tables import file_identity
 
 _LI_KEY = ("l_orderkey", "l_linenumber")
 
@@ -56,7 +59,7 @@ def test_spread_noop_on_well_split_layout(spark, sf_dir, monkeypatch):
     # count: at cores-many row groups the scan needs no help
     df = load_table(spark, sf_dir, "lineitem")
     (uri,) = df.inputFiles()
-    monkeypatch.setitem(L._ROW_GROUPS, uri, 4096)
+    monkeypatch.setitem(L._ROW_GROUPS, file_identity(uri), 4096)
     assert "Exchange" not in plan_of(spread(df, _LI_KEY))
 
 
@@ -80,7 +83,7 @@ def test_spread_streaming_input_always_spreads(spark, sf_dir, monkeypatch):
     # spread fires even when the file's footer says it is well split
     docs = load_table(spark, sf_dir, "documents")
     (uri,) = docs.inputFiles()
-    monkeypatch.setitem(L._ROW_GROUPS, uri, 4096)
+    monkeypatch.setitem(L._ROW_GROUPS, file_identity(uri), 4096)
     stream = (
         spark.readStream.schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -116,7 +119,22 @@ def test_spread_preserves_rows_and_pushdown(spark, sf_dir):
 def test_spread_scan_row_groups_memoized(spark, sf_dir):
     (uri,) = load_table(spark, sf_dir, "orders").inputFiles()
     assert L._row_groups(uri) >= 1
-    assert uri in L._ROW_GROUPS
+    assert file_identity(uri) in L._ROW_GROUPS
+
+
+def test_row_groups_reread_after_rewrite(tmp_path):
+    # the memo is keyed by file identity: a file rewritten at the same
+    # path is read again instead of keeping its old row-group count
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    table = pa.table({"a": list(range(1000))})
+    pq.write_table(table, path)
+    uri = f"file://{path}"
+    assert L._row_groups(uri) == 1
+    pq.write_table(table, path, row_group_size=100)
+    assert L._row_groups(uri) == 10
 
 
 # -- duplicate-heavy digests -------------------------------------------------
@@ -298,14 +316,16 @@ def _col_params():
 
 
 def _non_test_trees():
-    """Parsed sources outside tests/: the engine, scripts/, perfbench/
-    (its self-test excluded), bench.py and the contract entry point."""
+    """(path under the repo, parsed source) of each source outside
+    tests/: the engine, scripts/, perfbench/ (its self-test excluded),
+    bench.py and the contract entry point."""
     for pattern in ("basin_cli_spark/**/*.py", "scripts/*.py", "perfbench/*.py",
                     "bench.py", "__spark_entry__.py"):
         for path in glob.glob(os.path.join(_REPO, pattern), recursive=True):
             if not os.path.basename(path).startswith("test_"):
                 with open(path) as f:
-                    yield ast.parse(f.read(), path)
+                    rel = os.path.relpath(path, _REPO).replace(os.sep, "/")
+                    yield rel, ast.parse(f.read(), path)
 
 
 def _caller_values(params) -> dict:
@@ -317,7 +337,7 @@ def _caller_values(params) -> dict:
     by_fn = {}
     for key in params:
         by_fn.setdefault(key[1], []).append(key)
-    for tree in _non_test_trees():
+    for _, tree in _non_test_trees():
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
@@ -420,52 +440,70 @@ def _decorated_register(node) -> bool:
     return False
 
 
-def _public_engine_defs() -> set[tuple[str, str]]:
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _mentions(node) -> set[str]:
+    """Every name, attribute, import alias and string constant under
+    ``node`` — a string counts because perfbench patches functions by
+    name."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update((n.name.rsplit(".", 1)[-1], n.asname))
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            out.add(n.value)
+    return out
+
+
+def _unreached_engine_defs() -> set[tuple[str, str]]:
     """(path under basin_cli_spark/, name) of every module-level public
-    function and class, ``@register`` entries and _golden.py excluded."""
-    out = set()
-    for path in glob.glob(os.path.join(_ENGINE, "**", "*.py"), recursive=True):
-        if os.path.basename(path) == "_golden.py":
-            continue
-        rel = os.path.relpath(path, _ENGINE).replace(os.sep, "/")
-        with open(path) as f:
-            tree = ast.parse(f.read(), path)
+    function and class (``@register`` entries and _golden.py excluded)
+    that no code outside tests/ reaches.
+
+    A reachability pass over names: the roots are all sources outside
+    tests/ except the bodies of the engine's module-level functions and
+    classes, plus ``@register`` builders and the _TEST_ONLY_KEPT entries.
+    A definition is reached when a reached body mentions its name, and
+    only then do its own mentions count, so a chain of definitions that
+    only tests reach is named link by link in one run."""
+    reached: set[str] = set()
+    defs = []
+    for rel, tree in _non_test_trees():
+        engine = rel.startswith("basin_cli_spark/") and not rel.endswith("/_golden.py")
+        rel = rel.removeprefix("basin_cli_spark/")
         for node in tree.body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not node.name.startswith("_")
-                and not _decorated_register(node)
-            ):
-                out.add((rel, node.name))
-    return out
-
-
-def _non_test_mentions() -> set[str]:
-    """Every name, attribute, import alias and string constant outside
-    tests/ — a string counts because perfbench patches functions by name."""
-    out = set()
-    for tree in _non_test_trees():
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Name):
-                out.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                out.add(node.attr)
-            elif isinstance(node, ast.alias):
-                out.update((node.name.rsplit(".", 1)[-1], node.asname))
-            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                out.add(node.value)
-    return out
+            if engine and isinstance(node, _DEFS) and not _decorated_register(node):
+                defs.append((rel, node))
+                if (rel, node.name) in _TEST_ONLY_KEPT:
+                    reached |= _mentions(node) - {node.name}
+            else:
+                reached |= _mentions(node)
+    pending = [(rel, n) for rel, n in defs if (rel, n.name) not in _TEST_ONLY_KEPT]
+    grew = True
+    while grew:
+        grew = False
+        for rel, node in [d for d in pending if d[1].name in reached]:
+            pending.remove((rel, node))
+            reached |= _mentions(node) - {node.name}
+            grew = True
+    return {
+        (rel, node.name) for rel, node in defs
+        if node.name not in reached and not node.name.startswith("_")
+    }
 
 
 def test_no_engine_code_only_tests_reach():
-    """A public engine function or class that no source outside tests/
-    mentions is code only its tests run: delete it with its tests, or
+    """A public engine function or class that no code outside tests/
+    reaches is code only its tests run: delete it with its tests, or
     keep it with a reason in _TEST_ONLY_KEPT."""
     for key, reason in _TEST_ONLY_KEPT.items():
         assert isinstance(reason, str) and reason.strip(), key
-    defs = _public_engine_defs()
-    mentions = _non_test_mentions()
-    unreached = {d for d in defs if d[1] not in mentions}
+    unreached = _unreached_engine_defs()
     stray = sorted(unreached - set(_TEST_ONLY_KEPT))
     assert not stray, (
         "public engine code that only tests/ reaches — delete it, or keep "

@@ -4,6 +4,7 @@ txs arriving across window boundaries produce per-window parquet files in
 WAL order, U/D records never materialize, and recovery/replay is
 idempotent."""
 
+import glob
 import json
 import os
 
@@ -740,3 +741,52 @@ def test_drain_restores_conf_when_start_raises(spark):
     with pytest.raises(AnalysisException):
         _drain(_rate_stream(spark), "complete")  # complete mode needs an aggregation
     assert spark.conf.get(key) == "true"
+
+
+def test_drain_restores_confs_and_records_sized_partitions(spark, sf_dir, tmp_path):
+    """A registry drain sizes its shuffle partitions to its input (the
+    0.2 MB sf0.01 events file gives 1) for its own query only: the
+    session's confs are back after the call, and the query's offset log
+    records the sized count."""
+    from basin_cli_spark.queries import streaming_queries as SQ
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.streaming.noDataMicroBatches.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    assert int(before["spark.sql.shuffle.partitions"]) > 1
+    ckpt_key = "spark.sql.streaming.checkpointLocation"
+    spark.conf.set(ckpt_key, str(tmp_path / "ckpt"))
+    try:
+        ev = SQ._read_events_stream(spark, sf)
+        out = SQ._drain(ev.groupBy("event_type").count(), "complete",
+                        os.path.join(sf, "events.parquet"))
+    finally:
+        spark.conf.unset(ckpt_key)
+    assert {k: spark.conf.get(k) for k in keys} == before
+    assert out.count() > 0
+    (offsets,) = glob.glob(str(tmp_path / "ckpt" / "*" / "offsets" / "0"))
+    with open(offsets) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    assert meta["conf"]["spark.sql.shuffle.partitions"] == "1"
+
+
+def test_drain_partitions_follow_decoded_bytes(spark, tmp_path):
+    """ceil(decoded bytes / advisory size) within [1, shuffle.partitions]:
+    a parquet source counts its uncompressed row-group bytes, any other
+    file its size."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from basin_cli_spark.queries import streaming_queries as SQ
+
+    path = str(tmp_path / "z.parquet")
+    pq.write_table(pa.table({"a": [0] * 100_000}), path, use_dictionary=False)
+    decoded = pq.read_metadata(path).row_group(0).total_byte_size
+    assert SQ._decoded_bytes(path) == decoded > 10 * os.path.getsize(path)
+    wal = os.path.join(os.path.dirname(os.path.dirname(__file__)), "fixtures", "wal.jsonl")
+    assert SQ._decoded_bytes(wal) == os.path.getsize(wal)
+    advisory = 16 << 20  # get_spark's advisoryPartitionSizeInBytes
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    sized = [SQ._drain_partitions(spark, n) for n in (0, advisory, advisory + 1, 100 * advisory)]
+    assert sized == [1, 1, 2, cap]
