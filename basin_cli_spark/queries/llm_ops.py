@@ -21,6 +21,7 @@ from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import sql_vec_str, vec_str
 from basin_cli_spark.session import persist_once
 from basin_cli_spark.sources import load_table
+from basin_cli_spark.sources.tables import local_path, parquet_footer
 
 # Shared SQL fragments mirroring operators/dedup.py
 _SQL_TOKENS = "LIST_FILTER(STRING_SPLIT(LOWER({c}), ' '), t -> LENGTH(t) > 0)"
@@ -530,7 +531,7 @@ def q_similarity_ann_lsh(spark, sf_dir):
     scale form — posexplode to (band, sig) and broadcast equi-join, so
     candidate generation is an index probe, not a corpus scan."""
     e = load_table(spark, sf_dir, "embeddings")
-    band_bits = S.band_bits_for(_corpus_count(e, sf_dir))
+    band_bits = S.band_bits_for(_corpus_count(e))
     return S.cosine_topk_lsh(e, query_vec_id=0, k=5, band_bits=band_bits)
 
 
@@ -778,17 +779,18 @@ def q_multimodal_meta(spark, sf_dir):
     )
 
 
-# LSH sizing stat: the corpus row count feeds band_bits_for(), it is not
-# query data — memoized per fixture dir the way a warehouse would read it
-# from table statistics instead of re-scanning.
-_CORPUS_COUNT_CACHE: dict[str, int] = {}
-
-
-def _corpus_count(df, sf_dir: str) -> int:
-    key = f"{sf_dir}/embeddings"
-    if key not in _CORPUS_COUNT_CACHE:
-        _CORPUS_COUNT_CACHE[key] = df.count()
-    return _CORPUS_COUNT_CACHE[key]
+def _corpus_count(df) -> int:
+    """Rows of a plain table read, for band_bits_for() (a sizing stat,
+    not query data): the sum of ``num_rows`` over the footers of its
+    files, read the way a warehouse reads table statistics, with no
+    Spark job.  A file rewritten at the same path is read afresh.  Falls
+    back to a ``count()`` job when a file is not local or its footer
+    cannot be read."""
+    paths = [local_path(f) for f in df.inputFiles()]
+    footers = [None if p is None else parquet_footer(p) for p in paths]
+    if not footers or None in footers:
+        return df.count()
+    return sum(m.num_rows for m in footers)
 
 
 _EMB_DEDUP_ORACLE = f"""
@@ -818,8 +820,8 @@ def q_dedup_embedding(spark, sf_dir):
       oracle replays the same rule through a COUNT(*)-keyed CASE
       (_sig_band_sql inside _BANDED_PAIRS_CTES: 4 bits at the n=500
       fixture SFs, 5 at sf0.1's n=2000), so the differential holds at
-      every fixture scale.  The count() is one columnar scan of a single
-      long column — at 100 TB you would read it from table stats;
+      every fixture scale.  The count is read from the parquet footers
+      (_corpus_count), so the build runs no Spark job for it;
     - the verify is similarity.cosine_pair_scores: norms folded once per
       vector, one Arrow dot per pair;
     - NO broadcast hints anywhere: a hint would override AQE's size logic
@@ -838,7 +840,7 @@ def _embedding_dedup_pairs(spark, sf_dir):
     """Shared pair builder for q_dedup_embedding (pairs as the result)
     and q_dedup_embedding_keep_one (pairs as the dup graph's edges)."""
     e = load_table(spark, sf_dir, "embeddings")
-    pairs = S.sign_lsh_pairs(e, S.band_bits_for(_corpus_count(e, sf_dir)))
+    pairs = S.sign_lsh_pairs(e, S.band_bits_for(_corpus_count(e)))
     return S.cosine_pair_scores(pairs, e).where(F.col("score") >= 0.40)
 
 

@@ -20,6 +20,7 @@ import math
 import os
 import threading
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,6 +68,14 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DRAIN_CONF_LOCK = threading.Lock()
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_CHECKPOINT_LOCATION = "spark.sql.streaming.checkpointLocation"
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_OUTER_JOINS = frozenset({"LeftOuter", "RightOuter", "FullOuter"})
+_TIMEOUT_STATE_NODES = frozenset({"FlatMapGroupsWithState", "FlatMapGroupsInPandasWithState"})
 
 
 def _decoded_bytes(path: str) -> int:
@@ -93,35 +102,74 @@ def _drain_partitions(spark: SparkSession, in_bytes: int) -> int:
     return max(1, min(cap, math.ceil(in_bytes / max(1, advisory))))
 
 
+def _local_checkpoint(location: str | None, default_fs: str) -> bool:
+    """Whether a drain's checkpoint lands on the local file system.
+    ``location`` is ``spark.sql.streaming.checkpointLocation``; None
+    means Spark's own temporary directory, a path with no scheme.  Spark
+    resolves a path with no scheme against the Hadoop default file
+    system ``default_fs``."""
+    scheme = urlparse(location or "/").scheme or urlparse(default_fs).scheme
+    return scheme in ("", "file")
+
+
+def _finalize_batch_needed(df: DataFrame, mode: str) -> bool:
+    """Whether draining ``df`` in output ``mode`` needs the
+    watermark-finalize no-data batch: its analyzed plan holds an operator
+    that emits rows only once the watermark passes them.  Those are an
+    append-mode streaming aggregation (Spark starts one only over an
+    event-time watermark), an outer stream-stream join, and a
+    ``*GroupsWithState`` operator with a timeout."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "Aggregate" and mode == "append" and node.isStreaming():
+            return True
+        if (
+            name == "Join"
+            and node.joinType().toString() in _OUTER_JOINS
+            and node.left().isStreaming()
+            and node.right().isStreaming()
+        ):
+            return True
+        if name in _TIMEOUT_STATE_NODES and node.timeout().toString() != "NoTimeout":
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
 def _drain(df: DataFrame, mode: str, *sources: str) -> DataFrame:
     """Run the streaming plan to completion into a memory sink and return
     the sink table (one AvailableNow drain — the test/recovery trigger;
     production would use a processing-time or continuous trigger).
     ``sources`` are the local files the plan's file streams read, one
-    entry per stream.
+    entry per stream.  The drain starts its query with up to three conf
+    overrides, and logs one ``decision="drain_confs"`` record naming
+    them.
 
-    The drain disables the watermark-finalize no-data micro-batch
-    (`spark.sql.streaming.noDataMicroBatches.enabled`):
-    for a bounded AvailableNow drain that batch can only advance the
-    watermark and evict state — it cannot change the sink.  Complete-mode
-    aggregations re-emit the identical final state they emitted in the
-    data batch; the append-mode operators this registry drains all emit
-    eagerly (dropDuplicates[WithinWatermark] on first sight, the inner
-    interval join on match — only OUTER stream-stream joins hold rows for
-    watermark finalization, and none is registered); update-mode
-    applyInPandasWithState sees no input groups in a no-data batch.
-    End-of-drain state eviction is moot — the query terminates.  What the
-    batch DID cost (profile: `git show
-    d1de39b:plans/r15/stream_probe_before.json`) is a
-    full round of micro-batch machinery: ~1 s of queryPlanning plus a
-    commit of every state-store instance (partitions x stores), i.e.
-    roughly half the wall of every watermarked drain (guide §1.3/§5 —
-    don't pay for work whose output is discarded).  A production
-    continuous trigger keeps the default: there the no-data batch is what
-    finalizes windows between arrivals.  Results are oracle-identical by
-    construction and attested at 3 SFs.
+    **The watermark-finalize no-data micro-batch**
+    (`spark.sql.streaming.noDataMicroBatches.enabled`) is off unless
+    ``_finalize_batch_needed`` finds, in the analyzed plan, an operator
+    that emits rows only when the watermark passes them: an append-mode
+    aggregation, an outer stream-stream join, or a ``*GroupsWithState``
+    operator with a timeout.  For any other plan a bounded AvailableNow
+    drain's no-data batch can only advance the watermark and evict
+    state; it cannot change the sink.  Complete-mode aggregations
+    re-emit the final state they emitted in the data batch;
+    dropDuplicates[WithinWatermark] emits on first sight and an inner
+    interval join on match; update-mode applyInPandasWithState without
+    a timeout sees no input groups in a no-data batch.  End-of-drain
+    state eviction is moot, since the query terminates.  What the batch
+    did cost (profile: `git show
+    d1de39b:plans/r15/stream_probe_before.json`) is a full round of
+    micro-batch machinery: ~1 s of queryPlanning plus a commit of every
+    state-store instance, roughly half the wall of every watermarked
+    drain.  A production continuous trigger keeps the default: there the
+    no-data batch is what finalizes windows between arrivals.  None of
+    the 11 registry drains needs it.
 
-    It also sizes ``spark.sql.shuffle.partitions`` to the bytes that
+    **``spark.sql.shuffle.partitions``** is sized to the bytes that
     ``sources`` decode to, the way AQE sizes a batch stage
     (``_drain_partitions``).  AQE does not run inside a micro-batch, so
     without this every stateful operator keeps one state-store instance
@@ -133,20 +181,48 @@ def _drain(df: DataFrame, mode: str, *sources: str) -> DataFrame:
     is recorded in ``offsets/0``), and a drain always starts on a fresh
     one, so choosing it at ``start()`` from the input is safe.
 
-    A query reads both confs once, when ``start()`` builds it (its cloned
-    session keeps them), so the session values are restored right after
-    ``start()``, not after the drain; a module lock around
-    set/start/restore keeps concurrent drains from restoring each other's
-    overrides.  A batch query that another thread plans inside that
-    window sees the sized shuffle partition count."""
+    **The checkpoint file manager** is Spark's
+    ``FileSystemBasedCheckpointFileManager`` when the checkpoint is
+    local (``_local_checkpoint``).  Spark's default manager renames each
+    offset, commit, metadata and state file through Hadoop's
+    ``FileContext.rename``, which checks the file and its ``.crc`` with
+    ``getFileLinkStatus``.  Without the native Hadoop library, Hadoop's
+    local file system forks a ``readlink`` for each such check (and a
+    ``chmod`` for each ``setPermission``): a JFR recording of 10 warm
+    q_stream_tumbling_agg drains at sf0.01 on 4 vCPUs counted 90
+    process starts per drain (64 ``readlink``, 25 ``chmod``, 1 ``rm``),
+    most on the stream execution thread, against 26 (no ``readlink``)
+    with this manager.
+    On a local file system the two managers do the same thing: each
+    checks that the destination does not exist, then calls
+    ``RawLocalFileSystem.rename`` (``File.renameTo``).  The manager is
+    not a session default because a remote checkpoint would get it too,
+    where ``FileSystem.rename`` does not overwrite; the vault sink's
+    user-given checkpoint (``streaming.window_sink.run_stream``) keeps
+    Spark's default.
+
+    A query reads these confs once, when ``start()`` builds it (its
+    cloned session keeps them and passes them to the executors' state
+    stores), so the session values are restored right after ``start()``,
+    not after the drain; a key that was unset before is unset again.  A
+    module lock around set/start/restore keeps concurrent drains from
+    restoring each other's overrides.  A batch query that another thread
+    plans inside that window sees the overridden values."""
     spark = df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
     in_bytes = sum(_decoded_bytes(p) for p in sources)
+    finalize = _finalize_batch_needed(df, mode)
     with _DRAIN_CONF_LOCK:
-        old = {k: spark.conf.get(k) for k in (_NO_DATA_BATCHES, _SHUFFLE_PARTITIONS)}
         parts = _drain_partitions(spark, in_bytes)
-        spark.conf.set(_NO_DATA_BATCHES, "false")
-        spark.conf.set(_SHUFFLE_PARTITIONS, str(parts))
+        default_fs = spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+        local = _local_checkpoint(spark.conf.get(_CHECKPOINT_LOCATION, None), default_fs)
+        manager = _FS_CHECKPOINT_MANAGER if local else None
+        overrides = {_NO_DATA_BATCHES: str(finalize).lower(), _SHUFFLE_PARTITIONS: str(parts)}
+        if manager:
+            overrides[_CHECKPOINT_MANAGER] = manager
+        old = {k: spark.conf.get(k, None) for k in overrides}
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
         try:
             q = (
                 df.writeStream.format("memory")
@@ -157,11 +233,17 @@ def _drain(df: DataFrame, mode: str, *sources: str) -> DataFrame:
             )
         finally:
             for k, v in old.items():
-                spark.conf.set(k, v)
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
     _LOG.info(
-        "drain %s: %d decoded input bytes -> %d shuffle partitions", name, in_bytes, parts,
-        extra={"decision": "drain_partitions", "query": name,
-               "input_bytes": in_bytes, "shuffle_partitions": parts},
+        "drain %s: %d decoded input bytes -> %d shuffle partitions, "
+        "checkpoint manager %s, finalize batch %s",
+        name, in_bytes, parts, manager or "Spark's default", "on" if finalize else "off",
+        extra={"decision": "drain_confs", "query": name, "input_bytes": in_bytes,
+               "shuffle_partitions": parts, "checkpoint_manager": manager,
+               "finalize_batch": finalize},
     )
     q.awaitTermination()
     return spark.table(name)

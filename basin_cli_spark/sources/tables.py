@@ -72,7 +72,7 @@ _MEMO_LOCK = threading.Lock()
 _SCHEMAS: dict[tuple, T.StructType] = {}
 
 
-def _local_path(uri: str) -> str | None:
+def local_path(uri: str) -> str | None:
     """The local path a plain path or ``file:`` URI names; None for any
     other scheme."""
     url = urlparse(uri)
@@ -86,7 +86,7 @@ def file_identity(uri: str) -> tuple[str, int, int] | None:
     which the engine memoizes what it read from the file, so a file
     rewritten at the same path gets a new key.  None for a non-local URI
     or a path that does not exist."""
-    path = _local_path(uri)
+    path = local_path(uri)
     if path is None:
         return None
     try:
@@ -169,7 +169,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     rewritten file is inferred again.
     Non-local URIs and nested or partitioned directories are read by
     plain ``spark.read.parquet``."""
-    local = _local_path(path)
+    local = local_path(path)
     files = None if local is None else _data_files(local)
     ids = None if files is None else [file_identity(f) for f in files]
     if ids is None or None in ids:

@@ -138,3 +138,19 @@ def test_remote_and_partitioned_paths_fall_through(spark, tmp_path):
     df = read_parquet(spark, str(root))
     assert df.columns == ["a", "k"]
     assert TB.file_identity("s3a://bucket/x.parquet") is None
+
+
+def test_corpus_count_reads_footers_and_follows_a_rewrite(spark, tmp_path):
+    """llm_ops._corpus_count sums the footers' num_rows with no Spark
+    job, and an embeddings file rewritten at the same path with another
+    row count is counted afresh."""
+    from basin_cli_spark.queries.llm_ops import _corpus_count
+    from basin_cli_spark.sources import load_table
+
+    path = str(tmp_path / "embeddings.parquet")
+    for n in (5, 9):
+        pq.write_table(pa.table({"vec_id": list(range(n))}), path, row_group_size=2)
+        df = load_table(spark, str(tmp_path), "embeddings")
+        counts = []
+        assert _jobs_of(spark, lambda: counts.append(_corpus_count(df))) == []
+        assert counts == [n]

@@ -11,6 +11,7 @@ import os
 import pytest
 
 from basin_cli_spark.streaming.window_sink import WindowedVaultSink, run_stream
+from tests.conftest import SF_DIR
 
 TX1 = {
     "commit_lsn": 957398296,
@@ -620,15 +621,8 @@ def test_quality_gate_state_is_o_gates_across_batches(spark, tmp_path):
     assert n_gates <= 3
 
 
-def test_near_dedup_watermark_expires_state(spark, tmp_path):
-    """r13: the windowed near-dedup's state must be bounded by the ACTIVE
-    event-time windows, not the corpus — i.e. the watermark actually
-    evicts finalized windows as it advances.  Uses the smoke script's own
-    plan and timed shards (event time spread across 8 files, replayed
-    oldest-first) so the pinned shape is the measured shape; the measured
-    10x rows live in SCALE.md (scripts/stream_scale_smoke.py)."""
+def _stream_scale_smoke():
     import importlib.util
-    import os
 
     spec = importlib.util.spec_from_file_location(
         "stream_scale_smoke",
@@ -637,9 +631,28 @@ def test_near_dedup_watermark_expires_state(spark, tmp_path):
     )
     sm = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(sm)
+    return sm
 
-    timed_dir = str(tmp_path / "timed_docs")
-    sm._shard_documents_timed(spark, "/root/testdata/sf0.001", timed_dir)
+
+@pytest.fixture(scope="module")
+def timed_docs(spark, tmp_path_factory):
+    """The sf0.001 documents in 8 time-ordered shards
+    (stream_scale_smoke._shard_documents_timed)."""
+    timed_dir = str(tmp_path_factory.mktemp("timed") / "timed_docs")
+    sf0001 = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    _stream_scale_smoke()._shard_documents_timed(spark, sf0001, timed_dir)
+    return timed_dir
+
+
+def test_near_dedup_watermark_expires_state(spark, timed_docs):
+    """r13: the windowed near-dedup's state must be bounded by the ACTIVE
+    event-time windows, not the corpus — i.e. the watermark actually
+    evicts finalized windows as it advances.  Uses the smoke script's own
+    plan and timed shards (event time spread across 8 files, replayed
+    oldest-first) so the pinned shape is the measured shape; the measured
+    10x rows live in SCALE.md (scripts/stream_scale_smoke.py)."""
+    sm = _stream_scale_smoke()
+    timed_dir = timed_docs
     m = sm._drain_measured(
         sm.near_dedup_windowed_plan(sm._docs_stream(spark, timed_dir)),
         "append", spark,
@@ -655,26 +668,41 @@ def test_near_dedup_watermark_expires_state(spark, tmp_path):
     assert m["state_series"][-1] < max(m["state_series"]), m
 
 
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FC_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
 def test_drain_restores_no_data_batch_conf(spark):
     """r15: streaming_queries._drain disables the watermark-finalize
     no-data micro-batch for the bounded drain (it cannot change the
     sink) and must restore the session conf afterwards — including when
-    the caller had overridden it."""
+    the caller had overridden it.  The checkpoint manager key, which has
+    no default, stays unset when it was unset and comes back when it
+    was set."""
     from pyspark.sql import functions as F
 
     from basin_cli_spark.queries.streaming_queries import _drain
 
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    for preset in ("true", "false"):
+    for preset, manager in (("true", None), ("false", _FC_MANAGER)):
         spark.conf.set(key, preset)
+        if manager is not None:
+            spark.conf.set(_MANAGER_KEY, manager)
         stream = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", "1")
             .load()
             .select(F.col("value"))
         )
-        out = _drain(stream, "append")
-        assert spark.conf.get(key) == preset
+        try:
+            out = _drain(stream, "append")
+            assert spark.conf.get(key) == preset
+            assert spark.conf.get(_MANAGER_KEY, None) == manager
+        finally:
+            spark.conf.unset(_MANAGER_KEY)
         out.count()  # sink table is readable
     spark.conf.set(key, "true")
 
@@ -727,6 +755,7 @@ def test_concurrent_drains_restore_no_data_batch_conf(spark, monkeypatch):
         second = pool.submit(drain, "second")
         outs = [first.result(), second.result()]
     assert spark.conf.get(key) == "true"
+    assert spark.conf.get(_MANAGER_KEY, None) is None
     for out in outs:
         out.count()
 
@@ -738,9 +767,16 @@ def test_drain_restores_conf_when_start_raises(spark):
 
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
     spark.conf.set(key, "true")
-    with pytest.raises(AnalysisException):
-        _drain(_rate_stream(spark), "complete")  # complete mode needs an aggregation
-    assert spark.conf.get(key) == "true"
+    for manager in (None, _FC_MANAGER):
+        if manager is not None:
+            spark.conf.set(_MANAGER_KEY, manager)
+        try:
+            with pytest.raises(AnalysisException):
+                _drain(_rate_stream(spark), "complete")  # complete mode needs an aggregation
+            assert spark.conf.get(key) == "true"
+            assert spark.conf.get(_MANAGER_KEY, None) == manager
+        finally:
+            spark.conf.unset(_MANAGER_KEY)
 
 
 def test_drain_restores_confs_and_records_sized_partitions(spark, sf_dir, tmp_path):
@@ -752,9 +788,10 @@ def test_drain_restores_confs_and_records_sized_partitions(spark, sf_dir, tmp_pa
 
     sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     keys = ("spark.sql.shuffle.partitions",
-            "spark.sql.streaming.noDataMicroBatches.enabled")
-    before = {k: spark.conf.get(k) for k in keys}
+            "spark.sql.streaming.noDataMicroBatches.enabled", _MANAGER_KEY)
+    before = {k: spark.conf.get(k, None) for k in keys}
     assert int(before["spark.sql.shuffle.partitions"]) > 1
+    assert before[_MANAGER_KEY] is None
     ckpt_key = "spark.sql.streaming.checkpointLocation"
     spark.conf.set(ckpt_key, str(tmp_path / "ckpt"))
     try:
@@ -763,7 +800,7 @@ def test_drain_restores_confs_and_records_sized_partitions(spark, sf_dir, tmp_pa
                         os.path.join(sf, "events.parquet"))
     finally:
         spark.conf.unset(ckpt_key)
-    assert {k: spark.conf.get(k) for k in keys} == before
+    assert {k: spark.conf.get(k, None) for k in keys} == before
     assert out.count() > 0
     (offsets,) = glob.glob(str(tmp_path / "ckpt" / "*" / "offsets" / "0"))
     with open(offsets) as f:
@@ -790,3 +827,174 @@ def test_drain_partitions_follow_decoded_bytes(spark, tmp_path):
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sized = [SQ._drain_partitions(spark, n) for n in (0, advisory, advisory + 1, 100 * advisory)]
     assert sized == [1, 1, 2, cap]
+
+
+def test_drain_query_session_uses_filesystem_checkpoint_manager(spark, sf_dir, monkeypatch, caplog):
+    """The drain's query, started on Spark's temporary checkpoint, keeps
+    the FileSystem checkpoint manager in its cloned session, while the
+    session itself is left without one.  One structured record names
+    every override."""
+    import logging
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from basin_cli_spark.queries import streaming_queries as SQ
+
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        q = real_start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    ev = SQ._read_events_stream(spark, sf_dir)
+    with caplog.at_level(logging.INFO, logger=SQ.__name__):
+        assert SQ._drain(ev.groupBy("event_type").count(), "complete").count() > 0
+    (q,) = started
+    query_conf = q._jsq.streamingQuery().lastExecution().sparkSession().conf()
+    assert query_conf.get(_MANAGER_KEY) == SQ._FS_CHECKPOINT_MANAGER
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+    (rec,) = [r for r in caplog.records if getattr(r, "decision", None) == "drain_confs"]
+    fields = (rec.input_bytes, rec.shuffle_partitions, rec.checkpoint_manager, rec.finalize_batch)
+    assert fields == (0, 1, SQ._FS_CHECKPOINT_MANAGER, False)
+
+
+@pytest.mark.parametrize(
+    "location, default_fs, local",
+    [
+        (None, "file:///", True),
+        ("/tmp/ckpt", "file:///", True),
+        ("file:/tmp/ckpt", "file:///", True),
+        ("file:///tmp/ckpt", "hdfs://nn", True),
+        ("hdfs://nn/x", "file:///", False),
+        ("s3a://b/x", "file:///", False),
+        (None, "hdfs://nn", False),
+        ("/tmp/ckpt", "hdfs://nn", False),
+    ],
+)
+def test_local_checkpoint(location, default_fs, local):
+    """Only a checkpoint on the local file system gets the FileSystem
+    manager; a path with no scheme resolves against the default FS."""
+    from basin_cli_spark.queries.streaming_queries import _local_checkpoint
+
+    assert _local_checkpoint(location, default_fs) is local
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_drain_keeps_finalize_batch_for_append_window_aggregation(spark, timed_docs, monkeypatch):
+    """An append-mode windowed aggregation emits a window only once the
+    watermark passes its end.  Through _drain it keeps every window that
+    the final watermark (max event time - 10 minutes) closes, with the
+    rows its batch form gives; with the finalize batch skipped, the
+    windows the last data batch closes are lost."""
+    from pyspark.sql import functions as F
+
+    from basin_cli_spark.queries import streaming_queries as SQ
+
+    sm = _stream_scale_smoke()
+    batch = sm.near_dedup_windowed_plan(spark.read.parquet(timed_docs))
+    max_ts = spark.read.parquet(timed_docs).agg(F.max("ts")).first()[0]
+    closed = F.col("w_start") + F.expr("INTERVAL 40 MINUTES") <= F.lit(max_ts)
+    expected = _rows(batch.where(closed))
+    assert 0 < len(expected) < batch.count()
+
+    stream = sm.near_dedup_windowed_plan(sm._docs_stream(spark, timed_docs))
+    assert SQ._finalize_batch_needed(stream, "append")
+    assert _rows(SQ._drain(stream, "append")) == expected
+
+    monkeypatch.setattr(SQ, "_finalize_batch_needed", lambda df, mode: False)
+    stream = sm.near_dedup_windowed_plan(sm._docs_stream(spark, timed_docs))
+    assert set(_rows(SQ._drain(stream, "append"))) < set(expected)
+
+
+def _count_until_quiet(key, pdfs, state):
+    """Count a key's rows; emit the count once the watermark passes 30
+    minutes after the key's last row (an event-time timeout)."""
+    import pandas as pd
+
+    if state.hasTimedOut:
+        (n,) = state.get
+        state.remove()
+        yield pd.DataFrame({"key": [key[0]], "n": [n]})
+        return
+    n, last_ms = (state.get[0] if state.exists else 0), 0
+    for pdf in pdfs:
+        n += len(pdf)
+        last_ms = max(last_ms, int(pdf["ts"].max().value // 1_000_000))
+    state.update((n,))
+    state.setTimeoutTimestamp(last_ms + 30 * 60 * 1000)
+
+
+def test_drain_keeps_finalize_batch_for_event_time_timeout(spark, tmp_path, monkeypatch):
+    """applyInPandasWithState with GroupStateTimeout.EventTimeTimeout
+    emits a key only when its timeout fires, which in a one-file drain
+    happens in the finalize batch: keys whose last row is 30 minutes
+    before the final watermark (max ts - 10 minutes) come out with their
+    batch-form counts, and with the finalize batch skipped none does."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from basin_cli_spark.queries import streaming_queries as SQ
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("a", t0), ("a", t0 + dt.timedelta(minutes=1)), ("b", t0 + dt.timedelta(minutes=5)),
+            ("c", t0 + dt.timedelta(hours=2))]
+    src = str(tmp_path / "ticks")
+    spark.createDataFrame(rows, "key string, ts timestamp").coalesce(1).write.parquet(src)
+    data = spark.read.parquet(src)
+    final_wm = data.agg(F.max("ts")).first()[0] - dt.timedelta(minutes=10)
+    expected = _rows(
+        data.groupBy("key").agg(F.count(F.lit(1)).alias("n"), F.max("ts").alias("last"))
+        .where(F.col("last") + F.expr("INTERVAL 30 MINUTES") < F.lit(final_wm))
+        .select("key", "n")
+    )
+    assert expected == [("a", 2), ("b", 1)]
+
+    def plan():
+        return (
+            spark.readStream.schema(data.schema).parquet(src)
+            .withWatermark("ts", "10 minutes")
+            .groupBy("key")
+            .applyInPandasWithState(
+                _count_until_quiet, outputStructType="key string, n long",
+                stateStructType="n long", outputMode="append",
+                timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            )
+        )
+
+    assert SQ._finalize_batch_needed(plan(), "append")
+    assert _rows(SQ._drain(plan(), "append")) == expected
+    monkeypatch.setattr(SQ, "_finalize_batch_needed", lambda df, mode: False)
+    assert _rows(SQ._drain(plan(), "append")) == []
+
+
+def test_registry_drains_skip_finalize_batch(spark, sf_dir, monkeypatch):
+    """None of the 11 q_stream_* drains holds an operator that waits for
+    the watermark, so each keeps skipping the no-data batch.  The plans
+    are built and checked, not run."""
+    from basin_cli_spark.queries import QUERIES
+    from basin_cli_spark.queries import streaming_queries as SQ
+
+    class Built(Exception):
+        pass
+
+    needed = {}
+
+    def check(df, mode, *sources):
+        needed[name] = SQ._finalize_batch_needed(df, mode)
+        raise Built
+
+    monkeypatch.setattr(SQ, "_drain", check)
+    names = [n for n in QUERIES if n.startswith("q_stream_")]
+    for name in names:
+        with pytest.raises(Built):
+            QUERIES[name].fn(spark, sf_dir)
+    assert len(names) == 11
+    assert needed == dict.fromkeys(names, False)
