@@ -29,9 +29,7 @@ Throughput engineering (the digest must survive a 100 TB scan):
   Jacobian multiplications); ONE inversion happens at digest() time;
 * residuosity per attempt is a GCD-style Jacobi symbol (~37 us), so the
   one expensive step — the ~130 us sqrt modular pow — runs once per row,
-  not once per attempt; that pow is the pure-CPython floor, and it is
-  the operation the opportunistic gmpy2 path below accelerates when a
-  GMP wheel is present (see the try-import note).
+  not once per attempt; that pow is the pure-CPython floor.
 
 Net, measured: ~860 -> ~4,100 rows/s/core (~130k rows/s on 32 cores);
 the map side is embarrassingly parallel (each partition folds
@@ -55,36 +53,16 @@ from basin_cli_spark.functions.signing import P
 _B = 7  # secp256k1: y^2 = x^3 + 7
 _SQRT_EXP = (P + 1) // 4  # p ≡ 3 (mod 4): sqrt(a) = a^((p+1)/4)
 
-# Opportunistic native bignum: gmpy2 (GMP) turns the ~130 us sqrt pow —
-# the measured per-row floor of this path — into a few us, recovering the
-# documented 20-40x where the wheel is installed.  Pure-CPython fallback
-# is bit-identical (same golden digests; tests parametrize over whichever
-# backends are present).  coincurve (libsecp256k1) is deliberately NOT
-# used: it wraps ECDSA/combine, not hash-to-curve, and point *addition*
-# is already cheap here (Jacobian, no per-add inversion) — the sqrt in
-# the point mapping is the cost, and that is gmpy2's job.
-try:
-    import gmpy2 as _gmpy2
-
-    HAVE_GMPY2 = True
-except ImportError:  # pure-CPython fallback
-    _gmpy2 = None
-    HAVE_GMPY2 = False
-
-
-def _sqrt_mod(a: int) -> int:
-    if _gmpy2 is not None:
-        return int(_gmpy2.powmod(a, _SQRT_EXP, P))
-    return pow(a, _SQRT_EXP, P)
+# coincurve (libsecp256k1) is deliberately NOT used: it wraps
+# ECDSA/combine, not hash-to-curve, and point *addition* is already cheap
+# here (Jacobian, no per-add inversion) — the sqrt in the point mapping
+# is the cost.
 
 
 def _jacobi(a: int, n: int) -> int:
     """Jacobi symbol (a/n), n odd positive — binary-GCD-style, ~37 us,
     vs ~130 us for the Euler-criterion modular pow.  For prime n this is
-    the Legendre symbol: 1 iff a is a nonzero quadratic residue.
-    gmpy2's C implementation when available."""
-    if _gmpy2 is not None:
-        return int(_gmpy2.jacobi(a % n, n))
+    the Legendre symbol: 1 iff a is a nonzero quadratic residue."""
     a %= n
     result = 1
     while a:
@@ -116,7 +94,7 @@ def _hash_to_point(data: bytes):
         x = int.from_bytes(h, "big") % P
         y_sq = (pow(x, 3, P) + _B) % P
         if _jacobi(y_sq, P) == 1:
-            y = _sqrt_mod(y_sq)
+            y = pow(y_sq, _SQRT_EXP, P)
             return (x, min(y, P - y))
         ctr += 1
 

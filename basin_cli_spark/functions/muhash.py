@@ -49,40 +49,13 @@ MODULUS = int(
 
 _BYTES = 384  # 3072 bits
 
-# Opportunistic native bignum: the per-row cost is ONE 3072-bit mulmod;
-# GMP's mulmod is ~5-10x CPython's, so deployments with a gmpy2 wheel get
-# the speedup for free.  Both paths produce bit-identical digests (the
-# same known-answer oracles cover whichever backends are importable).
-try:
-    import gmpy2 as _gmpy2
-
-    HAVE_GMPY2 = True
-    _MOD = _gmpy2.mpz(MODULUS)
-
-    def _g(v: int):
-        return _gmpy2.mpz(v)
-
-except ImportError:  # pure-CPython fallback
-    _gmpy2 = None
-    HAVE_GMPY2 = False
-    _MOD = MODULUS
-
-    def _g(v: int):
-        return v
-
-
-def _inv(v, m):
-    if _gmpy2 is not None:
-        return _gmpy2.invert(v, m)
-    return pow(v, -1, m)
-
 
 def hash_to_group(data: bytes) -> int:
     """SHAKE-256 -> 384 bytes -> int mod p.  Never returns 0 in practice
     (probability 2^-3072); guarded anyway because 0 absorbs the product."""
     import hashlib
 
-    v = _g(int.from_bytes(hashlib.shake_256(data).digest(_BYTES), "big")) % _MOD
+    v = int.from_bytes(hashlib.shake_256(data).digest(_BYTES), "big") % MODULUS
     return v if v else 1
 
 
@@ -96,31 +69,31 @@ class MulMultisetHash:
     __slots__ = ("num", "den")
 
     def __init__(self, num: int = 1, den: int = 1):
-        self.num = _g(num)
-        self.den = _g(den)
+        self.num = num
+        self.den = den
 
     def insert(self, data: bytes) -> "MulMultisetHash":
-        self.num = (self.num * hash_to_group(data)) % _MOD
+        self.num = (self.num * hash_to_group(data)) % MODULUS
         return self
 
     def remove(self, data: bytes) -> "MulMultisetHash":
-        self.den = (self.den * hash_to_group(data)) % _MOD
+        self.den = (self.den * hash_to_group(data)) % MODULUS
         return self
 
     def union(self, other: "MulMultisetHash") -> "MulMultisetHash":
-        self.num = (self.num * other.num) % _MOD
-        self.den = (self.den * other.den) % _MOD
+        self.num = (self.num * other.num) % MODULUS
+        self.den = (self.den * other.den) % MODULUS
         return self
 
     def difference(self, other: "MulMultisetHash") -> "MulMultisetHash":
         """Remove other's multiset from this one (the reference's
         Difference, ecmh.go:45-48)."""
-        self.num = (self.num * other.den) % _MOD
-        self.den = (self.den * other.num) % _MOD
+        self.num = (self.num * other.den) % MODULUS
+        self.den = (self.den * other.num) % MODULUS
         return self
 
     def _value(self) -> int:
-        return int((self.num * _inv(self.den, _MOD)) % _MOD)
+        return (self.num * pow(self.den, -1, MODULUS)) % MODULUS
 
     def digest(self) -> str:
         """sha256 of the canonical group element ('empty' for identity),

@@ -310,8 +310,7 @@ def boilerplate_scrub(
     3-4 segmentation passes of per-row CPU, which costs more than one
     segmentation pass plus the text shuffle it was meant to remove.
 
-    Measured wash (rounds 9-10, fixture-bound; evidence committed at
-    .scratch/boilerplate_probe.py): the remaining lever — a left_semi
+    Measured wash (fixture-bound): the remaining lever — a left_semi
     probe on hot segment hashes so docs with ZERO hot segments bypass
     the reassembly shuffle as a narrow passthrough — cannot help on
     this fixture: ALL 5,000 sf0.1 documents own at least one hot
@@ -321,8 +320,7 @@ def boilerplate_scrub(
     regression from the third segmentation pass + ids-distinct shuffle
     + doc-splitting joins.  On a real crawl where most docs are
     template-free the same probe is the right first move (it composes
-    with the Bloom doctrine above); here the thread is closed
-    permanently with the probe script as the committed evidence."""
+    with the Bloom doctrine above); on this fixture it does not pay."""
     segs = segment_rows(docs, seg_words).withColumn(
         "_segh", F.xxhash64("seg")
     )

@@ -28,12 +28,13 @@ from __future__ import annotations
 import json
 import os
 from typing import Iterator
-from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from basin_cli_spark.sources.tables import file_identity, memo_put
 
 
 def _collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> np.ndarray:
@@ -286,23 +287,21 @@ _KEYS: dict[tuple, int] = {}
 
 
 def _cached_corpus_key(e: DataFrame) -> int:
-    """corpus_key(e), run once per plan of ``e`` and state of its input
-    files: the memo key is the plan's semanticHash() plus (path, size,
-    mtime_ns) of each input file, so a rewritten file recomputes it.  A
-    frame without local input files is not memoised."""
-    files = []
-    try:
-        for f in e.inputFiles():
-            st = os.stat(unquote(urlparse(f).path))
-            files.append((f, st.st_size, st.st_mtime_ns))
-    except OSError:
-        files = []
-    if not files:
+    """corpus_key(e), run once per plan of ``e`` and version of its input
+    files: the memo key is the plan's semanticHash() plus the
+    ``file_identity`` of each input file, so a rewritten file recomputes
+    it.  A frame without input files, or with one that is not local, is
+    not memoised."""
+    ids = [file_identity(f) for f in e.inputFiles()]
+    if not ids or None in ids:
         return corpus_key(e)
-    memo = (e.semanticHash(), tuple(files))
-    if memo not in _KEYS:
-        _KEYS[memo] = corpus_key(e)
-    return _KEYS[memo]
+    key = (e.semanticHash(), tuple(ids))
+    try:
+        return _KEYS[key]
+    except KeyError:
+        value = corpus_key(e)
+        memo_put(_KEYS, key, value)
+        return value
 
 
 def codebook_artifact() -> dict:

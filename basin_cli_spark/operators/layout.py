@@ -13,14 +13,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from basin_cli_spark.sources.tables import file_identity, memo_put, parquet_footer
+from basin_cli_spark.sources.tables import footer
 
 # spread only when the scanned row groups fall this far short of the cores
 SPREAD_FACTOR = 2
-
-# row groups per input file, read once from the Parquet footer and keyed by
-# file_identity, so a file rewritten at the same path is read again
-_ROW_GROUPS: dict[tuple[str, int, int], int] = {}
 
 _SPREAD_ID = "__spread_id"
 
@@ -29,15 +25,8 @@ def _row_groups(uri: str) -> int:
     """Row groups in one input file.  A footer that cannot be read (a
     remote store, a non-Parquet file) counts as unbounded, so the input
     is taken to be well split and left alone."""
-    key = file_identity(uri)
-    if key is None:
-        return 1 << 30
-    n = _ROW_GROUPS.get(key)
-    if n is None:
-        meta = parquet_footer(key[0])
-        n = 1 << 30 if meta is None else max(1, meta.num_row_groups)
-        memo_put(_ROW_GROUPS, key, n)
-    return n
+    meta = footer(uri)
+    return 1 << 30 if meta is None else max(1, meta.num_row_groups)
 
 
 def _under_split(df: DataFrame, par: int) -> bool:

@@ -5,14 +5,14 @@ an opaque ``binary`` content column plus typed metadata columns, processed
 by Arrow-batched ``mapInPandas`` / ``pandas_udf`` kernels so bytes never
 cross the JVM<->Python boundary row-at-a-time.
 
-Image metadata decode is THREE-TIER, most-real first: (1) PNG/GIF/JPEG
+Image metadata decode is TWO-TIER, most-real first: (1) PNG/GIF/JPEG
 dimensions parsed from the public container headers in pure stdlib —
 REAL in every environment, no wheels, the same public-format-parsing
-approach as sources/carv1.py; (2) Pillow, when a wheel is importable,
-for other formats; (3) a *deterministic stub* deriving dimensions from
-the content digest — each row labeled via the ``decoder`` column.
-``allow_stub=False`` forbids tier 3 (unparseable blobs get null dims,
-'undecodable').  Audio and video container metadata are REAL too:
+approach as sources/carv1.py; (2) a *deterministic stub* deriving
+dimensions from the content digest — each row labeled via the
+``decoder`` column.  ``allow_stub=False`` forbids tier 2 (unparseable
+blobs get null dims, 'undecodable').  Output depends only on content,
+on every machine.  Audio and video container metadata are REAL too:
 synthesize_audio writes genuine RIFF/WAVE PCM (stdlib ``wave``) and
 audio_meta walks the chunk structure back with struct; synthesize_video
 builds genuine ISO-BMFF MP4s (ftyp + moov/mvhd per ISO/IEC 14496-12)
@@ -34,14 +34,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:
-    from PIL import Image as _PILImage
-
-    HAVE_PIL = True
-except ImportError:  # container without Pillow — stub decode only
-    _PILImage = None
-    HAVE_PIL = False
 
 # Typed metadata carried alongside the opaque blob.
 MEDIA_META_SCHEMA = T.StructType(
@@ -88,8 +80,7 @@ def _header_dims(b: bytes):
     PNG (IHDR), GIF87a/89a (logical screen descriptor), JPEG (SOF frame
     scan) — pure stdlib, the same public-format-parsing approach as
     sources/carv1.py.  Returns None for anything else.  This makes image
-    metadata decode REAL in every environment; Pillow (when installed)
-    only extends coverage to formats not parsed here."""
+    metadata decode REAL in every environment."""
     import struct as _s
 
     try:
@@ -123,34 +114,19 @@ def _header_dims(b: bytes):
     return None
 
 
-def _pil_dims(b: bytes):
-    """(width, height) via Pillow, or None when the bytes aren't a
-    parseable image.  ``Image.open`` on a BytesIO reads only the header —
-    no full pixel decode — so this is cheap even for large blobs."""
-    try:
-        with _PILImage.open(io.BytesIO(b)) as im:
-            return im.size
-    except Exception:
-        return None
-
-
 def decode_info(df: DataFrame, *, allow_stub: bool = True) -> DataFrame:
     """Per-blob decode metadata via ``mapInPandas`` (one Arrow batch at a
     time, never per-row Python loop on the JVM boundary).
 
-    Three-tier decode, most-real first:
+    Two-tier decode, most-real first:
     1. ``decoder='header'`` — PNG/GIF/JPEG dimensions parsed from the
        public container header in pure stdlib (real in EVERY
        environment, no wheels);
-    2. ``decoder='pil'`` — Pillow, when importable, for formats the
-       header parser doesn't cover;
-    3. ``decoder='stub'`` — deterministic sha256-derived dimensions for
+    2. ``decoder='stub'`` — deterministic sha256-derived dimensions for
        anything unparseable, so output stays a pure function of content
        in every environment.
-    ``allow_stub=False`` forbids tier 3: unparseable blobs get null
-    dimensions and ``decoder='undecodable'`` instead of invented ones
-    (and without Pillow the reduced format coverage is the caller's
-    explicit choice)."""
+    ``allow_stub=False`` forbids tier 2: unparseable blobs get null
+    dimensions and ``decoder='undecodable'`` instead of invented ones."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -158,18 +134,6 @@ def decode_info(df: DataFrame, *, allow_stub: bool = True) -> DataFrame:
                 lambda b: hashlib.sha256(bytes(b)).hexdigest()
             )
             dims = pdf["content"].map(lambda b: _header_dims(bytes(b)))
-            tier = dims.map(lambda d: "header" if d is not None else None)
-            if HAVE_PIL:
-                # PIL only sees blobs the header tier could NOT decode —
-                # header-decodable rows must not pay a redundant PIL parse.
-                need = dims.isna()
-                if need.any():
-                    pil = pd.Series(None, index=pdf.index, dtype="object")
-                    pil[need] = pdf.loc[need, "content"].map(
-                        lambda b: _pil_dims(bytes(b))
-                    )
-                    tier = tier.where(pil.isna(), "pil")
-                    dims = dims.where(pil.isna(), pil)
             use_stub = dims.isna() & allow_stub
             width = pd.Series(
                 [
@@ -189,9 +153,9 @@ def decode_info(df: DataFrame, *, allow_stub: bool = True) -> DataFrame:
             )
             decoder = pd.Series(
                 [
-                    t if d is not None
+                    "header" if d is not None
                     else ("stub" if st else "undecodable")
-                    for d, t, st in zip(dims, tier, use_stub)
+                    for d, st in zip(dims, use_stub)
                 ],
                 dtype="object",
             )

@@ -200,9 +200,12 @@ def compare(spark_df, oracle_result) -> tuple[bool, str]:
 
     ``oracle_result`` is a ``pyarrow.Table`` (pass ``con.execute(sql)
     .arrow()``) so the oracle's engine-level column types are visible for
-    the dtype-class check; a plain pandas frame (legacy call sites) still
-    works but skips that check.
+    the dtype-class check.
     """
+    if not isinstance(oracle_result, pa.Table):
+        raise TypeError(
+            f"oracle_result must be a pyarrow.Table, not {type(oracle_result).__name__}"
+        )
     bad = _container_cols_spark(spark_df.schema)
     if bad:
         return False, (
@@ -211,39 +214,36 @@ def compare(spark_df, oracle_result) -> tuple[bool, str]:
             "lists crash the driver's canonicalizer"
         )
 
-    if isinstance(oracle_result, pa.Table):
-        o_classes = {f.name: arrow_type_class(f.type) for f in oracle_result.schema}
-        s_classes = {
-            f.name: spark_type_class(f.dataType) for f in spark_df.schema.fields
-        }
-        bad_o = [
-            f"{c} ({cls})" for c, cls in o_classes.items()
-            if cls.startswith("CONTAINER")
-        ]
-        if bad_o:
-            return False, f"oracle returns raw container column(s) {bad_o}"
-        if sorted(s_classes) != sorted(o_classes):
-            return False, (
-                f"column mismatch: spark={sorted(s_classes)} "
-                f"oracle={sorted(o_classes)}"
-            )
-        diffs = [
-            f"{c}: spark={s_classes[c]} oracle={o_classes[c]}"
-            for c in sorted(s_classes)
-            if s_classes[c] != o_classes[c]
-        ]
-        if diffs:
-            return False, (
-                "dtype-class mismatch (driver value hashes are dtype-"
-                f"sensitive): {diffs}"
-            )
-        # date_as_object: keep DATE cells as datetime.date (not midnight
-        # datetime64) so both engines' date columns canonicalize to the
-        # same ISO day string — explicit because the pyarrow default has
-        # shifted across versions.
-        oracle_pdf = oracle_result.to_pandas(date_as_object=True)
-    else:
-        oracle_pdf = oracle_result
+    o_classes = {f.name: arrow_type_class(f.type) for f in oracle_result.schema}
+    s_classes = {
+        f.name: spark_type_class(f.dataType) for f in spark_df.schema.fields
+    }
+    bad_o = [
+        f"{c} ({cls})" for c, cls in o_classes.items()
+        if cls.startswith("CONTAINER")
+    ]
+    if bad_o:
+        return False, f"oracle returns raw container column(s) {bad_o}"
+    if sorted(s_classes) != sorted(o_classes):
+        return False, (
+            f"column mismatch: spark={sorted(s_classes)} "
+            f"oracle={sorted(o_classes)}"
+        )
+    diffs = [
+        f"{c}: spark={s_classes[c]} oracle={o_classes[c]}"
+        for c in sorted(s_classes)
+        if s_classes[c] != o_classes[c]
+    ]
+    if diffs:
+        return False, (
+            "dtype-class mismatch (driver value hashes are dtype-"
+            f"sensitive): {diffs}"
+        )
+    # date_as_object: keep DATE cells as datetime.date (not midnight
+    # datetime64) so both engines' date columns canonicalize to the
+    # same ISO day string — explicit because the pyarrow default has
+    # shifted across versions.
+    oracle_pdf = oracle_result.to_pandas(date_as_object=True)
 
     spdf = spark_df.toPandas()
     if sorted(spdf.columns) != sorted(oracle_pdf.columns):

@@ -21,7 +21,7 @@ from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import sql_vec_str, vec_str
 from basin_cli_spark.session import persist_once
 from basin_cli_spark.sources import load_table
-from basin_cli_spark.sources.tables import local_path, parquet_footer
+from basin_cli_spark.sources.tables import footer
 
 # Shared SQL fragments mirroring operators/dedup.py
 _SQL_TOKENS = "LIST_FILTER(STRING_SPLIT(LOWER({c}), ' '), t -> LENGTH(t) > 0)"
@@ -786,8 +786,7 @@ def _corpus_count(df) -> int:
     Spark job.  A file rewritten at the same path is read afresh.  Falls
     back to a ``count()`` job when a file is not local or its footer
     cannot be read."""
-    paths = [local_path(f) for f in df.inputFiles()]
-    footers = [None if p is None else parquet_footer(p) for p in paths]
+    footers = [footer(f) for f in df.inputFiles()]
     if not footers or None in footers:
         return df.count()
     return sum(m.num_rows for m in footers)
@@ -942,8 +941,7 @@ def q_multimodal_decode(spark, sf_dir):
     """Arrow-batched mapInPandas decode-metadata kernel.  The fixture's
     synthesized media are UTF-8 text bytes, which no real image decoder
     parses, so the output is the deterministic digest-derived stub path
-    in EVERY environment (decoder='stub') — the oracle is stable whether
-    or not a Pillow wheel is installed."""
+    in EVERY environment (decoder='stub')."""
     from basin_cli_spark.operators import multimodal as MM
 
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
@@ -2015,8 +2013,7 @@ LIMIT 100
 # ^ the + 0.0 canonicalizes the zero sign: k <= 0 always, and at a large
 # corpus the top keys round to zero, where DuckDB's ROUND returns -0.0 but
 # Spark's returns 0.0 — numerically equal, repr()-hash distinct (surfaced
-# by the 10x-corpus decade run, `git show
-# d1de39b:CONTRACT_r11_sf1_subset.txt`); IEEE x + 0.0
+# by the 10x-corpus decade run); IEEE x + 0.0
 # maps -0.0 to +0.0 and is the identity elsewhere, so no smaller-fixture
 # attested value moves.  Same term on the Spark side below.
 

@@ -18,9 +18,11 @@ from __future__ import annotations
 import logging
 import math
 import os
+import pathlib
+import shutil
+import tempfile
 import threading
 import uuid
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,7 +32,7 @@ from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.queries import register
 from basin_cli_spark.queries._helpers import dec, dec_sum, sql_dec, sql_dec_sum
 from basin_cli_spark.sources import load_table
-from basin_cli_spark.sources.tables import parquet_footer, read_parquet
+from basin_cli_spark.sources.tables import footer, read_parquet
 
 _LOG = logging.getLogger(__name__)
 
@@ -68,7 +70,6 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DRAIN_CONF_LOCK = threading.Lock()
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
-_CHECKPOINT_LOCATION = "spark.sql.streaming.checkpointLocation"
 _CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 _FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -84,7 +85,7 @@ def _decoded_bytes(path: str) -> int:
     Compressed sizes undercount: the sf1 events file is 15 MB on disk and
     65 MB decoded, and sized by the former its dedup and join drains ran
     35-51% slower on one partition than on four."""
-    meta = parquet_footer(path)
+    meta = footer(path)
     if meta is None:
         return os.path.getsize(path)
     return sum(meta.row_group(i).total_byte_size for i in range(meta.num_row_groups))
@@ -100,16 +101,6 @@ def _drain_partitions(spark: SparkSession, in_bytes: int) -> int:
     )
     cap = int(spark.conf.get(_SHUFFLE_PARTITIONS))
     return max(1, min(cap, math.ceil(in_bytes / max(1, advisory))))
-
-
-def _local_checkpoint(location: str | None, default_fs: str) -> bool:
-    """Whether a drain's checkpoint lands on the local file system.
-    ``location`` is ``spark.sql.streaming.checkpointLocation``; None
-    means Spark's own temporary directory, a path with no scheme.  Spark
-    resolves a path with no scheme against the Hadoop default file
-    system ``default_fs``."""
-    scheme = urlparse(location or "/").scheme or urlparse(default_fs).scheme
-    return scheme in ("", "file")
 
 
 def _finalize_batch_needed(df: DataFrame, mode: str) -> bool:
@@ -144,9 +135,16 @@ def _drain(df: DataFrame, mode: str, *sources: str) -> DataFrame:
     the sink table (one AvailableNow drain — the test/recovery trigger;
     production would use a processing-time or continuous trigger).
     ``sources`` are the local files the plan's file streams read, one
-    entry per stream.  The drain starts its query with up to three conf
-    overrides, and logs one ``decision="drain_confs"`` record naming
-    them.
+    entry per stream.  The drain checkpoints to a directory of its own
+    and starts its query with three conf overrides, and logs one
+    ``decision="drain_confs"`` record naming them.
+
+    **The checkpoint** is a fresh local temporary directory, passed as a
+    ``file:`` URI (a bare path resolves against ``fs.defaultFS``) and
+    removed when the query ends, also when it fails: Spark removes only
+    the temporary directories it makes itself, so under a session
+    ``spark.sql.streaming.checkpointLocation`` each drain would leave a
+    ``mem_<id>`` directory behind.  A drain never resumes.
 
     **The watermark-finalize no-data micro-batch**
     (`spark.sql.streaming.noDataMicroBatches.enabled`) is off unless
@@ -161,8 +159,7 @@ def _drain(df: DataFrame, mode: str, *sources: str) -> DataFrame:
     interval join on match; update-mode applyInPandasWithState without
     a timeout sees no input groups in a no-data batch.  End-of-drain
     state eviction is moot, since the query terminates.  What the batch
-    did cost (profile: `git show
-    d1de39b:plans/r15/stream_probe_before.json`) is a full round of
+    did cost, by a stream profile of the drains, is a full round of
     micro-batch machinery: ~1 s of queryPlanning plus a commit of every
     state-store instance, roughly half the wall of every watermarked
     drain.  A production continuous trigger keeps the default: there the
@@ -182,17 +179,16 @@ def _drain(df: DataFrame, mode: str, *sources: str) -> DataFrame:
     one, so choosing it at ``start()`` from the input is safe.
 
     **The checkpoint file manager** is Spark's
-    ``FileSystemBasedCheckpointFileManager`` when the checkpoint is
-    local (``_local_checkpoint``).  Spark's default manager renames each
-    offset, commit, metadata and state file through Hadoop's
-    ``FileContext.rename``, which checks the file and its ``.crc`` with
-    ``getFileLinkStatus``.  Without the native Hadoop library, Hadoop's
-    local file system forks a ``readlink`` for each such check (and a
-    ``chmod`` for each ``setPermission``): a JFR recording of 10 warm
-    q_stream_tumbling_agg drains at sf0.01 on 4 vCPUs counted 90
-    process starts per drain (64 ``readlink``, 25 ``chmod``, 1 ``rm``),
-    most on the stream execution thread, against 26 (no ``readlink``)
-    with this manager.
+    ``FileSystemBasedCheckpointFileManager``, which the local checkpoint
+    allows.  Spark's default manager renames each offset, commit,
+    metadata and state file through Hadoop's ``FileContext.rename``,
+    which checks the file and its ``.crc`` with ``getFileLinkStatus``.
+    Without the native Hadoop library, Hadoop's local file system forks
+    a ``readlink`` for each such check (and a ``chmod`` for each
+    ``setPermission``): a JFR recording of 10 warm q_stream_tumbling_agg
+    drains at sf0.01 on 4 vCPUs counted 90 process starts per drain (64
+    ``readlink``, 25 ``chmod``, 1 ``rm``), most on the stream execution
+    thread, against 26 (no ``readlink``) with this manager.
     On a local file system the two managers do the same thing: each
     checks that the destination does not exist, then calls
     ``RawLocalFileSystem.rename`` (``File.renameTo``).  The manager is
@@ -212,40 +208,42 @@ def _drain(df: DataFrame, mode: str, *sources: str) -> DataFrame:
     name = f"mem_{uuid.uuid4().hex[:12]}"
     in_bytes = sum(_decoded_bytes(p) for p in sources)
     finalize = _finalize_batch_needed(df, mode)
-    with _DRAIN_CONF_LOCK:
-        parts = _drain_partitions(spark, in_bytes)
-        default_fs = spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
-        local = _local_checkpoint(spark.conf.get(_CHECKPOINT_LOCATION, None), default_fs)
-        manager = _FS_CHECKPOINT_MANAGER if local else None
-        overrides = {_NO_DATA_BATCHES: str(finalize).lower(), _SHUFFLE_PARTITIONS: str(parts)}
-        if manager:
-            overrides[_CHECKPOINT_MANAGER] = manager
-        old = {k: spark.conf.get(k, None) for k in overrides}
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        try:
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-    _LOG.info(
-        "drain %s: %d decoded input bytes -> %d shuffle partitions, "
-        "checkpoint manager %s, finalize batch %s",
-        name, in_bytes, parts, manager or "Spark's default", "on" if finalize else "off",
-        extra={"decision": "drain_confs", "query": name, "input_bytes": in_bytes,
-               "shuffle_partitions": parts, "checkpoint_manager": manager,
-               "finalize_batch": finalize},
-    )
-    q.awaitTermination()
+    checkpoint = tempfile.mkdtemp(prefix="drain-")
+    try:
+        with _DRAIN_CONF_LOCK:
+            parts = _drain_partitions(spark, in_bytes)
+            overrides = {_NO_DATA_BATCHES: str(finalize).lower(),
+                         _SHUFFLE_PARTITIONS: str(parts),
+                         _CHECKPOINT_MANAGER: _FS_CHECKPOINT_MANAGER}
+            old = {k: spark.conf.get(k, None) for k in overrides}
+            for k, v in overrides.items():
+                spark.conf.set(k, v)
+            try:
+                q = (
+                    df.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode(mode)
+                    .option("checkpointLocation", pathlib.Path(checkpoint).as_uri())
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            finally:
+                for k, v in old.items():
+                    if v is None:
+                        spark.conf.unset(k)
+                    else:
+                        spark.conf.set(k, v)
+        _LOG.info(
+            "drain %s: %d decoded input bytes -> %d shuffle partitions, "
+            "checkpoint manager %s, finalize batch %s",
+            name, in_bytes, parts, _FS_CHECKPOINT_MANAGER, "on" if finalize else "off",
+            extra={"decision": "drain_confs", "query": name, "input_bytes": in_bytes,
+                   "shuffle_partitions": parts, "checkpoint_manager": _FS_CHECKPOINT_MANAGER,
+                   "finalize_batch": finalize},
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.table(name)
 
 
@@ -404,9 +402,15 @@ def q_stream_near_dedup(spark, sf_dir):
     arrival-order winners, which no oracle can restate).  State is one
     (simhash, min, count) row per bucket, expired by the watermark at
     production rates."""
+    docs = _read_fixture_stream(spark, sf_dir, "documents")
+    return _drain(near_dedup_plan(docs), "complete", _fixture_file(sf_dir, "documents"))
+
+
+def near_dedup_plan(docs: DataFrame) -> DataFrame:
+    """q_stream_near_dedup's plan over a ``(doc_id, text)`` document
+    stream: min-id and count per SimHash bucket."""
     from basin_cli_spark.operators.dedup import simhash_expr
 
-    docs = _read_fixture_stream(spark, sf_dir, "documents")
     # A single-file stream source arrives as ONE input partition per
     # micro-batch, so the per-token SimHash fold — by far the batch's
     # map cost — would run on one core; spreading first measured
@@ -424,7 +428,7 @@ def q_stream_near_dedup(spark, sf_dir):
     sim = docs.select(
         "doc_id", simhash_expr().alias("simhash"), ts.alias("ts")
     )
-    agg = (
+    return (
         sim.withWatermark("ts", "1 hour")
         .groupBy("simhash")
         .agg(
@@ -432,7 +436,6 @@ def q_stream_near_dedup(spark, sf_dir):
             F.count(F.lit(1)).alias("n_bucket"),
         )
     )
-    return _drain(agg, "complete", _fixture_file(sf_dir, "documents"))
 
 
 def _stream_quality_oracle() -> str:
@@ -460,19 +463,23 @@ def q_stream_quality_gate(spark, sf_dir):
     intake.  The probe itself is stateless per-row JVM expressions, so
     the only stateful operator is the 3-row gate aggregation; state is
     O(gates), not O(documents)."""
+    docs = _read_fixture_stream(spark, sf_dir, "documents")
+    return _drain(quality_gate_plan(docs), "complete", _fixture_file(sf_dir, "documents"))
+
+
+def quality_gate_plan(docs: DataFrame) -> DataFrame:
+    """q_stream_quality_gate's plan over a ``(doc_id, text)`` document
+    stream: per-gate counts and probability bounds."""
     from basin_cli_spark.operators.text import quality_score
 
-    docs = _read_fixture_stream(spark, sf_dir, "documents")
     # single-file stream source -> one input partition; spread the
     # per-row probe expressions across the cores
-    docs = spread(docs, "doc_id")
-    scored = quality_score(docs)
-    agg = scored.groupBy("gate").agg(
+    scored = quality_score(spread(docs, "doc_id"))
+    return scored.groupBy("gate").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.min("quality_p"), 9).alias("min_p"),
         F.round(F.max("quality_p"), 9).alias("max_p"),
     )
-    return _drain(agg, "complete", _fixture_file(sf_dir, "documents"))
 
 
 def _session_oracle() -> str:

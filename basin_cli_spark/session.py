@@ -13,11 +13,12 @@ and a plan shape that survives a 1000-executor / 100 TB deployment:
   bytes its sources decode, at most this value
   (``queries/streaming_queries._drain``).
 * Spark's default streaming checkpoint file manager.  A registry drain
-  whose checkpoint is local starts its own query with the FileSystem
-  manager instead: without the native Hadoop library, the default
-  manager's renames fork a ``readlink`` per link-status check.  The
-  session keeps the default because a remote checkpoint's
-  ``FileSystem.rename`` does not overwrite (``_drain`` again).
+  checkpoints to its own local temporary directory and starts its query
+  with the FileSystem manager instead: without the native Hadoop
+  library, the default manager's renames fork a ``readlink`` per
+  link-status check.  The session keeps the default because a remote
+  checkpoint's ``FileSystem.rename`` does not overwrite (``_drain``
+  again).
 * UTC session timezone — the reference normalizes every user timestamp to
   UTC (reference internal/app/timestamp.go:30-48).
 * Arrow enabled — every Python-side operator in this engine is a Pandas UDF

@@ -1,4 +1,5 @@
-"""Fixture-table loaders and the engine's one parquet reader.
+"""Fixture-table loaders, the engine's one parquet reader and its one
+parquet-footer reader.
 
 The reference's only scan operators are a Parquet scan
 (``SELECT * FROM read_parquet(f)``, reference internal/app/test_util.go:38-39)
@@ -16,6 +17,9 @@ tests/test_plans.py).
 passes a schema, so the read skips the one-task Spark job that
 ``spark.read.parquet`` runs on every call to infer the schema from a
 footer, even for a file it read a moment before.
+
+``footer`` is how the engine reads a parquet footer on the driver,
+once per version of a file.
 """
 
 from __future__ import annotations
@@ -70,6 +74,7 @@ MEMO_ENTRIES = 256
 _MEMO_LOCK = threading.Lock()
 
 _SCHEMAS: dict[tuple, T.StructType] = {}
+_FOOTERS: dict[tuple[str, int, int], object] = {}
 
 
 def local_path(uri: str) -> str | None:
@@ -105,16 +110,27 @@ def memo_put(memo: dict, key, value) -> None:
         memo[key] = value
 
 
-def parquet_footer(path: str):
+def footer(uri: str):
     """The footer of a local parquet file as pyarrow ``FileMetaData``, or
-    None when it cannot be read (not parquet, or unreadable)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        return pq.read_metadata(path)
-    except (OSError, pa.ArrowException):
+    None for a non-local URI or a file whose footer cannot be read (not
+    parquet, or unreadable).  The engine's one footer read: memoized
+    under ``file_identity``, so each version of a file is read once
+    whichever consumer asks first, and a file rewritten at the same path
+    is read again."""
+    key = file_identity(uri)
+    if key is None:
         return None
+    meta = _FOOTERS.get(key, False)  # False: not read yet; None: unreadable
+    if meta is False:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        try:
+            meta = pq.read_metadata(key[0])
+        except (OSError, pa.ArrowException):
+            meta = None
+        memo_put(_FOOTERS, key, meta)
+    return meta
 
 
 def _data_files(path: str) -> list[str] | None:
@@ -147,7 +163,7 @@ def _footer_schema(files: list[str]) -> T.StructType | None:
     carry the same one; else None."""
     found = set()
     for f in files:
-        meta = parquet_footer(f)
+        meta = footer(f)
         if meta is None:
             return None
         found.add((meta.metadata or {}).get(_SPARK_SCHEMA_KEY))
@@ -164,9 +180,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     runs no schema-inference job.
 
     The schema is the one Spark wrote into the footers (vault windows
-    always carry it), else Spark's own inference, memoized under each
-    data file's ``file_identity`` and the confs that steer inference; a
-    rewritten file is inferred again.
+    always carry it; each footer comes from ``footer``'s memo), else
+    Spark's own inference.  Either is memoized under each data file's
+    ``file_identity`` and the confs that steer inference; a rewritten
+    file is read again.
     Non-local URIs and nested or partitioned directories are read by
     plain ``spark.read.parquet``."""
     local = local_path(path)

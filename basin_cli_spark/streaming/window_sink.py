@@ -37,13 +37,13 @@ import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 from basin_cli_spark.functions.hashing import keccak256, keccak256_file
 from basin_cli_spark.functions.signing import sign_file
 from basin_cli_spark.sources.cdc import materialize_table
+from basin_cli_spark.sources.tables import footer
 
 _LOG = logging.getLogger(__name__)
 
@@ -51,6 +51,15 @@ MANIFEST_SCHEMA = (
     "batch_id long, table string, path string, cid string, "
     "signature string, timestamp long, is_archived boolean"
 )
+
+
+def _written_rows(parts: list[str]) -> int:
+    """Rows in the parquet ``parts`` an export wrote, from their footers.
+    An unreadable footer raises, so it never passes for an empty window."""
+    metas = [footer(p) for p in parts]
+    if None in metas:
+        raise OSError(f"cannot read the parquet footer of {parts[metas.index(None)]}")
+    return sum(m.num_rows for m in metas)
 
 
 class WindowedVaultSink:
@@ -167,7 +176,7 @@ class WindowedVaultSink:
         )
         # reference's empty-export guard (db.go:155-166), read from the
         # footers just written rather than by a Spark job of its own
-        if not sum(pq.read_metadata(p).num_rows for p in parts):
+        if not _written_rows(parts):
             shutil.rmtree(path)
             return None
         return self._event_row(table, path, batch_id, parts)

@@ -2,7 +2,7 @@
 the Spark output schema's type class against the DuckDB oracle's Arrow
 result schema class, column by column, and flag raw container outputs.
 
-This is the diagnostic behind the round-8 oracle.py hardening — the class
+This is the diagnostic behind oracle.py's dtype-class gate — the class
 pairs it prints on currently-green queries define the equivalences the
 strict compare() may allow; anything else is a driver hash risk.
 

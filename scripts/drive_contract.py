@@ -21,8 +21,7 @@ from basin_cli_spark.session import get_spark  # noqa: E402
 # as the fourth attested scale decade; the corpus/embedding shapes have
 # their own perturbed-replica 10x/100x evidence in SCALE.md instead.
 # The same preset also replays at the FIFTH decade (.scratch/sf10, 60M
-# lineitem): 31/31 OK in 328s total
-# (`git show d1de39b:CONTRACT_r14_sf10_leg1.txt`).
+# lineitem): 31/31 OK in 328s total.
 SF1_SUBSET = (
     # TPC-H-shaped analytics (all 22)
     "q1_pricing_summary", "q2_min_cost_supplier", "q3_shipping_priority",
@@ -45,9 +44,8 @@ SF1_SUBSET = (
 # remaining shuffle- or sort-shaped entry (row-wise scalar/string/corpus
 # shapes excluded: their plans are map-only and don't change with row
 # count; the corpus families carry perturbed-replica evidence instead).
-# Also replayed at the fifth decade (`git show
-# d1de39b:CONTRACT_r14_sf10_leg2.txt`): 41/41 OK in 849s total (the two slow rows are DuckDB's exact sides of the
-# tolerance checks at 60M rows: q_approx_count_distinct 423s exact
+# Also replayed at the fifth decade: 41/41 OK in 849s total (the two
+# slow rows are DuckDB's exact sides of the tolerance checks at 60M rows: q_approx_count_distinct 423s exact
 # COUNT(DISTINCT), q_approx_percentile 134s exact PERCENTILE_CONT).
 SF1_SUBSET_LEG2 = (
     # aggregates (hash-agg, distinct, sketch-with-tolerance, pivot, corr)
@@ -102,7 +100,7 @@ SF1_SUBSET_LEG3 = (
     "q_corpus_datasheet", "q_corpus_dup_ngram_stats", "q_corpus_domain_kl", "q_corpus_zipf_slope",
 )
 
-# Fourth sf1 leg (r12 verdict item #3): everything outside legs 1-3 —
+# Fourth sf1 leg: everything outside legs 1-3 —
 # the scalar-function, source-roundtrip, CDC, digest, multimodal, and
 # streaming families — driven at .scratch/sf1 so that EVERY registry
 # entry is attested at the fourth decade, not just the scale-sensitive
@@ -118,9 +116,9 @@ SF1_SUBSET_LEG3 = (
 # binary columns per-row.  Computed as registry order minus legs 1-3
 # (51 entries; tests/test_registry_contract.py pins the partition).
 # Also replayed at the fifth decade (.scratch/sf10, whose documents table
-# is the unscaled golden-key copy; `git show
-# d1de39b:CONTRACT_r14_sf10_leg4.txt`): 51/51 OK in 668s — the one slow row is q_json_roundtrip (493s: a 60M-row
-# orders JSON round-trip is I/O-bound by design).
+# is the unscaled golden-key copy): 51/51 OK in 668s — the one slow row
+# is q_json_roundtrip (493s: a 60M-row orders JSON round-trip is
+# I/O-bound by design).
 SF1_SUBSET_LEG4 = (
     "q_stream_dsir_score", "q_cdc_replay_t", "q_cdc_replay_m",
     "q_join_left", "q_join_full", "q_join_theta", "q_join_cross",
@@ -143,10 +141,10 @@ SF1_SUBSET_LEG4 = (
 )
 
 
-# Fifth-decade ORACLE spot (r13 verdict item #4): the corpus entries whose
+# Fifth-decade ORACLE spot: the corpus entries whose
 # DuckDB replay is seconds-scale at the 500k-doc / 200k-vector sf10c
 # fixture (scripts/gen_sf1.py and scripts/gen_sf1_corpus.py with 100
-# copies generate it; scripts/gen_codebooks.py trains its codebook).  The r12
+# copies generate it; scripts/gen_codebooks.py trains its codebook).  The
 # signature-equi-join oracle restatement made these replays feasible one
 # decade past sf1, so the differential (hash-attested) evidence extends to
 # the fifth decade for the dedup archetypes — not just Spark-only wall.

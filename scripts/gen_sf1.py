@@ -1,6 +1,6 @@
 """Generate an sf1-equivalent relational fixture (~6M lineitem rows) from
 the sf0.1 testdata by seeded 10x replication — the fourth scale decade for
-the relational/window/join contract subset (VERDICT r10 item 6).
+the relational/window/join contract subset.
 
 Replication scheme (copy c in 0..copies-1, whole-database copies so every
 FK relationship survives exactly):

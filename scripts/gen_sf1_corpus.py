@@ -1,6 +1,6 @@
 """Extend the sf1-equivalent fixture with a 10x PERTURBED corpus, so the
 dedup / similarity / curation families can be oracle-attested at a
-fourth decade too (leg 3 of `git show d1de39b:CONTRACT_r11_sf1_subset.txt`).
+fourth decade too (leg 3 of scripts/drive_contract.py's sf1 contract).
 
 Exact replication is degenerate for bucketed shapes (SCALE.md), so
 documents/embeddings replicate with seeded per-copy noise

@@ -3,7 +3,7 @@ shapes (ingest quality gate, SimHash near-dedup) at sf0.1 (5k docs) and
 at the 10x perturbed corpus (.scratch/sf1c, 50k docs), recording rows/s
 and state-store size from the StreamingQueryProgress — turning the
 O(gates) / one-row-per-bucket state claims in streaming_queries.py's
-docstrings into measured rows (r11 verdict item #5).
+docstrings into measured rows.
 
 The registry entries drain a single-file fixture in one AvailableNow
 batch; a one-batch run never carries state ACROSS batches, so this smoke
@@ -13,18 +13,18 @@ final progress have survived batch boundaries, which is the property the
 docstring claims actually need.
 
 The complete-mode near-dedup runs hold every bucket live by construction
-(the r12 caveat: a 1-batch-visible watermark never expires anything), so
-they measure the WORST case.  The windowed runs (r12 verdict item #4)
-measure the production shape instead: event time spread across the
-shards so each micro-batch advances the watermark by ~2 hours, dedup
-keyed on (30-minute window, simhash) in append mode — the watermark
-finalizes and EVICTS old windows as the stream progresses, and the
-per-batch state series must plateau at the active-window working set
-rather than accumulate toward the corpus-total bucket count.
+(a 1-batch-visible watermark never expires anything), so they measure
+the WORST case.  The windowed runs measure the production shape
+instead: event time spread across the shards so each micro-batch
+advances the watermark by ~2 hours, dedup keyed on (30-minute window,
+simhash) in append mode — the watermark finalizes and EVICTS old windows
+as the stream progresses, and the per-batch state series must plateau
+at the active-window working set rather than accumulate toward the
+corpus-total bucket count.
 
-Plans are built from the same kernels the registry entries use
-(operators.text.quality_score, operators.dedup.simhash_expr) with the
-same aggregation shapes, so the measured plan is the attested plan.
+The quality-gate and near-dedup plans are the registry entries' own
+(streaming_queries.quality_gate_plan and near_dedup_plan), so the
+measured plan is the attested plan.
 
 Usage: python scripts/stream_scale_smoke.py [sf1c_dir]
 """
@@ -43,7 +43,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from basin_cli_spark.operators.dedup import simhash_expr  # noqa: E402
-from basin_cli_spark.operators.text import quality_score  # noqa: E402
+from basin_cli_spark.queries.streaming_queries import (  # noqa: E402
+    near_dedup_plan,
+    quality_gate_plan,
+)
 from basin_cli_spark.session import get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -152,30 +155,6 @@ def _drain_measured(df, mode: str, spark=None) -> dict:
     }
 
 
-def quality_gate_plan(docs):
-    scored = quality_score(docs)
-    return scored.groupBy("gate").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.min("quality_p"), 9).alias("min_p"),
-        F.round(F.max("quality_p"), 9).alias("max_p"),
-    )
-
-
-def near_dedup_plan(docs):
-    ts = F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
-    sim = docs.select(
-        "doc_id", simhash_expr().alias("simhash"), ts.alias("ts")
-    )
-    return (
-        sim.withWatermark("ts", "1 hour")
-        .groupBy("simhash")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).alias("n_bucket"),
-        )
-    )
-
-
 def near_dedup_windowed_plan(docs):
     """The production near-dedup shape: dedup scoped to 30-minute
     event-time windows with a 10-minute watermark, append mode — the
@@ -220,9 +199,9 @@ def _wm_run(spark, sf_dir: str, label: str) -> dict:
 
 
 def wm_only(sf_dir: str, label: str) -> int:
-    """Watermark-expiry run at one extra corpus decade (r13 verdict item
-    #5: confirm the state-plateau fraction is corpus-size-independent at
-    the 500k-doc sf10c fixture, where state pressure is real).
+    """Watermark-expiry run at one extra corpus decade: confirms the
+    state-plateau fraction is corpus-size-independent at the 500k-doc
+    sf10c fixture, where state pressure is real.
 
         python scripts/stream_scale_smoke.py wm .scratch/sf10c sf10c(100x)
     """

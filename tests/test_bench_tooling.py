@@ -89,7 +89,7 @@ def test_refuses_single_capture(tmp_path):
     assert assemble_bench.main(str(tmp_path / "out.json"), p) == 1
 
 
-# -- bench.py stdout format pin (r11): the driver keeps only the last
+# -- bench.py stdout format pin: the driver keeps only the last
 # ~2 KB of stdout, so bench prints the full payload line FIRST and a
 # compact summary line LAST; the compact line must stay well under the
 # capture budget and parse standalone.

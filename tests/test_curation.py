@@ -203,8 +203,7 @@ def test_pq_codebook_vectors_code_to_themselves(spark, sf_dir):
 # -- feature-hashed embedding norm --------------------------------------------
 
 def test_hash_embedding_aggregated_norm_matches_dense_vector(spark):
-    """r14: the L2 norm moved from an interpreted fold over the dense
-    vector into an exact integer sum of w^2 inside the assembly hash-agg.
+    """The L2 norm is an exact integer sum of w^2 inside the assembly hash-agg.
     Pin the equivalence on a corpus with repeated tokens (multi-count
     cells) and the mined sign-cancelling pair: every emitted embedding is
     unit-norm under the sum-of-squares of its own components, and the

@@ -63,7 +63,7 @@ def test_group_digest_matches_per_group_local(spark, sf_dir):
 
 
 def test_group_digest_all_null_group_surfaces_empty(spark):
-    """r15 two-level fold edge pin: a group whose every value is NULL
+    """Two-level fold edge pin: a group whose every value is NULL
     must still surface with digest 'empty' (the one-level applyInPandas
     fold emitted it; the partial fold must not drop identity partials)."""
     from basin_cli_spark.functions.ecmh import ecmh_digest_by_group

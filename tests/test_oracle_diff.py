@@ -47,7 +47,7 @@ def test_rows_only_query_runs(spark, sf_dir, name):
 
 
 def test_approx_count_distinct_split_equals_fused(spark, sf_dir):
-    """r14: q_approx_count_distinct computes its HLL sketches in a
+    """q_approx_count_distinct computes its HLL sketches in a
     separate 3-group aggregation instead of fused with the exact
     distincts (where the multi-distinct rewrite allocates the rsd-0.02
     register arrays per dedup key).  The registers are per-register max

@@ -136,8 +136,7 @@ def test_ivf_stub_codebook_cap_reaches_scan(spark, sf_dir, monkeypatch):
     """The stride codebook's constant bound (id < 25 * 256) must
     reach the parquet scan of the codebook read as a pushed filter, so
     the codebook collected to the driver is constant-size at any corpus
-    scale (r10: the last grows-with-corpus codebook in the tree,
-    bounded)."""
+    scale."""
     from basin_cli_spark.operators import similarity as S
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -202,7 +201,7 @@ def test_dedup_keep_one_aqe_broadcasts_drop_list(spark, sf_dir, registry):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
-# Broadcast hints remaining after the round-5 un-hinting are ONLY on
+# Broadcast hints are ONLY on
 # constant-size relations: region (5 rows), nation (25), scalar-aggregate
 # singletons (1 row), codebooks, probe/eval sets.  With the auto-broadcast
 # threshold disabled, the BroadcastExchange count per query is exactly the
@@ -226,7 +225,7 @@ _HINTED_BX = {
     "q_dedup_keep_one": 0,
     "q_dedup_embedding_keep_one": 0,
     "q_dedup_provenance": 0,
-    # r5 curation surface: only bloom-decon's exact-verify hint (eval
+    # curation surface: only bloom-decon's exact-verify hint (eval
     # suites are benchmark-sized) and rebalance's bounded scalar/rates
     # broadcasts are constant-size; everything else must not broadcast
     # when auto-broadcast is off.
@@ -236,19 +235,18 @@ _HINTED_BX = {
     "q_dedup_source_overlap": 0,
     "q_corpus_mad_prune": 0,
     "q_corpus_rebalance": 4,         # (total, n_langs) scalar + rates table
-    # r6: the two-pass prune hints its per-source threshold table —
+    # the two-pass prune hints its per-source threshold table —
     # sources are operational units (crawl batches), bounded like the
     # rebalance rates table, ~24 B/row; NOT an SF-scaling relation.
     "q_corpus_quantile_prune_2pass": 2,
     "q_corpus_gopher_rules": 0,
     "q_sample_per_source_cap": 0,
-    # r6: the hot-cell cap broadcasts its keep-list — a table bounded by
+    # the hot-cell cap broadcasts its keep-list — a table bounded by
     # the trained codebook width k (constant-size by construction, the
-    # same class as the codebook broadcast).  r6-r14 both self-join
-    # sides carried the hinted semi-join (4 in the sweep's plan string);
-    # r15 caches the FILTERED assignment, so the cap's semi-join builds
-    # once inside the cache lineage and the count drops to 3 (one
-    # keep-list build + the two verify-side builds).  The capped
+    # same class as the codebook broadcast).  The FILTERED assignment is
+    # cached, so the cap's semi-join builds once inside the cache lineage
+    # and the count is 3 (one keep-list build + the two verify-side
+    # builds).  The capped
     # `assigned` is still never shuffled for the cap itself.
     "q_dedup_semantic_ivf": 3,
     "q_llm_prep_pipeline_v3": 0,     # all joins AQE-sized, none hinted
@@ -477,8 +475,8 @@ def test_dsir_select_plan_shape(spark, sf_dir, registry):
 # plan.  CollapseProject inlining is the trap this pins: a token/gram/
 # segment array (or a norm fold) that gets copied into every referencing
 # expression turns a narrow per-row pass into O(tokens^2)/O(d^2) work —
-# measured 3.8-5x regressions on repetition folds (r7) and 1.8-2.2x on the
-# boilerplate-rewrite experiment (r8).  A future restructure that raises a
+# measured 3.8-5x regressions on repetition folds and 1.8-2.2x on the
+# boilerplate-rewrite experiment.  A future restructure that raises a
 # count should be a conscious decision with a new measurement, not a silent
 # optimizer side effect.
 _EXPR_DUP_BOUNDS = {
@@ -517,17 +515,16 @@ def test_no_duplicated_python_eval(spark, sf_dir, registry):
     node, doubling the Python work per row).  dot_arrow and
     sign_lsh_bands are marked non-deterministic precisely to prevent
     this; the pin checks every ArrowEvalPython node's expression
-    signature is unique within its query plan (r14: q_dedup_embedding,
+    signature is unique within its query plan (q_dedup_embedding,
     q_dedup_semantic_ivf, and both LSH probes each carried a duplicate
-    before the fix)."""
+    before they were marked)."""
     import re
 
     # Analyze-time check: drop caches materialized by earlier tests in
     # this session — a MATERIALIZED InMemoryRelation's formatted explain
     # prints its cached AQE plan twice (initial + final), so the same
     # eval node appears as two detail blocks with identical expression
-    # ids even though it ran exactly once at cache build (r15: surfaced
-    # when the cached pair relations gained a repartition).  The
+    # ids even though it ran exactly once at cache build.  The
     # duplication this pin exists to catch — Catalyst copying a kernel
     # below a pushed filter — is visible in the UNmaterialized plan.
     spark.catalog.clearCache()

@@ -6,7 +6,10 @@ Contract under test:
   pyarrow file without Spark's footer schema and a nanosecond-timestamp
   file;
 * a second read of an unchanged file submits no Spark job; a rewritten
-  file is inferred again.
+  file is inferred again;
+* the engine's footer consumers share one footer read per file version
+  (``sources.tables.footer``), and an unreadable part fails the sink's
+  empty check.
 """
 
 from __future__ import annotations
@@ -154,3 +157,65 @@ def test_corpus_count_reads_footers_and_follows_a_rewrite(spark, tmp_path):
         counts = []
         assert _jobs_of(spark, lambda: counts.append(_corpus_count(df))) == []
         assert counts == [n]
+
+
+def test_footer_read_once_per_file_version(spark, tmp_path, monkeypatch):
+    """Every engine consumer of a parquet footer asks sources.tables.footer:
+    on one window file the vault sink just wrote, its empty check, a
+    footer-schema read_parquet, spread's row-group count, the corpus
+    count and a drain's decoded bytes read the footer once between them.
+    Rewritten at the same path, the file is read once more, and each of
+    them returns the new fact."""
+    from basin_cli_spark.operators.layout import _row_groups
+    from basin_cli_spark.queries.llm_ops import _corpus_count
+    from basin_cli_spark.queries.streaming_queries import _decoded_bytes
+    from basin_cli_spark.streaming import window_sink as WS
+
+    reads = []
+    real_read = pq.read_metadata
+
+    def read_metadata(where, *args, **kwargs):
+        reads.append(where)
+        return real_read(where, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_metadata", read_metadata)
+    monkeypatch.setattr(WS, "materialize_table", lambda records, table, columns: records)
+    sink = WS.WindowedVaultSink(str(tmp_path / "out"), {"t": []})
+    row = sink._export(spark.range(10).coalesce(1).selectExpr("id AS a"), "t", [], 0)
+    (part,) = glob.glob(os.path.join(row["path"], "*.parquet"))
+
+    def facts():
+        df = read_parquet(spark, row["path"])
+        (uri,) = df.inputFiles()
+        return (df.columns, _row_groups(uri), _corpus_count(df),
+                _decoded_bytes(part), WS._written_rows([part]))
+
+    def decoded(meta):
+        return sum(meta.row_group(i).total_byte_size for i in range(meta.num_row_groups))
+
+    assert facts() == (["a"], 1, 10, decoded(real_read(part)), 10)
+    assert reads == [os.path.realpath(part)]
+
+    spark_schema = spark.range(1).selectExpr("id AS a", "id AS b").schema.json()
+    table = pa.table({"a": list(range(30)), "b": list(range(30))})
+    table = table.replace_schema_metadata({TB._SPARK_SCHEMA_KEY: spark_schema})
+    pq.write_table(table, part, row_group_size=10)
+    for crc in glob.glob(os.path.join(row["path"], ".*.crc")):
+        os.remove(crc)
+    assert facts() == (["a", "b"], 3, 30, decoded(real_read(part)), 30)
+    assert reads == [os.path.realpath(part)] * 2
+
+
+def test_export_raises_on_an_unreadable_part(tmp_path):
+    """The sink's empty check counts rows from the footers, and a part
+    whose footer cannot be read raises instead of passing for an empty
+    window."""
+    from basin_cli_spark.streaming.window_sink import _written_rows
+
+    good, bad = str(tmp_path / "good.parquet"), str(tmp_path / "bad.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), good)
+    with open(bad, "wb") as f:
+        f.write(b"not parquet")
+    assert _written_rows([good]) == 2
+    with pytest.raises(OSError, match="bad.parquet"):
+        _written_rows([good, bad])

@@ -93,8 +93,9 @@ def test_dtype_class_matches_oracle(spark, sf_dir, oracle_con, name):
 
 def test_compare_rejects_mistyped_column(spark, sf_dir):
     """A deliberately int-vs-double column must fail compare() even though
-    every VALUE is numerically equal — the exact blindness that let five
-    r7 driver rows go red while 485 in-repo tests passed."""
+    every VALUE is numerically equal — the driver's value hash is
+    dtype-sensitive, so a value-only comparison would pass a row the
+    driver rejects."""
     sdf = spark.range(5).selectExpr("id AS k", "CAST(id * 2 AS BIGINT) AS v")
     con = duckdb.connect()
     tbl = con.execute(
@@ -127,8 +128,17 @@ def test_compare_still_passes_on_equal_typed_frames(spark):
     assert ok, msg
 
 
+def test_compare_takes_only_an_arrow_oracle():
+    """A pandas oracle frame would skip the dtype-class gate, so compare()
+    refuses it before looking at the Spark side."""
+    import pandas as pd
+
+    with pytest.raises(TypeError, match="pyarrow.Table"):
+        compare(None, pd.DataFrame({"k": [1]}))
+
+
 def test_decimal_canonicalization_is_lossless():
-    """r9 oracle hardening: Decimal cells canonicalize losslessly.  The
+    """Decimal cells canonicalize losslessly.  The
     old float round-trip collapsed >2^53 decimals differing by <1 double
     ULP into equal strings — exactly the divergence a dtype-exact driver
     hash over a DECIMAL(38,0)/HUGEINT sum would see."""
@@ -149,7 +159,7 @@ def test_decimal_canonicalization_is_lossless():
 
 
 def test_vec_str_null_element_sentinel(spark, oracle_con):
-    """r9: a NULL vector element must surface as an explicit 'NULL' token
+    """A NULL vector element must surface as an explicit 'NULL' token
     on BOTH engines — the default array join silently drops nulls, so
     [1,NULL,3] and [1,3] would canonicalize identically and mask an
     upstream bug."""
@@ -169,7 +179,7 @@ def test_vec_str_null_element_sentinel(spark, oracle_con):
 
 
 def test_sf1_legs_partition_the_registry():
-    """r13: the four sf1 contract legs in scripts/drive_contract.py must
+    """The four sf1 contract legs in scripts/drive_contract.py must
     exactly partition the registry — no entry driven twice at the fourth
     decade, and (the real risk) no entry silently left out of it.  A new
     registry entry fails this test until it is assigned to a leg."""

@@ -1,4 +1,4 @@
-"""Cold-store retrieval seam + provider transport (round-2 items #3/#6):
+"""Cold-store retrieval seam + provider transport:
 CAR v1 parse/extract against hand-built archives, the resolver chain
 fallback order, and golden request shapes for every provider verb
 (metadata 10 s client vs unlimited-timeout upload client)."""

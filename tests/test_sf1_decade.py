@@ -1,6 +1,5 @@
 """Fourth-scale-decade tooling: the sf1 fixture generator, the contract
-subset wiring, and the oracle decimal->double cast fix it surfaced
-(`git show d1de39b:CONTRACT_r11_sf1_subset.txt` is the recorded run)."""
+subset wiring, and the oracle decimal->double cast fix it surfaced."""
 
 from __future__ import annotations
 

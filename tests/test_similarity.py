@@ -96,7 +96,7 @@ def test_dot_arrow_null_propagation_matches_fold(spark):
             # genuine NaN double (not NULL): dot()'s nanvl guard and the
             # Arrow serializer's NaN->NULL must agree — a raw JVM fold
             # would return NaN, which sorts ABOVE every double desc,
-            # the opposite ranking of dot_arrow's NULL (r10 ADVICE)
+            # the opposite ranking of dot_arrow's NULL
             (7, [1.0, float("nan")], [3.0, 4.0]),  # NaN element -> NULL
             (8, [], []),                    # empty pair -> fold seed 0.0
             # self-consistent pairs of a DIFFERENT dim in the same batch:
@@ -128,7 +128,7 @@ def test_dot_arrow_null_propagation_matches_fold(spark):
 
 def test_dot_batch_mixed_batch_stays_vectorized():
     """One degenerate row must not send the whole Arrow batch down a
-    per-element Python loop (r10 verdict item #4): on a 1%-NULL batch the
+    per-element Python loop: on a 1%-NULL batch the
     grouped fallback stacks and column-sweeps the clean subset, so its
     throughput stays within a small factor of the dense fast path (the
     old per-row loop was ~100x slower on this shape)."""
@@ -171,8 +171,8 @@ def test_dot_batch_mixed_batch_stays_vectorized():
 
 def test_mine_hard_negatives_null_embedding_rows_dropped(spark):
     """A NULL-embedding row can be neither an anchor nor a candidate —
-    the pair path must survive it (r9 regression: np.stack on a None
-    cell killed the whole job) and exclude it from the mined output."""
+    the pair path must survive it (np.stack on a None cell once killed
+    the whole job) and exclude it from the mined output."""
     rows = [
         (0, [1.0, 0.0], 0),
         (1, [0.9, 0.1], 0),
@@ -189,8 +189,7 @@ def test_mine_hard_negatives_null_embedding_rows_dropped(spark):
 
 def test_ivf_stub_codebook_is_constant_size(spark):
     """The stride codebook caps at 256 rows, so the codebook collected to
-    the driver is constant no matter the corpus size (the last
-    grows-with-corpus codebook in the tree, bounded in r10)."""
+    the driver is constant no matter the corpus size."""
     n = 25 * 300  # corpus large enough that the cap binds (300 > 256)
     df = spark.createDataFrame(
         [(i, [float(i % 7), float(i % 11)]) for i in range(n)],

@@ -1,5 +1,4 @@
-"""Quality contract for the Lloyd-trained ANN codebooks (round-2 verdict
-item #2): training must measurably beat the deterministic sample stubs,
+"""Quality contract for the Lloyd-trained ANN codebooks: training must measurably beat the deterministic sample stubs,
 iterate monotonically, and deliver usable recall against brute force.
 
 The fixture embeddings are i.i.d. random — the WORST case for IVF (no
@@ -39,8 +38,7 @@ def test_lloyd_distortion_monotone(emb):
 
 
 def test_trained_beats_stride_stub(emb, V):
-    """The round-2 complaint: vec_id % 25 == 0 sampling is not a trained
-    codebook.  Lloyd must beat it on mean quantization cost."""
+    """vec_id % 25 == 0 sampling is not a trained codebook.  Lloyd must beat it on mean quantization cost."""
     stub = V[::25][:16]
     trained = KM.train_kmeans(emb, k=16, iters=4)
     assert KM.distortion(emb, trained) < KM.distortion(emb, stub)

@@ -11,13 +11,15 @@ Contract under test:
   ECMH/MuHash digests) spread evenly instead of co-locating;
 * results are identical either way (the repartition is pure placement);
 * query filters still reach the parquet scan below the spread exchange;
-* the footer row-group count is memoized per file identity, so a file
+* the footer row-group count comes from the footer memo
+  (``sources.tables.footer``), keyed per file identity, so a file
   rewritten at the same path is read again;
 * no engine code calls ``repartition`` outside spread() (lint).
 * no engine code calls ``dot_arrow`` outside operators/ (lint).
 * no public operator keeps a ``*_col`` parameter that callers outside
   tests/ only ever set to one value (lint).
 * no public engine function or class is reached only from tests/ (lint).
+* no engine code reads a parquet footer outside sources/tables.py (lint).
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ import ast
 import glob
 import os
 import re
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -33,6 +36,7 @@ from pyspark.sql import functions as F
 from basin_cli_spark.operators import layout as L
 from basin_cli_spark.operators.layout import spread
 from basin_cli_spark.sources import load_table
+from basin_cli_spark.sources import tables as TB
 from basin_cli_spark.sources.tables import file_identity
 
 _LI_KEY = ("l_orderkey", "l_linenumber")
@@ -55,11 +59,11 @@ def test_spread_under_split_adds_hash_exchange(spark, sf_dir):
 
 
 def test_spread_noop_on_well_split_layout(spark, sf_dir, monkeypatch):
-    # simulate a well-split warehouse layout via the memoized row-group
-    # count: at cores-many row groups the scan needs no help
+    # simulate a well-split warehouse layout via the memoized footer: at
+    # cores-many row groups the scan needs no help
     df = load_table(spark, sf_dir, "lineitem")
     (uri,) = df.inputFiles()
-    monkeypatch.setitem(L._ROW_GROUPS, file_identity(uri), 4096)
+    monkeypatch.setitem(TB._FOOTERS, file_identity(uri), SimpleNamespace(num_row_groups=4096))
     assert "Exchange" not in plan_of(spread(df, _LI_KEY))
 
 
@@ -83,7 +87,7 @@ def test_spread_streaming_input_always_spreads(spark, sf_dir, monkeypatch):
     # spread fires even when the file's footer says it is well split
     docs = load_table(spark, sf_dir, "documents")
     (uri,) = docs.inputFiles()
-    monkeypatch.setitem(L._ROW_GROUPS, file_identity(uri), 4096)
+    monkeypatch.setitem(TB._FOOTERS, file_identity(uri), SimpleNamespace(num_row_groups=4096))
     stream = (
         spark.readStream.schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -119,7 +123,7 @@ def test_spread_preserves_rows_and_pushdown(spark, sf_dir):
 def test_spread_scan_row_groups_memoized(spark, sf_dir):
     (uri,) = load_table(spark, sf_dir, "orders").inputFiles()
     assert L._row_groups(uri) >= 1
-    assert file_identity(uri) in L._ROW_GROUPS
+    assert file_identity(uri) in TB._FOOTERS
 
 
 def test_row_groups_reread_after_rewrite(tmp_path):
@@ -250,6 +254,33 @@ def test_no_repartition_outside_spread():
     used = {(rel, func) for rel, func, _ in calls}
     stale = set(_REPARTITION_ALLOWED) - used
     assert not stale, f"allowlist entries with no call: {stale}"
+
+
+def _imports_pyarrow_parquet(node) -> bool:
+    if isinstance(node, ast.Import):
+        return any(a.name == "pyarrow.parquet" for a in node.names)
+    if isinstance(node, ast.ImportFrom):
+        return node.module == "pyarrow.parquet" or (
+            node.module == "pyarrow" and any(a.name == "parquet" for a in node.names)
+        )
+    return False
+
+
+def test_footer_reads_only_in_tables():
+    """Parquet footers have one reader, sources.tables.footer, memoized
+    per file version: engine code that reads a footer itself keeps a
+    second answer to when a remembered fact is stale."""
+    found = [c for name in ("read_metadata", "ParquetFile") for c in _engine_calls(name)]
+    found += [
+        (rel.removeprefix("basin_cli_spark/"), "<import>", node.lineno)
+        for rel, tree in _non_test_trees() if rel.startswith("basin_cli_spark/")
+        for node in ast.walk(tree) if _imports_pyarrow_parquet(node)
+    ]
+    stray = [c for c in found if c[0] != "sources/tables.py"]
+    assert not stray, (
+        "parquet footer read outside sources/tables.py — call "
+        f"sources.tables.footer: {stray}"
+    )
 
 
 def test_dot_arrow_only_under_operators():

@@ -4,7 +4,6 @@ txs arriving across window boundaries produce per-window parquet files in
 WAL order, U/D records never materialize, and recovery/replay is
 idempotent."""
 
-import glob
 import json
 import os
 
@@ -645,7 +644,7 @@ def timed_docs(spark, tmp_path_factory):
 
 
 def test_near_dedup_watermark_expires_state(spark, timed_docs):
-    """r13: the windowed near-dedup's state must be bounded by the ACTIVE
+    """The windowed near-dedup's state must be bounded by the ACTIVE
     event-time windows, not the corpus — i.e. the watermark actually
     evicts finalized windows as it advances.  Uses the smoke script's own
     plan and timed shards (event time spread across 8 files, replayed
@@ -676,7 +675,7 @@ _FC_MANAGER = (
 
 
 def test_drain_restores_no_data_batch_conf(spark):
-    """r15: streaming_queries._drain disables the watermark-finalize
+    """streaming_queries._drain disables the watermark-finalize
     no-data micro-batch for the bounded drain (it cannot change the
     sink) and must restore the session conf afterwards — including when
     the caller had overridden it.  The checkpoint manager key, which has
@@ -779,7 +778,7 @@ def test_drain_restores_conf_when_start_raises(spark):
             spark.conf.unset(_MANAGER_KEY)
 
 
-def test_drain_restores_confs_and_records_sized_partitions(spark, sf_dir, tmp_path):
+def test_drain_restores_confs_and_records_sized_partitions(spark, sf_dir, monkeypatch):
     """A registry drain sizes its shuffle partitions to its input (the
     0.2 MB sf0.01 events file gives 1) for its own query only: the
     session's confs are back after the call, and the query's offset log
@@ -792,20 +791,51 @@ def test_drain_restores_confs_and_records_sized_partitions(spark, sf_dir, tmp_pa
     before = {k: spark.conf.get(k, None) for k in keys}
     assert int(before["spark.sql.shuffle.partitions"]) > 1
     assert before[_MANAGER_KEY] is None
-    ckpt_key = "spark.sql.streaming.checkpointLocation"
-    spark.conf.set(ckpt_key, str(tmp_path / "ckpt"))
-    try:
-        ev = SQ._read_events_stream(spark, sf)
-        out = SQ._drain(ev.groupBy("event_type").count(), "complete",
-                        os.path.join(sf, "events.parquet"))
-    finally:
-        spark.conf.unset(ckpt_key)
+    # the drain removes its checkpoint: read the offset log just before
+    metas = []
+    real_rmtree = SQ.shutil.rmtree
+
+    def rmtree(path, *args, **kwargs):
+        with open(os.path.join(path, "offsets", "0")) as f:
+            metas.append(json.loads(f.read().splitlines()[1]))
+        real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(SQ.shutil, "rmtree", rmtree)
+    ev = SQ._read_events_stream(spark, sf)
+    out = SQ._drain(ev.groupBy("event_type").count(), "complete",
+                    os.path.join(sf, "events.parquet"))
     assert {k: spark.conf.get(k, None) for k in keys} == before
     assert out.count() > 0
-    (offsets,) = glob.glob(str(tmp_path / "ckpt" / "*" / "offsets" / "0"))
-    with open(offsets) as f:
-        meta = json.loads(f.read().splitlines()[1])
+    (meta,) = metas
     assert meta["conf"]["spark.sql.shuffle.partitions"] == "1"
+
+
+def test_drains_leave_no_checkpoint_behind(spark, sf_dir, tmp_path, monkeypatch):
+    """A registry drain checkpoints to a temporary directory of its own
+    and removes it once the query ends: with the session's
+    checkpointLocation set, nothing lands there, and the drain's own
+    directory is gone too."""
+    from basin_cli_spark.queries import streaming_queries as SQ
+
+    made = []
+    real_mkdtemp = SQ.tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(SQ.tempfile, "mkdtemp", mkdtemp)
+    location = tmp_path / "session_ckpt"
+    location.mkdir()
+    key = "spark.sql.streaming.checkpointLocation"
+    spark.conf.set(key, str(location))
+    try:
+        for fn in (SQ.q_stream_dedup, SQ.q_stream_tumbling_agg):
+            assert fn(spark, sf_dir).count() > 0
+    finally:
+        spark.conf.unset(key)
+    assert os.listdir(location) == []
+    assert len(made) == 2 and not any(map(os.path.exists, made)), made
 
 
 def test_drain_partitions_follow_decoded_bytes(spark, tmp_path):
@@ -830,7 +860,7 @@ def test_drain_partitions_follow_decoded_bytes(spark, tmp_path):
 
 
 def test_drain_query_session_uses_filesystem_checkpoint_manager(spark, sf_dir, monkeypatch, caplog):
-    """The drain's query, started on Spark's temporary checkpoint, keeps
+    """The drain's query, started on its own temporary checkpoint, keeps
     the FileSystem checkpoint manager in its cloned session, while the
     session itself is left without one.  One structured record names
     every override."""
@@ -859,27 +889,6 @@ def test_drain_query_session_uses_filesystem_checkpoint_manager(spark, sf_dir, m
     (rec,) = [r for r in caplog.records if getattr(r, "decision", None) == "drain_confs"]
     fields = (rec.input_bytes, rec.shuffle_partitions, rec.checkpoint_manager, rec.finalize_batch)
     assert fields == (0, 1, SQ._FS_CHECKPOINT_MANAGER, False)
-
-
-@pytest.mark.parametrize(
-    "location, default_fs, local",
-    [
-        (None, "file:///", True),
-        ("/tmp/ckpt", "file:///", True),
-        ("file:/tmp/ckpt", "file:///", True),
-        ("file:///tmp/ckpt", "hdfs://nn", True),
-        ("hdfs://nn/x", "file:///", False),
-        ("s3a://b/x", "file:///", False),
-        (None, "hdfs://nn", False),
-        ("/tmp/ckpt", "hdfs://nn", False),
-    ],
-)
-def test_local_checkpoint(location, default_fs, local):
-    """Only a checkpoint on the local file system gets the FileSystem
-    manager; a path with no scheme resolves against the default FS."""
-    from basin_cli_spark.queries.streaming_queries import _local_checkpoint
-
-    assert _local_checkpoint(location, default_fs) is local
 
 
 def _rows(df):

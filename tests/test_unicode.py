@@ -56,11 +56,10 @@ def uni_dir(spark, tmp_path_factory):
         "q_text_normalize",       # \p{Punct}-vs-[[:punct:]] + whitespace
         "q_text_token_count",     # tokenization length accounting
         "q_corpus_mad_prune",     # numeric gate unaffected by text bytes
-        # r8 widening — the text operators the r8 head attests, over
-        # multi-byte text: per-CHARACTER splitting (emoji are
-        # supplementary codepoints: Java regex . vs utf8proc chars),
-        # shingle folds, md5-nibble hashing through vec_str, and the
-        # segment rewrite
+        # text operators over multi-byte text: per-CHARACTER splitting
+        # (emoji are supplementary codepoints: Java regex . vs utf8proc
+        # chars), shingle folds, md5-nibble hashing through vec_str, and
+        # the segment rewrite
         "q_text_entropy",         # (?s:.) char split vs SUBSTRING loop
         "q_text_repetition",      # 3-gram shingle folds on unicode tokens
         "q_corpus_dup_ngram_stats",  # 4 gram-size folds in one pass
